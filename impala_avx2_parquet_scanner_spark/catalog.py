@@ -145,12 +145,15 @@ def spread_table(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataF
     expensive projections downstream.  Hash (not round-robin) keyed so no
     sort-before-repartition cost and a deterministic row→partition map.
     Memoized beside the base table so the split probe runs once per
-    session."""
+    session; the SPARK_GRAFT_NO_SPREAD state is part of the memo key, so
+    flipping it mid-session never hands back a frame whose spread
+    disagrees with what `pin_above_spread` builds now."""
     base = table(spark, sf_dir, name)
     if os.environ.get("SPARK_GRAFT_NO_TABLE_CACHE"):
         return _spread(spark, base, key)
     memo = _TABLE_MEMO.setdefault(spark, {})
-    mkey = ("__spread__", os.path.realpath(sf_dir), name, key)
+    no_spread = bool(os.environ.get("SPARK_GRAFT_NO_SPREAD"))
+    mkey = ("__spread__", os.path.realpath(sf_dir), name, key, no_spread)
     df = memo.get(mkey)
     if df is None:
         df = memo[mkey] = _spread(spark, base, key)

@@ -1145,7 +1145,7 @@ def decode_segment(payload: bytes, mask: np.ndarray | None = None):
 
 
 #: adaptive-partition ROWS target: one input partition per ~256k rows
-#: (bounded by file granularity and the [8, 64] partition band) — sizes
+#: (bounded by file granularity and the [1, 64] partition band) — sizes
 #: few-large-file layouts (post-compaction) by work, not file count
 _ROWS_PER_TASK = 262_144
 
@@ -1300,10 +1300,10 @@ class FleDirReader(DataSourceReader):
         self.dir = options.get("path")
         if not self.dir:
             raise ValueError("fledir requires option 'path'")
-        #: None → adaptive: ~8 files per input partition, capped at 64
-        #: (a 10k-segment table must not scan with 8 tasks; an explicit
-        #: numpartitions option always wins — the scan-range-per-node
-        #: sizing knob of the reference's scheduler)
+        #: None → adaptive: sized by rows and files, 1 to 64 input
+        #: partitions (see `_bucket_count`); an explicit numpartitions
+        #: option always wins — the scan-range-per-node sizing knob of
+        #: the reference's scheduler
         np_opt = options.get("numpartitions")
         self.n_parts = int(np_opt) if np_opt is not None else None
         #: column names the output batches must carry (None → all, in
@@ -1322,7 +1322,11 @@ class FleDirReader(DataSourceReader):
         #: mirrors the per-slot scanner split
         #: (hdfs-parquet-scanner.cc:1410-1451)
         self.pushed: list[tuple[str, str, object]] = []
-        self._kinds_cache: "dict[str, ParsedColumn] | None" = None
+        #: column name → stored kind, probed once on the driver.  Only
+        #: the kinds are kept: the reader is pickled into every task's
+        #: read command, and a cached ParsedSegment would ship its
+        #: planes and dictionary along with it.
+        self._kinds_cache: "dict[str, int] | None" = None
         #: hive-style partitioned layout: ([key_col, ...],
         #: [((value, ...), leaf_dir), ...]) — None for a flat
         #: directory.  Conjuncts on any partition column are consumed
@@ -1365,19 +1369,23 @@ class FleDirReader(DataSourceReader):
 
     def _bucket_count(self, n_files: int, total_rows: int = 0) -> int:
         """Adaptive input-partition TARGET (an explicit numpartitions
-        option always wins): ~8 files per partition sizes many-tiny-file
-        directories, and a ROWS target sizes few-large-file directories
-        — after compaction a 64x312k-row table must not scan with 9
-        tasks because it has few files.  Floor 8, cap 64 as before.
-        The target may exceed the file count: `_make_partitions` splits
-        large files into block SPANS to reach it (the reference
-        scheduler's scan ranges — a file is not the unit of
-        parallelism)."""
+        option always wins), sized by the work: one partition per
+        ~`_ROWS_PER_TASK` rows, so few-large-file directories (a
+        compacted 64x312k-row table) still fan out, and one per ~8
+        files, so a many-tiny-file directory does not open thousands
+        of files in one task.  Floor 1, cap 64: every input
+        partition is one Python worker call with a fixed CPU cost
+        (Spark's per-call `importlib.invalidate_caches()` re-reads the
+        pyspark.zip directory), so a small scan runs as ONE task
+        instead of two waves of near-empty ones.  The target may
+        exceed the file count: `_make_partitions` splits large files
+        into block SPANS to reach it (the reference scheduler's scan
+        ranges — a file is not the unit of parallelism)."""
         if self.n_parts is not None:
             return max(self.n_parts, 1)
         by_files = (n_files + 7) // 8
         by_rows = (total_rows + _ROWS_PER_TASK - 1) // _ROWS_PER_TASK
-        return min(64, max(8, by_files, by_rows))
+        return min(64, max(1, by_files, by_rows))
 
     def _make_partitions(self, items: "list[tuple]") -> list:
         """[(path, part_values_or_None, rows)] → balanced input
@@ -1391,8 +1399,10 @@ class FleDirReader(DataSourceReader):
         evaluates kernels over all blocks before decoding only its
         window (sections are column-contiguous, so a span cannot be a
         byte range) — splitting wins when decode dominates, which the
-        compaction bench measured; the split factor is bounded by the
-        [8, 64] partition band."""
+        compaction bench measured.  Under the [1, 64] partition band a
+        file splits only when the rows target (or numpartitions) asks
+        for more tasks than there are files: without numpartitions a
+        table below `_ROWS_PER_TASK` rows never splits."""
         total_rows = sum(r for _, _, r in items)
         target = self._bucket_count(len(items), total_rows)
         expanded: list[tuple] = []
@@ -1521,19 +1531,21 @@ class FleDirReader(DataSourceReader):
             out.add(name)
         return out
 
-    def _column_kinds(self) -> "dict[str, ParsedColumn]":
-        """Probe the first committed segment's header for column kinds
-        (driver-side, one file read) — pushability is TYPE-DIRECTED:
-        a fractional literal is pushable on a double column (the
-        sortable-bits map translates it exactly) but not on an int
-        column (the kernels would answer a different predicate)."""
+    def _column_kinds(self) -> "dict[str, int]":
+        """Probe the first committed segment's header for column name →
+        kind (driver-side, one file read) — pushability is
+        TYPE-DIRECTED: a fractional literal is pushable on a double
+        column (the sortable-bits map translates it exactly) but not on
+        an int column (the kernels would answer a different
+        predicate)."""
         if self._kinds_cache is None:
             root = self.dir
             if self.partitioned is not None:
                 root = self.partitioned[1][0][1]  # first subdir
             seg = probe_first_segment(root)
             self._kinds_cache = (
-                {c.name: c for c in seg.columns} if seg is not None else {}
+                {c.name: c.kind for c in seg.columns}
+                if seg is not None else {}
             )
         return self._kinds_cache
 
@@ -1612,8 +1624,7 @@ class FleDirReader(DataSourceReader):
                 return value is not None and all(pok(v) for v in value)
             return pok(value)
 
-        c = self._column_kinds().get(col)
-        kind = c.kind if c is not None else None
+        kind = self._column_kinds().get(col)
 
         def ok(v) -> bool:
             if kind == _KIND_F64:

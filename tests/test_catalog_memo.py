@@ -54,6 +54,26 @@ def test_table_memo_escape_hatch(spark, sf_dir, monkeypatch):
     assert a is not b
 
 
+def test_spread_memo_follows_no_spread_flag(spark, sf_dir, monkeypatch):
+    """Flipping SPARK_GRAFT_NO_SPREAD mid-session takes effect on the
+    next spread_table call: the opt-out returns the bare base table, not
+    the spread frame memoized before the flip, and clearing the flag
+    again reuses that memoized spread frame."""
+    from impala_avx2_parquet_scanner_spark.catalog import spread_table
+
+    monkeypatch.delenv("SPARK_GRAFT_NO_SPREAD", raising=False)
+    base = table(spark, sf_dir, "documents")
+    spread = spread_table(spark, sf_dir, "documents", "doc_id")
+    # the single-file fixture is below test parallelism, so it spreads
+    assert spread is not base
+
+    monkeypatch.setenv("SPARK_GRAFT_NO_SPREAD", "1")
+    assert spread_table(spark, sf_dir, "documents", "doc_id") is base
+
+    monkeypatch.delenv("SPARK_GRAFT_NO_SPREAD")
+    assert spread_table(spark, sf_dir, "documents", "doc_id") is spread
+
+
 def test_memoized_plan_not_data_cached(spark, sf_dir):
     """The memo holds a logical plan, not materialized data: the
     DataFrame must not appear in Spark's cache manager."""

@@ -1545,10 +1545,11 @@ def test_signed_pushdown_fuzz_matches_direct_eval(values, comparisons):
 
 
 def test_large_files_split_into_block_spans(spark, tmp_path):
-    """Scan-range splitting: two 100k-row segments must NOT cap the
-    scan at two tasks — partitions() splits them into disjoint block
-    spans (the reference scheduler's scan ranges), and every row is
-    read exactly once, with pushdown still correct across spans."""
+    """Scan-range splitting: an explicit numpartitions above the file
+    count must NOT cap the scan at two tasks — partitions() splits the
+    two 100k-row segments into disjoint block spans (the reference
+    scheduler's scan ranges), and every row is read exactly once, with
+    pushdown still correct across spans."""
     import pandas as pd
 
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
@@ -1581,9 +1582,9 @@ def test_large_files_split_into_block_spans(spark, tmp_path):
         .save()
     )
 
-    r = FleDirReader({"path": path})
+    r = FleDirReader({"path": path, "numpartitions": "8"})
     parts = r.partitions()
-    assert len(parts) == 8  # floor-8 target met by splitting 2 files
+    assert len(parts) == 8  # 8-task target met by splitting 2 files
     spans = [
         (p, s)
         for part in parts
@@ -1601,20 +1602,164 @@ def test_large_files_split_into_block_spans(spark, tmp_path):
         for (a0, a1), (c0, c1) in zip(ranges, ranges[1:]):
             assert a1 == c0  # contiguous, no overlap
 
-    df = spark.read.format("fledir").option("path", path).load()
+    def load():
+        return (
+            spark.read.format("fledir").option("path", path)
+            .option("numpartitions", "8").load()
+        )
+
+    df = load()
     assert df.count() == 200_000
     assert df.rdd.getNumPartitions() == 8
     # pushdown across span boundaries: exact range count
-    n = (
-        spark.read.format("fledir").option("path", path).load()
-        .filter("q >= 150000 AND q < 150123").count()
-    )
+    n = load().filter("q >= 150000 AND q < 150123").count()
     assert n == 123
     # explicit numpartitions above the file count is honored by splits
     # UP TO window granularity: 1563 blocks per file / 256-block
     # windows = 7 spans per file, 14 total
     r32 = FleDirReader({"path": path, "numpartitions": "32"})
     assert len(r32.partitions()) == 14
+
+
+def _commit_segments(out: str, payloads: list) -> None:
+    """Commit pre-encoded segments as seg_<i>.fle through the fledir
+    writer half, in this process (no Spark job)."""
+    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
+        FleDirWriter,
+    )
+
+    class _Row:
+        def __init__(self, seg_id, payload):
+            self.seg_id, self.payload = seg_id, payload
+
+    w = FleDirWriter({"path": out}, overwrite=True)
+    w.commit([w.write([_Row(i, p) for i, p in enumerate(payloads)])])
+
+
+def test_small_multi_segment_scan_plans_one_partition(spark, tmp_path):
+    """Rows-first sizing: a fledir holding fewer than _ROWS_PER_TASK
+    rows plans ONE input partition (one Python worker call), however
+    many segments it has, and answers exactly as a numpartitions=8 scan
+    of the same files (one file per task) does."""
+    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
+        _ROWS_PER_TASK,
+        FleDirReader,
+        encode_segment_columns,
+        register_fledir,
+    )
+
+    register_fledir(spark)
+    out = str(tmp_path / "small_fle")
+    qty = [np.arange(i * 5_000, (i + 1) * 5_000, dtype=np.int64)
+           for i in range(6)]
+    _commit_segments(out, [
+        encode_segment_columns([
+            ("q", q), ("g", np.array(["a", "b"], dtype=object)[q % 2]),
+        ])
+        for q in qty
+    ])
+    assert 6 * 5_000 < _ROWS_PER_TASK
+
+    parts = FleDirReader({"path": out}).partitions()
+    assert len(parts) == 1
+    assert len(parts[0].paths) == 6
+    assert all(s is None for s in parts[0].spans)  # no file splits
+
+    def answer(n_parts):
+        rd = spark.read.format("fledir").option("path", out)
+        if n_parts is not None:
+            rd = rd.option("numpartitions", str(n_parts))
+        df = rd.load()
+        got_parts = df.rdd.getNumPartitions()
+        agg = (
+            df.filter("q >= 7000 AND q < 23000 AND g = 'b'")
+            .selectExpr("count(*)", "sum(q)").collect()[0]
+        )
+        return got_parts, tuple(agg)
+
+    one, eight = answer(None), answer(8)
+    assert one[0] == 1 and eight[0] == 6  # one file per task at most
+    allq = np.concatenate(qty)
+    want = allq[(allq >= 7000) & (allq < 23000) & (allq % 2 == 1)]
+    assert one[1] == eight[1] == (len(want), int(want.sum()))
+
+
+def test_large_table_keeps_rows_sized_partitions(tmp_path):
+    """A table of at least 8 x _ROWS_PER_TASK rows still plans >= 8
+    input partitions: the rows target, not a task floor, sizes it, so
+    a table of this size scans with exactly the task count the old
+    floor-8 rule gave it."""
+    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
+        _ROWS_PER_TASK,
+        FleDirReader,
+        encode_segment_columns,
+    )
+
+    out = str(tmp_path / "large_fle")
+    half = 4 * _ROWS_PER_TASK
+    _commit_segments(out, [
+        encode_segment_columns([
+            ("q", np.arange(i * half, (i + 1) * half, dtype=np.int64)),
+        ])
+        for i in range(2)
+    ])
+    parts = FleDirReader({"path": out}).partitions()
+    assert len(parts) == 8  # 2 files split into 4 spans each
+    assert all(s is not None for part in parts for s in part.spans)
+
+    def old_rule(n_files, rows):
+        by_files = (n_files + 7) // 8
+        by_rows = (rows + _ROWS_PER_TASK - 1) // _ROWS_PER_TASK
+        return min(64, max(8, by_files, by_rows))
+
+    r = FleDirReader({"path": out})
+    for rows in (8 * _ROWS_PER_TASK, 2_100_000, 10_000_000, 10**9):
+        for n_files in (1, 2, 9, 100, 5_000):
+            got = r._bucket_count(n_files, rows)
+            assert got >= 8
+            assert got == old_rule(n_files, rows)
+
+
+def test_pickled_reader_carries_no_segment_data(tmp_path):
+    """The reader is pickled into every task's read command: after
+    pushFilters + partitions() (which probe the first segment for
+    column kinds) it must stay a few KB, not grow with the probed
+    segment's planes and dictionary."""
+    from pyspark import cloudpickle
+    from pyspark.sql.datasource import EqualTo, GreaterThan
+    from pyspark.sql.types import (
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
+        FleDataSource,
+        encode_segment_columns,
+    )
+
+    out = str(tmp_path / "pickle_fle")
+    n = 100_000
+    words = np.array([f"w{i:05d}" for i in range(5_000)], dtype=object)
+    payload = encode_segment_columns([
+        ("q", np.arange(n, dtype=np.int64)),
+        ("s", words[np.arange(n) % len(words)]),
+    ])
+    assert len(payload) > 100_000
+    _commit_segments(out, [payload])
+
+    assert FleDataSource({"path": out}).schema() == "q bigint, s string"
+    reader = FleDataSource({"path": out}).reader(StructType([
+        StructField("q", LongType()), StructField("s", StringType()),
+    ]))
+    residual = list(reader.pushFilters([
+        GreaterThan(("q",), 10), EqualTo(("s",), "w00042"),
+    ]))
+    assert residual == []
+    reader.partitions()
+    assert reader._column_kinds()  # the probe ran and is cached
+    assert len(cloudpickle.dumps(reader)) < 4_096
 
 
 def test_fle_stream_partitioned_root_e2e(spark, tmp_path):

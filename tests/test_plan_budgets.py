@@ -128,6 +128,7 @@ SPREAD_PINNED = {
     "text_bigram_pmi": ("regexp_replace",),      # tokenize projection
     "text_unigram_logprob": ("regexp_replace",),
     "text_entropy": ("regexp_replace",),
+    "dedup_simhash": ("regexp_replace",),        # tokenize projection
 }
 
 
