@@ -137,24 +137,20 @@ def _steal_pct(a, b) -> float | None:
 
 
 def synth_scale10_dir(spark, base_sf: str) -> str:
-    """Write-once 10x replication of lineitem+orders under /tmp and
-    return a dir usable as an sf_dir (other tables symlink to the base).
+    """Write-once 10x replication of lineitem+orders, published as an
+    asset of `base_sf` (impala_avx2_parquet_scanner_spark/assets.py);
+    returns a dir usable as an sf_dir (other tables symlink to the base).
 
     Replicas shift l_orderkey/o_orderkey by a disjoint per-replica offset
     (join keys stay consistent; part/customer foreign keys unchanged, so
     dimension joins fan out 10x — the same shape real growth has).
     Deterministic, so Spark and DuckDB read identical bytes."""
-    import hashlib
-
     from pyspark.sql import functions as F
 
+    from impala_avx2_parquet_scanner_spark.assets import publish
     from impala_avx2_parquet_scanner_spark.catalog import TABLES, table
 
-    key = hashlib.md5(os.path.abspath(base_sf).encode()).hexdigest()[:12]
-    out_dir = f"/tmp/spark_graft_bench10x_{key}"
-    done = os.path.join(out_dir, "_DONE")
-    if not os.path.exists(done):
-        os.makedirs(out_dir, exist_ok=True)
+    def build(out_dir):
         okey_span = (
             table(spark, base_sf, "orders").agg(F.max("o_orderkey")).collect()[0][0]
             + 1
@@ -174,13 +170,13 @@ def synth_scale10_dir(spark, base_sf: str) -> str:
                 os.path.join(out_dir, f"{name}.parquet")
             )
         for t in TABLES:
-            if t in ("lineitem", "orders"):
-                continue
-            link = os.path.join(out_dir, f"{t}.parquet")
-            if not os.path.exists(link):
-                os.symlink(os.path.join(base_sf, f"{t}.parquet"), link)
-        open(done, "w").close()
-    return out_dir
+            if t not in ("lineitem", "orders"):
+                os.symlink(
+                    os.path.abspath(os.path.join(base_sf, f"{t}.parquet")),
+                    os.path.join(out_dir, f"{t}.parquet"),
+                )
+
+    return publish(base_sf, "bench10x", build)
 
 
 def main() -> None:

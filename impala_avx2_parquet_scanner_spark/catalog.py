@@ -20,6 +20,7 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from impala_avx2_parquet_scanner_spark.assets import input_stamp
 from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
 
 TABLES = (
@@ -50,9 +51,9 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: session — the source-list conf is resolved when the relation is
 #: CREATED, so a memo hit across a mid-session V1↔V2 flip (the metadata
 #: count(*) pushdown tests do this) would replay the stale source
-#: version.  Escape hatch for callers that overwrite a table path
-#: mid-session (none in-tree do — fixture writers write once, then
-#: read): SPARK_GRAFT_NO_TABLE_CACHE=1.
+#: version.  Each entry also holds the table files' (size, mtime) stamp
+#: (`assets.input_stamp`, one `stat` for a single-file table), and a
+#: table rewritten mid-session no longer matches it and is loaded again.
 _TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
@@ -61,22 +62,25 @@ _TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table with engine-required confs applied."""
     ensure_runtime_confs(spark)
-    if os.environ.get("SPARK_GRAFT_NO_TABLE_CACHE"):
-        return _load(spark, sf_dir, name)
     memo = _TABLE_MEMO.setdefault(spark, {})
     try:
         v1_list = spark.conf.get("spark.sql.sources.useV1SourceList")
     except Exception:
         v1_list = None
     key = (os.path.realpath(sf_dir), name, v1_list)
-    df = memo.get(key)
-    if df is None:
-        df = memo[key] = _load(spark, sf_dir, name)
-    return df
+    stamp = input_stamp(_path(sf_dir, name))
+    hit = memo.get(key)
+    if hit is None or hit[0] != stamp:
+        hit = memo[key] = (stamp, _load(spark, sf_dir, name))
+    return hit[1]
+
+
+def _path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = _path(sf_dir, name)
     if name == "events":
         return _load_events(spark, path)
     return spark.read.parquet(path)
@@ -149,15 +153,13 @@ def spread_table(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataF
     flipping it mid-session never hands back a frame whose spread
     disagrees with what `pin_above_spread` builds now."""
     base = table(spark, sf_dir, name)
-    if os.environ.get("SPARK_GRAFT_NO_TABLE_CACHE"):
-        return _spread(spark, base, key)
     memo = _TABLE_MEMO.setdefault(spark, {})
     no_spread = bool(os.environ.get("SPARK_GRAFT_NO_SPREAD"))
     mkey = ("__spread__", os.path.realpath(sf_dir), name, key, no_spread)
-    df = memo.get(mkey)
-    if df is None:
-        df = memo[mkey] = _spread(spark, base, key)
-    return df
+    hit = memo.get(mkey)
+    if hit is None or hit[0] is not base:  # base reloaded: spread it anew
+        hit = memo[mkey] = (base, _spread(spark, base, key))
+    return hit[1]
 
 
 def _spread(spark: SparkSession, df: DataFrame, key: str) -> DataFrame:

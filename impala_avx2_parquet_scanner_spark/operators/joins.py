@@ -331,48 +331,46 @@ def join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bucketed_orderkey_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Idempotently materialize lineitem and orders as BUCKETED tables
-    (8 buckets on the orderkey, bucket-sorted) in the session warehouse
-    and return their names.  Write-once per fixture: subsequent calls see
-    the catalog entries and reuse the layout, so the registry query's
-    steady-state plan is the pure co-located read."""
-    import hashlib
-    import os as _os
-
+    (8 buckets on the orderkey, bucket-sorted) as write-once assets and
+    return their catalog names.  Session catalogs are in-memory, so the
+    name is (re-)registered over the published files as an EXTERNAL
+    bucketed table — the bucket spec in the DDL is what lets the planner
+    trust the files' hash layout — and the registry query's steady-state
+    plan is the pure co-located read."""
+    from impala_avx2_parquet_scanner_spark.assets import asset_key, publish
     from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
 
     ensure_runtime_confs(spark)
-    key = hashlib.md5(_os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+    key = asset_key(sf_dir)  # rewritten inputs get new table names
     names = []
     for tbl, col, nm in (
         ("lineitem", "l_orderkey", "li_bkt"),
         ("orders", "o_orderkey", "ord_bkt"),
     ):
         name = f"{nm}_{key}"
-        path = _os.path.join("/tmp/spark_graft_bucketed", key, tbl)
         if not spark.catalog.tableExists(name):
-            if _os.path.exists(_os.path.join(path, "_SUCCESS")):
-                # Layout already on disk from an earlier session (session
-                # catalogs are in-memory): re-register the EXTERNAL
-                # bucketed table over it — bucket spec in the DDL is what
-                # lets the planner trust the files' hash layout.
-                cols = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}"
-                    for f in table(spark, sf_dir, tbl).schema.fields
-                )
-                spark.sql(
-                    f"CREATE TABLE {name} ({cols}) USING parquet "
-                    f"CLUSTERED BY ({col}) SORTED BY ({col}) INTO 8 BUCKETS "
-                    f"LOCATION '{path}'"
-                )
-            else:
-                (
-                    table(spark, sf_dir, tbl)
-                    .write.bucketBy(8, col)
-                    .sortBy(col)
-                    .option("path", path)
-                    .mode("overwrite")
-                    .saveAsTable(name)
-                )
+
+            def build(path, tbl=tbl, col=col, name=name):
+                # saveAsTable is the bucketed writer; its catalog entry
+                # names the unpublished directory, so it is dropped (the
+                # table is EXTERNAL: the files stay)
+                try:
+                    table(spark, sf_dir, tbl).write.bucketBy(8, col).sortBy(
+                        col
+                    ).option("path", path).mode("overwrite").saveAsTable(name)
+                finally:
+                    spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+            path = publish(sf_dir, f"bucketed_{tbl}", build)
+            cols = ", ".join(
+                f"{f.name} {f.dataType.simpleString()}"
+                for f in table(spark, sf_dir, tbl).schema.fields
+            )
+            spark.sql(
+                f"CREATE TABLE {name} ({cols}) USING parquet "
+                f"CLUSTERED BY ({col}) SORTED BY ({col}) INTO 8 BUCKETS "
+                f"LOCATION '{path}'"
+            )
         names.append(name)
     return names[0], names[1]
 

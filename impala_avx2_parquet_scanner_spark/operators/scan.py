@@ -262,26 +262,20 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def partitioned_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
     """Idempotently materialize lineitem as a Hive-partitioned layout
-    (`l_returnflag=A/N/R` directories) under a per-fixture cache dir and
-    return the path.  Write-once: subsequent calls see `_SUCCESS` and
-    reuse the layout, so the registry query's steady-state plan is pure
-    partition-pruned read."""
-    import hashlib
-    import os as _os
-
+    (`l_returnflag=A/N/R` directories) as a write-once asset and return
+    the path.  Subsequent calls reuse the layout, so the registry query's
+    steady-state plan is pure partition-pruned read."""
+    from impala_avx2_parquet_scanner_spark.assets import publish
     from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
 
     ensure_runtime_confs(spark)  # cache-hit path skips table(); confs still required
-    key = hashlib.md5(_os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = _os.path.join("/tmp/spark_graft_partitioned", key, "lineitem_by_returnflag")
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        (
-            table(spark, sf_dir, "lineitem")
-            .write.mode("overwrite")
-            .partitionBy("l_returnflag")
-            .parquet(path)
-        )
-    return path
+
+    def build(path):
+        table(spark, sf_dir, "lineitem").write.mode("overwrite").partitionBy(
+            "l_returnflag"
+        ).parquet(path)
+
+    return publish(sf_dir, "lineitem_by_returnflag", build)
 
 
 def nested_documents_path(spark: SparkSession, sf_dir: str) -> str:
@@ -291,27 +285,19 @@ def nested_documents_path(spark: SparkSession, sf_dir: str) -> str:
     parquet's Dremel-style nested storage: each struct leaf is its own
     column chunk, so field-level projection and predicates can prune at
     the storage layer exactly like top-level columns."""
-    import hashlib
-    import os as _os
-
+    from impala_avx2_parquet_scanner_spark.assets import publish
     from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
 
     ensure_runtime_confs(spark)  # cache-hit path skips table(); confs still required
 
-    key = hashlib.md5(_os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = _os.path.join("/tmp/spark_graft_partitioned", key, "documents_nested")
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        (
-            table(spark, sf_dir, "documents")
-            .select(
-                "doc_id",
-                F.struct("lang", "source", "n_chars").alias("meta"),
-                "text",
-            )
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+    def build(path):
+        table(spark, sf_dir, "documents").select(
+            "doc_id",
+            F.struct("lang", "source", "n_chars").alias("meta"),
+            "text",
+        ).write.mode("overwrite").parquet(path)
+
+    return publish(sf_dir, "documents_nested", build)
 
 
 _NESTED_PRUNED_ORACLE = """

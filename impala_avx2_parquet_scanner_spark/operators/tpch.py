@@ -422,23 +422,21 @@ def _materialize_sorted_lineitem(spark: SparkSession, sf_dir: str) -> str:
     — dictionary encoding + tight per-file/row-group min-max stats), the
     Spark-native analog of the reference's predicate-on-encoded-sorted-
     data headline claim (README.md:15-22, dict-encoding.h:393-406)."""
-    import hashlib
-    import os
-
+    from impala_avx2_parquet_scanner_spark.assets import publish
     from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
     from impala_avx2_parquet_scanner_spark.sources.parquet_io import (
         write_sorted_parquet,
     )
 
     ensure_runtime_confs(spark)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = os.path.join("/tmp/spark_graft_sorted", key, "lineitem_qty")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def build(path):
         write_sorted_parquet(
             table(spark, sf_dir, "lineitem"), path, ("l_quantity",),
             num_files=16,
         )
-    return path
+
+    return publish(sf_dir, "lineitem_sorted_qty", build)
 
 
 def _selectivity_sorted_query(threshold: int, pct: int):
@@ -476,6 +474,27 @@ for _k, _pct in ((1, 2), (10, 20), (50, 100)):
         _selectivity_sorted_query(_k, _pct))
 
 
+def _materialize_zorder_lineitem(spark: SparkSession, sf_dir: str) -> str:
+    """Write-once rewrite of lineitem Z-ordered on (l_quantity,
+    l_discount) through the engine's Morton-key sink
+    (write_zordered_parquet); → its path."""
+    from impala_avx2_parquet_scanner_spark.assets import publish
+    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
+    from impala_avx2_parquet_scanner_spark.sources.parquet_io import (
+        write_zordered_parquet,
+    )
+
+    ensure_runtime_confs(spark)
+
+    def build(path):
+        write_zordered_parquet(
+            table(spark, sf_dir, "lineitem"), path,
+            "l_quantity", "l_discount", num_files=16,
+        )
+
+    return publish(sf_dir, "lineitem_zorder", build)
+
+
 _ZORDER_ORACLE = """
 SELECT COUNT(*) AS n_rows,
        CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price,
@@ -502,22 +521,9 @@ def scan_zorder_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     column.  Both filters reach the scan as PushedFilters; the DuckDB
     oracle replays the aggregate on the stock lineitem, so a hash match
     also certifies the z-layout rewrite is value-lossless."""
-    import hashlib
     import os
 
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
-    from impala_avx2_parquet_scanner_spark.sources.parquet_io import (
-        write_zordered_parquet,
-    )
-
-    ensure_runtime_confs(spark)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = os.path.join("/tmp/spark_graft_sorted", key, "lineitem_zorder")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_zordered_parquet(
-            table(spark, sf_dir, "lineitem"), path,
-            "l_quantity", "l_discount", num_files=16,
-        )
+    path = _materialize_zorder_lineitem(spark, sf_dir)
     l = spark.read.parquet(os.path.join(path, "*.parquet"))
     return l.filter(
         (F.col("l_quantity") <= 5) & (F.col("l_discount") >= 0.08)

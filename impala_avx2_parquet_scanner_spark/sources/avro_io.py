@@ -62,6 +62,8 @@ import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 
+from impala_avx2_parquet_scanner_spark.assets import publish
+from impala_avx2_parquet_scanner_spark.catalog import table
 from impala_avx2_parquet_scanner_spark.registry import query
 from impala_avx2_parquet_scanner_spark.sources.format_roundtrip import (
     _AGG_ORACLE,
@@ -995,35 +997,25 @@ AvroDataSource.simpleStreamReader = _avro_simple_stream_reader
 # ---------------------------------------------------------------------------
 
 
-def _clear_unsealed(path: str) -> None:
-    """A cache directory without the `_DONE` manifest is a crashed prior
-    write attempt: remove its stray part files so the re-materialization
-    starts clean (the reader also ignores unmanifested parts, but leaving
-    them would grow the directory on every retry)."""
-    if os.path.isdir(path) and not os.path.exists(os.path.join(path, "_DONE")):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-
-
-def _materialize_avro(spark: SparkSession, sf_dir: str) -> str:
-    from impala_avx2_parquet_scanner_spark.catalog import table
+def _avro_asset(spark: SparkSession, sf_dir: str, name: str, source) -> str:
+    """Write-once: the rows of `source()` encoded into Avro object
+    container files by the avrodir writer (4 tasks), published as the
+    asset `name`.  The avrodir source is registered either way: the
+    caller reads it next."""
     from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
 
     ensure_runtime_confs(spark)  # cache-hit path skips table(); confs required
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = os.path.join("/tmp/spark_graft_formats", key, "lineitem_avro")
-    if not os.path.exists(os.path.join(path, "_DONE")):
-        _clear_unsealed(path)
-        try:
-            spark.dataSource.register(AvroDataSource)
-        except Exception:  # already registered on this session
-            pass
-        src = table(spark, sf_dir, "lineitem").select(*_LI_COLS)
-        src.repartition(4).write.format("avrodir").option("path", path).mode(
-            "append"
-        ).save()
-    return path
+    try:
+        spark.dataSource.register(AvroDataSource)
+    except Exception:  # already registered on this session
+        pass
+
+    def build(path):
+        source().repartition(4).write.format("avrodir").option(
+            "path", path
+        ).mode("append").save()
+
+    return publish(sf_dir, name, build)
 
 
 @query(
@@ -1043,11 +1035,10 @@ def scan_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     not involved; its absence was the round-3 'Avro pinned error' gap."""
     if not DATASOURCE_API_AVAILABLE:
         raise NotImplementedError("Python DataSource API requires Spark >= 4.0")
-    path = _materialize_avro(spark, sf_dir)
-    try:
-        spark.dataSource.register(AvroDataSource)
-    except Exception:
-        pass
+    path = _avro_asset(
+        spark, sf_dir, "lineitem_avro",
+        lambda: table(spark, sf_dir, "lineitem").select(*_LI_COLS),
+    )
     df = spark.read.format("avrodir").option("path", path).load()
     # declared read schema must match the embedded one (planning check)
     assert [f.name for f in df.schema.fields] == [f.name for f in _LI_SCHEMA.fields]
@@ -1062,26 +1053,6 @@ SELECT CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS ship_year,
 FROM lineitem
 GROUP BY 1
 """
-
-
-def _materialize_avro_temporal(spark: SparkSession, sf_dir: str) -> str:
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
-
-    ensure_runtime_confs(spark)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = os.path.join("/tmp/spark_graft_formats", key, "lineitem_avro_temporal")
-    if not os.path.exists(os.path.join(path, "_DONE")):
-        _clear_unsealed(path)
-        try:
-            spark.dataSource.register(AvroDataSource)
-        except Exception:
-            pass
-        src = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-        src.repartition(4).write.format("avrodir").option("path", path).mode(
-            "append"
-        ).save()
-    return path
 
 
 @query(
@@ -1104,11 +1075,12 @@ def scan_avro_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_other_formats.py.)"""
     if not DATASOURCE_API_AVAILABLE:
         raise NotImplementedError("Python DataSource API requires Spark >= 4.0")
-    path = _materialize_avro_temporal(spark, sf_dir)
-    try:
-        spark.dataSource.register(AvroDataSource)
-    except Exception:
-        pass
+    path = _avro_asset(
+        spark, sf_dir, "lineitem_avro_temporal",
+        lambda: table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_shipdate"
+        ),
+    )
     df = spark.read.format("avrodir").option("path", path).load()
     assert df.schema["l_shipdate"].dataType.simpleString() == "timestamp_ntz"
     from pyspark.sql import functions as F
@@ -1134,42 +1106,6 @@ GROUP BY lang
 """
 
 
-def _materialize_avro_complex(spark: SparkSession, sf_dir: str) -> str:
-    from pyspark.sql import functions as F
-
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
-
-    ensure_runtime_confs(spark)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = os.path.join("/tmp/spark_graft_formats", key, "documents_avro_complex")
-    if not os.path.exists(os.path.join(path, "_DONE")):
-        _clear_unsealed(path)
-        try:
-            spark.dataSource.register(AvroDataSource)
-        except Exception:
-            pass
-        src = table(spark, sf_dir, "documents").select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.struct(
-                F.col("lang"), F.col("n_chars").cast("long").alias("n_chars")
-            ).alias("meta"),
-            F.when(
-                F.col("n_chars") % 2 == 0,
-                F.array(F.col("lang"), (F.col("doc_id") % 7).cast("string")),
-            )
-            .otherwise(F.array().cast("array<string>"))
-            .alias("toks"),
-            F.create_map(
-                F.lit("l"), F.col("lang"), F.lit("s"), F.col("source")
-            ).alias("props"),
-        )
-        src.repartition(4).write.format("avrodir").option("path", path).mode(
-            "append"
-        ).save()
-    return path
-
-
 @query(
     "scan_avro_complex",
     oracle=_COMPLEX_ORACLE,
@@ -1192,13 +1128,26 @@ def scan_avro_complex(spark: SparkSession, sf_dir: str) -> DataFrame:
     (logical types)."""
     if not DATASOURCE_API_AVAILABLE:
         raise NotImplementedError("Python DataSource API requires Spark >= 4.0")
-    path = _materialize_avro_complex(spark, sf_dir)
-    try:
-        spark.dataSource.register(AvroDataSource)
-    except Exception:
-        pass
     from pyspark.sql import functions as F
 
+    path = _avro_asset(
+        spark, sf_dir, "documents_avro_complex",
+        lambda: table(spark, sf_dir, "documents").select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.struct(
+                F.col("lang"), F.col("n_chars").cast("long").alias("n_chars")
+            ).alias("meta"),
+            F.when(
+                F.col("n_chars") % 2 == 0,
+                F.array(F.col("lang"), (F.col("doc_id") % 7).cast("string")),
+            )
+            .otherwise(F.array().cast("array<string>"))
+            .alias("toks"),
+            F.create_map(
+                F.lit("l"), F.col("lang"), F.lit("s"), F.col("source")
+            ).alias("props"),
+        ),
+    )
     df = spark.read.format("avrodir").option("path", path).load()
     assert df.schema["meta"].dataType.simpleString() == (
         "struct<lang:string,n_chars:bigint>"

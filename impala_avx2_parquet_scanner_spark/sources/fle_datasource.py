@@ -2811,34 +2811,6 @@ class _FleCommit(WriterCommitMessage):
         self.bfs = bfs or []
 
 
-def _clear_segments(path: str) -> None:
-    """Remove every segment file + manifest under `path` (unsealed-retry
-    hygiene — stale seg_*.fle / task temp files from a crashed attempt
-    or a previous layout must not survive into a new write).  Lineage
-    sidecars go too: a stale merged→sources map from a previous layout
-    could mark a NEW layout's reused names as already-streamed."""
-    if not os.path.isdir(path):
-        return
-    for f in os.listdir(path):
-        if (
-            f.endswith(".fle") or f == "_DONE" or ".fle.tmp-" in f
-            or f.endswith(".retired")
-            or f.endswith(".bf") or ".fle.bf.tmp-" in f
-            or f in (_LINEAGE_NAME, _LINEAGE_NAME + ".pending")
-        ):
-            try:
-                os.remove(os.path.join(path, f))
-            except OSError:
-                pass
-    hist = os.path.join(path, _HISTORY_DIR)
-    if os.path.isdir(hist):
-        for f in os.listdir(hist):
-            try:
-                os.remove(os.path.join(hist, f))
-            except OSError:
-                pass
-
-
 #: compaction lineage sidecar: maps each merged segment name to the
 #: ORIGINAL segment names its rows came from (flattened through prior
 #: compactions), so the STREAM reader can recognize a merged file as
@@ -3892,11 +3864,68 @@ def register_fledir(spark) -> None:
         pass
 
 
-def _fle_asset_dir(sf_dir: str, leaf: str) -> str:
-    import hashlib as _h
+def write_fledir(frame, columns, path, mode="overwrite", *, seg_base=0,
+                 **writer_options) -> None:
+    """Encode `frame` into `.fle` segments on the executors (one per
+    Arrow batch, inside `mapInPandas`) and commit them to `path` through
+    the fledir writer.  `columns` lists ``(name, cast, hint)`` per stored
+    column: `cast` is a numpy dtype applied to the batch values (None
+    keeps them), `hint` the :func:`encode_segment_columns` kind hint.
+    Segment ids are ``seg_base + partition·100000 + batch``; an append
+    that must not rewrite earlier segments passes a disjoint
+    `seg_base`.  `writer_options` become fledir options (None dropped)."""
+    import pandas as _pd
 
-    key = _h.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join("/tmp/spark_graft_formats", key, leaf)
+    def encode(batches):
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        for i, pdf in enumerate(batches):
+            cols = []
+            for name, cast, hint in columns:
+                v = pdf[name].to_numpy()
+                cols.append((name, v if cast is None else v.astype(cast), hint))
+            yield _pd.DataFrame({
+                "seg_id": [seg_base + pid * 100_000 + i],
+                "payload": [encode_segment_columns(cols)],
+            })
+
+    w = (
+        frame.mapInPandas(encode, schema="seg_id long, payload binary")
+        .write.format("fledir")
+        .mode(mode)
+        .option("path", path)
+    )
+    for k, v in writer_options.items():
+        if v is not None:
+            w = w.option(k, v)
+    w.save()
+
+
+def _table(spark, sf_dir: str, name: str):
+    """`catalog.table`, imported at call time: executors import this
+    module and never need the catalog."""
+    from impala_avx2_parquet_scanner_spark.catalog import table
+
+    return table(spark, sf_dir, name)
+
+
+def _fle_asset(spark, sf_dir: str, name: str, build) -> str:
+    """Publish the write-once FLE fixture `name` of `sf_dir` through
+    :func:`impala_avx2_parquet_scanner_spark.assets.publish`.  The
+    session confs and the fledir source are put in place first: the
+    caller's read needs both even when the asset already exists."""
+    from impala_avx2_parquet_scanner_spark.assets import publish
+    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
+
+    ensure_runtime_confs(spark)
+    register_fledir(spark)
+    return publish(sf_dir, name, build)
+
+
+#: (l_returnflag dictionary, l_quantity int planes): the column spec of
+#: the two-column lineitem fixtures
+_FLAG_QTY = [("l_returnflag", None, None), ("l_quantity", np.int64, None)]
 
 
 def materialize_fle_dir(spark, sf_dir: str) -> str:
@@ -3907,42 +3936,16 @@ def materialize_fle_dir(spark, sf_dir: str) -> str:
     in-plan masks.  Encoding happens inside `mapInPandas` Arrow batches
     on the executors; the writer tasks persist their segments and the
     commit seals the `_DONE` manifest."""
-    import pandas as _pd
+    from pyspark.sql import functions as F
 
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
+    def build(out):
+        qty = F.col("l_quantity")
+        frame = _table(spark, sf_dir, "lineitem").select(
+            "l_returnflag", F.when(qty != 10, qty).alias("l_quantity")
+        )  # the NULLs arrive as NaN, which marks them for the encoder
+        write_fledir(frame, [_FLAG_QTY[0], ("l_quantity", None, None)], out)
 
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_assets_v2")
-    if os.path.exists(os.path.join(out, "_DONE")):
-        return out
-    _clear_segments(out)  # crashed unsealed attempt: drop its files
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            qty = pdf["l_quantity"].astype("float64")
-            qty_nullable = qty.where(qty != 10.0)  # NaN marks the NULLs
-            payload = encode_segment(
-                pdf["l_returnflag"].to_numpy(), qty_nullable.to_numpy()
-            )
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-            )
-
-    (
-        table(spark, sf_dir, "lineitem")
-        .select("l_returnflag", "l_quantity")
-        .mapInPandas(encode, schema="seg_id long, payload binary")
-        .write.format("fledir")
-        .mode("overwrite")
-        .option("path", out)
-        .save()
-    )
-    return out
+    return _fle_asset(spark, sf_dir, "fle", build)
 
 
 def materialize_fle_sorted_dir(spark, sf_dir: str) -> str:
@@ -3953,50 +3956,21 @@ def materialize_fle_sorted_dir(spark, sf_dir: str) -> str:
     (`write_sorted_parquet`), giving the stat-pruning path real
     planning-time file skips (tightened row-group stats,
     hdfs-parquet-table-writer.cc's sorted layout made observable)."""
-    import pandas as _pd
 
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
+    def build(out):
+        frame = (
+            _table(spark, sf_dir, "lineitem")
+            .select("l_returnflag", "l_quantity")
+            # range-partition THEN sort within partitions: every segment
+            # (one per Arrow batch per partition) covers a narrow, disjoint
+            # quantity range — the layout the reference's sorted writer
+            # produces, which is what makes min/max stats selective
+            .repartitionByRange(8, "l_quantity")
+            .sortWithinPartitions("l_quantity")
+        )
+        write_fledir(frame, _FLAG_QTY, out)
 
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_sorted_assets")
-    if os.path.exists(os.path.join(out, "_DONE")):
-        return out
-    _clear_segments(out)
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            payload = encode_segment_columns([
-                ("l_returnflag", pdf["l_returnflag"].to_numpy()),
-                (
-                    "l_quantity",
-                    pdf["l_quantity"].to_numpy().astype(np.int64),
-                ),
-            ])
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-            )
-
-    (
-        table(spark, sf_dir, "lineitem")
-        .select("l_returnflag", "l_quantity")
-        # range-partition THEN sort within partitions: every segment
-        # (one per Arrow batch per partition) covers a narrow, disjoint
-        # quantity range — the layout the reference's sorted writer
-        # produces, which is what makes min/max stats selective
-        .repartitionByRange(8, "l_quantity")
-        .sortWithinPartitions("l_quantity")
-        .mapInPandas(encode, schema="seg_id long, payload binary")
-        .write.format("fledir")
-        .mode("overwrite")
-        .option("path", out)
-        .save()
-    )
-    return out
+    return _fle_asset(spark, sf_dir, "fle_sorted", build)
 
 
 def materialize_fle_chunked_dir(spark, sf_dir: str) -> str:
@@ -4009,49 +3983,20 @@ def materialize_fle_chunked_dir(spark, sf_dir: str) -> str:
     tier exists for: a boundary file the file stats must keep, whose
     interior the page-level stats skip
     (hdfs-parquet-scanner.cc:1125-1132)."""
-    import pandas as _pd
 
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
+    def build(out):
+        frame = (
+            _table(spark, sf_dir, "lineitem")
+            .select("l_returnflag", "l_quantity")
+            # round-robin repartition (hash of nothing = arbitrary) then
+            # sort within: each partition holds a full-domain sample in
+            # ascending order — file stats useless, chunk stats sharp
+            .repartition(8)
+            .sortWithinPartitions("l_quantity")
+        )
+        write_fledir(frame, _FLAG_QTY, out)
 
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_chunked_assets")
-    if os.path.exists(os.path.join(out, "_DONE")):
-        return out
-    _clear_segments(out)
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            payload = encode_segment_columns([
-                ("l_returnflag", pdf["l_returnflag"].to_numpy()),
-                (
-                    "l_quantity",
-                    pdf["l_quantity"].to_numpy().astype(np.int64),
-                ),
-            ])
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-            )
-
-    (
-        table(spark, sf_dir, "lineitem")
-        .select("l_returnflag", "l_quantity")
-        # round-robin repartition (hash of nothing = arbitrary) then
-        # sort within: each partition holds a full-domain sample in
-        # ascending order — file stats useless, chunk stats sharp
-        .repartition(8)
-        .sortWithinPartitions("l_quantity")
-        .mapInPandas(encode, schema="seg_id long, payload binary")
-        .write.format("fledir")
-        .mode("overwrite")
-        .option("path", out)
-        .save()
-    )
-    return out
+    return _fle_asset(spark, sf_dir, "fle_chunked", build)
 
 
 def materialize_fle_signed_dir(spark, sf_dir: str) -> str:
@@ -4060,49 +4005,18 @@ def materialize_fle_signed_dir(spark, sf_dir: str) -> str:
     (the container's own order-preserving offset; round 8).  Negative
     domains are what the reference's unsigned FLE codes cannot hold
     directly — the sorted-dictionary remap idea applied to integers."""
-    import pandas as _pd
-
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
-
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_signed_assets")
-    if os.path.exists(os.path.join(out, "_DONE")):
-        return out
-    _clear_segments(out)
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            payload = encode_segment_columns([
-                ("l_returnflag", pdf["l_returnflag"].to_numpy()),
-                (
-                    "balance",
-                    pdf["balance"].to_numpy().astype(np.int64),
-                ),
-            ])
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-            )
-
     from pyspark.sql import functions as F
 
-    (
-        table(spark, sf_dir, "lineitem")
-        .select(
+    def build(out):
+        frame = _table(spark, sf_dir, "lineitem").select(
             "l_returnflag",
             (F.col("l_quantity").cast("long") - F.lit(25)).alias("balance"),
         )
-        .mapInPandas(encode, schema="seg_id long, payload binary")
-        .write.format("fledir")
-        .mode("overwrite")
-        .option("path", out)
-        .save()
-    )
-    return out
+        write_fledir(
+            frame, [_FLAG_QTY[0], ("balance", np.int64, None)], out
+        )
+
+    return _fle_asset(spark, sf_dir, "fle_signed", build)
 
 
 def materialize_fle_typed_dir(spark, sf_dir: str) -> str:
@@ -4114,58 +4028,31 @@ def materialize_fle_typed_dir(spark, sf_dir: str) -> str:
     integer through the signed offset).  Segments are range-partitioned
     + sorted by the double column, so the manifest's typed min/max
     stats (f64 tag) prune files on the driver for price predicates."""
-    import pandas as _pd
-
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
-
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_typed_assets")
-    if os.path.exists(os.path.join(out, "_DONE")):
-        return out
-    _clear_segments(out)
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            payload = encode_segment_columns([
-                ("l_returnflag", pdf["l_returnflag"].to_numpy()),
-                ("price", pdf["price"].to_numpy(), "f64"),
-                ("ship_ts", pdf["ship_ts"].to_numpy()),
-                ("ship_date", pdf["ship_date"].to_numpy()),
-                ("returned", pdf["returned"].to_numpy()),
-                ("price_dec", pdf["price_dec"].to_numpy(), ("dec", 12, 2)),
-            ])
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-            )
-
     from pyspark.sql import functions as F
 
-    (
-        table(spark, sf_dir, "lineitem")
-        .select(
-            "l_returnflag",
-            F.col("l_extendedprice").alias("price"),
-            F.col("l_shipdate").alias("ship_ts"),
-            F.col("l_shipdate").cast("date").alias("ship_date"),
-            (F.col("l_returnflag") == F.lit("R")).alias("returned"),
-            F.col("l_extendedprice").cast("decimal(12,2)").alias(
-                "price_dec"
-            ),
+    def build(out):
+        frame = (
+            _table(spark, sf_dir, "lineitem")
+            .select(
+                "l_returnflag",
+                F.col("l_extendedprice").alias("price"),
+                F.col("l_shipdate").alias("ship_ts"),
+                F.col("l_shipdate").cast("date").alias("ship_date"),
+                (F.col("l_returnflag") == F.lit("R")).alias("returned"),
+                F.col("l_extendedprice").cast("decimal(12,2)").alias(
+                    "price_dec"
+                ),
+            )
+            .repartitionByRange(8, "price")
+            .sortWithinPartitions("price")
         )
-        .repartitionByRange(8, "price")
-        .sortWithinPartitions("price")
-        .mapInPandas(encode, schema="seg_id long, payload binary")
-        .write.format("fledir")
-        .mode("overwrite")
-        .option("path", out)
-        .save()
-    )
-    return out
+        write_fledir(frame, [
+            _FLAG_QTY[0], ("price", None, "f64"), ("ship_ts", None, None),
+            ("ship_date", None, None), ("returned", None, None),
+            ("price_dec", None, ("dec", 12, 2)),
+        ], out)
+
+    return _fle_asset(spark, sf_dir, "fle_typed", build)
 
 
 def materialize_fle_part_dir(spark, sf_dir: str) -> str:
@@ -4175,45 +4062,34 @@ def materialize_fle_part_dir(spark, sf_dir: str) -> str:
     min/max make PREFIX predicates file-prunable — the layout for the
     dictionary-predicate queries (LIKE evaluated per dictionary entry,
     dict-encoding.h:461-541)."""
-    import pandas as _pd
 
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
+    def build(out):
+        frame = (
+            _table(spark, sf_dir, "part")
+            .select("p_brand", "p_name", "p_type", "p_size")
+            .repartitionByRange(4, "p_brand")
+            .sortWithinPartitions("p_brand")
+        )
+        write_fledir(frame, [
+            ("p_brand", None, None), ("p_name", None, None),
+            ("p_type", None, None), ("p_size", np.int64, None),
+        ], out)
 
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_part_assets")
-    if os.path.exists(os.path.join(out, "_DONE")):
-        return out
-    _clear_segments(out)
+    return _fle_asset(spark, sf_dir, "fle_part", build)
 
-    def encode(batches):
-        from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            payload = encode_segment_columns([
-                ("p_brand", pdf["p_brand"].to_numpy()),
-                ("p_name", pdf["p_name"].to_numpy()),
-                ("p_type", pdf["p_type"].to_numpy()),
-                ("p_size", pdf["p_size"].to_numpy().astype(np.int64)),
-            ])
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-            )
-
-    (
-        table(spark, sf_dir, "part")
-        .select("p_brand", "p_name", "p_type", "p_size")
-        .repartitionByRange(4, "p_brand")
-        .sortWithinPartitions("p_brand")
-        .mapInPandas(encode, schema="seg_id long, payload binary")
-        .write.format("fledir")
-        .mode("overwrite")
-        .option("path", out)
-        .save()
-    )
-    return out
+def _committed_entries(path: str):
+    """(leaf dir, segment name, stats json) for every committed segment
+    of a flat or hive-partitioned fledir — the manifest walk the
+    metadata-only aggregates fold over; a leaf without its `_DONE`
+    manifest raises."""
+    part = discover_fledir_partitions(path)
+    for root in [leaf for _, leaf in part[1]] if part else [path]:
+        entries = _manifest_entries(root)
+        if not entries and not os.path.exists(os.path.join(root, "_DONE")):
+            raise ValueError(f"fledir: {root} has no _DONE manifest")
+        for name, stats_json in entries:
+            yield root, name, stats_json
 
 
 def fledir_row_count(path: str) -> int:
@@ -4226,27 +4102,21 @@ def fledir_row_count(path: str) -> int:
     segment's 14-byte header (n sits right after the magic)."""
     import json as _json
 
-    part = discover_fledir_partitions(path)
-    roots = [leaf for _, leaf in part[1]] if part else [path]
     total = 0
-    for root in roots:
-        entries = _manifest_entries(root)
-        if not entries and not os.path.exists(os.path.join(root, "_DONE")):
-            raise ValueError(f"fledir: {root} has no _DONE manifest")
-        for name, stats_json in entries:
-            n = None
-            if stats_json:
-                try:
-                    n = _json.loads(stats_json).get("__rows__")
-                except ValueError:
-                    n = None
-            if n is None:
-                with open(os.path.join(root, name), "rb") as fh:
-                    head = fh.read(14)
-                if head[:4] != _MAGIC:
-                    raise ValueError(f"fledir: bad segment magic in {name}")
-                (n,) = struct.unpack_from("<I", head, 4)
-            total += int(n)
+    for root, name, stats_json in _committed_entries(path):
+        n = None
+        if stats_json:
+            try:
+                n = _json.loads(stats_json).get("__rows__")
+            except ValueError:
+                n = None
+        if n is None:
+            with open(os.path.join(root, name), "rb") as fh:
+                head = fh.read(14)
+            if head[:4] != _MAGIC:
+                raise ValueError(f"fledir: bad segment magic in {name}")
+            (n,) = struct.unpack_from("<I", head, 4)
+        total += int(n)
     return total
 
 
@@ -4315,37 +4185,31 @@ def fledir_min_max(path: str, columns: list[str]) -> dict:
     from metadata that does not exist would mean silently scanning."""
     import json as _json
 
-    part = discover_fledir_partitions(path)
-    roots = [leaf for _, leaf in part[1]] if part else [path]
     agg: dict[str, tuple] = {c: (None, None) for c in columns}
-    for root in roots:
-        entries = _manifest_entries(root)
-        if not entries and not os.path.exists(os.path.join(root, "_DONE")):
-            raise ValueError(f"fledir: {root} has no _DONE manifest")
-        for name, stats_json in entries:
-            if not stats_json:
-                raise ValueError(
-                    f"fledir: segment {name!r} has a stats-less manifest "
-                    "entry — metadata min/max needs the stats written at "
-                    "commit time"
+    for root, name, stats_json in _committed_entries(path):
+        if not stats_json:
+            raise ValueError(
+                f"fledir: segment {name!r} has a stats-less manifest "
+                "entry — metadata min/max needs the stats written at "
+                "commit time"
+            )
+        st = _json.loads(stats_json)
+        for c in columns:
+            e = st.get(c)
+            if e is None:
+                raise KeyError(
+                    f"fledir: column {c!r} missing from segment "
+                    f"{name!r} stats"
                 )
-            st = _json.loads(stats_json)
-            for c in columns:
-                e = st.get(c)
-                if e is None:
-                    raise KeyError(
-                        f"fledir: column {c!r} missing from segment "
-                        f"{name!r} stats"
-                    )
-                if e["min"] is None:
-                    continue  # all-NULL segment: empty interval
-                mn = _stat_to_value(e, e["min"])
-                mx = _stat_to_value(e, e["max"])
-                cur_mn, cur_mx = agg[c]
-                agg[c] = (
-                    mn if cur_mn is None or mn < cur_mn else cur_mn,
-                    mx if cur_mx is None or mx > cur_mx else cur_mx,
-                )
+            if e["min"] is None:
+                continue  # all-NULL segment: empty interval
+            mn = _stat_to_value(e, e["min"])
+            mx = _stat_to_value(e, e["max"])
+            cur_mn, cur_mx = agg[c]
+            agg[c] = (
+                mn if cur_mn is None or mn < cur_mn else cur_mn,
+                mx if cur_mx is None or mx > cur_mx else cur_mx,
+            )
     return agg
 
 
@@ -4369,45 +4233,39 @@ def fledir_sum(path: str, columns: list[str]) -> dict:
     import decimal as _decm
     import json as _json
 
-    part = discover_fledir_partitions(path)
-    roots = [leaf for _, leaf in part[1]] if part else [path]
     agg: dict[str, list] = {c: [0, 0, False, None] for c in columns}
-    for root in roots:
-        entries = _manifest_entries(root)
-        if not entries and not os.path.exists(os.path.join(root, "_DONE")):
-            raise ValueError(f"fledir: {root} has no _DONE manifest")
-        for name, stats_json in entries:
-            if not stats_json:
-                raise ValueError(
-                    f"fledir: segment {name!r} has a stats-less manifest "
-                    "entry — metadata SUM needs the stats written at "
-                    "commit time"
+    for root, name, stats_json in _committed_entries(path):
+        if not stats_json:
+            raise ValueError(
+                f"fledir: segment {name!r} has a stats-less manifest "
+                "entry — metadata SUM needs the stats written at "
+                "commit time"
+            )
+        st = _json.loads(stats_json)
+        for c in columns:
+            e = st.get(c)
+            if e is None:
+                raise KeyError(
+                    f"fledir: column {c!r} missing from segment "
+                    f"{name!r} stats"
                 )
-            st = _json.loads(stats_json)
-            for c in columns:
-                e = st.get(c)
-                if e is None:
-                    raise KeyError(
-                        f"fledir: column {c!r} missing from segment "
-                        f"{name!r} stats"
-                    )
-                nv = e.get("nv")
-                if nv == 0 or e["min"] is None:
-                    continue  # all-NULL segment: contributes nothing
-                if "sum" not in e or nv is None:
-                    raise ValueError(
-                        f"fledir: column {c!r} carries no sum stat in "
-                        f"segment {name!r} — either the kind is not "
-                        "summable (string/dict/double/temporal) or the "
-                        "manifest predates the sum stat (rewrite or "
-                        "compact the table to refresh it)"
-                    )
-                a = agg[c]
-                a[0] += int(e["sum"])
-                a[1] += int(nv)
-                a[2] = True
-                if e.get("t") == "dec":
-                    a[3] = int(e["s"])
+            nv = e.get("nv")
+            if nv == 0 or e["min"] is None:
+                continue  # all-NULL segment: contributes nothing
+            if "sum" not in e or nv is None:
+                raise ValueError(
+                    f"fledir: column {c!r} carries no sum stat in "
+                    f"segment {name!r} — either the kind is not "
+                    "summable (string/dict/double/temporal) or the "
+                    "manifest predates the sum stat (rewrite or "
+                    "compact the table to refresh it)"
+                )
+            a = agg[c]
+            a[0] += int(e["sum"])
+            a[1] += int(nv)
+            a[2] = True
+            if e.get("t") == "dec":
+                a[3] = int(e["s"])
     out: dict[str, tuple] = {}
     for c, (total, nv, seen, scale) in agg.items():
         if not seen:
@@ -4488,56 +4346,31 @@ def materialize_fle_sum_dir(spark, sf_dir: str) -> str:
     term), and one decimal(12,2) column (unscaled-integer sum +
     scale-tag restore).  8 hash-scattered segments: nothing about the
     layout helps the aggregate — the manifest alone must."""
-    import pandas as _pd
-
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
-
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_sum_assets")
-    if os.path.exists(os.path.join(out, "_DONE")):
-        return out
-    _clear_segments(out)
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            payload = encode_segment_columns([
-                ("qty", pdf["qty"].to_numpy()),
-                ("disc", pdf["disc"].to_numpy().astype(np.int64)),
-                ("price_dec", pdf["price_dec"].to_numpy(), ("dec", 12, 2)),
-            ])
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-            )
-
     from pyspark.sql import functions as F
 
-    (
-        table(spark, sf_dir, "lineitem")
-        .select(
-            F.when(
-                F.col("l_orderkey") % 7 != 0,
-                F.col("l_quantity").cast("long"),
-            ).alias("qty"),
-            (
-                F.round(F.col("l_discount") * 100).cast("long") - F.lit(5)
-            ).alias("disc"),
-            F.col("l_extendedprice").cast("decimal(12,2)").alias(
-                "price_dec"
-            ),
+    def build(out):
+        frame = (
+            _table(spark, sf_dir, "lineitem")
+            .select(
+                F.when(
+                    F.col("l_orderkey") % 7 != 0,
+                    F.col("l_quantity").cast("long"),
+                ).alias("qty"),
+                (
+                    F.round(F.col("l_discount") * 100).cast("long") - F.lit(5)
+                ).alias("disc"),
+                F.col("l_extendedprice").cast("decimal(12,2)").alias(
+                    "price_dec"
+                ),
+            )
+            .repartition(8)
         )
-        .repartition(8)
-        .mapInPandas(encode, schema="seg_id long, payload binary")
-        .write.format("fledir")
-        .mode("overwrite")
-        .option("path", out)
-        .save()
-    )
-    return out
+        write_fledir(frame, [
+            ("qty", None, None), ("disc", np.int64, None),
+            ("price_dec", None, ("dec", 12, 2)),
+        ], out)
+
+    return _fle_asset(spark, sf_dir, "fle_sum", build)
 
 
 def materialize_fle_bloom_dir(spark, sf_dir: str) -> str:
@@ -4551,54 +4384,25 @@ def materialize_fle_bloom_dir(spark, sf_dir: str) -> str:
     the int id (splitmix-hashed value space) and the plain-string
     fingerprint (CRC-pair hashed), the two hash domains of
     hash-util.h:44-95."""
-    import pandas as _pd
-
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
-
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_bloom_assets")
-    if os.path.exists(os.path.join(out, "_DONE")):
-        return out
-    _clear_segments(out)
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            payload = encode_segment_columns([
-                ("rid", pdf["rid"].to_numpy().astype(np.int64)),
-                ("fp", pdf["fp"].to_numpy(), "str_plain"),
-                ("qty", pdf["qty"].to_numpy().astype(np.int64)),
-            ])
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-            )
-
     from pyspark.sql import functions as F
 
-    (
-        table(spark, sf_dir, "lineitem")
-        .select(
-            (F.col("l_orderkey") * 10 + F.col("l_linenumber"))
-            .cast("long").alias("rid"),
-            F.md5(
-                (F.col("l_orderkey") * 10 + F.col("l_linenumber"))
-                .cast("long").cast("string")
-            ).alias("fp"),
-            F.col("l_quantity").cast("long").alias("qty"),
+    def build(out):
+        rid = (F.col("l_orderkey") * 10 + F.col("l_linenumber")).cast("long")
+        frame = (
+            _table(spark, sf_dir, "lineitem")
+            .select(
+                rid.alias("rid"),
+                F.md5(rid.cast("string")).alias("fp"),
+                F.col("l_quantity").cast("long").alias("qty"),
+            )
+            .repartition(8, "rid")
         )
-        .repartition(8, "rid")
-        .mapInPandas(encode, schema="seg_id long, payload binary")
-        .write.format("fledir")
-        .mode("overwrite")
-        .option("path", out)
-        .option("bloomcols", "rid,fp")
-        .save()
-    )
-    return out
+        write_fledir(frame, [
+            ("rid", np.int64, None), ("fp", None, "str_plain"),
+            ("qty", np.int64, None),
+        ], out, bloomcols="rid,fp")
+
+    return _fle_asset(spark, sf_dir, "fle_bloom", build)
 
 
 def materialize_fle_history_dir(spark, sf_dir: str) -> str:
@@ -4611,73 +4415,33 @@ def materialize_fle_history_dir(spark, sf_dir: str) -> str:
     layout.  The timeline in `_history/` then has a snapshot per
     commit, and a generation-1 read must reproduce exactly the
     pre-append subset."""
-    import pandas as _pd
+    from pyspark.sql import functions as F
 
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
     from impala_avx2_parquet_scanner_spark.sources.fle_maintenance import (
         compact_fledir,
     )
 
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_history_assets_97")
-    if os.path.exists(os.path.join(out, "_DONE")) and os.path.exists(
-        os.path.join(out, _HISTORY_DIR, "3.manifest")
-    ):
-        return out
-    _clear_segments(out)
-
-    def make_encode(seg_base: int):
-        def encode(batches):
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            for i, pdf in enumerate(batches):
-                payload = encode_segment_columns([
-                    ("l_returnflag", pdf["l_returnflag"].to_numpy()),
-                    (
-                        "l_quantity",
-                        pdf["l_quantity"].to_numpy().astype(np.int64),
-                    ),
-                ])
-                yield _pd.DataFrame(
-                    {
-                        "seg_id": [seg_base + pid * 100_000 + i],
-                        "payload": [payload],
-                    }
-                )
-
-        return encode
-
-    from pyspark.sql import functions as F
-
-    base = table(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        F.col("l_quantity").cast("long").alias("l_quantity"),
-        "l_shipdate",
-    )
-    # the append phase offsets its segment ids: a reused name would
-    # REWRITE a gen-1 segment instead of extending the table
-    for mode, seg_base, pred in (
-        ("overwrite", 0, F.col("l_shipdate") < "1997-01-01"),
-        ("append", 10_000, F.col("l_shipdate") >= "1997-01-01"),
-    ):
-        (
-            base.filter(pred)
-            .select("l_returnflag", "l_quantity")
-            .repartition(4)
-            .mapInPandas(
-                make_encode(seg_base),
-                schema="seg_id long, payload binary",
-            )
-            .write.format("fledir")
-            .mode(mode)
-            .option("path", out)
-            .save()
+    def build(out):
+        base = _table(spark, sf_dir, "lineitem").select(
+            "l_returnflag",
+            F.col("l_quantity").cast("long").alias("l_quantity"),
+            "l_shipdate",
         )
-    compact_fledir(spark, out)
-    return out
+        # the append phase offsets its segment ids: a reused name would
+        # REWRITE a gen-1 segment instead of extending the table
+        for mode, seg_base, pred in (
+            ("overwrite", 0, F.col("l_shipdate") < "1997-01-01"),
+            ("append", 10_000, F.col("l_shipdate") >= "1997-01-01"),
+        ):
+            frame = (
+                base.filter(pred)
+                .select("l_returnflag", "l_quantity")
+                .repartition(4)
+            )
+            write_fledir(frame, _FLAG_QTY, out, mode, seg_base=seg_base)
+        compact_fledir(spark, out)
+
+    return _fle_asset(spark, sf_dir, "fle_history", build)
 
 
 def materialize_fle_stream_sink_dir(spark, sf_dir: str) -> str:
@@ -4689,85 +4453,41 @@ def materialize_fle_stream_sink_dir(spark, sf_dir: str) -> str:
     deterministic per-epoch names + prefix-replacement commits on the
     write side) exercised end-to-end, leaving a committed fledir the
     batch reader and the oracle then certify row-for-row."""
-    import pandas as _pd
-
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
-
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    root = _fle_asset_dir(sf_dir, "fle_stream_sink_assets")
-    feed = os.path.join(root, "feed")
-    sink = os.path.join(root, "sink")
-    marker = os.path.join(root, "_STREAMED")
-    if os.path.exists(os.path.join(sink, "_DONE")) and os.path.exists(
-        marker
-    ):
-        return sink
-    if os.path.exists(marker):
-        os.remove(marker)
-    _clear_segments(feed)
-    _clear_segments(sink)
-    import shutil as _shutil
-
-    ckpt = os.path.join(root, "ckpt")
-    if os.path.isdir(ckpt):
-        _shutil.rmtree(ckpt)
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            payload = encode_segment_columns([
-                ("l_returnflag", pdf["l_returnflag"].to_numpy()),
-                (
-                    "l_quantity",
-                    pdf["l_quantity"].to_numpy().astype(np.int64),
-                ),
-            ])
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-            )
-
     from pyspark.sql import functions as F
 
-    (
-        table(spark, sf_dir, "lineitem")
-        .select(
-            "l_returnflag",
-            F.col("l_quantity").cast("long").alias("l_quantity"),
+    def build(root):
+        feed = os.path.join(root, "feed")
+        frame = (
+            _table(spark, sf_dir, "lineitem")
+            .select(
+                "l_returnflag",
+                F.col("l_quantity").cast("long").alias("l_quantity"),
+            )
+            .repartition(4)
         )
-        .repartition(4)
-        .mapInPandas(encode, schema="seg_id long, payload binary")
-        .write.format("fledir")
-        .mode("overwrite")
-        .option("path", feed)
-        .save()
-    )
-    q = (
-        spark.readStream.format("fledir")
-        .option("path", feed)
-        .load()
-        .writeStream.format("fledir")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(300)
-    q.stop()
-    if not finished:
-        # a timed-out availableNow run left a PARTIAL sink; writing
-        # the marker would cache it forever (review finding) — fail
-        # loudly so the next run rebuilds from _clear_segments
-        raise RuntimeError(
-            "fledir stream-sink fixture: the availableNow copy did "
-            "not finish within 300s — partial sink NOT marked"
+        write_fledir(frame, _FLAG_QTY, feed)
+        q = (
+            spark.readStream.format("fledir")
+            .option("path", feed)
+            .load()
+            .writeStream.format("fledir")
+            .option("path", os.path.join(root, "sink"))
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
         )
-    with open(marker, "w") as fh:
-        fh.write("streamed\n")
-    return sink
+        finished = q.awaitTermination(300)
+        q.stop()
+        if not finished:
+            # a timed-out availableNow run left a PARTIAL sink: fail
+            # loudly so it is never published
+            raise RuntimeError(
+                "fledir stream-sink fixture: the availableNow copy did "
+                "not finish within 300s — partial sink NOT published"
+            )
+
+    root = _fle_asset(spark, sf_dir, "fle_stream_sink", build)
+    return os.path.join(root, "sink")
 
 
 def materialize_fle_partitioned_dir(spark, sf_dir: str) -> str:
@@ -4779,60 +4499,28 @@ def materialize_fle_partitioned_dir(spark, sf_dir: str) -> str:
     descriptors.h:178-262: the key column is never stored in the
     segments, conjuncts on it prune whole directories on the driver,
     and the reader materializes it from the directory name."""
-    import pandas as _pd
-
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
-
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_partitioned_assets")
-    part = discover_fledir_partitions(out)
-    if part is not None and len(part[1]) == 3:
-        return out
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            payload = encode_segment_columns([
-                ("l_linestatus", pdf["l_linestatus"].to_numpy()),
-                (
-                    "l_quantity",
-                    pdf["l_quantity"].to_numpy().astype(np.int64),
-                ),
-            ])
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-            )
-
     from pyspark.sql import functions as F
 
-    base = table(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_linestatus",
-        F.col("l_quantity").cast("long").alias("l_quantity"),
-    )
-    # one committed write per key — the per-partition descriptor model;
-    # the key set is tiny and known (a real partitioned sink would
-    # shuffle by key first)
-    for value in ("A", "N", "R"):
-        sub = os.path.join(out, f"l_returnflag={value}")
-        if os.path.exists(os.path.join(sub, "_DONE")):
-            continue
-        _clear_segments(sub)
-        (
-            base.filter(F.col("l_returnflag") == value)
-            .select("l_linestatus", "l_quantity")
-            .repartitionByRange(4, "l_quantity")
-            .sortWithinPartitions("l_quantity")
-            .mapInPandas(encode, schema="seg_id long, payload binary")
-            .write.format("fledir")
-            .mode("overwrite")
-            .option("path", sub)
-            .save()
+    def build(out):
+        base = _table(spark, sf_dir, "lineitem").select(
+            "l_returnflag", "l_linestatus",
+            F.col("l_quantity").cast("long").alias("l_quantity"),
         )
-    return out
+        # one committed write per key — the per-partition descriptor
+        # model; the key set is tiny and known (a real partitioned sink
+        # would shuffle by key first)
+        for value in ("A", "N", "R"):
+            frame = (
+                base.filter(F.col("l_returnflag") == value)
+                .select("l_linestatus", "l_quantity")
+                .repartitionByRange(4, "l_quantity")
+                .sortWithinPartitions("l_quantity")
+            )
+            write_fledir(frame, [
+                ("l_linestatus", None, None), ("l_quantity", np.int64, None),
+            ], os.path.join(out, f"l_returnflag={value}"))
+
+    return _fle_asset(spark, sf_dir, "fle_partitioned", build)
 
 
 def materialize_fle_docs_dir(spark, sf_dir: str) -> str:
@@ -4846,44 +4534,18 @@ def materialize_fle_docs_dir(spark, sf_dir: str) -> str:
     cap, test-pinned); `lang`/`source` stay low-cardinality
     order-preserving dictionaries, so one segment carries both string
     representations side by side."""
-    import pandas as _pd
 
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
+    def build(out):
+        frame = _table(spark, sf_dir, "documents").select(
+            "doc_id", "lang", "source", "text", "n_chars"
+        )
+        write_fledir(frame, [
+            ("doc_id", np.int64, None), ("lang", None, None),
+            ("source", None, None), ("text", None, "str_plain"),
+            ("n_chars", np.int64, None),
+        ], out)
 
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_docs_assets")
-    if os.path.exists(os.path.join(out, "_DONE")):
-        return out
-    _clear_segments(out)
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            payload = encode_segment_columns([
-                ("doc_id", pdf["doc_id"].to_numpy().astype(np.int64)),
-                ("lang", pdf["lang"].to_numpy()),
-                ("source", pdf["source"].to_numpy()),
-                ("text", pdf["text"].to_numpy(), "str_plain"),
-                ("n_chars", pdf["n_chars"].to_numpy().astype(np.int64)),
-            ])
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-            )
-
-    (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "source", "text", "n_chars")
-        .mapInPandas(encode, schema="seg_id long, payload binary")
-        .write.format("fledir")
-        .mode("overwrite")
-        .option("path", out)
-        .save()
-    )
-    return out
+    return _fle_asset(spark, sf_dir, "fle_docs", build)
 
 
 def materialize_fle_two_key_dir(spark, sf_dir: str) -> str:
@@ -4893,67 +4555,33 @@ def materialize_fle_two_key_dir(spark, sf_dir: str) -> str:
     l_linenumber) segments.  The reference's clustering columns are
     plural (num_clustering_cols, descriptors.h:154-162); conjuncts on
     BOTH keys must be consumed on the driver."""
-    import pandas as _pd
-
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
-
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_two_key_assets")
-    part = discover_fledir_partitions(out) if os.path.isdir(out) else None
-    if part is not None and len(part[1]) == 6:
-        return out
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            payload = encode_segment_columns([
-                (
-                    "l_quantity",
-                    pdf["l_quantity"].to_numpy().astype(np.int64),
-                ),
-                (
-                    "l_linenumber",
-                    pdf["l_linenumber"].to_numpy().astype(np.int64),
-                ),
-            ])
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-            )
-
     from pyspark.sql import functions as F
 
-    base = table(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_linestatus",
-        F.col("l_quantity").cast("long").alias("l_quantity"),
-        F.col("l_linenumber").cast("long").alias("l_linenumber"),
-    )
-    for rf in ("A", "N", "R"):
-        for ls in ("F", "O"):
-            sub = os.path.join(
-                out, f"l_returnflag={rf}", f"l_linestatus={ls}"
-            )
-            if os.path.exists(os.path.join(sub, "_DONE")):
-                continue
-            _clear_segments(sub)
-            (
-                base.filter(
-                    (F.col("l_returnflag") == rf)
-                    & (F.col("l_linestatus") == ls)
+    def build(out):
+        base = _table(spark, sf_dir, "lineitem").select(
+            "l_returnflag", "l_linestatus",
+            F.col("l_quantity").cast("long").alias("l_quantity"),
+            F.col("l_linenumber").cast("long").alias("l_linenumber"),
+        )
+        for rf in ("A", "N", "R"):
+            for ls in ("F", "O"):
+                frame = (
+                    base.filter(
+                        (F.col("l_returnflag") == rf)
+                        & (F.col("l_linestatus") == ls)
+                    )
+                    .select("l_quantity", "l_linenumber")
+                    .repartitionByRange(2, "l_quantity")
+                    .sortWithinPartitions("l_quantity")
                 )
-                .select("l_quantity", "l_linenumber")
-                .repartitionByRange(2, "l_quantity")
-                .sortWithinPartitions("l_quantity")
-                .mapInPandas(encode, schema="seg_id long, payload binary")
-                .write.format("fledir")
-                .mode("overwrite")
-                .option("path", sub)
-                .save()
-            )
-    return out
+                write_fledir(frame, [
+                    ("l_quantity", np.int64, None),
+                    ("l_linenumber", np.int64, None),
+                ], os.path.join(
+                    out, f"l_returnflag={rf}", f"l_linestatus={ls}"
+                ))
+
+    return _fle_asset(spark, sf_dir, "fle_two_key", build)
 
 
 def materialize_fle_multi_dir(spark, sf_dir: str) -> str:
@@ -4962,49 +4590,21 @@ def materialize_fle_multi_dir(spark, sf_dir: str) -> str:
     plain int) in one segment stream, matching the reference's
     one-scanner-per-slot column model (hdfs-parquet-scanner.cc:
     1410-1451) rather than the two-column demo."""
-    import pandas as _pd
+    from pyspark.sql import functions as F
 
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
-
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_multi_assets")
-    if os.path.exists(os.path.join(out, "_DONE")):
-        return out
-    _clear_segments(out)
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            qty = pdf["l_quantity"].astype("float64")
-            payload = encode_segment_columns([
-                ("l_returnflag", pdf["l_returnflag"].to_numpy()),
-                ("l_linestatus", pdf["l_linestatus"].to_numpy()),
-                ("l_quantity", qty.where(qty != 10.0).to_numpy()),
-                (
-                    "l_linenumber",
-                    pdf["l_linenumber"].to_numpy().astype(np.int64),
-                ),
-            ])
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-            )
-
-    (
-        table(spark, sf_dir, "lineitem")
-        .select(
-            "l_returnflag", "l_linestatus", "l_quantity", "l_linenumber"
+    def build(out):
+        qty = F.col("l_quantity")
+        frame = _table(spark, sf_dir, "lineitem").select(
+            "l_returnflag", "l_linestatus",
+            F.when(qty != 10, qty).alias("l_quantity"),  # NaN marks NULL
+            "l_linenumber",
         )
-        .mapInPandas(encode, schema="seg_id long, payload binary")
-        .write.format("fledir")
-        .mode("overwrite")
-        .option("path", out)
-        .save()
-    )
-    return out
+        write_fledir(frame, [
+            ("l_returnflag", None, None), ("l_linestatus", None, None),
+            ("l_quantity", None, None), ("l_linenumber", np.int64, None),
+        ], out)
+
+    return _fle_asset(spark, sf_dir, "fle_multi", build)
 
 
 def materialize_fle_fact_dir(spark, sf_dir: str) -> str:
@@ -5013,48 +4613,17 @@ def materialize_fle_fact_dir(spark, sf_dir: str) -> str:
     (l_returnflag) — the layout the runtime-filter path scans: a
     join-produced key set pushes as an IN conjunct and runs as code
     kernels on the l_suppkey planes (§2A #11 on the container)."""
-    import pandas as _pd
 
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
+    def build(out):
+        frame = _table(spark, sf_dir, "lineitem").select(
+            "l_suppkey", "l_quantity", "l_returnflag"
+        )
+        write_fledir(frame, [
+            ("l_suppkey", np.int64, None), ("l_quantity", np.int64, None),
+            ("l_returnflag", None, None),
+        ], out)
 
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_fact_assets")
-    if os.path.exists(os.path.join(out, "_DONE")):
-        return out
-    _clear_segments(out)
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            payload = encode_segment_columns([
-                (
-                    "l_suppkey",
-                    pdf["l_suppkey"].to_numpy().astype(np.int64),
-                ),
-                (
-                    "l_quantity",
-                    pdf["l_quantity"].to_numpy().astype(np.int64),
-                ),
-                ("l_returnflag", pdf["l_returnflag"].to_numpy()),
-            ])
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-            )
-
-    (
-        table(spark, sf_dir, "lineitem")
-        .select("l_suppkey", "l_quantity", "l_returnflag")
-        .mapInPandas(encode, schema="seg_id long, payload binary")
-        .write.format("fledir")
-        .mode("overwrite")
-        .option("path", out)
-        .save()
-    )
-    return out
+    return _fle_asset(spark, sf_dir, "fle_fact", build)
 
 
 def materialize_fle_zorder_dir(spark, sf_dir: str) -> str:
@@ -5070,67 +4639,38 @@ def materialize_fle_zorder_dir(spark, sf_dir: str) -> str:
     393-406 made spatial).  The price column rides the sortable-bits
     f64 kind, so its manifest stats and kernels answer fractional
     range literals exactly."""
-    import pandas as _pd
+    from pyspark.sql import functions as F
 
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
     from impala_avx2_parquet_scanner_spark.sources.parquet_io import (
         zorder_value,
     )
 
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_zorder_assets")
-    if os.path.exists(os.path.join(out, "_DONE")):
-        return out
-    _clear_segments(out)
+    def build(out):
+        df = _table(spark, sf_dir, "lineitem").select(
+            "l_returnflag",
+            "l_quantity",
+            F.col("l_extendedprice").alias("price"),
+        )
+        # column min/max from one aggregate, broadcast as a single row
+        # (no driver round-trip in the plan) — same recipe as the
+        # parquet sink
+        stats = df.agg(
+            F.min("l_quantity").alias("_mna"),
+            F.max("l_quantity").alias("_mxa"),
+            F.min("price").alias("_mnb"),
+            F.max("price").alias("_mxb"),
+        )
+        z = zorder_value(
+            F.col("l_quantity"), F.col("price"),
+            F.col("_mna"), F.col("_mxa"), F.col("_mnb"), F.col("_mxb"),
+        )
+        frame = (
+            df.crossJoin(F.broadcast(stats))
+            .withColumn("_z", z)
+            .repartitionByRange(16, "_z")
+            .sortWithinPartitions("_z")
+            .select("l_returnflag", "l_quantity", "price")
+        )
+        write_fledir(frame, _FLAG_QTY + [("price", None, "f64")], out)
 
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            payload = encode_segment_columns([
-                ("l_returnflag", pdf["l_returnflag"].to_numpy()),
-                (
-                    "l_quantity",
-                    pdf["l_quantity"].to_numpy().astype(np.int64),
-                ),
-                ("price", pdf["price"].to_numpy(), "f64"),
-            ])
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-            )
-
-    from pyspark.sql import functions as F
-
-    df = table(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        "l_quantity",
-        F.col("l_extendedprice").alias("price"),
-    )
-    # column min/max from one aggregate, broadcast as a single row (no
-    # driver round-trip in the plan) — same recipe as the parquet sink
-    stats = df.agg(
-        F.min("l_quantity").alias("_mna"),
-        F.max("l_quantity").alias("_mxa"),
-        F.min("price").alias("_mnb"),
-        F.max("price").alias("_mxb"),
-    )
-    z = zorder_value(
-        F.col("l_quantity"), F.col("price"),
-        F.col("_mna"), F.col("_mxa"), F.col("_mnb"), F.col("_mxb"),
-    )
-    (
-        df.crossJoin(F.broadcast(stats))
-        .withColumn("_z", z)
-        .repartitionByRange(16, "_z")
-        .sortWithinPartitions("_z")
-        .select("l_returnflag", "l_quantity", "price")
-        .mapInPandas(encode, schema="seg_id long, payload binary")
-        .write.format("fledir")
-        .mode("overwrite")
-        .option("path", out)
-        .save()
-    )
-    return out
+    return _fle_asset(spark, sf_dir, "fle_zorder", build)

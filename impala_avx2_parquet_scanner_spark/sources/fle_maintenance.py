@@ -56,6 +56,7 @@ import numpy as np
 
 from impala_avx2_parquet_scanner_spark.sources.fle_codec import fle_unpack
 from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
+    _FLAG_QTY,
     _KIND_BOOL,
     _KIND_DATE,
     _KIND_DEC,
@@ -67,13 +68,16 @@ from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
     _KIND_TS,
     ParsedSegment,
     _codes_to_values,
+    _fle_asset,
     _lane_validity,
     _manifest_entries,
     _plain_str_values,
+    _table,
     discover_fledir_partitions,
     encode_segment_columns,
     parse_segment,
     register_fledir,
+    write_fledir,
 )
 
 __all__ = [
@@ -569,71 +573,22 @@ def vacuum_fledir(path: str, spark=None) -> dict:
 def materialize_fle_compact_dir(spark, sf_dir: str) -> str:
     """Write-once: lineitem (l_returnflag, l_quantity) deliberately
     written as MANY TINY segments (a micro-batched writer's layout),
-    then compacted in place by :func:`compact_fledir`.  The `_COMPACTED`
-    sentinel (invisible to the reader halves, which list only `.fle`
-    names and the manifest) makes the compaction step idempotent
-    alongside the `_DONE` write-once contract."""
-    import pandas as _pd
+    then compacted in place by :func:`compact_fledir` before the asset
+    is published."""
 
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import (
-        ensure_runtime_confs,
-    )
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        _clear_segments,
-        _fle_asset_dir,
-    )
-
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_compact_assets")
-    marker = os.path.join(out, "_COMPACTED")
-    if os.path.exists(os.path.join(out, "_DONE")):
-        if os.path.exists(marker):
-            return out
-    else:
-        # (re)build the tiny-segment layout from scratch; a stale
-        # sentinel from a previous layout must not skip compaction
-        if os.path.exists(marker):
-            os.remove(marker)
-        _clear_segments(out)
-
-        def encode(batches):
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            for i, pdf in enumerate(batches):
-                payload = encode_segment_columns([
-                    ("l_returnflag", pdf["l_returnflag"].to_numpy()),
-                    (
-                        "l_quantity",
-                        pdf["l_quantity"].to_numpy().astype(np.int64),
-                    ),
-                ])
-                yield _pd.DataFrame(
-                    {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-                )
-
-        (
-            table(spark, sf_dir, "lineitem")
+    def build(out):
+        frame = (
+            _table(spark, sf_dir, "lineitem")
             .select("l_returnflag", "l_quantity")
             # many small input partitions → many tiny segments: the
             # layout a micro-batched/streaming writer accumulates
             .repartition(48)
-            .mapInPandas(encode, schema="seg_id long, payload binary")
-            .write.format("fledir")
-            .mode("overwrite")
-            .option("path", out)
-            .save()
         )
+        write_fledir(frame, _FLAG_QTY, out)
+        compact_fledir(spark, out, target_rows=100_000)
+        vacuum_fledir(out)  # fixture has no checkpointed stream to serve
 
-    report = compact_fledir(spark, out, target_rows=100_000)
-    vacuum_fledir(out)  # fixture has no checkpointed stream to serve
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(json.dumps(report))
-    os.replace(tmp, marker)
-    return out
+    return _fle_asset(spark, sf_dir, "fle_compact", build)
 
 
 def zorder_merged_columns(
@@ -829,79 +784,32 @@ def expire_fledir_partitions(
 def materialize_fle_retention_dir(spark, sf_dir: str) -> str:
     """Write-once: lineitem partitioned by ``ship_year=YYYY`` leaves,
     then the pre-1997 partitions RETIRED through
-    :func:`expire_fledir_partitions` (idempotence via the `_EXPIRED`
-    sentinel, invisible to the reader halves).  What remains is the
-    post-retention table the `scan_fle_retention` query certifies
-    against the raw rows."""
-    import pandas as _pd
-
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import (
-        ensure_runtime_confs,
-    )
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        _clear_segments,
-        _fle_asset_dir,
-    )
+    :func:`expire_fledir_partitions` before the asset is published.
+    What remains is the post-retention table the `scan_fle_retention`
+    query certifies against the raw rows."""
     from pyspark.sql import functions as F
 
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    root = _fle_asset_dir(sf_dir, "fle_retention_assets")
-    marker = os.path.join(root, "_EXPIRED")
-    if os.path.exists(marker):
-        return root
-
-    df = (
-        table(spark, sf_dir, "lineitem")
-        .select(
+    def build(root):
+        df = _table(spark, sf_dir, "lineitem").select(
             F.year("l_shipdate").alias("ship_year"),
             F.col("l_quantity").cast("long").alias("l_quantity"),
         )
-    )
-    # bounded partition-key discovery for the write-once fixture build
-    # (~7 distinct years — the same driver-side dimension
-    # materialization Spark's own partitioned writes perform)
-    years = [
-        r["ship_year"]
-        for r in df.select("ship_year").distinct().collect()
-    ]
+        # bounded partition-key discovery for the write-once fixture build
+        # (~7 distinct years — the same driver-side dimension
+        # materialization Spark's own partitioned writes perform)
+        years = [
+            r["ship_year"]
+            for r in df.select("ship_year").distinct().collect()
+        ]
+        for y in sorted(years):
+            write_fledir(
+                df.filter(F.col("ship_year") == int(y)).select("l_quantity"),
+                [("l_quantity", np.int64, None)],
+                os.path.join(root, f"ship_year={int(y)}"),
+            )
+        expire_fledir_partitions(root, 1997)
 
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            yield _pd.DataFrame({
-                "seg_id": [pid * 100_000 + i],
-                "payload": [encode_segment_columns([
-                    (
-                        "l_quantity",
-                        pdf["l_quantity"].to_numpy().astype(np.int64),
-                    ),
-                ])],
-            })
-
-    for y in sorted(years):
-        leaf = os.path.join(root, f"ship_year={int(y)}")
-        if os.path.exists(os.path.join(leaf, "_DONE")):
-            continue
-        _clear_segments(leaf)
-        (
-            df.filter(F.col("ship_year") == int(y))
-            .select("l_quantity")
-            .mapInPandas(encode, schema="seg_id long, payload binary")
-            .write.format("fledir")
-            .mode("overwrite")
-            .option("path", leaf)
-            .save()
-        )
-    report = expire_fledir_partitions(root, 1997)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(json.dumps(report))
-    os.replace(tmp, marker)
-    return root
+    return _fle_asset(spark, sf_dir, "fle_retention", build)
 
 
 def materialize_fle_retention_multi_dir(spark, sf_dir: str) -> str:
@@ -911,81 +819,39 @@ def materialize_fle_retention_multi_dir(spark, sf_dir: str) -> str:
     :func:`expire_fledir_partitions(key="ship_year", spark=...)` —
     retention at any partition level, distributed per-leaf (the
     reference's partition model is n-level, descriptors.h:178-262;
-    VERDICT r9 #4/#5).  Idempotence via the `_EXPIRED` sentinel."""
-    import pandas as _pd
-
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import (
-        ensure_runtime_confs,
-    )
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        _clear_segments,
-        _fle_asset_dir,
-    )
+    VERDICT r9 #4/#5)."""
     from pyspark.sql import functions as F
 
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    root = _fle_asset_dir(sf_dir, "fle_retention_multi_assets")
-    marker = os.path.join(root, "_EXPIRED")
-    if os.path.exists(marker):
-        return root
-
-    df = table(spark, sf_dir, "lineitem").select(
-        "l_linestatus",
-        F.year("l_shipdate").alias("ship_year"),
-        F.col("l_quantity").cast("long").alias("l_quantity"),
-    )
-    # bounded key discovery for the write-once fixture build (2 status
-    # values x ~7 years)
-    pairs = [
-        (r["l_linestatus"], int(r["ship_year"]))
-        for r in df.select("l_linestatus", "ship_year")
-        .distinct()
-        .collect()
-    ]
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            yield _pd.DataFrame({
-                "seg_id": [pid * 100_000 + i],
-                "payload": [encode_segment_columns([
-                    (
-                        "l_quantity",
-                        pdf["l_quantity"].to_numpy().astype(np.int64),
-                    ),
-                ])],
-            })
-
-    for ls, y in sorted(pairs):
-        leaf = os.path.join(root, f"l_linestatus={ls}", f"ship_year={y}")
-        if os.path.exists(os.path.join(leaf, "_DONE")):
-            continue
-        _clear_segments(leaf)
-        (
-            df.filter(
-                (F.col("l_linestatus") == ls)
-                & (F.col("ship_year") == y)
-            )
-            .select("l_quantity")
-            .coalesce(2)
-            .mapInPandas(encode, schema="seg_id long, payload binary")
-            .write.format("fledir")
-            .mode("overwrite")
-            .option("path", leaf)
-            .save()
+    def build(root):
+        df = _table(spark, sf_dir, "lineitem").select(
+            "l_linestatus",
+            F.year("l_shipdate").alias("ship_year"),
+            F.col("l_quantity").cast("long").alias("l_quantity"),
         )
-    report = expire_fledir_partitions(
-        root, 1996, key="ship_year", spark=spark
-    )
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(json.dumps(report))
-    os.replace(tmp, marker)
-    return root
+        # bounded key discovery for the write-once fixture build (2
+        # status values x ~7 years)
+        pairs = [
+            (r["l_linestatus"], int(r["ship_year"]))
+            for r in df.select("l_linestatus", "ship_year")
+            .distinct()
+            .collect()
+        ]
+        for ls, y in sorted(pairs):
+            frame = (
+                df.filter(
+                    (F.col("l_linestatus") == ls)
+                    & (F.col("ship_year") == y)
+                )
+                .select("l_quantity")
+                .coalesce(2)
+            )
+            write_fledir(
+                frame, [("l_quantity", np.int64, None)],
+                os.path.join(root, f"l_linestatus={ls}", f"ship_year={y}"),
+            )
+        expire_fledir_partitions(root, 1996, key="ship_year", spark=spark)
+
+    return _fle_asset(spark, sf_dir, "fle_retention_multi", build)
 
 
 def merge_fledir(
@@ -1259,87 +1125,38 @@ def materialize_fle_merge_dir(spark, sf_dir: str) -> str:
     bumped by 1000 (full-row replacement), plus brand-new keys
     (``key + 10_000_000``, status 'X') for the ``key % 100 == 7``
     subset.  The decimal price keeps every sum exact."""
-    import pandas as _pd
-
     from pyspark.sql import functions as F
 
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import (
-        ensure_runtime_confs,
-    )
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        _clear_segments,
-        _fle_asset_dir,
-    )
+    def build(out):
+        base = _table(spark, sf_dir, "orders").select(
+            F.col("o_orderkey").cast("long").alias("o_orderkey"),
+            "o_orderstatus",
+            F.col("o_totalprice").cast("decimal(12,2)").alias("price_dec"),
+        )
+        write_fledir(base.repartition(8, "o_orderkey"), [
+            ("o_orderkey", np.int64, None), ("o_orderstatus", None, None),
+            ("price_dec", None, ("dec", 12, 2)),
+        ], out, bloomcols="o_orderkey")
+        upd = base.filter(F.col("o_orderkey") % 10 == 3).select(
+            "o_orderkey",
+            "o_orderstatus",
+            (F.col("price_dec") + 1000).cast("decimal(12,2)").alias(
+                "price_dec"
+            ),
+        )
+        new = base.filter(F.col("o_orderkey") % 100 == 7).select(
+            (F.col("o_orderkey") + 10_000_000).alias("o_orderkey"),
+            F.lit("X").alias("o_orderstatus"),
+            (F.col("price_dec") * 2).cast("decimal(12,2)").alias(
+                "price_dec"
+            ),
+        )
+        merge_fledir(
+            spark, out, upd.unionByName(new), key="o_orderkey",
+            bloomcols="o_orderkey",
+        )
 
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_merge_assets")
-    marker = os.path.join(out, "_MERGED")
-    if os.path.exists(os.path.join(out, "_DONE")) and os.path.exists(
-        marker
-    ):
-        return out
-    if os.path.exists(marker):
-        os.remove(marker)
-    _clear_segments(out)
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            payload = encode_segment_columns([
-                (
-                    "o_orderkey",
-                    pdf["o_orderkey"].to_numpy().astype(np.int64),
-                ),
-                ("o_orderstatus", pdf["o_orderstatus"].to_numpy()),
-                (
-                    "price_dec",
-                    pdf["price_dec"].to_numpy(),
-                    ("dec", 12, 2),
-                ),
-            ])
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
-            )
-
-    base = table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").cast("long").alias("o_orderkey"),
-        "o_orderstatus",
-        F.col("o_totalprice").cast("decimal(12,2)").alias("price_dec"),
-    )
-    (
-        base.repartition(8, "o_orderkey")
-        .mapInPandas(encode, schema="seg_id long, payload binary")
-        .write.format("fledir")
-        .mode("overwrite")
-        .option("path", out)
-        .option("bloomcols", "o_orderkey")
-        .save()
-    )
-    upd = base.filter(F.col("o_orderkey") % 10 == 3).select(
-        "o_orderkey",
-        "o_orderstatus",
-        (F.col("price_dec") + 1000).cast("decimal(12,2)").alias(
-            "price_dec"
-        ),
-    )
-    new = base.filter(F.col("o_orderkey") % 100 == 7).select(
-        (F.col("o_orderkey") + 10_000_000).alias("o_orderkey"),
-        F.lit("X").alias("o_orderstatus"),
-        (F.col("price_dec") * 2).cast("decimal(12,2)").alias(
-            "price_dec"
-        ),
-    )
-    merge_fledir(
-        spark, out, upd.unionByName(new), key="o_orderkey",
-        bloomcols="o_orderkey",
-    )
-    with open(marker, "w") as fh:
-        fh.write("merged\n")
-    return out
+    return _fle_asset(spark, sf_dir, "fle_merge", build)
 
 
 _DELETE_OPS = {
@@ -1635,68 +1452,25 @@ def materialize_fle_delete_dir(spark, sf_dir: str) -> str:
     manifest stats tier visibly bound write amplification: only the
     top-of-range segments can hold qty ≥ 45, the rest survive
     untouched."""
-    import pandas as _pd
-
     from pyspark.sql import functions as F
 
-    from impala_avx2_parquet_scanner_spark.catalog import table
-    from impala_avx2_parquet_scanner_spark.session import (
-        ensure_runtime_confs,
-    )
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        _clear_segments,
-        _fle_asset_dir,
-    )
-
-    ensure_runtime_confs(spark)
-    register_fledir(spark)
-    out = _fle_asset_dir(sf_dir, "fle_delete_assets")
-    marker = os.path.join(out, "_DELETED")
-    if os.path.exists(os.path.join(out, "_DONE")) and os.path.exists(
-        marker
-    ):
-        return out
-    if os.path.exists(marker):
-        os.remove(marker)
-    _clear_segments(out)
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            payload = encode_segment_columns([
-                ("l_returnflag", pdf["l_returnflag"].to_numpy()),
-                (
-                    "l_quantity",
-                    pdf["l_quantity"].to_numpy().astype(np.int64),
-                ),
-            ])
-            yield _pd.DataFrame(
-                {"seg_id": [pid * 100_000 + i], "payload": [payload]}
+    def build(out):
+        frame = (
+            _table(spark, sf_dir, "lineitem")
+            .select(
+                "l_returnflag",
+                F.col("l_quantity").cast("long").alias("l_quantity"),
             )
-
-    (
-        table(spark, sf_dir, "lineitem")
-        .select(
-            "l_returnflag",
-            F.col("l_quantity").cast("long").alias("l_quantity"),
+            .repartitionByRange(8, "l_quantity")
+            .sortWithinPartitions("l_quantity")
         )
-        .repartitionByRange(8, "l_quantity")
-        .sortWithinPartitions("l_quantity")
-        .mapInPandas(encode, schema="seg_id long, payload binary")
-        .write.format("fledir")
-        .mode("overwrite")
-        .option("path", out)
-        .save()
-    )
-    delete_fledir(
-        spark, out,
-        [("l_quantity", "ge", 45), ("l_returnflag", "eq", "R")],
-    )
-    with open(marker, "w") as fh:
-        fh.write("deleted\n")
-    return out
+        write_fledir(frame, _FLAG_QTY, out)
+        delete_fledir(
+            spark, out,
+            [("l_quantity", "ge", 45), ("l_returnflag", "eq", "R")],
+        )
+
+    return _fle_asset(spark, sf_dir, "fle_delete", build)
 
 
 def _encode_hints_from_segment(first) -> dict:
@@ -1722,8 +1496,6 @@ def _append_leaf_rows(
     of a (possibly not-yet-existing) leaf, kinds pinned from a sibling
     leaf's first segment so the new leaf's schema matches the table's.
     One atomic append commit; → rows written."""
-    import pandas as _pd
-
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         probe_first_segment,
     )
@@ -1745,35 +1517,11 @@ def _append_leaf_rows(
     if n == 0:
         return 0
     hints = _encode_hints_from_segment(first)
-
-    def encode(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            cols = []
-            for n2 in stored_cols:
-                v = pdf[n2].to_numpy()
-                h = hints[n2]
-                cols.append((n2, v, h) if h is not None else (n2, v))
-            yield _pd.DataFrame(
-                {
-                    "seg_id": [pid * 100_000 + i],
-                    "payload": [encode_segment_columns(cols)],
-                }
-            )
-
-    w = (
-        df.select(*stored_cols)
-        .repartition(max(1, -(-n // rows_per_segment)))
-        .mapInPandas(encode, schema="seg_id long, payload binary")
-        .write.format("fledir")
-        .mode("append")
-        .option("path", leaf)
+    write_fledir(
+        df.select(*stored_cols).repartition(max(1, -(-n // rows_per_segment))),
+        [(c, None, hints[c]) for c in stored_cols],
+        leaf, "append", bloomcols=bloomcols or None,
     )
-    if bloomcols:
-        w = w.option("bloomcols", bloomcols)
-    w.save()
     return n
 
 

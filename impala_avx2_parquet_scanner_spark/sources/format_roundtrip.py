@@ -6,8 +6,8 @@ delimited text with configurable separators (descriptors.h:181-184), Avro
 (descriptors.h:258-259), sequence/HBase (descriptors.h:264-290) — around
 the parquet core.  These queries upgrade this engine's non-parquet scan
 evidence from pytest round-trips to full driver-grade value hashes: each
-format's layout is materialized ONCE from the fixture (write-once cache
-under /tmp, same pattern as the partitioned/nested parquet layouts), read
+format's layout is materialized ONCE from the fixture (a write-once asset,
+see `assets.py`, like the partitioned/nested parquet layouts), read
 back through the format's reader with an explicit schema, and aggregated;
 the DuckDB oracle replays the aggregate on the PARQUET base table — so a
 hash match proves the format encode→decode round-trip is value-lossless,
@@ -23,9 +23,6 @@ the explicit schema) and run map-side-combinable aggregates.
 
 from __future__ import annotations
 
-import hashlib
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -37,11 +34,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from impala_avx2_parquet_scanner_spark.assets import publish
 from impala_avx2_parquet_scanner_spark.catalog import table
 from impala_avx2_parquet_scanner_spark.exprs import sum_dbl
 from impala_avx2_parquet_scanner_spark.registry import query
-
-_CACHE_ROOT = "/tmp/spark_graft_formats"
 
 #: Timestamp-free lineitem projection: CSV/JSON round-trip of numerics and
 #: strings without committing to a timestamp serialization format (the
@@ -64,15 +60,15 @@ def _materialize(spark: SparkSession, sf_dir: str, fmt: str, **options) -> str:
     from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
 
     ensure_runtime_confs(spark)  # cache-hit path skips table(); confs still required
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = os.path.join(_CACHE_ROOT, key, f"lineitem_{fmt}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def build(path):
         src = table(spark, sf_dir, "lineitem").select(*_LI_COLS)
         writer = src.write.mode("overwrite").format(fmt)
         for k, v in options.items():
             writer = writer.option(k, v)
         writer.save(path)
-    return path
+
+    return publish(sf_dir, f"lineitem_{fmt}", build)
 
 
 _AGG_ORACLE = """
@@ -164,13 +160,14 @@ def sink_sorted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
 
     ensure_runtime_confs(spark)  # cache-hit path skips table(); UTC TZ still required
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = os.path.join(_CACHE_ROOT, key, "lineitem_sorted")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def build(path):
         src = table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_quantity", "l_returnflag", "l_shipdate"
         )
         write_sorted_parquet(src, path, sort_cols=("l_shipdate",), num_files=8)
+
+    path = publish(sf_dir, "lineitem_sorted_shipdate", build)
     df = spark.read.parquet(path).filter(
         F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz")
     )

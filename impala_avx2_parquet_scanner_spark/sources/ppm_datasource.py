@@ -295,38 +295,27 @@ def materialize_ppm_dir(spark: SparkSession, sf_dir: str) -> str:
     `foreachPartition` — files are written ON THE EXECUTORS, no driver
     collect (in local mode that is still this machine's filesystem; on a
     cluster the target would be a shared mount/object store)."""
-    import hashlib as _h
-
+    from impala_avx2_parquet_scanner_spark.assets import publish
     from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
 
     ensure_runtime_confs(spark)  # cache-hit path skips table(); pushdown conf required
 
-    key = _h.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    out = os.path.join("/tmp/spark_graft_formats", key, "ppm_assets")
-    done = os.path.join(out, "_DONE")
-    if os.path.exists(done):
-        return out
-    os.makedirs(out, exist_ok=True)
+    def build(out):
+        def write_files(it):
+            for row in it:
+                data = row.text.encode("utf-8")
+                w = min(len(data) // 3, PPM_MAX_W)
+                if w < 1:
+                    continue
+                raster = data[: w * 3]
+                with open(os.path.join(out, f"doc_{row.doc_id}.ppm"), "wb") as fh:
+                    fh.write(b"P6\n%d 1\n255\n" % w + raster)
 
-    rows = (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < PPM_DOC_LIMIT)
-        .select("doc_id", "text")
-    )
+        table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") < PPM_DOC_LIMIT
+        ).select("doc_id", "text").foreachPartition(write_files)
 
-    def write_files(it):
-        for row in it:
-            data = row.text.encode("utf-8")
-            w = min(len(data) // 3, PPM_MAX_W)
-            if w < 1:
-                continue
-            raster = data[: w * 3]
-            with open(os.path.join(out, f"doc_{row.doc_id}.ppm"), "wb") as fh:
-                fh.write(b"P6\n%d 1\n255\n" % w + raster)
-
-    rows.foreachPartition(write_files)
-    open(done, "w").close()
-    return out
+    return publish(sf_dir, "ppm", build)
 
 
 _PPM_DS_ORACLE = f"""

@@ -3,9 +3,9 @@ runtime confs.
 
 The memo must be a pure planning-cost optimization — same logical plan,
 same results, no data caching — and must stay correct across the cases
-the round-10 change touches: per-session scoping, the env escape hatch,
-and the restored (previously overridden) mid-session shuffle-partition
-invariance.
+the round-10 change touches: per-session scoping, a table rewritten
+mid-session, and the restored (previously overridden) mid-session
+shuffle-partition invariance.
 """
 
 from __future__ import annotations
@@ -45,13 +45,25 @@ def test_table_memo_is_per_dir(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_table_memo_escape_hatch(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_NO_TABLE_CACHE=1 bypasses the memo (for callers that
-    overwrite a table path mid-session)."""
-    monkeypatch.setenv("SPARK_GRAFT_NO_TABLE_CACHE", "1")
-    a = table(spark, sf_dir, "region")
-    b = table(spark, sf_dir, "region")
-    assert a is not b
+def test_table_memo_sees_rewritten_file(spark, sf_dir, tmp_path):
+    """A table file rewritten in place mid-session gets a fresh frame
+    with the new rows: the memo entry carries the file's (size, mtime)
+    stamp, and a stamp that no longer matches is a miss."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    alt = tmp_path / "sf"
+    alt.mkdir()
+    dst = alt / "region.parquet"
+    shutil.copyfile(os.path.join(sf_dir, "region.parquet"), dst)
+    before = table(spark, str(alt), "region")
+    n_before = before.count()
+    pq.write_table(pq.read_table(dst).slice(0, 2), dst)
+    after = table(spark, str(alt), "region")
+    assert after is not before
+    assert n_before > 2 and after.count() == 2
+    assert table(spark, str(alt), "region") is after
 
 
 def test_spread_memo_follows_no_spread_flag(spark, sf_dir, monkeypatch):
@@ -97,15 +109,33 @@ def test_runtime_confs_do_not_clobber_mid_session_changes(spark, sf_dir):
         spark.conf.set(key, prior)
 
 
+class _NoMemo(dict):
+    """A memo that forgets: every `table` call loads through `_load`."""
+
+    def setdefault(self, key, default=None):
+        return {}
+
+
 @pytest.mark.parametrize("name", ["tpch_q6", "dedup_exact"])
 def test_memoized_results_match_uncached(spark, sf_dir, name, monkeypatch):
-    """Same rows with and without the memo."""
+    """Same rows with the memo as with every table loaded straight
+    through `catalog._load`."""
+    from impala_avx2_parquet_scanner_spark import catalog
     from impala_avx2_parquet_scanner_spark.registry import REGISTRY
 
     spec = REGISTRY[name]
     with_memo = sorted(map(tuple, spec.fn(spark, sf_dir).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_NO_TABLE_CACHE", "1")
+    loads = []
+    real_load = catalog._load
+
+    def load(*args):
+        loads.append(args[2])
+        return real_load(*args)
+
+    monkeypatch.setattr(catalog, "_TABLE_MEMO", _NoMemo())
+    monkeypatch.setattr(catalog, "_load", load)
     without = sorted(map(tuple, spec.fn(spark, sf_dir).collect()))
+    assert loads, "the uncached run never reached catalog._load"
     assert with_memo == without
 
 

@@ -377,6 +377,7 @@ def test_zorder_layout_tightens_both_dimensions(spark, sf_dir):
     import pyarrow.parquet as pq
 
     from impala_avx2_parquet_scanner_spark.operators.tpch import (
+        _materialize_zorder_lineitem,
         scan_zorder_pruned,
     )
     from impala_avx2_parquet_scanner_spark.plans import pushed_filters
@@ -385,10 +386,7 @@ def test_zorder_layout_tightens_both_dimensions(spark, sf_dir):
     filters = " ".join(pushed_filters(df))
     assert "l_quantity" in filters and "l_discount" in filters
 
-    import hashlib
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = os.path.join("/tmp/spark_graft_sorted", key, "lineitem_zorder")
+    path = _materialize_zorder_lineitem(spark, sf_dir)  # the same asset
     total, skippable = 0, 0
     for f in glob.glob(os.path.join(path, "*.parquet")):
         md = pq.read_metadata(f)
