@@ -8,7 +8,10 @@ spec-conformant Object Container File reader/writer built on stdlib
 `zlib` + `struct` alone, registered as the `avrodir` custom Python
 DataSource (the same Spark-4 registration mechanism as `ppmdir`), so
 `spark.read.format("avrodir")` and `df.write.format("avrodir")` work
-end-to-end with partition-parallel file reads.
+end-to-end with partition-parallel file reads.  The writer's staging and
+commit, the `_DONE` manifest the readers trust and the stream offset are
+the sealed-directory protocol of `sources/sealed_dir.py`, shared with
+`fledir` and `ppmdir`.
 
 Wire format implemented (Avro 1.11 spec, "Object Container Files" +
 "Binary Encoding"):
@@ -72,33 +75,14 @@ from impala_avx2_parquet_scanner_spark.sources.format_roundtrip import (
     _roundtrip_agg,
 )
 
-try:  # Spark >= 4.0
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        DataSourceWriter,
-        InputPartition,
-        WriterCommitMessage,
-    )
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    DataSourceWriter,
+    InputPartition,
+)
 
-    DATASOURCE_API_AVAILABLE = True
-except ImportError:  # pragma: no cover - older Spark
-    DATASOURCE_API_AVAILABLE = False
-
-    class DataSource:  # type: ignore[no-redef]
-        pass
-
-    class DataSourceReader:  # type: ignore[no-redef]
-        pass
-
-    class DataSourceWriter:  # type: ignore[no-redef]
-        pass
-
-    class InputPartition:  # type: ignore[no-redef]
-        pass
-
-    class WriterCommitMessage:  # type: ignore[no-redef]
-        pass
+from impala_avx2_parquet_scanner_spark.sources import sealed_dir
 
 
 _MAGIC = b"Obj\x01"
@@ -756,43 +740,23 @@ class AvroDirReader(DataSourceReader):
     """Partition-parallel scan over a directory of .avro container files
     (one InputPartition per file batch — the scan-range split,
     hdfs-parquet-scanner.cc:111-147; blocks inside a file decode
-    sequentially, sync markers verified)."""
+    sequentially, sync markers verified).  It reads the files `_DONE`
+    names, or every `.avro` file of a directory no writer sealed
+    (`sealed_dir.listing`)."""
 
     def __init__(self, options):
         self.dir = options.get("path")
         if not self.dir:
             raise ValueError("avrodir requires option 'path'")
-        # Python DataSource options arrive lower-cased.  No option →
-        # adaptive: ~8 files per InputPartition, floor 8, cap 64 (the
-        # fledir reader's sizing rule — a many-thousand-file table must
-        # not scan with 8 tasks)
+        # Python DataSource options arrive lower-cased
         np_opt = options.get("numpartitions")
         self.n_parts = int(np_opt) if np_opt is not None else None
 
-    def _bucket_count(self, n_files: int) -> int:
-        if self.n_parts is not None:
-            return min(self.n_parts, max(n_files, 1))
-        return min(64, max(8, (n_files + 7) // 8), max(n_files, 1))
-
     def partitions(self):
-        # A committed directory is sealed by the _DONE manifest: read only
-        # the files it lists, so stray parts from a crashed earlier write
-        # attempt are invisible (parquet _SUCCESS visibility semantics).
-        # An unmanifested directory (user-populated) falls back to *.avro.
-        done = os.path.join(self.dir, "_DONE")
-        if os.path.exists(done):
-            with open(done) as fh:
-                files = sorted(f for f in fh.read().split("\n") if f)
-        else:
-            files = sorted(
-                f for f in os.listdir(self.dir) if f.endswith(".avro")
-            )
-        batches: list[list[str]] = [
-            [] for _ in range(self._bucket_count(len(files)))
-        ]
-        for i, f in enumerate(files):
-            batches[i % len(batches)].append(os.path.join(self.dir, f))
-        return [_AvroFilesPartition(b) for b in batches if b]
+        files, _ = sealed_dir.listing(self.dir, ".avro")
+        n = sealed_dir.partition_count(len(files), n_parts=self.n_parts)
+        paths = [os.path.join(self.dir, f) for f in files]
+        return [_AvroFilesPartition(b) for b in sealed_dir.deal(paths, n)]
 
     def read(self, partition):
         for path in partition.paths:
@@ -801,16 +765,10 @@ class AvroDirReader(DataSourceReader):
             yield from rows
 
 
-class _AvroCommit(WriterCommitMessage):
-    def __init__(self, files: list[str]):
-        self.files = files
-
-
 class AvroDirWriter(DataSourceWriter):
     """Custom Avro SINK: each task encodes its rows into one container
-    file; `commit` seals the directory with a `_DONE` manifest, `abort`
-    removes this attempt's files (the parquet `_SUCCESS` visibility
-    protocol)."""
+    file, staged under a temp name; `commit` and `abort` are the
+    sealed-directory protocol (`sealed_dir.commit` / `abort`)."""
 
     def __init__(self, options, overwrite: bool, avro_schema: dict):
         self.dir = options.get("path")
@@ -823,54 +781,24 @@ class AvroDirWriter(DataSourceWriter):
     def write(self, rows):
         import uuid
 
-        os.makedirs(self.dir, exist_ok=True)
         field_names = [f["name"] for f in self.avro_schema["fields"]]
         data = encode_avro(
             (tuple(row[n] for n in field_names) for row in rows),
             self.avro_schema,
             codec=self.codec,
         )
-        name = f"part-{uuid.uuid4().hex}.avro"
-        with open(os.path.join(self.dir, name), "wb") as fh:
-            fh.write(data)
-        return _AvroCommit([name])
+        msg = sealed_dir.Staged(self.dir)
+        msg.put(f"part-{uuid.uuid4().hex}.avro", data)
+        return msg
 
     def commit(self, messages):
-        """Round 8: append mode MERGES the previous manifest (old
-        containers stayed on disk but silently vanished from the
-        manifest before), the manifest swap is atomic, and overwrite
-        deletes stale `.avro` files only AFTER the new `_DONE` is
-        durable — task files are uuid-named so they never collide with
-        committed data, and the reader consumes only manifest-listed
-        names, so an aborted overwrite leaves the old data readable."""
-        done = os.path.join(self.dir, "_DONE")
-        new_files = sorted(f for m in messages for f in m.files)
-        if not self.overwrite and os.path.exists(done):
-            with open(done) as fh:
-                previous = [ln for ln in fh.read().splitlines() if ln]
-            new_files = sorted(set(new_files) | set(previous))
-        tmp_done = done + ".tmp"
-        with open(tmp_done, "w") as fh:
-            fh.write("\n".join(new_files))
-        os.replace(tmp_done, done)
-        if self.overwrite:
-            keep = set(new_files)
-            for f in os.listdir(self.dir):
-                if f.endswith(".avro") and f not in keep:
-                    try:
-                        os.remove(os.path.join(self.dir, f))
-                    except OSError:
-                        pass
+        sealed_dir.commit(
+            self.dir, sealed_dir.staged(messages), suffix=".avro",
+            overwrite=self.overwrite,
+        )
 
     def abort(self, messages):
-        for m in messages:
-            if m is None:
-                continue
-            for f in m.files:
-                try:
-                    os.remove(os.path.join(self.dir, f))
-                except OSError:
-                    pass
+        sealed_dir.abort(self.dir, messages)
 
 
 class AvroDataSource(DataSource):
@@ -883,7 +811,7 @@ class AvroDataSource(DataSource):
         # growing the probe window until the header parses completely (a
         # schema JSON can exceed any fixed prefix size).
         d = self.options.get("path")
-        files = sorted(f for f in os.listdir(d) if f.endswith(".avro"))
+        files, _ = sealed_dir.listing(d, ".avro")
         if not files:
             raise ValueError(f"avrodir: no .avro files under {d}")
         path = os.path.join(d, files[0])
@@ -912,84 +840,37 @@ class AvroDataSource(DataSource):
             self.options, overwrite, spark_schema_to_avro(schema)
         )
 
-
-try:  # streaming half (Spark >= 4.0) — completes the custom-format trio
-    from pyspark.sql.datasource import SimpleDataSourceStreamReader
-
-    class AvroStreamReader(SimpleDataSourceStreamReader):
-        """Streaming form of the Avro scanner: the directory is a live
-        CONTAINER feed — each micro-batch decodes `.avro` files not yet
-        processed, and the OFFSET is the exact sorted file-name set, so
-        `readBetweenOffsets` replays any batch deterministically after
-        a failure (exactly-once container processing under
-        checkpointing, arrival-order independent) — the same protocol
-        as the fledir and ppmdir streaming halves.  A torn file from a
-        foreign in-place producer fails the per-block sync-marker check
-        and stays out of both the batch and the offset until it parses
-        complete (the engine's own writer publishes via temp-name +
-        commit-time rename, so its files are never observable torn)."""
-
-        def __init__(self, options):
-            self.dir = options.get("path")
-            if not self.dir:
-                raise ValueError("avrodir requires option 'path'")
-
-        def initialOffset(self) -> dict:
-            return {"names": []}
-
-        def _decode(self, name):
-            with open(os.path.join(self.dir, name), "rb") as fh:
-                _schema, rows = decode_avro(fh.read())
-            return rows
-
-        def _sealed(self, name: str) -> bool:
-            try:
-                self._decode(name)
-                return True
-            except Exception:
-                return False
-
-        def _rows(self, names):
-            # a LIST of plain tuples: the stream framework pickles
-            # prefetched rows
-            out = []
-            for name in names:
-                out.extend(tuple(r) for r in self._decode(name))
-            return out
-
-        def read(self, start: dict):
-            seen = set(start.get("names", []))
-            current = sorted(
-                f for f in os.listdir(self.dir) if f.endswith(".avro")
-            )
-            fresh = [
-                f for f in current if f not in seen and self._sealed(f)
-            ]
-            return iter(self._rows(fresh)), {
-                "names": sorted(seen | set(fresh))
-            }
-
-        def readBetweenOffsets(self, start: dict, end: dict):
-            fresh = sorted(
-                set(end.get("names", [])) - set(start.get("names", []))
-            )
-            return iter(self._rows(fresh))
-
-        def commit(self, end: dict) -> None:
-            pass  # offsets live in the query checkpoint; nothing to prune
-
-    AVRO_STREAM_API_AVAILABLE = True
-except ImportError:  # pragma: no cover
-    AVRO_STREAM_API_AVAILABLE = False
+    def simpleStreamReader(self, schema):
+        return AvroStreamReader(self.options)
 
 
-def _avro_simple_stream_reader(self, schema):
-    if not AVRO_STREAM_API_AVAILABLE:
-        raise NotImplementedError("streaming DataSource requires Spark >= 4.0")
-    return AvroStreamReader(self.options)
+class AvroStreamReader(sealed_dir.SealedStreamReader):
+    """Streaming form of the Avro scanner: each micro-batch decodes the
+    containers not yet processed, with the file-name-set offset of
+    `sealed_dir.SealedStreamReader` (exactly-once container processing
+    under checkpointing, arrival-order independent).  In a directory
+    without `_DONE`, a torn file from a foreign in-place producer fails
+    the per-block sync-marker check and stays out of both the batch and
+    the offset until it parses complete."""
 
+    fmt = "avrodir"
+    suffix = ".avro"
 
-AvroDataSource.simpleStreamReader = _avro_simple_stream_reader
+    def _decode(self, name):
+        with open(os.path.join(self.dir, name), "rb") as fh:
+            _schema, rows = decode_avro(fh.read())
+        return rows
+
+    def _sealed(self, name: str) -> bool:
+        try:
+            self._decode(name)
+            return True
+        except Exception:
+            return False
+
+    def _rows(self, names):
+        # plain tuples: the stream framework pickles prefetched rows
+        return [tuple(r) for name in names for r in self._decode(name)]
 
 
 # ---------------------------------------------------------------------------
@@ -1033,8 +914,6 @@ def scan_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet base table — a hash match proves the zigzag/varint/IEEE
     encode→decode round-trip is value-lossless.  The spark-avro jar is
     not involved; its absence was the round-3 'Avro pinned error' gap."""
-    if not DATASOURCE_API_AVAILABLE:
-        raise NotImplementedError("Python DataSource API requires Spark >= 4.0")
     path = _avro_asset(
         spark, sf_dir, "lineitem_avro",
         lambda: table(spark, sf_dir, "lineitem").select(*_LI_COLS),
@@ -1073,8 +952,6 @@ def scan_avro_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     (numerics/strings) doesn't exercise.  (The `date` logical type is
     pinned by the golden-bytes test and a Spark DateType round-trip in
     tests/test_other_formats.py.)"""
-    if not DATASOURCE_API_AVAILABLE:
-        raise NotImplementedError("Python DataSource API requires Spark >= 4.0")
     path = _avro_asset(
         spark, sf_dir, "lineitem_avro_temporal",
         lambda: table(spark, sf_dir, "lineitem").select(
@@ -1126,8 +1003,6 @@ def scan_avro_complex(spark: SparkSession, sf_dir: str) -> DataFrame:
     in any complex-type encoding flips the hash.  Complements
     `scan_avro_roundtrip` (primitives) and `scan_avro_temporal`
     (logical types)."""
-    if not DATASOURCE_API_AVAILABLE:
-        raise NotImplementedError("Python DataSource API requires Spark >= 4.0")
     from pyspark.sql import functions as F
 
     path = _avro_asset(

@@ -54,6 +54,7 @@ import struct
 
 import numpy as np
 
+from impala_avx2_parquet_scanner_spark.sources import sealed_dir
 from impala_avx2_parquet_scanner_spark.sources.fle_codec import fle_unpack
 from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
     _FLAG_QTY,
@@ -678,7 +679,7 @@ def _expire_one_leaf(leaf: str, root: "str | None" = None) -> int:
     )
 
     rows = fledir_row_count(leaf)
-    done = os.path.join(leaf, "_DONE")
+    done = os.path.join(leaf, sealed_dir.DONE)
     if os.path.exists(done):
         os.remove(done)  # unseal FIRST: planning skips the leaf
     for f in os.listdir(leaf):
@@ -1704,7 +1705,6 @@ def fledir_changes(
     from pyspark.sql import functions as F
 
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        _HISTORY_DIR,
         _history_generations,
         _lineage_covered,
         _read_lineage,
@@ -1717,19 +1717,14 @@ def fledir_changes(
         )
 
     def snap_names(gen: int) -> set:
-        gp = os.path.join(path, _HISTORY_DIR, f"{gen}.manifest")
-        if not os.path.exists(gp):
+        snap = sealed_dir.read_manifest(sealed_dir.history_path(path, gen))
+        if snap is None:
             raise ValueError(
                 f"fledir: generation {gen} has no snapshot in {path} "
                 f"— committed generations: "
                 f"{_history_generations(path) or 'none'}"
             )
-        with open(gp) as fh:
-            return {
-                ln.partition("\t")[0]
-                for ln in fh.read().splitlines()
-                if ln
-            }
+        return {n for n, _ in snap}
 
     if from_gen >= to_gen:
         raise ValueError(

@@ -20,10 +20,13 @@ deterministically from `documents.text`, so the DuckDB oracle replays
 every output value from the base table: a hash match proves the custom
 scanner read, parsed, and fingerprinted the actual file bytes correctly.
 
-Scale: `partitions()` splits the file listing into fixed batches, each
-read independently on an executor — the same elasticity as any file
-source; a 10^9-file directory needs only a bigger listing (or a manifest
-table driving the partitions).
+Scale: `partitions()` splits the file listing into batches sized by
+`sealed_dir.partition_count`, each read independently on an executor —
+the same elasticity as any file source.
+
+The writer, the `_DONE` manifest the readers trust and the stream offset
+are the sealed-directory protocol of `sources/sealed_dir.py`, shared with
+`fledir` and `avrodir`.
 """
 
 from __future__ import annotations
@@ -33,26 +36,16 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    DataSourceWriter,
+    InputPartition,
+)
 
 from impala_avx2_parquet_scanner_spark.catalog import table
 from impala_avx2_parquet_scanner_spark.registry import query
-
-try:  # Spark >= 4.0
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    DATASOURCE_API_AVAILABLE = True
-except ImportError:  # pragma: no cover - older Spark
-    DATASOURCE_API_AVAILABLE = False
-
-    class DataSource:  # type: ignore[no-redef]
-        pass
-
-    class DataSourceReader:  # type: ignore[no-redef]
-        pass
-
-    class InputPartition:  # type: ignore[no-redef]
-        pass
-
+from impala_avx2_parquet_scanner_spark.sources import sealed_dir
 
 #: Max image width (pixels); the raster is the first width*3 text bytes.
 PPM_MAX_W = 64
@@ -71,20 +64,12 @@ class PpmDirReader(DataSourceReader):
         self.dir = options.get("path")
         if not self.dir:
             raise ValueError("ppmdir requires option 'path'")
-        # Python DataSource options arrive lower-cased.  No option →
-        # adaptive: ~8 files per InputPartition, floor 8, cap 64 (the
-        # fledir reader's sizing rule — a many-thousand-file table must
-        # not scan with 8 tasks)
+        # Python DataSource options arrive lower-cased
         np_opt = options.get("numpartitions")
         self.n_parts = int(np_opt) if np_opt is not None else None
         self._doc_lo: int | None = None  # inclusive
         self._doc_hi: int | None = None  # inclusive
         self._doc_in: set[int] | None = None
-
-    def _bucket_count(self, n_files: int) -> int:
-        if self.n_parts is not None:
-            return min(self.n_parts, max(n_files, 1))
-        return min(64, max(8, (n_files + 7) // 8), max(n_files, 1))
 
     def pushFilters(self, filters):
         """Predicate pushdown INTO the custom scanner — the reference's
@@ -144,132 +129,74 @@ class PpmDirReader(DataSourceReader):
         return True
 
     def partitions(self):
-        files = sorted(
-            f
-            for f in os.listdir(self.dir)
-            if f.endswith(".ppm")
-            and self._keep(int(f[len("doc_"):-len(".ppm")]))
-        )
-        batches: list[list[str]] = [
-            [] for _ in range(self._bucket_count(len(files)))
+        names, _ = sealed_dir.listing(self.dir, ".ppm")
+        files = [
+            os.path.join(self.dir, f) for f in names if self._keep(_doc_id(f))
         ]
-        for i, f in enumerate(files):
-            batches[i % len(batches)].append(os.path.join(self.dir, f))
-        return [_PpmFilesPartition(b) for b in batches if b]
+        n = sealed_dir.partition_count(len(files), n_parts=self.n_parts)
+        return [_PpmFilesPartition(b) for b in sealed_dir.deal(files, n)]
 
     def read(self, partition):
         # real file IO + header parse on the executor, one batch per split
-        for path in partition.paths:
-            with open(path, "rb") as fh:
-                payload = fh.read()
-            # P6 header: magic, width, height, maxval, single whitespace
-            parts = payload.split(b"\n", 3)
-            if parts[0] != b"P6":
-                raise ValueError(f"{path}: not a P6 PPM")
-            w, h = (int(x) for x in parts[1].split())
-            raster = parts[3]
-            if len(raster) != w * h * 3:
-                raise ValueError(f"{path}: truncated raster")
-            doc_id = int(os.path.basename(path)[len("doc_"):-len(".ppm")])
-            yield (
-                doc_id,
-                w,
-                h,
-                len(raster),
-                hashlib.sha256(raster.hex().encode()).hexdigest(),
-            )
+        return map(_parse_ppm, partition.paths)
 
 
-try:  # writer half needs the same Spark >= 4 module
-    from pyspark.sql.datasource import DataSourceWriter, WriterCommitMessage
+def _doc_id(name: str) -> int:
+    return int(os.path.basename(name)[len("doc_"):-len(".ppm")])
 
-    class _PpmCommit(WriterCommitMessage):
-        def __init__(self, files: list[str], tmps: "list[str] | None" = None):
-            self.files = files
-            self.tmps = tmps or []
 
-    class PpmDirWriter(DataSourceWriter):  # type: ignore[no-redef]
-        """Custom SINK (the writer half of the scanner registration —
-        §2A #17's role for this format), hardened round 8 to the same
-        protocol as the fledir writer: each task writes its rows'
-        payloads under TEMP names (`doc_<id>.ppm.tmp-<token>` —
-        invisible to both reader halves, which list/consume `.ppm`
-        names only), so a half-written or aborted attempt can never be
-        observed; `commit` renames every temp into its final name,
-        atomically replaces the `_DONE` manifest (append mode merges
-        the previous manifest), and only then — for mode('overwrite')
-        — removes stale previous `.ppm` files; `abort` deletes this
-        attempt's temps — a failed or aborted overwrite leaves the old
-        committed data fully readable.  Input schema: (doc_id bigint,
-        payload binary) where payload is a complete P6 file."""
+def _parse_ppm(path: str) -> tuple:
+    """One P6 file → its output row."""
+    with open(path, "rb") as fh:
+        payload = fh.read()
+    # P6 header: magic, width, height, maxval, single whitespace
+    parts = payload.split(b"\n", 3)
+    if parts[0] != b"P6":
+        raise ValueError(f"{path}: not a P6 PPM")
+    w, h = (int(x) for x in parts[1].split())
+    raster = parts[3]
+    if len(raster) != w * h * 3:
+        raise ValueError(f"{path}: truncated raster")
+    return (
+        _doc_id(path),
+        w,
+        h,
+        len(raster),
+        hashlib.sha256(raster.hex().encode()).hexdigest(),
+    )
 
-        def __init__(self, options, overwrite: bool):
-            self.dir = options.get("path")
-            if not self.dir:
-                raise ValueError("ppmdir requires option 'path'")
-            self.overwrite = overwrite
 
-        def write(self, rows):
-            import uuid as _uuid
+class PpmDirWriter(DataSourceWriter):
+    """Custom SINK (the writer half of the scanner registration —
+    §2A #17's role for this format) under the sealed-directory protocol
+    (`sealed_dir`): each task stages its rows' payloads as
+    `doc_<id>.ppm.tmp-<token>`, invisible to both reader halves, and
+    `commit` renames them, swaps the `_DONE` manifest (an append keeps
+    the previous entries) and only then, for mode('overwrite'), removes
+    the stale `.ppm` files; `abort` deletes this attempt's temps.  Input
+    schema: (doc_id bigint, payload binary) where payload is a complete
+    P6 file."""
 
-            os.makedirs(self.dir, exist_ok=True)
-            token = _uuid.uuid4().hex[:12]
-            written: list[str] = []
-            tmps: list[str] = []
-            for row in rows:
-                name = f"doc_{row.doc_id}.ppm"
-                tmp = f"{name}.tmp-{token}"
-                with open(os.path.join(self.dir, tmp), "wb") as fh:
-                    fh.write(bytes(row.payload))
-                written.append(name)
-                tmps.append(tmp)
-            return _PpmCommit(written, tmps)
+    def __init__(self, options, overwrite: bool):
+        self.dir = options.get("path")
+        if not self.dir:
+            raise ValueError("ppmdir requires option 'path'")
+        self.overwrite = overwrite
 
-        def commit(self, messages):
-            done = os.path.join(self.dir, "_DONE")
-            previous: list[str] = []
-            if os.path.exists(done):
-                with open(done) as fh:
-                    previous = [ln for ln in fh.read().splitlines() if ln]
-            new_files: list[str] = []
-            for m in messages:
-                tmps = getattr(m, "tmps", None) or m.files
-                for name, tmp in zip(m.files, tmps):
-                    os.replace(
-                        os.path.join(self.dir, tmp),
-                        os.path.join(self.dir, name),
-                    )
-                    new_files.append(name)
-            if not self.overwrite:
-                new_files += [f for f in previous if f not in set(new_files)]
-            all_files = sorted(set(new_files))
-            tmp_done = done + ".tmp"
-            with open(tmp_done, "w") as fh:
-                fh.write("\n".join(all_files))
-            os.replace(tmp_done, done)  # atomic manifest swap
-            if self.overwrite:
-                # destruction only after the new manifest is durable
-                keep = set(all_files)
-                for f in os.listdir(self.dir):
-                    if f.endswith(".ppm") and f not in keep:
-                        try:
-                            os.remove(os.path.join(self.dir, f))
-                        except OSError:
-                            pass
+    def write(self, rows):
+        msg = sealed_dir.Staged(self.dir)
+        for row in rows:
+            msg.put(f"doc_{row.doc_id}.ppm", bytes(row.payload))
+        return msg
 
-        def abort(self, messages):
-            for m in messages:
-                if m is None:
-                    continue
-                for f in getattr(m, "tmps", None) or m.files:
-                    try:
-                        os.remove(os.path.join(self.dir, f))
-                    except OSError:
-                        pass
+    def commit(self, messages):
+        sealed_dir.commit(
+            self.dir, sealed_dir.staged(messages), suffix=".ppm",
+            overwrite=self.overwrite,
+        )
 
-    WRITER_API_AVAILABLE = True
-except ImportError:  # pragma: no cover
-    WRITER_API_AVAILABLE = False
+    def abort(self, messages):
+        sealed_dir.abort(self.dir, messages)
 
 
 class PpmDataSource(DataSource):
@@ -284,9 +211,10 @@ class PpmDataSource(DataSource):
         return PpmDirReader(self.options)
 
     def writer(self, schema, overwrite):
-        if not WRITER_API_AVAILABLE:
-            raise NotImplementedError("DataSourceWriter requires Spark >= 4.0")
         return PpmDirWriter(self.options, overwrite)
+
+    def simpleStreamReader(self, schema):
+        return PpmStreamReader(self.options)
 
 
 def materialize_ppm_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -346,8 +274,6 @@ def scan_custom_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-parallel file scans + header parsing + raster fingerprints,
     value-verified by a DuckDB oracle that recomputes every field from the
     base table."""
-    if not DATASOURCE_API_AVAILABLE:
-        raise NotImplementedError("Python DataSource API requires Spark >= 4.0")
     path = materialize_ppm_dir(spark, sf_dir)
     try:
         spark.dataSource.register(PpmDataSource)
@@ -401,95 +327,28 @@ def scan_custom_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-try:  # streaming half (Spark >= 4.0)
-    from pyspark.sql.datasource import SimpleDataSourceStreamReader
+class PpmStreamReader(sealed_dir.SealedStreamReader):
+    """Streaming form of the custom scanner: each micro-batch picks up
+    the files not yet processed, with the file-name-set offset of
+    `sealed_dir.SealedStreamReader` (exactly-once file processing under
+    checkpointing, arrival-order independent).  The reference has no
+    streaming surface; this is the scan-framework story carried into
+    Structured Streaming (SURVEY §2B streaming row)."""
 
-    class PpmStreamReader(SimpleDataSourceStreamReader):
-        """Streaming form of the custom scanner: the directory is a live
-        feed, each micro-batch picks up files not yet processed, and the
-        OFFSET is the exact sorted file-name set — so
-        `readBetweenOffsets` replays any batch deterministically after a
-        failure (exactly-once file processing under checkpointing,
-        arrival-order independent).  The reference has no streaming
-        surface; this is the scan-framework story carried into
-        Structured Streaming (SURVEY §2B streaming row)."""
+    fmt = "ppmdir"
+    suffix = ".ppm"
 
-        def __init__(self, options):
-            self.dir = options.get("path")
-            if not self.dir:
-                raise ValueError("ppmdir requires option 'path'")
+    def _rows(self, names):
+        # a LIST: the stream framework pickles prefetched rows
+        return [_parse_ppm(os.path.join(self.dir, n)) for n in names]
 
-        def initialOffset(self) -> dict:
-            return {"names": []}
-
-        def _parse(self, names):
-            # returns a LIST: the stream framework pickles prefetched rows
-            out = []
-            for name in names:
-                path = os.path.join(self.dir, name)
-                with open(path, "rb") as fh:
-                    payload = fh.read()
-                parts = payload.split(b"\n", 3)
-                if parts[0] != b"P6":
-                    raise ValueError(f"{path}: not a P6 PPM")
-                w, h = (int(x) for x in parts[1].split())
-                raster = parts[3]
-                out.append(
-                    (
-                        int(name[len("doc_"):-len(".ppm")]),
-                        w,
-                        h,
-                        len(raster),
-                        hashlib.sha256(raster.hex().encode()).hexdigest(),
-                    )
-                )
-            return out
-
-        def _sealed(self, name: str) -> bool:
-            """True iff the file parses as a complete P6 image.  The
-            engine's writer makes torn files unobservable (temp-name +
-            rename), but a FOREIGN producer writing `.ppm` names in
-            place can be caught mid-write — such a file stays out of
-            the batch AND the offset until it parses complete."""
-            try:
-                with open(os.path.join(self.dir, name), "rb") as fh:
-                    payload = fh.read()
-                parts = payload.split(b"\n", 3)
-                if parts[0] != b"P6" or len(parts) < 4:
-                    return False
-                w, h = (int(x) for x in parts[1].split())
-                return len(parts[3]) >= w * h * 3
-            except Exception:
-                return False
-
-        def read(self, start: dict):
-            seen = set(start.get("names", []))
-            current = sorted(
-                f for f in os.listdir(self.dir) if f.endswith(".ppm")
-            )
-            fresh = [
-                f for f in current if f not in seen and self._sealed(f)
-            ]
-            # iter() over the materialized list: the framework requires an
-            # ITERATOR, and a list_iterator pickles (a generator does not)
-            return iter(self._parse(fresh)), {"names": sorted(seen | set(fresh))}
-
-        def readBetweenOffsets(self, start: dict, end: dict):
-            fresh = sorted(set(end.get("names", [])) - set(start.get("names", [])))
-            return iter(self._parse(fresh))
-
-        def commit(self, end: dict) -> None:
-            pass  # offsets live in the query checkpoint; nothing to prune
-
-    STREAM_API_AVAILABLE = True
-except ImportError:  # pragma: no cover
-    STREAM_API_AVAILABLE = False
-
-
-def _simple_stream_reader(self, schema):
-    if not STREAM_API_AVAILABLE:
-        raise NotImplementedError("streaming DataSource requires Spark >= 4.0")
-    return PpmStreamReader(self.options)
-
-
-PpmDataSource.simpleStreamReader = _simple_stream_reader
+    def _sealed(self, name: str) -> bool:
+        """True iff the file parses as a complete P6 image — asked only
+        in a directory without `_DONE`, where a FOREIGN producer writing
+        `.ppm` names in place can be caught mid-write; such a file stays
+        out of the batch AND the offset until it parses complete."""
+        try:
+            _parse_ppm(os.path.join(self.dir, name))
+            return True
+        except Exception:
+            return False

@@ -360,15 +360,10 @@ def test_stream_reader_partitioned_root_merged_feed(tmp_path):
     """Round 10: a hive-partitioned root streams as a merged per-leaf
     feed — leaf-qualified offset names, partition keys materialized as
     trailing typed cells (previously this layout was refused)."""
-    import pytest
-
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        FLE_STREAM_API_AVAILABLE,
         FleStreamReader,
     )
 
-    if not FLE_STREAM_API_AVAILABLE:
-        pytest.skip("streaming DataSource requires Spark >= 4.0")
     root = _mk_string_partitioned(tmp_path)
     r = FleStreamReader({"path": root})
     rows, off = r.read(r.initialOffset())
@@ -496,15 +491,10 @@ def test_stream_empty_root_notices_partition_layout(tmp_path):
     """A stream started on an EMPTY root must notice col=value leaves
     that appear later (the partitioned probe is per-micro-batch, not
     frozen at construction)."""
-    import pytest
-
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        FLE_STREAM_API_AVAILABLE,
         FleStreamReader,
     )
 
-    if not FLE_STREAM_API_AVAILABLE:
-        pytest.skip("streaming DataSource requires Spark >= 4.0")
     root = tmp_path / "late_root"
     root.mkdir()
     r = FleStreamReader({"path": os.fspath(root)})
