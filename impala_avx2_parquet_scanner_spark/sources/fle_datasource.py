@@ -16,13 +16,12 @@ file bytes (`scan_fle_roundtrip`'s DuckDB oracle replays the aggregate
 from the raw rows, so one wrong bit anywhere in pack, serialize, parse,
 or unpack flips the hash).
 
-The container is SCHEMA-GENERAL (round 7): a segment holds N column
-sections — unsigned-int plane columns and order-preserving-dictionary
-string columns, each independently nullable — matching the reference's
+The container is SCHEMA-GENERAL: a segment holds N column sections of
+nine kinds, each independently nullable — matching the reference's
 per-column reader model (one scanner per materialized slot,
-hdfs-parquet-scanner.cc:1410-1451) instead of the round-6 two-column
-demo layout.  Predicate pushdown splits per column exactly like the
-reference's per-conjunct routing (simple-predicates.h:30-205).
+hdfs-parquet-scanner.cc:1410-1451).  Predicate pushdown splits per
+column exactly like the reference's per-conjunct routing
+(simple-predicates.h:30-205).
 
 Segment layout ``FLE2`` (little-endian, one segment per Arrow batch):
 
@@ -30,17 +29,11 @@ Segment layout ``FLE2`` (little-endian, one segment per Arrow batch):
     u32    n                   true value count (<= n_blocks*64)
     u32    n_blocks            64-value blocks per plane
     u16    n_cols
-    per column:
-      u16    name_len,  name bytes (utf-8)
-      u8     kind               0 = unsigned int planes, 1 = dict<string>
-      u8     nullable           1 → validity words present
-      u64[n_blocks]             validity words (def-level analog — the
-                                reference packs def levels with the same
-                                encoder), only when nullable
-      (kind 1) u16 dict_size; dict_size * (u16 len, utf-8 bytes)
-                                sorted order-preserving dictionary
-      u8     width              bit width of this column's codes
-      u64[n_blocks*width]       plane words (block-major)
+    per column: one section, laid out per its kind — the table in
+      `sources/fle_kinds.py`, the only module that knows the kinds
+    b"BSTA" u16 chunk_blocks, u16 n_cols; per column u32 n_chunks,
+      u64[n_chunks] code mins, u64[n_chunks] code maxs (0 chunks for a
+      section without planes)
 
 Scale: encoding runs inside `mapInPandas` Arrow batches on executors
 (no driver collect); each segment file is an independent
@@ -74,11 +67,15 @@ import numpy as np
 
 from impala_avx2_parquet_scanner_spark.sources.fle_codec import (
     FleKernels,
-    code_bound,
     fle_pack,
     fle_unpack,
-    order_preserving_codes,
     pack_validity,
+)
+from impala_avx2_parquet_scanner_spark.sources import fle_kinds
+from impala_avx2_parquet_scanner_spark.sources.fle_kinds import (
+    _lane_validity,
+    _plain_str_arrow,
+    _plain_str_values,
 )
 
 from pyspark.sql.datasource import (
@@ -94,61 +91,6 @@ from impala_avx2_parquet_scanner_spark.sources import sealed_dir
 
 _MAGIC = b"FLE2"
 _STATS_MAGIC = b"BSTA"
-_KIND_INT = 0
-_KIND_DICT = 1
-#: signed int64 column stored as order-preserving OFFSET codes: the
-#: section carries an i64 base (the column minimum) and plane codes are
-#: ``value - base`` — the "order-preserving offset" the unsigned plane
-#: encoding needs for signed domains (dict-encoding.h:393-447's
-#: order-preserving remap applied to integers); literals translate by
-#: the same subtraction, so every kernel and both stats tiers work
-#: unchanged in code space
-_KIND_OFFSET = 2
-#: IEEE-754 double stored through the SORTABLE-BITS bijection (flip the
-#: sign bit of non-negatives, flip ALL bits of negatives): total order
-#: on the u64 codes == numeric order on the doubles, so every
-#: comparison kernel and both stats tiers run unchanged on encoded
-#: data — the order-preserving-dictionary idea (dict-encoding.h:
-#: 393-447) applied to the double domain without a dictionary.  The
-#: section carries a u64 code base (the minimum code) so clustered
-#: doubles still pack to narrow widths.  NaN marks NULL (the Arrow
-#: batch convention of this container's float input path); -0.0
-#: normalizes to +0.0 at encode so SQL equality survives the bijection
-_KIND_F64 = 3
-#: TIMESTAMP: microseconds since the epoch (session-UTC wall time, the
-#: engine pins spark.sql.session.timeZone=UTC) through the signed
-#: offset map — hdfs-parquet-scanner.cc's INT96 timestamp column
-#: re-expressed on the container's own order-preserving offset
-_KIND_TS = 4
-#: DATE: days since the epoch through the signed offset map (the
-#: reference declares DATE "NYI", parquet-common.h:51-53 — this
-#: container carries it because the kernels are domain-agnostic)
-_KIND_DATE = 5
-#: BOOLEAN: width-1 planes (hdfs-parquet-scanner.cc:607-634's
-#: bit-packed boolean column — FLE *is* bit-packing at width 1)
-_KIND_BOOL = 6
-#: DECIMAL(p,s): the exact unscaled integer through the signed offset
-#: map; p/s ride the section header so decode re-attaches the scale
-#: (the FIXED_LEN_BYTE_ARRAY decimal convention, parquet-common.h:
-#: 120-163, with the unscaled int as the code domain).  Pushed
-#: literals with MORE fractional digits than s translate exactly via
-#: floor/ceil bounds (x < 10.005 on scale 2 ⇔ code < ceil(1000.5))
-_KIND_DEC = 7
-#: PLAIN byte-array string column: u32 offsets + raw UTF-8 bytes, no
-#: dictionary and no plane words — the reference writer's PLAIN
-#: fallback when a dictionary stops paying for itself
-#: (hdfs-parquet-table-writer.cc:59's MAX_DICTIONARY_ENTRIES cap,
-#: fallback flush 466-620).  String predicates on this kind stay
-#: RESIDUAL (Spark re-evaluates them after the scan) — there is no
-#: dictionary to evaluate them against and no code space for the
-#: kernels; IS [NOT] NULL still rides the validity words, and the
-#: manifest keeps value-space min/max for driver-side file pruning
-_KIND_STR_PLAIN = 8
-#: the dictionary code domain is u16 in this container (dict_size and
-#: entry lengths serialize as u16) — the same 2^16-1 cap the reference
-#: writer enforces before falling back to PLAIN
-#: (hdfs-parquet-table-writer.cc:59)
-MAX_DICTIONARY_ENTRIES = 0xFFFF
 #: blocks per stats chunk: 16 blocks = 1024 values per (min, max) pair —
 #: fine enough that a selective range predicate on sorted/clustered data
 #: refutes most of a segment, coarse enough that the footer stays ~0.2%
@@ -156,451 +98,6 @@ MAX_DICTIONARY_ENTRIES = 0xFFFF
 _CHUNK_BLOCKS = 16
 #: fallback read schema when a directory cannot be probed (legacy demo)
 _SCHEMA = "l_returnflag string, l_quantity bigint"
-
-
-def _is_null_cell(v) -> bool:
-    return v is None or (isinstance(v, float) and math.isnan(v))
-
-
-def _has_negative(vals: np.ndarray) -> bool:
-    """True iff any non-null lane of a numeric column is negative —
-    routes the column to the offset-code kind."""
-    v = np.asarray(vals)
-    if v.dtype == object:
-        return any(
-            not _is_null_cell(x)
-            and isinstance(x, (int, np.integer, float, np.floating))
-            and x < 0
-            for x in v
-        )
-    if v.dtype.kind == "f":
-        ok = ~np.isnan(v)
-        return bool(ok.any() and (v[ok] < 0).any())
-    if v.dtype.kind in ("i",):
-        return bool(v.size and v.min() < 0)
-    return False
-
-
-def _encode_int_column(name: str, values: np.ndarray) -> tuple[
-    np.ndarray, np.ndarray, int, bool
-]:
-    """→ (codes uint64, valid bool, width, nullable).  Floats use NaN as
-    the NULL marker; valid lanes must be non-negative integral values —
-    silent truncation would corrupt the round-trip (a fractional or
-    negative input raises instead of storing a wrong value)."""
-    vals = np.asarray(values)
-    if vals.dtype == object:
-        # exact Python-int arithmetic: an object array may hold ints
-        # beyond 2^53, where a float64 detour silently rounds to a
-        # DIFFERENT value — every lane is range-checked individually
-        valid = np.array([not _is_null_cell(v) for v in vals], dtype=bool)
-        nullable = bool((~valid).any())
-        codes = np.zeros(vals.size, dtype=np.uint64)
-        for i in np.flatnonzero(valid):
-            v = vals[i]
-            if isinstance(v, (float, np.floating)):
-                if not float(v).is_integer():
-                    raise ValueError(
-                        f"fledir: column {name!r} has non-integral values "
-                        "— the FLE plane encoding stores unsigned "
-                        "integers exactly"
-                    )
-                iv = int(v)
-            else:
-                iv = int(v)
-            if iv < 0:
-                raise ValueError(
-                    f"fledir: column {name!r} has negative values — FLE "
-                    "plane codes are unsigned (order-preserving offset "
-                    "them first)"
-                )
-            if iv > 0x7FFFFFFFFFFFFFFF:
-                # plane storage is u64, but the DataSource decodes to
-                # Spark bigint (int64) — a larger value would silently
-                # wrap negative on read, so refuse it at encode time
-                raise ValueError(
-                    f"fledir: column {name!r} exceeds the bigint decode "
-                    "range (max 2^63-1)"
-                )
-            codes[i] = iv
-        width = max(int(codes.max()).bit_length(), 1) if codes.size else 1
-        return codes, valid, width, nullable
-    if vals.dtype.kind == "f":
-        valid = ~np.isnan(vals)
-        nullable = bool((~valid).any())
-    else:
-        valid = np.ones(vals.size, dtype=bool)
-        nullable = False
-    filled = np.where(valid, vals, 0)
-    codes = filled.astype(np.uint64)
-    if vals.dtype.kind == "f":
-        if not np.array_equal(
-            codes[valid].astype(np.float64), np.asarray(filled)[valid]
-        ):
-            raise ValueError(
-                f"fledir: column {name!r} has non-integral values — the FLE "
-                "plane encoding stores unsigned integers exactly"
-            )
-    if valid.any() and np.asarray(filled)[valid].min() < 0:
-        raise ValueError(
-            f"fledir: column {name!r} has negative values — FLE plane "
-            "codes are unsigned (order-preserving offset them first)"
-        )
-    width = max(int(codes.max()).bit_length(), 1) if codes.size else 1
-    return codes, valid, width, nullable
-
-
-def _encode_offset_column(name: str, values: np.ndarray) -> tuple[
-    np.ndarray, np.ndarray, int, int, bool
-]:
-    """→ (codes uint64, valid bool, base i64, width, nullable) for a
-    SIGNED integer column: codes are ``value - base`` (base = column
-    minimum), computed in modular u64 arithmetic so any int64 span up
-    to 2^64-1 round-trips exactly (two's complement in, two's
-    complement out)."""
-    vals = np.asarray(values)
-    if vals.dtype == object:
-        valid = np.array([not _is_null_cell(v) for v in vals], dtype=bool)
-        ints = np.zeros(vals.size, dtype=np.int64)
-        for i in np.flatnonzero(valid):
-            v = vals[i]
-            if isinstance(v, (float, np.floating)):
-                if not float(v).is_integer():
-                    raise ValueError(
-                        f"fledir: column {name!r} has non-integral values "
-                        "— the FLE plane encoding stores integers exactly"
-                    )
-                v = int(v)
-            iv = int(v)
-            if not (-(2**63) <= iv <= 2**63 - 1):
-                raise ValueError(
-                    f"fledir: column {name!r} exceeds the bigint decode "
-                    "range"
-                )
-            ints[i] = iv
-    elif vals.dtype.kind == "f":
-        valid = ~np.isnan(vals)
-        filled = np.where(valid, vals, 0.0)
-        ints = filled.astype(np.int64)
-        if not np.array_equal(
-            ints[valid].astype(np.float64), filled[valid]
-        ):
-            raise ValueError(
-                f"fledir: column {name!r} has non-integral values — the "
-                "FLE plane encoding stores integers exactly"
-            )
-    else:
-        valid = np.ones(vals.size, dtype=bool)
-        ints = vals.astype(np.int64)
-    nullable = bool((~valid).any())
-    base = int(ints[valid].min()) if valid.any() else 0
-    # modular subtraction: (value - base) mod 2^64 is the exact
-    # non-negative offset for any int64 pair, and order-preserving
-    # because base is the minimum
-    codes = (
-        ints.view(np.uint64) - np.uint64(base & 0xFFFFFFFFFFFFFFFF)
-    )
-    codes = np.where(valid, codes, np.uint64(0))
-    width = (
-        max(int(codes[valid].max()).bit_length(), 1) if valid.any() else 1
-    )
-    return codes.astype(np.uint64), valid, base, width, nullable
-
-
-_SIGN_BIT = np.uint64(1 << 63)
-_EPOCH_DATE = None  # initialized lazily (datetime import stays local)
-
-
-def _f64_code_array(vals: np.ndarray) -> np.ndarray:
-    """double[] → order-preserving u64[] (sortable bits): non-negative
-    doubles flip the sign bit, negatives flip every bit; the map is a
-    monotone bijection on normalized doubles, so ``a < b  ⇔  map(a) <
-    map(b)`` and the unsigned BitWeaving kernels answer double
-    comparisons exactly.  -0.0 is normalized to +0.0 first (SQL treats
-    them equal; the raw bit patterns would not be)."""
-    v = np.where(vals == 0.0, 0.0, vals)  # -0.0 == 0.0 → +0.0
-    bits = np.ascontiguousarray(v, dtype="<f8").view(np.uint64)
-    neg = (bits & _SIGN_BIT) != 0
-    return np.where(neg, ~bits, bits | _SIGN_BIT)
-
-
-def _f64_code_scalar(value: float) -> int:
-    return int(_f64_code_array(np.asarray([float(value)]))[0])
-
-
-def _f64_from_code_array(codes: np.ndarray) -> np.ndarray:
-    """Inverse sortable-bits map: u64 codes → float64."""
-    c = codes.astype(np.uint64)
-    was_neg = (c & _SIGN_BIT) == 0  # negatives mapped below the pivot
-    bits = np.where(was_neg, ~c, c & ~_SIGN_BIT)
-    return bits.astype("<u8").view("<f8").astype(np.float64)
-
-
-def _ts_micros(value) -> int:
-    """datetime → exact microseconds since the epoch (integer
-    arithmetic — float seconds would round near the range edges).
-    tz-aware literals convert to UTC, matching the engine's pinned
-    session timezone."""
-    import datetime as _dtm
-
-    if value.tzinfo is not None:
-        value = value.astimezone(_dtm.timezone.utc).replace(tzinfo=None)
-    d = value - _dtm.datetime(1970, 1, 1)
-    return (d.days * 86_400 + d.seconds) * 1_000_000 + d.microseconds
-
-
-def _date_days(value) -> int:
-    import datetime as _dtm
-
-    return (value - _dtm.date(1970, 1, 1)).days
-
-
-def _dec_code_bound(op: str, value, scale: int):
-    """Translate ``column OP literal`` on a DECIMAL(p,s) column into an
-    exact UNSCALED-integer predicate.  A literal with more fractional
-    digits than s has no unscaled peer, but every comparison still
-    translates exactly through floor/ceil (x < 10.005 at s=2 ⇔
-    unscaled < ceil(1000.5) = 1001); eq against such a literal matches
-    nothing.  Returns (op', unscaled) or False for match-nothing."""
-    import decimal as _decm
-    import math as _math
-
-    q = (
-        value if isinstance(value, _decm.Decimal) else _decm.Decimal(value)
-    ).scaleb(scale)
-    i = int(q)
-    if op == "eq":
-        return ("eq", i) if q == i else False
-    if op == "lt":
-        return ("lt", _math.ceil(q))
-    if op == "le":
-        return ("le", _math.floor(q))
-    if op == "gt":
-        return ("gt", _math.floor(q))
-    if op == "ge":
-        return ("ge", _math.ceil(q))
-    raise ValueError(f"unknown decimal op {op!r}")
-
-
-def _encode_f64_column(
-    name: str, values: np.ndarray, nan_null: bool = False
-) -> tuple[np.ndarray, np.ndarray, int, int, bool]:
-    """→ (codes u64, valid bool, code_base, width, nullable) for a
-    DOUBLE column: sortable-bits map, then subtract the minimum code so
-    clustered domains pack narrow (every non-negative double maps at or
-    above 2^63 — without the base the width would always be 64).
-
-    NaN handling is EXPLICIT: a float64 ndarray cannot distinguish a
-    NULL marker from a genuine NaN datum (Spark orders NaN as a valid,
-    greatest double), so the plain "f64" hint REFUSES NaN rather than
-    silently re-typing data as NULLs; callers whose NaNs mean NULL
-    (the pandas float convention) opt in with the "f64_nan_null"
-    hint."""
-    vals = np.asarray(values, dtype=np.float64)
-    valid = ~np.isnan(vals)
-    if not nan_null and not valid.all():
-        raise ValueError(
-            f"fledir: column {name!r} contains NaN — the 'f64' kind "
-            "stores doubles exactly and cannot tell a NaN datum from a "
-            "NULL marker; scrub the NaNs or use the 'f64_nan_null' "
-            "hint to store them as NULLs"
-        )
-    nullable = bool((~valid).any())
-    fill = vals[valid][0] if valid.any() else 0.0
-    mapped = _f64_code_array(np.where(valid, vals, fill))
-    base = int(mapped[valid].min()) if valid.any() else 0
-    codes = np.where(valid, mapped - np.uint64(base), np.uint64(0))
-    width = (
-        max(int(codes[valid].max()).bit_length(), 1) if valid.any() else 1
-    )
-    return codes.astype(np.uint64), valid, base, width, nullable
-
-
-def _encode_bool_column(values: np.ndarray) -> tuple[
-    np.ndarray, np.ndarray, bool
-]:
-    """→ (codes u64 of 0/1, valid bool, nullable); width is always 1 —
-    FLE at width 1 IS the reference's bit-packed boolean path."""
-    vals = np.asarray(values)
-    if vals.dtype == object:
-        valid = np.array([not _is_null_cell(v) for v in vals], dtype=bool)
-        codes = np.array(
-            [1 if (valid[i] and bool(vals[i])) else 0
-             for i in range(vals.size)],
-            dtype=np.uint64,
-        )
-    else:
-        valid = np.ones(vals.size, dtype=bool)
-        codes = vals.astype(bool).astype(np.uint64)
-    return codes, valid, bool((~valid).any())
-
-
-def _encode_ts_column(name: str, values: np.ndarray) -> tuple[
-    np.ndarray, np.ndarray, int, int, bool
-]:
-    """→ offset-coded MICROSECONDS since epoch (NaT marks NULL)."""
-    vals = np.asarray(values)
-    if vals.dtype.kind == "M":
-        valid = ~np.isnat(vals)
-        micros = np.where(
-            valid, vals.astype("datetime64[us]").astype(np.int64), 0
-        )
-    else:  # object array of datetimes / None
-        valid = np.array([not _is_null_cell(v) and v is not None
-                          for v in vals], dtype=bool)
-        micros = np.zeros(vals.size, dtype=np.int64)
-        for i in np.flatnonzero(valid):
-            micros[i] = _ts_micros(vals[i])
-    # fill NULL lanes with a VALID value so the offset base/width are
-    # computed over the real domain (a 0 filler would widen the planes)
-    fill = micros[valid][0] if valid.any() else 0
-    codes, _, base, width, _ = _encode_offset_column(
-        name, np.where(valid, micros, fill)
-    )
-    codes = np.where(valid, codes, np.uint64(0))
-    return codes, valid, base, width, bool((~valid).any())
-
-
-def _encode_date_column(name: str, values: np.ndarray) -> tuple[
-    np.ndarray, np.ndarray, int, int, bool
-]:
-    """→ offset-coded DAYS since epoch (None/NaT marks NULL)."""
-    vals = np.asarray(values)
-    if vals.dtype.kind == "M":
-        valid = ~np.isnat(vals)
-        days = np.where(
-            valid, vals.astype("datetime64[D]").astype(np.int64), 0
-        )
-    else:
-        valid = np.array(
-            [not _is_null_cell(v) and v is not None for v in vals],
-            dtype=bool,
-        )
-        days = np.zeros(vals.size, dtype=np.int64)
-        for i in np.flatnonzero(valid):
-            days[i] = _date_days(vals[i])
-    fill = days[valid][0] if valid.any() else 0
-    codes, _, base, width, _ = _encode_offset_column(
-        name, np.where(valid, days, fill)
-    )
-    codes = np.where(valid, codes, np.uint64(0))
-    return codes, valid, base, width, bool((~valid).any())
-
-
-def _encode_dec_column(
-    name: str, values: np.ndarray, precision: int, scale: int
-) -> tuple[np.ndarray, np.ndarray, int, int, bool]:
-    """→ offset-coded UNSCALED integers of a DECIMAL(p,s) column.  A
-    value with more fractional digits than s would silently lose
-    precision — raise instead (the writer's strict-overflow stance,
-    hdfs-parquet-table-writer.cc's decimal path)."""
-    import decimal as _decm
-
-    vals = np.asarray(values, dtype=object)
-    valid = np.array([not _is_null_cell(v) for v in vals], dtype=bool)
-    unscaled = np.zeros(vals.size, dtype=np.int64)
-    for i in np.flatnonzero(valid):
-        d = _decm.Decimal(vals[i])
-        if not d.is_finite():
-            raise ValueError(
-                f"fledir: column {name!r} holds a non-finite Decimal "
-                f"({vals[i]}) — the unscaled-integer encoding has no "
-                "representation for NaN/Infinity"
-            )
-        q = d.scaleb(scale)
-        iv = int(q)
-        if q != iv:
-            raise ValueError(
-                f"fledir: column {name!r} value {vals[i]} does not fit "
-                f"scale {scale} — the unscaled encoding is exact"
-            )
-        unscaled[i] = iv
-    fill = unscaled[valid][0] if valid.any() else 0
-    codes, _, base, width, _ = _encode_offset_column(
-        name, np.where(valid, unscaled, fill)
-    )
-    codes = np.where(valid, codes, np.uint64(0))
-    return codes, valid, base, width, bool((~valid).any())
-
-
-def _encode_dict_column(
-    values: np.ndarray, max_entries: "int | None" = None
-) -> "tuple[np.ndarray, np.ndarray, list[str], int, bool] | None":
-    """→ (codes uint64, valid bool, dictionary, width, nullable), or
-    None when the distinct count exceeds `max_entries` — decided
-    BEFORE code assignment, so a near-unique column (the fallback's
-    target case) pays one np.unique, not a full dict encode it then
-    discards."""
-    vals = np.asarray(values, dtype=object)
-    valid = np.array([not _is_null_cell(v) for v in vals], dtype=bool)
-    nullable = bool((~valid).any())
-    if valid.any():
-        fill = vals[valid][0]
-        work = np.where(valid, vals, fill).astype(str)
-        if max_entries is not None:
-            dictionary = np.unique(work)
-            if dictionary.size > max_entries:
-                return None
-            # sorted-unique in hand: codes are a binary search, the
-            # same order-preserving map order_preserving_codes builds
-            codes = np.searchsorted(dictionary, work).astype(np.uint64)
-        else:
-            dictionary, codes = order_preserving_codes(work)
-        dict_list = [str(d) for d in dictionary]
-    else:
-        dict_list, codes = [], np.zeros(vals.size, dtype=np.uint64)
-    width = max(int(codes.max()).bit_length(), 1) if codes.size else 1
-    return codes.astype(np.uint64), valid, dict_list, width, nullable
-
-
-def _encode_plain_str_column(values: np.ndarray) -> tuple[
-    np.ndarray, bytes, np.ndarray, bool
-]:
-    """→ (valid bool, raw utf-8 bytes, offsets u32[n+1], nullable) for a
-    PLAIN byte-array string column.  NULL lanes contribute zero bytes
-    (offset[i] == offset[i+1]); total bytes per segment must fit the
-    READER's 32-bit SIGNED Arrow string offsets (2 GiB-1) — segments
-    are one Arrow batch, far below that in practice, and the encoder
-    refuses larger rather than letting decode wrap offsets negative."""
-    vals = np.asarray(values, dtype=object)
-    valid = np.array([not _is_null_cell(v) for v in vals], dtype=bool)
-    chunks: list[bytes] = []
-    offsets = np.zeros(vals.size + 1, dtype=np.uint32)
-    pos = 0
-    for i in range(vals.size):
-        if valid[i]:
-            raw = str(vals[i]).encode("utf-8")
-            chunks.append(raw)
-            pos += len(raw)
-            if pos > 0x7FFFFFFF:
-                raise ValueError(
-                    "fledir: plain string section exceeds 2 GiB in one "
-                    "segment — write smaller batches"
-                )
-        offsets[i + 1] = pos
-    return valid, b"".join(chunks), offsets, bool((~valid).any())
-
-
-def _plain_str_arrow(c: "ParsedColumn", n: int):
-    """PLAIN string section → ZERO-COPY Arrow StringArray (no Python
-    string materializes here — offsets/bytes are wrapped as buffers;
-    the encoder caps sections at 2 GiB so i32 offsets are exact)."""
-    import pyarrow as pa
-
-    return pa.Array.from_buffers(
-        pa.string(), n,
-        [None,
-         pa.py_buffer(c.str_offsets[: n + 1].astype("<i4").tobytes()),
-         pa.py_buffer(c.str_data)],
-    )
-
-
-def _plain_str_values(c: "ParsedColumn", n: int) -> np.ndarray:
-    """PLAIN string section → object ndarray of str (the validity mask
-    is applied by the caller; NULL lanes surface as empty strings)."""
-    if n == 0:
-        return np.empty(0, dtype=object)
-    return np.asarray(_plain_str_arrow(c, n).to_pandas(), dtype=object)
 
 
 def _chunk_min_max(
@@ -624,86 +121,15 @@ def _chunk_min_max(
     return mins, maxs
 
 
-def _infer_kind(name: str, vals: np.ndarray, hint) -> tuple[int, tuple]:
-    """→ (kind, dec_meta) for one column.  `hint` overrides inference:
-    None (infer), "f64", "ts", "date", "bool", or ("dec", p, s).
-    Inference: datetime64 → ts, bool dtype → bool, string → dict,
-    object arrays route by their non-null cell type (str → dict,
-    datetime → ts, date → date, Decimal → dec with inferred p/s,
-    bool → bool, numeric → int/offset planes); plain numeric dtypes
-    keep the legacy int/offset routing (an integral-valued float
-    column stays an int column — schema stability over cleverness;
-    genuinely fractional doubles need the explicit "f64" hint or a
-    float literal set that makes inference unambiguous is NOT enough)."""
-    import datetime as _dtm
-    import decimal as _decm
-
-    if hint is not None:
-        if isinstance(hint, tuple) and hint[0] == "dec":
-            return _KIND_DEC, (int(hint[1]), int(hint[2]))
-        return {
-            "int": _KIND_INT, "dict": _KIND_DICT, "offset": _KIND_OFFSET,
-            "f64": _KIND_F64, "f64_nan_null": _KIND_F64, "ts": _KIND_TS,
-            "date": _KIND_DATE, "bool": _KIND_BOOL,
-            "str_plain": _KIND_STR_PLAIN,
-        }[hint], ()
-    if vals.dtype.kind == "M":
-        return _KIND_TS, ()
-    if vals.dtype.kind == "b":
-        return _KIND_BOOL, ()
-    if vals.dtype.kind in ("U", "S"):
-        return _KIND_DICT, ()
-    if vals.dtype == object:
-        non_null = [v for v in vals if not _is_null_cell(v)]
-        if not non_null:
-            return _KIND_DICT, ()
-        first_types_all = lambda t: all(isinstance(v, t) for v in non_null)
-        if first_types_all((bool, np.bool_)):
-            return _KIND_BOOL, ()
-        if first_types_all(_dtm.datetime):
-            return _KIND_TS, ()
-        if first_types_all(_dtm.date):  # datetime is a date subclass —
-            return _KIND_DATE, ()      # checked AFTER datetime above
-        if first_types_all(_decm.Decimal):
-            # scale inference would be PER SEGMENT (max fractional
-            # digits in this batch), so one column could encode with
-            # different scales across segments of a directory and the
-            # decoded Arrow types would disagree mid-scan — require
-            # the writer to pin (p, s) explicitly
-            raise ValueError(
-                f"fledir: column {name!r} holds Decimals — pass an "
-                "explicit ('dec', precision, scale) kind hint (a "
-                "per-segment inferred scale would vary across segments)"
-            )
-        if first_types_all((int, np.integer, float, np.floating)):
-            return (
-                (_KIND_OFFSET, ()) if _has_negative(vals)
-                else (_KIND_INT, ())
-            )
-        return _KIND_DICT, ()
-    # plain numeric dtype: legacy int/offset planes
-    return (
-        (_KIND_OFFSET, ()) if _has_negative(vals) else (_KIND_INT, ())
-    )
-
-
 def encode_segment_columns(columns: list[tuple]) -> bytes:
     """N named arrays (one Arrow batch) → one self-contained FLE segment.
 
-    Each entry is ``(name, values)`` or ``(name, values, kind_hint)``
-    where the hint is "f64" / "ts" / "date" / "bool" / ("dec", p, s)
-    (see :func:`_infer_kind`).  Without a hint the kind is inferred
-    from dtype: string/object-of-str arrays become order-preserving
-    dictionary columns, datetime64 becomes timestamp, bool dtype
-    becomes width-1 boolean planes, object-of-date/-Decimal become
-    date/decimal, and numeric arrays become unsigned int planes (NaN
-    marks NULL in float input; negative domains route through the
-    signed offset kind).  Dictionary entries carry a u16 length
-    prefix, so entries up to 65535 UTF-8 bytes round-trip (longer
-    raises a clear error).  A trailing BSTA footer carries per-chunk
-    code-space min/max for every column, so the reader's kernels can
-    skip plane words mid-file (older readers stop after the column
-    sections and never see it)."""
+    Each entry is ``(name, values)`` or ``(name, values, kind_hint)``;
+    the hint spellings and the inference without one are
+    :func:`fle_kinds.infer_kind`'s.  A trailing BSTA footer carries
+    per-chunk code-space min/max for every column, so the reader's
+    kernels can skip plane words mid-file (older readers stop after
+    the column sections and never see it)."""
     if not columns:
         raise ValueError("fledir: segment needs at least one column")
     if any(entry[0] == "__rows__" for entry in columns):
@@ -721,108 +147,27 @@ def encode_segment_columns(columns: list[tuple]) -> bytes:
         vals = np.asarray(values)
         if vals.size != n:
             raise ValueError("fledir: ragged columns in one segment")
-        kind, dec_meta = _infer_kind(name, vals, hint)
-        base = None
-        dictionary = None
-        if kind == _KIND_DICT:
-            enc = _encode_dict_column(
-                vals,
-                max_entries=(
-                    None if hint == "dict" else MAX_DICTIONARY_ENTRIES
-                ),
-            )
-            if enc is None:
-                # the reference writer's cap-triggered PLAIN fallback
-                # (hdfs-parquet-table-writer.cc:59,466-620): a
-                # near-unique string column would otherwise bloat every
-                # segment with a dictionary the size of the data — and
-                # the u16 code domain cannot index it at all
-                kind = _KIND_STR_PLAIN
-            else:
-                codes, valid, dictionary, width, nullable = enc
-                if len(dictionary) > MAX_DICTIONARY_ENTRIES:
-                    # hint == "dict" forces the kind: refuse loudly
-                    raise ValueError(
-                        f"fledir: column {name!r} has "
-                        f"{len(dictionary)} distinct values — the "
-                        f"dictionary kind caps at "
-                        f"{MAX_DICTIONARY_ENTRIES} (drop the 'dict' "
-                        "hint to allow the plain-string fallback)"
-                    )
-        if kind == _KIND_STR_PLAIN:
-            valid, str_data, str_offsets, nullable = (
-                _encode_plain_str_column(vals)
-            )
-            raw_name = name.encode("utf-8")
-            sec = [struct.pack("<H", len(raw_name)), raw_name,
-                   struct.pack("<BB", kind, 1 if nullable else 0)]
-            if nullable:
-                sec.append(np.ascontiguousarray(
-                    pack_validity(valid), "<u8").tobytes())
-            sec.append(struct.pack("<I", len(str_data)))
-            sec.append(
-                np.ascontiguousarray(str_offsets, "<u4").tobytes()
-            )
-            sec.append(str_data)
-            parts.append(b"".join(sec))
-            # plain sections carry no code space → no chunk stats
-            chunk_sections.append(struct.pack("<I", 0))
-            continue
-        if kind == _KIND_OFFSET:
-            codes, valid, base, width, nullable = _encode_offset_column(
-                name, vals
-            )
-        elif kind == _KIND_F64:
-            codes, valid, base, width, nullable = _encode_f64_column(
-                name, vals, nan_null=(hint == "f64_nan_null")
-            )
-        elif kind == _KIND_TS:
-            codes, valid, base, width, nullable = _encode_ts_column(
-                name, vals
-            )
-        elif kind == _KIND_DATE:
-            codes, valid, base, width, nullable = _encode_date_column(
-                name, vals
-            )
-        elif kind == _KIND_BOOL:
-            codes, valid, nullable = _encode_bool_column(vals)
-            width = 1
-        elif kind == _KIND_DEC:
-            codes, valid, base, width, nullable = _encode_dec_column(
-                name, vals, dec_meta[0], dec_meta[1]
-            )
-        elif kind != _KIND_DICT:
-            codes, valid, width, nullable = _encode_int_column(name, vals)
-        planes, pn = fle_pack(codes, width)
-        assert pn == n
-        assert planes.shape[0] == n_blocks
+        e = fle_kinds.infer_kind(name, vals, hint).encode(name, vals, hint)
         raw_name = name.encode("utf-8")
         sec = [struct.pack("<H", len(raw_name)), raw_name,
-               struct.pack("<BB", kind, 1 if nullable else 0)]
-        if nullable:
+               struct.pack("<BB", e.kind, 1 if e.nullable else 0)]
+        if e.nullable:
             sec.append(
-                np.ascontiguousarray(pack_validity(valid), "<u8").tobytes()
+                np.ascontiguousarray(pack_validity(e.valid), "<u8").tobytes()
             )
-        if kind == _KIND_DICT:
-            sec.append(struct.pack("<H", len(dictionary)))
-            for entry_s in dictionary:
-                raw = entry_s.encode("utf-8")
-                if len(raw) > 0xFFFF:
-                    raise ValueError(
-                        "fledir: dictionary entry exceeds 65535 UTF-8 "
-                        "bytes — not representable in the segment format"
-                    )
-                sec.append(struct.pack("<H", len(raw)) + raw)
-        if kind in (_KIND_OFFSET, _KIND_TS, _KIND_DATE, _KIND_DEC):
-            sec.append(struct.pack("<q", base))
-        elif kind == _KIND_F64:
-            sec.append(struct.pack("<Q", base))
-        if kind == _KIND_DEC:
-            sec.append(struct.pack("<BB", dec_meta[0], dec_meta[1]))
-        sec.append(struct.pack("<B", width))
+        sec.append(e.extras)
+        if e.codes is None:
+            parts.append(b"".join(sec))
+            # no planes → no code space → no chunk stats
+            chunk_sections.append(struct.pack("<I", 0))
+            continue
+        planes, pn = fle_pack(e.codes, e.width)
+        assert pn == n
+        assert planes.shape[0] == n_blocks
+        sec.append(struct.pack("<B", e.width))
         sec.append(np.ascontiguousarray(planes, "<u8").tobytes())
         parts.append(b"".join(sec))
-        mins, maxs = _chunk_min_max(codes, valid, planes.shape[0])
+        mins, maxs = _chunk_min_max(e.codes, e.valid, planes.shape[0])
         chunk_sections.append(
             struct.pack("<I", mins.size)
             + np.ascontiguousarray(mins, "<u8").tobytes()
@@ -848,21 +193,27 @@ def encode_segment(returnflag: np.ndarray, quantity: np.ndarray) -> bytes:
 
 @dataclass
 class ParsedColumn:
+    """One column section, its fields per `sources/fle_kinds.py`."""
+
     name: str
     kind: int
     nullable: bool
     validity: np.ndarray | None  # u64 words, None → all valid
-    dictionary: list[str] | None  # kind 1 only
     width: int
     planes: np.ndarray  # (n_blocks, width) u64
-    #: kinds 2/4/5/7: value-space i64 base (value = base + code);
-    #: kind 3: u64 SORTABLE-BITS code base (double = unmap(base + code))
+    dictionary: list[str] | None = None
+    #: value-space i64 base (value = base + code), or the u64
+    #: sortable-bits code base of a double column
     base: int = 0
-    precision: int = 0  # kind 7 only
-    scale: int = 0  # kind 7 only
-    #: kind 8 only: u32 value-boundary offsets (n+1) + raw utf-8 bytes
+    precision: int = 0
+    scale: int = 0
+    #: plain strings: u32 value-boundary offsets (n+1) + raw utf-8 bytes
     str_offsets: "np.ndarray | None" = None
     str_data: bytes = b""
+
+    @property
+    def spec(self) -> fle_kinds.ColumnKind:
+        return fle_kinds.KINDS[self.kind]
 
 
 @dataclass
@@ -903,52 +254,21 @@ def parse_segment(payload: bytes) -> ParsedSegment:
         if nullable:
             validity = np.frombuffer(payload, "<u8", n_blocks, off)
             off += 8 * n_blocks
-        dictionary = None
-        if kind == _KIND_DICT:
-            (dict_size,) = struct.unpack_from("<H", payload, off)
-            off += 2
-            dictionary = []
-            for _ in range(dict_size):
-                (ln,) = struct.unpack_from("<H", payload, off)
-                off += 2
-                dictionary.append(payload[off:off + ln].decode("utf-8"))
-                off += ln
-        base = 0
-        precision = scale = 0
-        if kind in (_KIND_OFFSET, _KIND_TS, _KIND_DATE, _KIND_DEC):
-            (base,) = struct.unpack_from("<q", payload, off)
-            off += 8
-        elif kind == _KIND_F64:
-            (base,) = struct.unpack_from("<Q", payload, off)
-            off += 8
-        if kind == _KIND_DEC:
-            precision, scale = struct.unpack_from("<BB", payload, off)
-            off += 2
-        if kind == _KIND_STR_PLAIN:
-            (data_len,) = struct.unpack_from("<I", payload, off)
-            off += 4
-            str_offsets = np.frombuffer(payload, "<u4", n + 1, off)
-            off += 4 * (n + 1)
-            str_data = payload[off:off + data_len]
-            off += data_len
-            cols.append(ParsedColumn(
-                name=name, kind=kind, nullable=bool(nullable),
-                validity=validity, dictionary=None, width=0,
-                planes=np.zeros((n_blocks, 0), dtype=np.uint64),
-                str_offsets=str_offsets, str_data=str_data,
-            ))
-            continue
-        (width,) = struct.unpack_from("<B", payload, off)
-        off += 1
-        words = n_blocks * width
-        planes = np.frombuffer(payload, "<u8", words, off).reshape(
-            n_blocks, width
-        )
-        off += 8 * words
+        spec = fle_kinds.of(kind)
+        fields, off = spec.read_extras(payload, off, n)
+        if spec.planes:
+            (width,) = struct.unpack_from("<B", payload, off)
+            off += 1
+            words = n_blocks * width
+            planes = np.frombuffer(payload, "<u8", words, off).reshape(
+                n_blocks, width
+            )
+            off += 8 * words
+        else:
+            width, planes = 0, np.zeros((n_blocks, 0), dtype=np.uint64)
         cols.append(ParsedColumn(
             name=name, kind=kind, nullable=bool(nullable),
-            validity=validity, dictionary=dictionary, width=width,
-            planes=planes, base=base, precision=precision, scale=scale,
+            validity=validity, width=width, planes=planes, **fields,
         ))
     chunk_blocks, chunk_stats = 0, None
     if payload[off:off + 4] == _STATS_MAGIC:
@@ -972,16 +292,6 @@ def parse_segment(payload: bytes) -> ParsedSegment:
         n=n, n_blocks=n_blocks, columns=cols,
         chunk_blocks=chunk_blocks, chunk_stats=chunk_stats,
     )
-
-
-def _lane_validity(col: ParsedColumn, n: int) -> np.ndarray:
-    if col.validity is None:
-        return np.ones(n, dtype=bool)
-    lanes = np.arange(n, dtype=np.uint64)
-    return (
-        (col.validity[(lanes // 64).astype(np.int64)] >> (lanes % 64))
-        & np.uint64(1)
-    ).astype(bool)
 
 
 def decode_segment_columns(
@@ -1009,11 +319,11 @@ def decode_segment_columns(
     if mask is None and block_range is None:
         for c in decode_cols:
             valid = _lane_validity(c, seg.n)
-            if c.kind == _KIND_STR_PLAIN:
-                vals = _plain_str_values(c, seg.n)
-            else:
+            if c.spec.planes:
                 codes = fle_unpack(c.planes, c.width, seg.n)
-                vals = _codes_to_values(c, codes, seg.n)
+                vals = c.spec.values(c, codes)
+            else:
+                vals = _plain_str_values(c, seg.n)
             out[c.name] = (vals, valid)
         return out
 
@@ -1040,17 +350,12 @@ def decode_segment_columns(
     n_sub = live.size * 64
     for c in decode_cols:
         if live.size == 0:
-            empty_dtype = {
-                _KIND_DICT: object,
-                _KIND_STR_PLAIN: object,
-                _KIND_F64: np.float64,
-                _KIND_BOOL: bool,
-            }.get(c.kind, np.int64)
             out[c.name] = (
-                np.empty(0, dtype=empty_dtype), np.empty(0, dtype=bool)
+                np.empty(0, dtype=c.spec.empty_dtype),
+                np.empty(0, dtype=bool),
             )
             continue
-        if c.kind == _KIND_STR_PLAIN:
+        if not c.spec.planes:
             # byte-array sections have no plane words to skip; map the
             # surviving lanes to GLOBAL row indices and take() them on
             # the ZERO-COPY Arrow array — only SURVIVORS ever become
@@ -1090,36 +395,8 @@ def decode_segment_columns(
                 bitorder="little",
             ).astype(bool)
             valid = vbits[keep]
-        vals = _codes_to_values(c, codes, codes.size)
-        out[c.name] = (vals, valid)
+        out[c.name] = (c.spec.values(c, codes), valid)
     return out
-
-
-def _codes_to_values(
-    c: ParsedColumn, codes: np.ndarray, n: int
-) -> np.ndarray:
-    if c.kind == _KIND_DICT:
-        return (
-            np.asarray(c.dictionary, dtype=object)[codes.astype(np.int64)]
-            if c.dictionary
-            else np.full(n, None, dtype=object)
-        )
-    if c.kind in (_KIND_OFFSET, _KIND_TS, _KIND_DATE, _KIND_DEC):
-        # modular add then two's-complement view: exact for any int64
-        # base + code pair the encoder accepted.  Timestamp/date/decimal
-        # values stay in their integer domain here (micros / days /
-        # unscaled) — the Arrow boundary attaches the logical type.
-        return (
-            codes.astype(np.uint64)
-            + np.uint64(c.base & 0xFFFFFFFFFFFFFFFF)
-        ).view(np.int64)
-    if c.kind == _KIND_F64:
-        return _f64_from_code_array(
-            codes.astype(np.uint64) + np.uint64(c.base)
-        )
-    if c.kind == _KIND_BOOL:
-        return codes.astype(bool)
-    return codes.astype(np.int64)
 
 
 def decode_segment(payload: bytes, mask: np.ndarray | None = None):
@@ -1549,9 +826,6 @@ class FleDirReader(DataSourceReader):
         failure / empty dir) fall back to the legacy integer rule: a
         fractional numeric literal stays residual, since int kernels
         would silently answer x<10 instead of x<10.5."""
-        import datetime as _dtm
-        import decimal as _decm
-
         if col in self.evolved:
             # evolved NULL-fill column: no kernels, no stats — every
             # predicate stays residual (Spark evaluates it against the
@@ -1587,51 +861,7 @@ class FleDirReader(DataSourceReader):
             return pok(value)
 
         kind = self._column_kinds().get(col)
-
-        def ok(v) -> bool:
-            if kind == _KIND_F64:
-                # any non-NaN double literal maps exactly (±inf too);
-                # NaN stays residual — Spark's NaN ordering semantics
-                # (NaN == NaN, NaN greatest) differ from the kernels'
-                return isinstance(v, (int, float, np.integer, np.floating)) \
-                    and not (isinstance(v, (float, np.floating))
-                             and math.isnan(v))
-            if kind == _KIND_TS:
-                return isinstance(v, _dtm.datetime)
-            if kind == _KIND_DATE:
-                # datetime is a date subclass: a datetime literal on a
-                # date column has sub-day precision — keep it residual
-                return isinstance(v, _dtm.date) \
-                    and not isinstance(v, _dtm.datetime)
-            if kind == _KIND_BOOL:
-                return isinstance(v, (bool, np.bool_))
-            if kind == _KIND_DEC:
-                # any finite numeric/Decimal literal translates exactly
-                # through floor/ceil bounds on the unscaled domain
-                if isinstance(v, _decm.Decimal):
-                    return v.is_finite()
-                if isinstance(v, (float, np.floating)):
-                    return math.isfinite(v)
-                return isinstance(v, (int, np.integer))
-            if kind == _KIND_DICT:
-                return isinstance(v, str)
-            if kind == _KIND_STR_PLAIN:
-                # no dictionary to evaluate against, no code space for
-                # the kernels: every value comparison stays RESIDUAL
-                # (the reference's PLAIN pages are filtered row-by-row
-                # too); only the validity-word predicates push
-                return False
-            # int/offset planes (or unknown column): integral only.
-            # A None element (IN-lists can carry one) stays residual —
-            # int(None) has no code-space peer, and SQL gives NULL-in-
-            # list its own three-valued semantics
-            if v is None:
-                return False
-            return not (
-                isinstance(v, (float, np.floating))
-                and not float(v).is_integer()
-            )
-
+        spec = fle_kinds.UNPROBED if kind is None else fle_kinds.of(kind)
         if op in ("is_null", "is_not_null"):
             return True
         if op == "eqns" and value is None:
@@ -1639,10 +869,10 @@ class FleDirReader(DataSourceReader):
         if op in ("startswith", "endswith", "contains"):
             # string predicates evaluate per DICTIONARY ENTRY — only a
             # dictionary column has one to evaluate against
-            return kind == _KIND_DICT and isinstance(value, str)
+            return spec.string_predicates and isinstance(value, str)
         if op == "in":
-            return value is not None and all(ok(v) for v in value)
-        return ok(value)
+            return value is not None and all(spec.pushable(v) for v in value)
+        return spec.pushable(value)
 
     def pushFilters(self, filters):
         """eq/lt/le/gt/ge/in on any stored column are accepted and
@@ -1887,7 +1117,7 @@ class FleDirReader(DataSourceReader):
         non-nullable column) returns the full valid-lane mask so
         negation stays well-defined."""
         zeros = np.zeros(seg.n_blocks, dtype=np.uint64)
-        if c.kind == _KIND_STR_PLAIN:
+        if not c.spec.planes:
             # plain byte-array sections have no planes.  Validity-word
             # predicates ride the validity bitset; VALUE comparisons
             # reach here only on a MIXED directory (a dictionary-cap
@@ -1916,71 +1146,6 @@ class FleDirReader(DataSourceReader):
             return k.is_null()
         elif op == "is_not_null":
             return self._valid_lane_mask(seg, c)
-        elif c.kind in (
-            _KIND_INT, _KIND_OFFSET, _KIND_TS, _KIND_DATE, _KIND_BOOL,
-        ):
-            # integer-domain kinds translate the literal into code
-            # space by the same map the encoder applied (offset
-            # subtraction; datetimes → micros; dates → days; bools
-            # → 0/1) — the order-preserving remap, so every
-            # comparison kernel works unchanged (out-of-range
-            # results go through the kernels' domain short-circuits)
-            if c.kind == _KIND_TS:
-                to_int = _ts_micros
-            elif c.kind == _KIND_DATE:
-                to_int = _date_days
-            elif c.kind == _KIND_BOOL:
-                to_int = lambda v: int(bool(v))  # noqa: E731
-            else:
-                to_int = int
-            shift = c.base  # int/bool sections carry no base (0)
-            if op == "in":
-                return self._chunk_kernel(
-                    seg, c, i, "in",
-                    tuple(to_int(v) - shift for v in value),
-                )
-            return self._chunk_kernel(
-                seg, c, i, op, to_int(value) - shift
-            )
-        elif c.kind == _KIND_F64:
-            # double literals ride the SAME monotone bijection the
-            # encoder applied, then shift by the stored code base —
-            # comparisons on sortable-bits codes ARE comparisons on
-            # the doubles (±inf literals map fine; NaN never reaches
-            # here, pushability keeps it residual)
-            if op == "in":
-                return self._chunk_kernel(
-                    seg, c, i, "in",
-                    tuple(
-                        _f64_code_scalar(float(v)) - c.base
-                        for v in value
-                    ),
-                )
-            return self._chunk_kernel(
-                seg, c, i, op,
-                _f64_code_scalar(float(value)) - c.base,
-            )
-        elif c.kind == _KIND_DEC:
-            # decimal literals translate to the UNSCALED domain via
-            # exact floor/ceil bounds (a literal finer than the
-            # column scale still compares exactly; eq against one
-            # matches nothing), then shift by the offset base
-            if op == "in":
-                codes = [
-                    b[1] - c.base
-                    for v in value
-                    for b in (_dec_code_bound("eq", v, c.scale),)
-                    if b is not False
-                ]
-                return (
-                    self._chunk_kernel(seg, c, i, "in", tuple(codes))
-                    if codes
-                    else zeros
-                )
-            b = _dec_code_bound(op, value, c.scale)
-            if b is False:
-                return zeros
-            return self._chunk_kernel(seg, c, i, b[0], b[1] - c.base)
         elif op in ("startswith", "endswith", "contains"):
             # string predicate on a dictionary column: evaluate the
             # predicate ONCE PER DICTIONARY ENTRY (|dict| tests, not
@@ -2007,29 +1172,31 @@ class FleDirReader(DataSourceReader):
                     seg, c, i, "ge", match[0]
                 ) & self._chunk_kernel(seg, c, i, "le", match[-1])
             return self._chunk_kernel(seg, c, i, "in", tuple(match))
-        else:  # dictionary column: literal → code space
-            if op == "in":
-                codes = [
-                    b[1]
-                    for v in value
-                    for b in (code_bound(
-                        np.asarray(c.dictionary), "eq", str(v)
-                    ),)
-                    if b not in (True, False)
-                ]
-                return (
-                    self._chunk_kernel(seg, c, i, "in", tuple(codes))
-                    if codes
-                    else zeros
-                )
-            b = code_bound(np.asarray(c.dictionary), op, str(value))
-            if b is True:
-                # domain short-circuit: every VALID row passes (a
-                # NULL lane still satisfies no comparison)
-                return self._valid_lane_mask(seg, c)
-            if b is False:
-                return zeros
-            return self._chunk_kernel(seg, c, i, b[0], b[1])
+        # every other kind maps the literal into code space by the map
+        # its encoder applied (offset subtraction, micros, days, 0/1,
+        # sortable bits, unscaled bounds, dictionary search) — the
+        # order-preserving remap, so every comparison kernel works
+        # unchanged (out-of-range codes hit the kernels' domain
+        # short-circuits)
+        if op == "in":
+            codes = [
+                b[1]
+                for b in (c.spec.code_bound(c, "eq", v) for v in value)
+                if isinstance(b, tuple)
+            ]
+            return (
+                self._chunk_kernel(seg, c, i, "in", tuple(codes))
+                if codes
+                else zeros
+            )
+        b = c.spec.code_bound(c, op, value)
+        if b is True:
+            # domain short-circuit: every VALID row passes (a NULL lane
+            # still satisfies no comparison)
+            return self._valid_lane_mask(seg, c)
+        if b is False:
+            return zeros
+        return self._chunk_kernel(seg, c, i, b[0], b[1])
 
     def _stats_refute(self, stats: dict) -> bool:
         """True iff the pushed conjunction PROVABLY matches no row of a
@@ -2083,32 +1250,15 @@ class FleDirReader(DataSourceReader):
                 ):
                     return True
                 continue
-            # typed manifest entries ("t" tag) convert the literal into
-            # the stored stat domain; untagged entries keep the legacy
-            # str/int rule.  Every map is monotone, so the interval
-            # tests below are domain-agnostic once both sides align.
-            tag = s.get("t")
-            if tag == "ts":
-                conv = _ts_micros
-            elif tag == "date":
-                conv = _date_days
-            elif tag == "bool":
-                conv = lambda v: int(bool(v))  # noqa: E731
-            elif tag == "f64":
-                conv = float
-            elif tag == "dec":
-                import decimal as _decm
+            # the literal converts into the stats' value domain (micros,
+            # days, 0/1, float, exact unscaled Decimal, int or str).
+            # Every map is monotone, so the interval tests below are
+            # domain-agnostic once both sides align.
+            kind, scale = fle_kinds.for_stats(s), int(s.get("s", 0))
 
-                sc = int(s.get("s", 0))
+            def conv(v):
+                return kind.value_of(v, scale)
 
-                def conv(v, _sc=sc):  # literal → exact unscaled Decimal
-                    q = (
-                        v if isinstance(v, _decm.Decimal)
-                        else _decm.Decimal(v)
-                    ).scaleb(_sc)
-                    return q  # compares exactly against int unscaled
-            else:
-                conv = str if isinstance(mn, str) else int
             try:
                 if op == "in":
                     vs = [conv(v) for v in value]
@@ -2200,36 +1350,7 @@ class FleDirReader(DataSourceReader):
     @staticmethod
     def _column_array(pa, c: ParsedColumn, vals, valid):
         """One decoded column → its Arrow array (kind-typed)."""
-        null_mask = ~valid if c.nullable else None
-        if c.kind in (_KIND_DICT, _KIND_STR_PLAIN):
-            return pa.array(vals, type=pa.string(), mask=null_mask)
-        if c.kind == _KIND_F64:
-            return pa.array(vals, type=pa.float64(), mask=null_mask)
-        if c.kind == _KIND_TS:
-            # decode leaves micros in int64; attach the logical type
-            # with a zero-copy cast at the Arrow boundary
-            return pa.array(
-                vals.astype("datetime64[us]"),
-                type=pa.timestamp("us"), mask=null_mask,
-            )
-        if c.kind == _KIND_DATE:
-            return pa.array(
-                vals.astype("datetime64[D]"),
-                type=pa.date32(), mask=null_mask,
-            )
-        if c.kind == _KIND_BOOL:
-            return pa.array(
-                vals.astype(bool), type=pa.bool_(), mask=null_mask
-            )
-        if c.kind == _KIND_DEC:
-            import decimal as _decm
-
-            return pa.array(
-                [_decm.Decimal(int(u)).scaleb(-c.scale) for u in vals],
-                type=pa.decimal128(c.precision, c.scale),
-                mask=null_mask,
-            )
-        return pa.array(vals, type=pa.int64(), mask=null_mask)
+        return c.spec.to_arrow(pa, c, vals, ~valid if c.nullable else None)
 
     def _pa_evolved_type(self, pa, name: str):
         """Arrow type of an evolved NULL column, from the declared read
@@ -2402,12 +1523,13 @@ class FleDirReader(DataSourceReader):
 
 
 def segment_stats(seg: ParsedSegment) -> dict:
-    """Per-column {min, max, has_null} for the manifest — min/max of int
-    columns computed ON THE PLANES by :func:`plane_min_max` (no decode);
-    dict columns read the sorted dictionary's endpoints.  The parquet
-    footer-stats analog the reader's `partitions()` prunes files with."""
+    """Per-column {min, max, has_null, nv} for the manifest, in VALUE
+    space so the driver can refute with the query's own literals: found
+    ON THE PLANES (no decode) for every kind with planes, plus the
+    kind's `t`/`s` tags and, where the kind keeps one, an exact `sum`.
+    The parquet footer-stats analog the reader's `partitions()` prunes
+    files with."""
     from impala_avx2_parquet_scanner_spark.sources.fle_codec import (
-        plane_min_max,
         plane_sum,
         popcount,
     )
@@ -2428,69 +1550,18 @@ def segment_stats(seg: ParsedSegment) -> dict:
                 "min": None, "max": None, "has_null": has_null, "nv": 0,
             }
             continue
-        if c.kind == _KIND_STR_PLAIN:
-            # no code space: min/max read the raw byte-array section
-            # (still write-time work — the reader never recomputes them)
-            vals = _plain_str_values(c, seg.n)
-            lv = _lane_validity(c, seg.n)
-            sub = vals[lv]
-            out[c.name] = {
-                "min": min(sub), "max": max(sub), "has_null": has_null,
-                "nv": n_valid,
-            }
-            continue
-        if c.kind == _KIND_DICT:
-            # order-preserving dictionary: value order == code order, so
-            # the string min/max are the dictionary endpoints IF both
-            # endpoint codes occur; plane_min_max gives the occurring
-            # code range without decoding
-            cr = plane_min_max(c.planes, c.width, seg.n, validity=c.validity)
-            mn, mx = c.dictionary[cr[0]], c.dictionary[cr[1]]
-            extra = {}
-        else:
-            mn, mx = plane_min_max(
-                c.planes, c.width, seg.n, validity=c.validity
-            )
-            extra = {}
-            # manifest stats live in VALUE space so the driver can
-            # refute with the query's original literals; every kind's
-            # map is monotone, so code min/max ARE value min/max
-            if c.kind in (_KIND_OFFSET, _KIND_TS, _KIND_DATE, _KIND_DEC):
-                mn, mx = c.base + mn, c.base + mx
-            elif c.kind == _KIND_F64:
-                mn = float(_f64_from_code_array(
-                    np.asarray([c.base + mn], dtype=np.uint64))[0])
-                mx = float(_f64_from_code_array(
-                    np.asarray([c.base + mx], dtype=np.uint64))[0])
-            # typed kinds tag the entry so `_stats_refute` converts the
-            # query literal into the SAME domain (micros/days/unscaled)
-            if c.kind == _KIND_TS:
-                extra = {"t": "ts"}
-            elif c.kind == _KIND_DATE:
-                extra = {"t": "date"}
-            elif c.kind == _KIND_BOOL:
-                extra = {"t": "bool"}
-            elif c.kind == _KIND_F64:
-                extra = {"t": "f64"}
-            elif c.kind == _KIND_DEC:
-                extra = {"t": "dec", "s": c.scale}
-            if c.kind in (_KIND_INT, _KIND_OFFSET, _KIND_DEC):
-                # exact SUM folded on the planes (plane_sum — no
-                # decode, arbitrary-precision): value sum = code sum
-                # + base·n_valid for the offset kinds; decimals stay
-                # in unscaled-integer space (the `s` tag scales them
-                # back at read).  f64's sortable-bits codes are not
-                # additive and ts/date have no SQL SUM — neither
-                # carries the stat.
-                ps = plane_sum(
-                    c.planes, c.width, seg.n, validity=c.validity
-                )
-                if ps is not None:
-                    extra["sum"] = ps[0] + c.base * ps[1]
-        out[c.name] = {
+        mn, mx = c.spec.min_max(c, seg.n)
+        entry = out[c.name] = {
             "min": mn, "max": mx, "has_null": has_null, "nv": n_valid,
-            **extra,
+            **c.spec.stat_extras(c),
         }
+        if c.spec.keeps_sum:
+            # exact SUM folded on the planes (plane_sum — no decode,
+            # arbitrary-precision): value sum = code sum + base·n_valid;
+            # decimals stay unscaled (the `s` tag scales them at read)
+            ps = plane_sum(c.planes, c.width, seg.n, validity=c.validity)
+            if ps is not None:
+                entry["sum"] = ps[0] + c.base * ps[1]
     return out
 
 
@@ -2540,6 +1611,10 @@ def _hash64_bytes(values: "list[bytes]") -> np.ndarray:
     return _splitmix64(out)
 
 
+#: bloom hash domain → hash of a kind's `bloom_keys`
+_BLOOM_HASH = {"i64": _splitmix64, "str": _hash64_bytes}
+
+
 def _bloom_words(h: np.ndarray, m: int) -> np.ndarray:
     """Hashes → bloom bitmap (m bits, m a power of two) as u64 words.
     Double hashing: probe i sits at (h1 + i·h2) mod m with h2 forced
@@ -2582,38 +1657,20 @@ def build_segment_blooms(seg: ParsedSegment, cols: list[str]) -> bytes:
     ~10 bits/distinct value (power of two, 1 MiB cap).  An all-NULL
     column writes an empty bloom: every probe then refutes, which is
     correct — eq never matches NULL."""
-    from impala_avx2_parquet_scanner_spark.sources.fle_codec import (
-        fle_unpack,
-    )
-
     blocks: list[bytes] = []
     hdr: dict[str, dict] = {}
     off = 0
     for colname in cols:
         c = seg.column(colname)  # KeyError is the loud failure
-        if c.kind == _KIND_DICT:
-            h = _hash64_bytes([str(d).encode() for d in c.dictionary])
-            ht = "str"
-        elif c.kind == _KIND_STR_PLAIN:
-            vals = _plain_str_values(c, seg.n)
-            lv = _lane_validity(c, seg.n)
-            h = _hash64_bytes(
-                [str(s).encode() for s in np.unique(vals[lv])]
-            )
-            ht = "str"
-        elif c.kind in (_KIND_INT, _KIND_OFFSET):
-            codes = fle_unpack(c.planes, c.width, seg.n)
-            lv = _lane_validity(c, seg.n)
-            v = codes[lv].astype(np.int64) + np.int64(c.base)
-            h = _splitmix64(np.unique(v).astype(np.uint64))
-            ht = "i64"
-        else:
+        ht = c.spec.bloom
+        if ht is None:
             raise ValueError(
                 f"fledir: bloomcols column {colname!r} has kind "
                 f"{c.kind} — blooms support int, signed offset, "
                 "dictionary and plain-string columns (point lookups "
                 "on doubles/temporals/booleans are not a bloom shape)"
             )
+        h = _BLOOM_HASH[ht](c.spec.bloom_keys(c, seg.n))
         n = max(int(h.size), 1)
         m = 64
         while m < n * _BF_BITS_PER_VALUE and m < _BF_MAX_BITS:
@@ -3025,19 +2082,20 @@ def probe_first_segment(path: str) -> "ParsedSegment | None":
         return None
 
 
+def _segment_ddl(seg: ParsedSegment) -> str:
+    """A segment's columns → Spark DDL (the full §1.2 scanner dispatch:
+    hdfs-parquet-scanner.cc:670-720 re-expressed as container kinds)."""
+    return ", ".join(f"{c.name} {c.spec.ddl(c)}" for c in seg.columns)
+
+
 def infer_fledir_schema(path: str) -> str | None:
     """Probe the first committed segment's header for the stored column
     names/kinds → Spark DDL (the footer-schema read the parquet path
     gets for free; here the segment header is the footer)."""
-    def _ddl(seg: ParsedSegment) -> str:
-        return ", ".join(
-            f"{c.name} {_column_ddl(c)}" for c in seg.columns
-        )
-
     try:
         if os.path.exists(os.path.join(path, sealed_dir.DONE)):
             seg = probe_first_segment(path)
-            return _ddl(seg) if seg is not None else None
+            return _segment_ddl(seg) if seg is not None else None
         part = discover_fledir_partitions(path)
         if part is not None:
             # hive-style layout: data columns from the first committed
@@ -3061,27 +2119,12 @@ def infer_fledir_schema(path: str) -> str | None:
             if name.endswith(".fle"):
                 try:
                     with open(os.path.join(path, name), "rb") as fh:
-                        return _ddl(parse_segment(fh.read()))
+                        return _segment_ddl(parse_segment(fh.read()))
                 except Exception:
                     continue
         return None
     except Exception:
         return None
-
-
-def _column_ddl(c: ParsedColumn) -> str:
-    """Stored kind → Spark DDL type (the full §1.2 scanner dispatch:
-    hdfs-parquet-scanner.cc:670-720 re-expressed as container kinds)."""
-    if c.kind == _KIND_DEC:
-        return f"decimal({c.precision},{c.scale})"
-    return {
-        _KIND_DICT: "string",
-        _KIND_STR_PLAIN: "string",
-        _KIND_F64: "double",
-        _KIND_TS: "timestamp",
-        _KIND_DATE: "date",
-        _KIND_BOOL: "boolean",
-    }.get(c.kind, "bigint")
 
 
 class FleDataSource(DataSource):
@@ -3210,30 +2253,6 @@ class FleStreamReader(sealed_dir.SealedStreamReader):
         # returns a LIST of plain-python tuples: the stream
         # framework pickles prefetched rows (numpy scalars do not
         # survive Spark's type verification)
-        import datetime as _dtm
-        import decimal as _decm
-
-        def cell(c: ParsedColumn, v):
-            # plain-python scalars per kind (numpy scalars do not
-            # survive Spark's stream type verification)
-            if c.kind in (_KIND_DICT, _KIND_STR_PLAIN):
-                return str(v)
-            if c.kind == _KIND_F64:
-                return float(v)
-            if c.kind == _KIND_TS:
-                return _dtm.datetime(1970, 1, 1) + _dtm.timedelta(
-                    microseconds=int(v)
-                )
-            if c.kind == _KIND_DATE:
-                return _dtm.date(1970, 1, 1) + _dtm.timedelta(
-                    days=int(v)
-                )
-            if c.kind == _KIND_BOOL:
-                return bool(v)
-            if c.kind == _KIND_DEC:
-                return _decm.Decimal(int(v)).scaleb(-c.scale)
-            return int(v)
-
         # per-name "/" detection rather than the partitioned flag:
         # a replay can carry leaf-qualified names even if the root
         # probed flat at construction
@@ -3273,15 +2292,14 @@ class FleStreamReader(sealed_dir.SealedStreamReader):
             with open(p, "rb") as fh:
                 seg = parse_segment(fh.read())
             cols = decode_segment_columns(seg)
-            order = seg.columns
+            # each column's scalar converter, picked once per segment
+            lanes = [
+                (*cols[c.name], c.spec.scalar, c.scale) for c in seg.columns
+            ]
             for j in range(seg.n):
                 out.append(tuple(
-                    (
-                        None
-                        if not cols[c.name][1][j]
-                        else cell(c, cols[c.name][0][j])
-                    )
-                    for c in order
+                    conv(vals[j], scale) if valid[j] else None
+                    for vals, valid, conv, scale in lanes
                 ) + key_cells)
         return out
 
@@ -3341,53 +2359,17 @@ class FleStreamReader(sealed_dir.SealedStreamReader):
 
 def _stream_rows_to_columns(rows, schema) -> list[tuple]:
     """Micro-batch Rows → the (name, values, hint) list the segment
-    encoder expects, per Spark type: ints through the exact object
-    path (offset hint when any lane is negative), doubles under
-    f64_nan_null (a NULL lane round-trips as NaN — genuine-NaN data is
-    not representable through the sink, matching the decode-side
-    convention), timestamps/dates as datetime64 (None → NaT), decimals
-    with the schema's (p, s) pinned, strings under the writer's own
-    dictionary-vs-plain policy."""
-    from pyspark.sql import types as T
-
+    encoder expects, each column converted by the kind its Spark type
+    is stored as (`ColumnKind.sink`)."""
     cols: list[tuple] = []
     for i, f in enumerate(schema.fields):
-        vals = [r[i] for r in rows]
-        dt = f.dataType
-        if isinstance(dt, (T.DoubleType, T.FloatType)):
-            arr = np.array(
-                [np.nan if v is None else float(v) for v in vals]
-            )
-            cols.append((f.name, arr, "f64_nan_null"))
-        elif isinstance(
-            dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-        ):
-            present = [v for v in vals if v is not None]
-            hint = "offset" if any(v < 0 for v in present) else "int"
-            cols.append((f.name, np.array(vals, dtype=object), hint))
-        elif isinstance(dt, T.BooleanType):
-            cols.append((f.name, np.array(vals, dtype=object), "bool"))
-        elif isinstance(dt, T.TimestampType):
-            cols.append(
-                (f.name, np.array(vals, dtype="datetime64[us]"), "ts")
-            )
-        elif isinstance(dt, T.DateType):
-            cols.append(
-                (f.name, np.array(vals, dtype="datetime64[D]"), "date")
-            )
-        elif isinstance(dt, T.DecimalType):
-            cols.append((
-                f.name,
-                np.array(vals, dtype=object),
-                ("dec", dt.precision, dt.scale),
-            ))
-        elif isinstance(dt, T.StringType):
-            cols.append((f.name, np.array(vals, dtype=object)))
-        else:
+        kind = fle_kinds.for_spark_type(f.dataType)
+        if kind is None:
             raise ValueError(
                 f"fledir stream sink: unsupported column type "
-                f"{dt.simpleString()} for {f.name!r}"
+                f"{f.dataType.simpleString()} for {f.name!r}"
             )
+        cols.append((f.name, *kind.sink([r[i] for r in rows], f.dataType)))
     return cols
 
 
@@ -3739,30 +2721,6 @@ def fledir_partition_row_counts(path: str) -> "tuple[list, list]":
     return keys, rows
 
 
-def _stat_to_value(entry: dict, raw):
-    """One manifest stat (min or max) → its typed Python value.  The
-    manifest stores stats in VALUE space with a `t` tag for kinds whose
-    integer domain needs a logical type attached (micros/days/unscaled
-    — see :func:`segment_stats`); untagged entries are already final
-    (ints for plane columns, strings for dict/plain, floats stay
-    floats)."""
-    import datetime as _dtm
-    import decimal as _decm
-
-    t = entry.get("t")
-    if t == "ts":
-        return _dtm.datetime(1970, 1, 1) + _dtm.timedelta(
-            microseconds=int(raw)
-        )
-    if t == "date":
-        return _dtm.date(1970, 1, 1) + _dtm.timedelta(days=int(raw))
-    if t == "bool":
-        return bool(raw)
-    if t == "dec":
-        return _decm.Decimal(int(raw)).scaleb(-int(entry["s"]))
-    return raw
-
-
 def fledir_min_max(path: str, columns: list[str]) -> dict:
     """Metadata-only MIN/MAX over a committed fledir (flat or
     partitioned): {column: (min, max)} folded from the manifest's
@@ -3795,8 +2753,8 @@ def fledir_min_max(path: str, columns: list[str]) -> dict:
                 )
             if e["min"] is None:
                 continue  # all-NULL segment: empty interval
-            mn = _stat_to_value(e, e["min"])
-            mx = _stat_to_value(e, e["max"])
+            mn = fle_kinds.stat_to_value(e, e["min"])
+            mx = fle_kinds.stat_to_value(e, e["max"])
             cur_mn, cur_mx = agg[c]
             agg[c] = (
                 mn if cur_mn is None or mn < cur_mn else cur_mn,
@@ -3822,9 +2780,8 @@ def fledir_sum(path: str, columns: list[str]) -> dict:
     legacy manifest entry, and a column whose kind carries no sum stat
     (strings, dictionaries, doubles, timestamps) — answering from
     metadata that does not exist would mean silently scanning."""
-    import decimal as _decm
-
-    agg: dict[str, list] = {c: [0, 0, False, None] for c in columns}
+    # column → [value sum, n_valid, last stats entry (None: no valid lane)]
+    agg: dict[str, list] = {c: [0, 0, None] for c in columns}
     for root, name, stats_json in _committed_entries(path):
         if not stats_json:
             raise ValueError(
@@ -3854,18 +2811,11 @@ def fledir_sum(path: str, columns: list[str]) -> dict:
             a = agg[c]
             a[0] += int(e["sum"])
             a[1] += int(nv)
-            a[2] = True
-            if e.get("t") == "dec":
-                a[3] = int(e["s"])
-    out: dict[str, tuple] = {}
-    for c, (total, nv, seen, scale) in agg.items():
-        if not seen:
-            out[c] = (None, 0)
-        elif scale is not None:
-            out[c] = (_decm.Decimal(total).scaleb(-scale), nv)
-        else:
-            out[c] = (total, nv)
-    return out
+            a[2] = e
+    return {
+        c: (None, 0) if e is None else (fle_kinds.stat_to_value(e, total), nv)
+        for c, (total, nv, e) in agg.items()
+    }
 
 
 def fledir_history(path: str) -> list[tuple]:

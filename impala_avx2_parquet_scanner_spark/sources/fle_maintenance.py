@@ -54,26 +54,15 @@ import struct
 
 import numpy as np
 
-from impala_avx2_parquet_scanner_spark.sources import sealed_dir
-from impala_avx2_parquet_scanner_spark.sources.fle_codec import fle_unpack
+from impala_avx2_parquet_scanner_spark.sources import fle_kinds, sealed_dir
+from impala_avx2_parquet_scanner_spark.sources.fle_kinds import _is_null_cell
 from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
     _FLAG_QTY,
-    _KIND_BOOL,
-    _KIND_DATE,
-    _KIND_DEC,
-    _KIND_DICT,
-    _KIND_F64,
-    _KIND_INT,
-    _KIND_OFFSET,
-    _KIND_STR_PLAIN,
-    _KIND_TS,
     ParsedSegment,
-    _codes_to_values,
     _fle_asset,
-    _lane_validity,
     _manifest_entries,
-    _plain_str_values,
     _table,
+    decode_segment_columns,
     discover_fledir_partitions,
     encode_segment_columns,
     parse_segment,
@@ -99,83 +88,22 @@ __all__ = [
 
 def segment_reencode_columns(seg: ParsedSegment) -> list[tuple]:
     """Parsed segment → the exact ``(name, values, kind_hint)`` list
-    that re-encodes to an equivalent segment.
-
-    Per kind the NULL convention of the matching encoder is
-    reconstructed: object arrays carry ``None`` (int/offset/dict/
-    plain-string/bool/decimal), doubles carry NaN under the explicit
-    ``f64_nan_null`` opt-in (lossless here — the 'f64' encoder refused
-    genuine NaN data at the original write, so every decoded NaN lane
-    IS a NULL), timestamps/dates carry NaT.  Kind hints pin int vs
-    offset planes and decimal (p, s); strings pass no hint so the
-    writer's own dictionary-vs-plain policy (the 2^16-1 cap fallback)
-    re-decides on the MERGED cardinality."""
-    import decimal as _decm
-
-    out: list[tuple] = []
-    for c in seg.columns:
-        valid = _lane_validity(c, seg.n)
-        has_null = bool((~valid).any())
-        if c.kind == _KIND_STR_PLAIN:
-            arr = _plain_str_values(c, seg.n)
-            if has_null:
-                arr = arr.copy()
-                arr[~valid] = None
-            out.append((c.name, arr, "str_plain"))
-            continue
-        codes = fle_unpack(c.planes, c.width, seg.n)
-        vals = _codes_to_values(c, codes, seg.n)
-        if c.kind == _KIND_DICT:
-            if has_null:
-                vals = vals.copy()
-                vals[~valid] = None
-            out.append((c.name, vals, None))
-        elif c.kind == _KIND_F64:
-            v = vals.astype(np.float64)
-            if has_null:
-                v[~valid] = np.nan
-            out.append((c.name, v, "f64_nan_null"))
-        elif c.kind == _KIND_TS:
-            m = vals.astype("datetime64[us]")
-            if has_null:
-                m[~valid] = np.datetime64("NaT")
-            out.append((c.name, m, "ts"))
-        elif c.kind == _KIND_DATE:
-            d = vals.astype("datetime64[D]")
-            if has_null:
-                d[~valid] = np.datetime64("NaT")
-            out.append((c.name, d, "date"))
-        elif c.kind == _KIND_BOOL:
-            if has_null:
-                o = vals.astype(object)
-                o[~valid] = None
-                out.append((c.name, o, "bool"))
-            else:
-                out.append((c.name, vals.astype(bool), "bool"))
-        elif c.kind == _KIND_DEC:
-            o = np.empty(seg.n, dtype=object)
-            for i in np.flatnonzero(valid):
-                o[i] = _decm.Decimal(int(vals[i])).scaleb(-c.scale)
-            out.append((c.name, o, ("dec", c.precision, c.scale)))
-        else:  # INT / OFFSET planes: exact int64 value domain
-            hint = "offset" if c.kind == _KIND_OFFSET else "int"
-            if has_null:
-                o = np.empty(seg.n, dtype=object)
-                for i in np.flatnonzero(valid):
-                    o[i] = int(vals[i])
-                out.append((c.name, o, hint))
-            else:
-                out.append((c.name, vals, hint))
-    return out
+    that re-encodes to an equivalent segment: each kind's values in its
+    encoder's NULL convention and its hint (`ColumnKind.writer_values`
+    and `.hint`).  Dictionary strings pass no hint, so the writer's
+    dictionary-vs-plain policy (the 2^16-1 cap fallback) re-decides on
+    the MERGED cardinality; a double's NaN lane is a NULL, since the
+    'f64' encoder refused genuine NaN data at the original write."""
+    cols = decode_segment_columns(seg)
+    return [
+        (c.name, c.spec.writer_values(c, *cols[c.name]), c.spec.hint(c))
+        for c in seg.columns
+    ]
 
 
 def _all_null(values) -> bool:
     """True iff every lane of a re-encode values array is a NULL marker
     (None / NaN / NaT per the kind conventions)."""
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        _is_null_cell,
-    )
-
     arr = np.asarray(values)
     if arr.dtype == object:
         return all(_is_null_cell(v) for v in arr)
@@ -184,17 +112,6 @@ def _all_null(values) -> bool:
     if arr.dtype.kind == "M":
         return bool(np.isnat(arr).all())
     return arr.size == 0
-
-
-def _null_values_for(hint, n: int) -> np.ndarray:
-    """n NULL lanes in the dtype the encoder for `hint` expects."""
-    if hint == "ts":
-        return np.full(n, np.datetime64("NaT"), dtype="datetime64[us]")
-    if hint == "date":
-        return np.full(n, np.datetime64("NaT"), dtype="datetime64[D]")
-    if hint in ("f64", "f64_nan_null"):
-        return np.full(n, np.nan)
-    return np.full(n, None, dtype=object)
 
 
 def _merge_hint(name: str, hints: set):
@@ -246,7 +163,7 @@ def merge_segments_columns(segs: list[ParsedSegment]) -> list[tuple]:
         if live:
             hint = _merge_hint(name, {e[2] for e in live})
             values = np.concatenate([
-                _null_values_for(hint, np.asarray(e[1]).size)
+                fle_kinds.for_hint(hint).null_fill(np.asarray(e[1]).size)
                 if an else np.asarray(e[1])
                 for e, an in zip(entries, nullish)
             ])
@@ -267,10 +184,6 @@ def sort_merged_columns(cols: list[tuple], sort_by: str) -> list[tuple]:
     each merged segment restores monotone per-chunk BSTA stats, so the
     mid-file skip tier stays as selective after compaction as the
     original small segments' manifest stats were before it."""
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        _is_null_cell,
-    )
-
     entry = next((e for e in cols if e[0] == sort_by), None)
     if entry is None:
         raise ValueError(
@@ -608,9 +521,6 @@ def zorder_merged_columns(
     both columns to `bits` over their merged min/max (NULLs sort last,
     like :func:`sort_merged_columns`); numpy bit-interleave mirrors
     the JVM-side `zorder_value` of the parquet sink."""
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        _is_null_cell,
-    )
 
     def quantized(name: str) -> tuple[np.ndarray, np.ndarray]:
         entry = next((e for e in cols if e[0] == name), None)
@@ -911,7 +821,6 @@ def merge_fledir(
     import pandas as _pd
 
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        _stat_to_value,
         fledir_row_count,
         probe_first_segment,
     )
@@ -995,8 +904,8 @@ def merge_fledir(
                 if e.get("min") is None:
                     hit = False  # all-NULL keys: eq never matches
                 else:
-                    mn = _stat_to_value(e, e["min"])
-                    mx = _stat_to_value(e, e["max"])
+                    mn = fle_kinds.stat_to_value(e, e["min"])
+                    mx = fle_kinds.stat_to_value(e, e["max"])
                     i = bisect.bisect_left(ks, mn)
                     hit = i < len(ks) and ks[i] <= mx
         if hit and key_hashes is not None:
@@ -1024,16 +933,7 @@ def merge_fledir(
 
     # ---- encode hints for the INSERT segments: pin the kinds that
     # cannot be inferred from arrow-decoded pandas values ----
-    hints: dict = {}
-    for c in first.columns:
-        if c.kind == _KIND_DEC:
-            hints[c.name] = ("dec", c.precision, c.scale)
-        elif c.kind == _KIND_F64:
-            # NaN lanes in updates read as NULL (the decode-side
-            # convention); genuine-NaN updates are not representable
-            hints[c.name] = "f64_nan_null"
-        else:
-            hints[c.name] = None
+    hints = {c.name: c.spec.insert_hint(c) for c in first.columns}
 
     key_set = set(keys)
 
@@ -1172,10 +1072,6 @@ def _conjunct_rows(vals, op: str, value, n: int) -> np.ndarray:
     3VL the read kernels implement on validity words."""
     arr = np.asarray(vals)
     if arr.dtype == object:
-        from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-            _is_null_cell,
-        )
-
         null = np.array([_is_null_cell(v) for v in arr], dtype=bool)
     elif arr.dtype.kind == "f":
         null = np.isnan(arr)
@@ -1474,21 +1370,6 @@ def materialize_fle_delete_dir(spark, sf_dir: str) -> str:
     return _fle_asset(spark, sf_dir, "fle_delete", build)
 
 
-def _encode_hints_from_segment(first) -> dict:
-    """Probe segment → the encode-hint map the insert path pins kinds
-    with (decimal (p,s) and the f64 NULL convention cannot be inferred
-    from arrow-decoded pandas values)."""
-    hints: dict = {}
-    for c in first.columns:
-        if c.kind == _KIND_DEC:
-            hints[c.name] = ("dec", c.precision, c.scale)
-        elif c.kind == _KIND_F64:
-            hints[c.name] = "f64_nan_null"
-        else:
-            hints[c.name] = None
-    return hints
-
-
 def _append_leaf_rows(
     spark, leaf: str, df, template_leaf: str,
     rows_per_segment: int, bloomcols: "str | None",
@@ -1517,10 +1398,9 @@ def _append_leaf_rows(
     n = df.count()
     if n == 0:
         return 0
-    hints = _encode_hints_from_segment(first)
     write_fledir(
         df.select(*stored_cols).repartition(max(1, -(-n // rows_per_segment))),
-        [(c, None, hints[c]) for c in stored_cols],
+        [(c.name, None, c.spec.insert_hint(c)) for c in first.columns],
         leaf, "append", bloomcols=bloomcols or None,
     )
     return n
@@ -1623,49 +1503,43 @@ def _resolve_segment_path(path: str, name: str) -> str:
 
 def _segments_df(spark, path: str, names: "list[str]"):
     """Explicit segment set → DataFrame through the container's own
-    decode (distributed, one task group over the files; every kind's
-    NULL convention mapped to real Spark NULLs)."""
-    import pandas as _pd
-
+    decode and the batch reader's Arrow build (distributed, one task
+    group over the files)."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        _column_ddl,
+        FleDirReader,
+        _segment_ddl,
         probe_first_segment,
     )
 
     first = probe_first_segment(path)
     if first is None:
         raise ValueError(f"fledir: {path} has no committed segments")
-    ddl = ", ".join(
-        f"{c.name} {_column_ddl(c)}" for c in first.columns
-    )
+    ddl = _segment_ddl(first)
     if not names:
         return spark.createDataFrame([], ddl)
     paths = [_resolve_segment_path(path, n) for n in sorted(names)]
     ordered = [c.name for c in first.columns]
 
     def decode(batches):
+        import pyarrow as pa
+
         for pdf in batches:
             for p in pdf["p"]:
                 with open(p, "rb") as fh:
                     seg = parse_segment(fh.read())
-                cols = segment_reencode_columns(seg)
-                data = {}
-                for nm, vals, hint in cols:
-                    arr = np.asarray(vals)
-                    if hint in ("f64", "f64_nan_null"):
-                        o = arr.astype(object)
-                        o[_pd.isna(arr)] = None
-                        data[nm] = o
-                    elif hint == "date":
-                        data[nm] = arr.astype(object)
-                    else:
-                        data[nm] = arr
+                cols = decode_segment_columns(seg)
                 # emit in the PROBE's column order: Spark maps Arrow
                 # batch columns positionally, so a segment whose own
                 # order differs would silently transpose; a missing
                 # column fails loudly (heterogeneous segments are
                 # outside the contract)
-                yield _pd.DataFrame({nm: data[nm] for nm in ordered})
+                arrays = [
+                    FleDirReader._column_array(pa, seg.column(nm), *cols[nm])
+                    for nm in ordered
+                ]
+                yield pa.RecordBatch.from_arrays(
+                    arrays, names=ordered
+                ).to_pandas(integer_object_nulls=True)
 
     return (
         spark.createDataFrame([(p,) for p in paths], "p string")

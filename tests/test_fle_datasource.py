@@ -586,11 +586,11 @@ def test_encode_rejects_fractional_and_offsets_negative():
     the OFFSET kind (round 8): the container applies the
     order-preserving offset itself instead of asking the caller to."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        _KIND_OFFSET,
         decode_segment_columns,
         encode_segment_columns,
         parse_segment,
     )
+    from impala_avx2_parquet_scanner_spark.sources.fle_kinds import _KIND_OFFSET
 
     with pytest.raises(ValueError, match="non-integral"):
         encode_segment_columns([("q", np.array([1.0, 2.5]))])

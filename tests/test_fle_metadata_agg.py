@@ -209,7 +209,7 @@ def test_plane_sum_exact_random_and_big_ints():
         pack_validity,
         plane_sum,
     )
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
+    from impala_avx2_parquet_scanner_spark.sources.fle_kinds import (
         _encode_int_column,
     )
 

@@ -12,10 +12,12 @@ import os
 import numpy as np
 import pytest
 
-from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
+from impala_avx2_parquet_scanner_spark.sources.fle_kinds import (
     _KIND_DICT,
     _KIND_STR_PLAIN,
     MAX_DICTIONARY_ENTRIES,
+)
+from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
     FleDirReader,
     decode_segment_columns,
     encode_segment_columns,

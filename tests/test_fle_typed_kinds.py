@@ -23,13 +23,15 @@ from hypothesis import strategies as st
 
 from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
     FleDirReader,
-    _dec_code_bound,
-    _f64_code_array,
-    _f64_from_code_array,
     decode_segment_columns,
     encode_segment_columns,
     parse_segment,
     segment_stats,
+)
+from impala_avx2_parquet_scanner_spark.sources.fle_kinds import (
+    _dec_code_bound,
+    _f64_code_array,
+    _f64_from_code_array,
 )
 
 _OPS = {"ge": _op.ge, "gt": _op.gt, "le": _op.le, "lt": _op.lt,
