@@ -45,7 +45,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import impala_avx2_parquet_scanner_spark as engine
 from impala_avx2_parquet_scanner_spark.registry import REGISTRY
-from impala_avx2_parquet_scanner_spark.session import get_spark
+from impala_avx2_parquet_scanner_spark.session import PINNED_CPUS, get_spark
 
 
 def duckdb_times(sf_dir: str, names: list[str]) -> dict[str, float]:
@@ -177,6 +177,13 @@ def synth_scale10_dir(spark, base_sf: str) -> str:
                 )
 
     return publish(base_sf, "bench10x", build)
+
+
+def detail_name(cpus: int) -> str:
+    """The full-detail file of a run on `cpus` cores: `BENCH_FULL.json`
+    for the pinned run, `BENCH_FULL_c<cpus>.json` for any other, so a
+    low-core run never overwrites the pin."""
+    return "BENCH_FULL.json" if cpus == PINNED_CPUS else f"BENCH_FULL_c{cpus}.json"
 
 
 def main() -> None:
@@ -371,8 +378,9 @@ def main() -> None:
     # "parsed": null).  So: full detail goes to a file + the first line;
     # the LAST line is a compact contract (metric/value/queries/floor/
     # duckdb totals) that stays comfortably inside the buffer.
+    detail = detail_name(out["cpus"])
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_FULL.json"), "w") as fh:
+                           detail), "w") as fh:
         json.dump(out, fh)
     print(json.dumps(out))
     compact = {
@@ -386,7 +394,7 @@ def main() -> None:
         "scaled10x_ratio_vs_duckdb": out.get("scaled10x", {}).get(
             "ratio_vs_duckdb"
         ),
-        "detail": "BENCH_FULL.json",
+        "detail": detail,
     }
     line = json.dumps(compact)
     if len(line) > 1900:  # never regress the tail-buffer contract

@@ -22,16 +22,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType
 
 from impala_avx2_parquet_scanner_spark.catalog import table
+from impala_avx2_parquet_scanner_spark.pyworker import trims
 from impala_avx2_parquet_scanner_spark.registry import query
 
 
 @F.pandas_udf(DoubleType())
+@trims
 def discounted_price(price: pd.Series, discount: pd.Series) -> pd.Series:
     """Vectorized scalar UDF (Arrow batches, zero per-row serde)."""
     return price * (1.0 - discount)
 
 
 @F.pandas_udf(StringType())
+@trims
 def price_band(price: pd.Series) -> pd.Series:
     return pd.cut(
         price,
@@ -89,6 +92,7 @@ def udf_rowwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@trims
 def _orders_range_agg(pdf: pd.DataFrame) -> pd.DataFrame:
     """UDA body: per-customer price range + order count (pandas per group)."""
     return pd.DataFrame(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from impala_avx2_parquet_scanner_spark.catalog import table
+from impala_avx2_parquet_scanner_spark.pyworker import trims
 from impala_avx2_parquet_scanner_spark.registry import query
 
 
@@ -451,6 +452,7 @@ def scan_fle_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_le25_nullable long, n_null long, rf_le_n boolean"
     )
 
+    @trims
     def run(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
         for pdf in batches:
             qty = pdf["l_quantity"].to_numpy().astype(np.uint64)
@@ -2392,6 +2394,7 @@ def scan_footer_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
+    @trims
     def read_footers(batches):
         import pandas as pd
         import pyarrow.parquet as pq

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from impala_avx2_parquet_scanner_spark.cache import tie_unpersist
 from impala_avx2_parquet_scanner_spark.catalog import table
+from impala_avx2_parquet_scanner_spark.pyworker import trims
 from impala_avx2_parquet_scanner_spark.registry import query
 
 #: MinHash parameters: K hash functions in B bands of R rows each.
@@ -637,6 +638,7 @@ HAVING COUNT(*) >= {WINNOW_SHARED_MIN}
 """
 
 
+@trims
 def _winnow_fingerprints(batches):
     """mapInPandas kernel: (doc_id, t) → per-doc DISTINCT winnowing
     fingerprints (doc_id, fp).

@@ -49,6 +49,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from impala_avx2_parquet_scanner_spark.pyworker import trims
+
 #: Canonical schema for a multimodal asset table.
 ASSET_SCHEMA = StructType(
     [
@@ -640,6 +642,7 @@ def extract_features(assets: DataFrame, require_codecs: bool = False) -> DataFra
     per task regardless of corpus size; partition count controls
     parallelism (repartition upstream for small-file corpora)."""
 
+    @trims
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _decode_batch(pdf, require_codecs)
@@ -738,6 +741,7 @@ def sample_video_frames(assets: DataFrame, every_n: int = 2) -> DataFrame:
     (register an ffmpeg codec in _DECODERS's deployment)."""
     videos = assets.filter(F.col("modality") == "video")
 
+    @trims
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
@@ -811,6 +815,7 @@ def resize_images(assets: DataFrame, width: int = 32, height: int = 32) -> DataF
     (no shuffle), Arrow-batched, constant memory; formats without a
     registered codec (jpeg, …) raise."""
 
+    @trims
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             def do_resize(fmt: str | None, p: bytes | None) -> bytes | None:
@@ -873,6 +878,7 @@ def audio_window_features(assets: DataFrame, window_ms: int = 500) -> DataFrame:
     mapInPandas pass, no shuffle; window count rides the sample length,
     not the declared metadata."""
 
+    @trims
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, starts, rmss, peaks = [], [], [], []
@@ -936,6 +942,7 @@ def _register_multimodal_query() -> None:
             ]
         )
 
+        @trims
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 yield pd.DataFrame(
@@ -1006,6 +1013,7 @@ FROM f GROUP BY frame_sha HAVING COUNT(*) >= 2
             ]
         )
 
+        @trims
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 ids, nos, shas = [], [], []
@@ -1276,6 +1284,7 @@ FROM d
             )
             return ftyp + box(b"moov", mvhd + box(b"trak", tkhd))
 
+        @trims
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 rows = []
@@ -1374,6 +1383,7 @@ FROM b GROUP BY doc_id, h
             ]
         )
 
+        @trims
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from impala_avx2_parquet_scanner_spark.pipeline.gif_codec import (
                 decode_gif,
@@ -1551,6 +1561,7 @@ def _register_phash_query() -> None:
             ]
         )
 
+        @trims
         def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 yield pd.DataFrame(
@@ -1571,6 +1582,7 @@ def _register_phash_query() -> None:
             ]
         )
 
+        @trims
         def hash_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 rows = []

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from impala_avx2_parquet_scanner_spark.cache import tie_unpersist
 from impala_avx2_parquet_scanner_spark.catalog import table
+from impala_avx2_parquet_scanner_spark.pyworker import trims
 from impala_avx2_parquet_scanner_spark.registry import query
 
 TOP_K = 3
@@ -70,6 +71,7 @@ def _null_safe(out, ok):
     return pd.Series(out).astype("Float64").mask(~ok, pd.NA)
 
 
+@trims
 def _dot_seq(a: pd.Series, b: pd.Series) -> pd.Series:
     import numpy as np
 
@@ -80,6 +82,7 @@ def _dot_seq(a: pd.Series, b: pd.Series) -> pd.Series:
     return _null_safe(out, ok)
 
 
+@trims
 def _cosine_seq(a: pd.Series, b: pd.Series) -> pd.Series:
     import numpy as np
 
@@ -780,6 +783,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup_mat = np.array([list(r.semb) for r in sup_rows], dtype=np.float64)
 
     def route_kernel(id_name: str, emb_name: str):
+        @trims
         def fn(batches):
             for pdf in batches:
                 if len(pdf) == 0:
@@ -803,6 +807,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id long, emb array<double>, super_id long",
     )
 
+    @trims
     def assign_cell(points, cents):
         """Exact nearest centroid within one super cell (ties → lower
         centroid_id), FUSED with the within-cluster pair scan and keep

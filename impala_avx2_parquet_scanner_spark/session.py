@@ -108,8 +108,12 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: Cores of the pinned benchmark run (`bench.py`'s `BENCH_FULL.json`).
+PINNED_CPUS = 32
+
+
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return int(os.environ.get("SPARK_GRAFT_CPUS", PINNED_CPUS))
 
 
 def get_spark(app_name: str = "impala-avx2-parquet-scanner-spark",

@@ -82,6 +82,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from impala_avx2_parquet_scanner_spark.pyworker import trims
 from impala_avx2_parquet_scanner_spark.sources import sealed_dir
 
 
@@ -752,12 +753,14 @@ class AvroDirReader(DataSourceReader):
         np_opt = options.get("numpartitions")
         self.n_parts = int(np_opt) if np_opt is not None else None
 
+    @trims
     def partitions(self):
         files, _ = sealed_dir.listing(self.dir, ".avro")
         n = sealed_dir.partition_count(len(files), n_parts=self.n_parts)
         paths = [os.path.join(self.dir, f) for f in files]
         return [_AvroFilesPartition(b) for b in sealed_dir.deal(paths, n)]
 
+    @trims
     def read(self, partition):
         for path in partition.paths:
             with open(path, "rb") as fh:
@@ -778,6 +781,7 @@ class AvroDirWriter(DataSourceWriter):
         self.avro_schema = avro_schema
         self.overwrite = overwrite
 
+    @trims
     def write(self, rows):
         import uuid
 
@@ -791,12 +795,14 @@ class AvroDirWriter(DataSourceWriter):
         msg.put(f"part-{uuid.uuid4().hex}.avro", data)
         return msg
 
+    @trims
     def commit(self, messages):
         sealed_dir.commit(
             self.dir, sealed_dir.staged(messages), suffix=".avro",
             overwrite=self.overwrite,
         )
 
+    @trims
     def abort(self, messages):
         sealed_dir.abort(self.dir, messages)
 
@@ -806,6 +812,7 @@ class AvroDataSource(DataSource):
     def name(cls):
         return "avrodir"
 
+    @trims
     def schema(self):
         # planning-time schema discovery: parse the first file's header,
         # growing the probe window until the header parses completely (a
@@ -835,6 +842,7 @@ class AvroDataSource(DataSource):
     def reader(self, schema):
         return AvroDirReader(self.options)
 
+    @trims
     def writer(self, schema, overwrite):
         return AvroDirWriter(
             self.options, overwrite, spark_schema_to_avro(schema)

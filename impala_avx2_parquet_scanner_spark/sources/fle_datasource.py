@@ -86,6 +86,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from impala_avx2_parquet_scanner_spark.pyworker import trims
 from impala_avx2_parquet_scanner_spark.sources import sealed_dir
 
 
@@ -1322,6 +1323,7 @@ class FleDirReader(DataSourceReader):
             files.append((name, rows))
         return files
 
+    @trims
     def partitions(self):
         if self.partitioned is not None:
             pcols, pairs = self.partitioned
@@ -1375,6 +1377,7 @@ class FleDirReader(DataSourceReader):
             "binary": pa.binary(),
         }.get(tname, pa.string())
 
+    @trims
     def read(self, partition):
         import pyarrow as pa
 
@@ -2008,6 +2011,7 @@ class FleDirWriter(DataSourceWriter):
                 "(overwrite already replaces the whole directory)"
             )
 
+    @trims
     def write(self, rows):
         msg = sealed_dir.Staged(self.dir)
         for row in rows:
@@ -2017,6 +2021,7 @@ class FleDirWriter(DataSourceWriter):
             )
         return msg
 
+    @trims
     def commit(self, messages):
         entries = sealed_dir.staged(messages)
         names = {e[0] for e in entries}
@@ -2065,6 +2070,7 @@ class FleDirWriter(DataSourceWriter):
             after_swap=after_swap,
         )
 
+    @trims
     def abort(self, messages):
         sealed_dir.abort(self.dir, messages)
 
@@ -2132,6 +2138,7 @@ class FleDataSource(DataSource):
     def name(cls):
         return "fledir"
 
+    @trims
     def schema(self):
         path = self.options.get("path")
         inferred = infer_fledir_schema(path) if path else None
@@ -2153,6 +2160,7 @@ class FleDataSource(DataSource):
             self.options, wanted=wanted, field_types=field_types
         )
 
+    @trims
     def writer(self, schema, overwrite):
         return FleDirWriter(self.options, overwrite)
 
@@ -2459,6 +2467,7 @@ def write_fledir(frame, columns, path, mode="overwrite", *, seg_base=0,
     `seg_base`.  `writer_options` become fledir options (None dropped)."""
     import pandas as _pd
 
+    @trims
     def encode(batches):
         from pyspark import TaskContext
 

@@ -54,6 +54,7 @@ import struct
 
 import numpy as np
 
+from impala_avx2_parquet_scanner_spark.pyworker import trims
 from impala_avx2_parquet_scanner_spark.sources import fle_kinds, sealed_dir
 from impala_avx2_parquet_scanner_spark.sources.fle_kinds import _is_null_cell
 from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
@@ -332,6 +333,7 @@ def _compact_leaf(
         lineage[nm] = sorted(b)
     _write_lineage_pending(path, lineage)
 
+    @trims
     def rewrite(batches):
         for pdf in batches:
             for _, row in pdf.iterrows():
@@ -937,6 +939,7 @@ def merge_fledir(
 
     key_set = set(keys)
 
+    @trims
     def rewrite(batches):
         from impala_avx2_parquet_scanner_spark.sources.fle_maintenance import (
             segment_reencode_columns,
@@ -961,6 +964,7 @@ def merge_fledir(
                     }
                 )
 
+    @trims
     def encode_inserts(batches):
         from pyspark import TaskContext
 
@@ -1282,6 +1286,7 @@ def delete_fledir(
 
     conj = list(conjuncts)
 
+    @trims
     def rewrite(batches):
         from impala_avx2_parquet_scanner_spark.sources.fle_maintenance import (
             _conjunct_rows,
@@ -1520,6 +1525,7 @@ def _segments_df(spark, path: str, names: "list[str]"):
     paths = [_resolve_segment_path(path, n) for n in sorted(names)]
     ordered = [c.name for c in first.columns]
 
+    @trims
     def decode(batches):
         import pyarrow as pa
 

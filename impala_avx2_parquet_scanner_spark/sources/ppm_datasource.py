@@ -44,6 +44,7 @@ from pyspark.sql.datasource import (
 )
 
 from impala_avx2_parquet_scanner_spark.catalog import table
+from impala_avx2_parquet_scanner_spark.pyworker import trims
 from impala_avx2_parquet_scanner_spark.registry import query
 from impala_avx2_parquet_scanner_spark.sources import sealed_dir
 
@@ -128,6 +129,7 @@ class PpmDirReader(DataSourceReader):
             return False
         return True
 
+    @trims
     def partitions(self):
         names, _ = sealed_dir.listing(self.dir, ".ppm")
         files = [
@@ -136,9 +138,10 @@ class PpmDirReader(DataSourceReader):
         n = sealed_dir.partition_count(len(files), n_parts=self.n_parts)
         return [_PpmFilesPartition(b) for b in sealed_dir.deal(files, n)]
 
+    @trims
     def read(self, partition):
         # real file IO + header parse on the executor, one batch per split
-        return map(_parse_ppm, partition.paths)
+        yield from map(_parse_ppm, partition.paths)
 
 
 def _doc_id(name: str) -> int:
@@ -183,18 +186,21 @@ class PpmDirWriter(DataSourceWriter):
             raise ValueError("ppmdir requires option 'path'")
         self.overwrite = overwrite
 
+    @trims
     def write(self, rows):
         msg = sealed_dir.Staged(self.dir)
         for row in rows:
             msg.put(f"doc_{row.doc_id}.ppm", bytes(row.payload))
         return msg
 
+    @trims
     def commit(self, messages):
         sealed_dir.commit(
             self.dir, sealed_dir.staged(messages), suffix=".ppm",
             overwrite=self.overwrite,
         )
 
+    @trims
     def abort(self, messages):
         sealed_dir.abort(self.dir, messages)
 
@@ -204,12 +210,14 @@ class PpmDataSource(DataSource):
     def name(cls):
         return "ppmdir"
 
+    @trims
     def schema(self):
         return _SCHEMA
 
     def reader(self, schema):
         return PpmDirReader(self.options)
 
+    @trims
     def writer(self, schema, overwrite):
         return PpmDirWriter(self.options, overwrite)
 

@@ -182,3 +182,14 @@ def test_bench_set_contract():
     for required in ("tpch_q1", "tpch_q6", "tpch_q12", "tpch_q13", "tpch_q14",
                      "selectivity_002", "selectivity_080", "selectivity_100"):
         assert required in bench, required
+
+
+def test_bench_detail_file_keeps_the_pin():
+    """Only the pinned 32-core run writes `BENCH_FULL.json`; any other
+    core count writes its own `BENCH_FULL_c<n>.json`, which the compact
+    last line names as its `detail`."""
+    import bench
+
+    assert bench.detail_name(32) == "BENCH_FULL.json"
+    assert bench.detail_name(8) == "BENCH_FULL_c8.json"
+    assert bench.detail_name(4) == "BENCH_FULL_c4.json"
