@@ -7,7 +7,7 @@ one real piece of work here is guarding the `events.ts` column's physical
 type.  The shipped fixtures carry TIMESTAMP(µs), which Spark reads
 natively; if a fixture instead shipped int64 nanoseconds (which Spark's
 vectorized reader surfaces as bigint under
-`spark.sql.legacy.parquet.nanosAsLong`), `_load_events` floor-converts it
+`spark.sql.legacy.parquet.nanosAsLong`), `_events` floor-converts it
 to microsecond `timestamp_ntz`, matching DuckDB's ns→µs truncation so
 oracle comparisons agree either way.
 """
@@ -20,8 +20,7 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from impala_avx2_parquet_scanner_spark.assets import input_stamp
-from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
+from impala_avx2_parquet_scanner_spark.sources.parquet_io import read_parquet
 
 TABLES = (
     "region",
@@ -39,39 +38,34 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-#: Per-session memo of base-table DataFrames.  A DataFrame is an immutable
-#: logical plan, so reusing one across queries is exactly what a catalog
-#: table does — but `spark.read.parquet` re-lists the directory and
-#: re-reads footers for schema on EVERY call, and the engine's queries
-#: reference up to 6 tables each, re-built on every execution.  Memoizing
-#: removes that per-query planning tax (guide §1.2 step 2 / §6 file
-#: listing).  No data is cached or persisted: every action still scans
-#: the parquet files.  Weak keys so a stopped session's plans are
-#: releasable; keyed by (realpath, name, V1/V2 source list) within a
-#: session — the source-list conf is resolved when the relation is
-#: CREATED, so a memo hit across a mid-session V1↔V2 flip (the metadata
-#: count(*) pushdown tests do this) would replay the stale source
-#: version.  Each entry also holds the table files' (size, mtime) stamp
-#: (`assets.input_stamp`, one `stat` for a single-file table), and a
-#: table rewritten mid-session no longer matches it and is loaded again.
-_TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+#: Per-session memo of the frames this module DERIVES from a base table
+#: (the `events` conversion, the spread).  Base tables themselves are
+#: `parquet_io.read_parquet` frames, memoized there and checked against
+#: the files' stamp on every call.  Each entry here holds the base frame
+#: it was derived from, and a base that was resolved again (its file was
+#: rewritten, or a relation conf changed) is derived again.  Keyed
+#: weakly by session, like `parquet_io._RELATIONS`.
+_DERIVED: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table with engine-required confs applied."""
-    ensure_runtime_confs(spark)
-    memo = _TABLE_MEMO.setdefault(spark, {})
-    try:
-        v1_list = spark.conf.get("spark.sql.sources.useV1SourceList")
-    except Exception:
-        v1_list = None
-    key = (os.path.realpath(sf_dir), name, v1_list)
-    stamp = input_stamp(_path(sf_dir, name))
+    base = read_parquet(spark, _path(sf_dir, name))
+    if name != "events":
+        return base
+    return _derived(spark, ("events", os.path.realpath(sf_dir)), base,
+                    _events)
+
+
+def _derived(spark: SparkSession, key: tuple, base: DataFrame, derive):
+    """``derive(base)``, memoized per session under `key` for as long as
+    the same `base` frame comes back."""
+    memo = _DERIVED.setdefault(spark, {})
     hit = memo.get(key)
-    if hit is None or hit[0] != stamp:
-        hit = memo[key] = (stamp, _load(spark, sf_dir, name))
+    if hit is None or hit[0] is not base:
+        hit = memo[key] = (base, derive(base))
     return hit[1]
 
 
@@ -79,21 +73,13 @@ def _path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = _path(sf_dir, name)
-    if name == "events":
-        return _load_events(spark, path)
-    return spark.read.parquet(path)
-
-
-def _load_events(spark: SparkSession, path: str) -> DataFrame:
+def _events(df: DataFrame) -> DataFrame:
     """Dtype guard for events.ts.  The shipped fixtures are TIMESTAMP(µs)
     and pass through untouched; a nanos-int64 fixture (read as bigint under
     nanosAsLong) is floor-converted ns → µs → timestamp_ntz (session TZ is
     UTC so the LTZ→NTZ hop is the identity).  DuckDB performs the same
     floor when it reads such a file, so both engines see identical
     microsecond values either way."""
-    df = spark.read.parquet(path)
     ts_field = dict((f.name, f.dataType.simpleString()) for f in df.schema.fields)
     if ts_field.get("ts") == "bigint":
         df = df.withColumn(
@@ -148,18 +134,15 @@ def spread_table(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataF
     hash shuffle of the raw rows buys every-core parallelism for the
     expensive projections downstream.  Hash (not round-robin) keyed so no
     sort-before-repartition cost and a deterministic row→partition map.
-    Memoized beside the base table so the split probe runs once per
+    Memoized per base frame (`_derived`) so the split probe runs once per
     session; the SPARK_GRAFT_NO_SPREAD state is part of the memo key, so
     flipping it mid-session never hands back a frame whose spread
     disagrees with what `pin_above_spread` builds now."""
-    base = table(spark, sf_dir, name)
-    memo = _TABLE_MEMO.setdefault(spark, {})
     no_spread = bool(os.environ.get("SPARK_GRAFT_NO_SPREAD"))
-    mkey = ("__spread__", os.path.realpath(sf_dir), name, key, no_spread)
-    hit = memo.get(mkey)
-    if hit is None or hit[0] is not base:  # base reloaded: spread it anew
-        hit = memo[mkey] = (base, _spread(spark, base, key))
-    return hit[1]
+    return _derived(
+        spark, ("spread", os.path.realpath(sf_dir), name, key, no_spread),
+        table(spark, sf_dir, name), lambda base: _spread(spark, base, key),
+    )
 
 
 def _spread(spark: SparkSession, df: DataFrame, key: str) -> DataFrame:

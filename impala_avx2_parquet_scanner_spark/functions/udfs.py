@@ -43,10 +43,13 @@ def price_band(price: pd.Series) -> pd.Series:
     ).astype(str)
 
 
-@F.udf(StringType())
+@F.udf(StringType(), useArrow=False)
 def flag_status_rowwise(flag: str, status: str) -> str:
     """Row-at-a-time Python UDF — the slow path, present for surface
-    completeness (tests pin it works; hot paths never use it)."""
+    completeness (tests pin it works; hot paths never use it).
+    ``useArrow=False`` names the pickled row-at-a-time eval type, so
+    pyspark does not try (and fail, with a warning at import) to infer
+    one from the ``str`` type hints."""
     return f"{flag}/{status}"
 
 

@@ -37,7 +37,7 @@ RUNTIME_CONFS: dict[str, str] = {
     # Reference operator #3: metadata-only count(*) fast path.
     "spark.sql.parquet.aggregatePushdown": "true",
     # events.parquet could store TIMESTAMP(NANOS); with this flag Spark
-    # reads such a column as int64 and catalog._load_events converts to
+    # reads such a column as int64 and catalog._events converts to
     # timestamp_ntz (the shipped fixtures are plain µs and skip that path).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # INT96 timestamps (reference hdfs-parquet-scanner.cc:57-59, 598-605:

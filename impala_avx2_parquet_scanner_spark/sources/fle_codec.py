@@ -14,8 +14,17 @@ This module reproduces the ALGORITHM with numpy word-parallel arithmetic
 block's plane at once, exactly as one AVX2 op touches 4 words):
 
 * :func:`fle_pack` / :func:`fle_unpack` — the Put/Get transpose for any
-  bit width 1..64 (the reference unrolls widths 1..32 by hand; the numpy
-  formulation is width-generic).
+  bit width 1..64, as byte-wise 8×8 bit-matrix transposes on uint64
+  words.  A 64-value block is an 8×8 grid of bytes (value octet m,
+  value byte k); the eight byte-k's of octet m form one 8×8 bit matrix,
+  and transposing it (:func:`_t8`, three masked delta-swap rounds,
+  Hacker's Delight 7-3) turns "byte r = value 8m+r" into "byte b = bit
+  8k+b of the octet's eight values", i.e. byte m of plane 8k+b.  Around
+  the transpose only whole bytes move (numpy axis swaps), and only the
+  ceil(width/8) value bytes that carry bits are touched.  The transpose
+  is its own inverse, so unpack runs the same rounds on the plane bytes.
+  The reference unrolls widths 1..32 by hand; this formulation is
+  width-generic.
 * :func:`fle_skip` — Skip(k) is pure block-pointer arithmetic on the
   plane matrix (fle-encoding.h:344-402): nothing is decoded.
 * :class:`FleKernels` — bit-sliced Eq/Lt/Le/Gt/Ge/In over the planes.
@@ -69,6 +78,25 @@ def _as_codes(values: np.ndarray) -> np.ndarray:
     return v
 
 
+#: (shift, mask) of the three delta-swap rounds of an 8×8 bit-matrix
+#: transpose on one uint64 word whose byte r is matrix row r (Hacker's
+#: Delight 7-3, transpose8): bit 8r+c swaps with bit 8c+r.
+_T8_ROUNDS = (
+    (_U64(7), _U64(0x00AA00AA00AA00AA)),
+    (_U64(14), _U64(0x0000CCCC0000CCCC)),
+    (_U64(28), _U64(0x00000000F0F0F0F0)),
+)
+
+
+def _t8(x: np.ndarray) -> np.ndarray:
+    """Transpose the 8×8 bit matrix in every word of `x`, in place.
+    An involution: applying it twice gives `x` back."""
+    for s, m in _T8_ROUNDS:
+        t = ((x >> s) ^ x) & m
+        x ^= t ^ (t << s)
+    return x
+
+
 def fle_pack(values: np.ndarray, bit_width: int) -> tuple[np.ndarray, int]:
     """Bit-plane transpose: values → (n_blocks, bit_width) uint64 plane
     matrix + the true value count (FleEncoder::Put + Flush,
@@ -80,28 +108,43 @@ def fle_pack(values: np.ndarray, bit_width: int) -> tuple[np.ndarray, int]:
     if bit_width < 64 and v.size and int(v.max()) >> bit_width:
         raise ValueError(f"value exceeds bit_width {bit_width}")
     n = v.size
-    pad = (-n) % _BLOCK
-    if pad:
-        v = np.concatenate([v, np.zeros(pad, dtype=_U64)])
-    blocks = v.reshape(-1, _BLOCK)  # (n_blocks, 64)
-    shifts = np.arange(bit_width, dtype=_U64)  # plane index = source bit
-    positions = np.arange(_BLOCK, dtype=_U64)  # bit position = row-in-block
-    # bit j of value i, moved to bit i of plane-word j — one vectorized
-    # expression per (block, plane, position) instead of the reference's
-    # per-width unrolled AVX2 shuffles
-    bits = (blocks[:, None, :] >> shifts[None, :, None]) & _U64(1)
-    planes = np.bitwise_or.reduce(bits << positions[None, None, :], axis=2)
-    return planes.astype(_U64), n
+    nb = -(-n // _BLOCK)
+    kb = -(-bit_width // 8)  # value bytes that carry bits
+    blocks = np.zeros(nb * _BLOCK, dtype="<u8")
+    blocks[:n] = v.reshape(-1)
+    # bytes as [block, octet m, value r in octet, value byte k] → one
+    # word per (block, k, m) whose byte r is byte k of value 8m+r
+    rows = blocks.view(np.uint8).reshape(nb, 8, 8, 8)[..., :kb]
+    words = np.array(rows.transpose(0, 3, 1, 2), order="C").view("<u8")
+    # after the transpose byte b of word (block, k, m) is byte m of
+    # plane 8k+b
+    cols = _t8(words).view(np.uint8).reshape(nb, kb, 8, 8)
+    planes = np.ascontiguousarray(cols.transpose(0, 1, 3, 2)).view("<u8")
+    planes = planes.reshape(nb, 8 * kb)[:, :bit_width]
+    return np.ascontiguousarray(planes, dtype=_U64), n
 
 
 def fle_unpack(planes: np.ndarray, bit_width: int, n: int) -> np.ndarray:
     """Inverse transpose (FleDecoder::Get, fle-encoding.h:344-567)."""
     planes = np.asarray(planes, dtype=_U64)
-    shifts = np.arange(bit_width, dtype=_U64)
-    positions = np.arange(_BLOCK, dtype=_U64)
-    bits = (planes[:, :, None] >> positions[None, None, :]) & _U64(1)
-    values = np.bitwise_or.reduce(bits << shifts[None, :, None], axis=1)
-    return values.reshape(-1)[:n]
+    nb = planes.shape[0]
+    kb = -(-bit_width // 8)
+    if bit_width % 8:  # zero planes up to a whole byte of bits
+        full = np.zeros((nb, 8 * kb), dtype="<u8")
+        full[:, :bit_width] = planes
+    else:
+        full = np.ascontiguousarray(planes, dtype="<u8")
+    # plane bytes as [block, k, bit b, octet m] → one word per
+    # (block, k, m) whose byte b is byte m of plane 8k+b
+    cols = full.view(np.uint8).reshape(nb, kb, 8, 8)
+    words = np.array(cols.transpose(0, 1, 3, 2), order="C").view("<u8")
+    # after the transpose byte r of word (block, k, m) is byte k of
+    # value 8m+r
+    rows = _t8(words).view(np.uint8).reshape(nb, kb, _BLOCK)
+    out = (np.zeros if kb < 8 else np.empty)((nb, _BLOCK, 8), dtype=np.uint8)
+    for k in range(kb):  # one value byte at a time: 64-byte inner loops
+        out[:, :, k] = rows[:, k]
+    return out.view("<u8").reshape(-1)[:n].astype(_U64, copy=False)
 
 
 def fle_skip(
@@ -332,14 +375,10 @@ def pack_validity(valid: np.ndarray) -> np.ndarray:
     (bit i of word b = row 64b+i is non-NULL): the def-level words
     :class:`FleKernels` consumes.  Padding lanes pack as 0 (NULL), which
     the kernels' tail mask already excludes."""
-    v = np.asarray(valid, dtype=bool).astype(_U64)
-    pad = (-v.size) % _BLOCK
-    if pad:
-        v = np.concatenate([v, np.zeros(pad, dtype=_U64)])
-    positions = np.arange(_BLOCK, dtype=_U64)
-    return np.bitwise_or.reduce(
-        v.reshape(-1, _BLOCK) << positions[None, :], axis=1
-    ).astype(_U64)
+    v = np.asarray(valid, dtype=bool).reshape(-1)
+    lanes = np.zeros(-(-v.size // _BLOCK) * _BLOCK, dtype=bool)
+    lanes[:v.size] = v
+    return np.packbits(lanes, bitorder="little").view("<u8").astype(_U64)
 
 
 def popcount(bitset: np.ndarray) -> int:

@@ -71,8 +71,26 @@ _EPOCH = _dtm.datetime(1970, 1, 1)
 _EPOCH_DAY = _dtm.date(1970, 1, 1)
 
 
-def _is_null_cell(v) -> bool:
-    return v is None or (isinstance(v, float) and math.isnan(v))
+def null_cells(vals) -> np.ndarray:
+    """Per-lane NULL markers of a writer values array: a cell is NULL
+    when it is ``None`` or a NaN ``float`` (``np.float64`` included).
+    ``pd.NA``, ``NaT`` and ``Decimal('NaN')`` are values, not NULLs, and
+    so are the lanes of a numeric array whose scalars are not ``float``
+    (``float32``, integers).  Object arrays go through pandas' C null
+    scan, a superset of these markers, and only its hits are looked at
+    again one by one."""
+    a = np.asarray(vals)
+    if a.dtype != object:
+        if issubclass(a.dtype.type, float):
+            return np.isnan(a)
+        return np.zeros(a.shape, dtype=bool)
+    import pandas as pd
+
+    out = np.asarray(pd.isna(a), dtype=bool)
+    flat = out.reshape(-1)
+    hits = np.flatnonzero(flat)
+    flat[hits] = [v is None or isinstance(v, float) for v in a.reshape(-1)[hits]]
+    return out
 
 
 def _has_negative(vals: np.ndarray) -> bool:
@@ -81,10 +99,8 @@ def _has_negative(vals: np.ndarray) -> bool:
     v = np.asarray(vals)
     if v.dtype == object:
         return any(
-            not _is_null_cell(x)
-            and isinstance(x, (int, np.integer, float, np.floating))
-            and x < 0
-            for x in v
+            isinstance(x, (int, np.integer, float, np.floating)) and x < 0
+            for x in v[~null_cells(v)]
         )
     if v.dtype.kind == "f":
         ok = ~np.isnan(v)
@@ -106,7 +122,7 @@ def _encode_int_column(name: str, values: np.ndarray) -> tuple[
         # exact Python-int arithmetic: an object array may hold ints
         # beyond 2^53, where a float64 detour silently rounds to a
         # DIFFERENT value — every lane is range-checked individually
-        valid = np.array([not _is_null_cell(v) for v in vals], dtype=bool)
+        valid = ~null_cells(vals)
         nullable = bool((~valid).any())
         codes = np.zeros(vals.size, dtype=np.uint64)
         for i in np.flatnonzero(valid):
@@ -170,7 +186,7 @@ def _encode_offset_column(name: str, values: np.ndarray) -> tuple[
     complement out)."""
     vals = np.asarray(values)
     if vals.dtype == object:
-        valid = np.array([not _is_null_cell(v) for v in vals], dtype=bool)
+        valid = ~null_cells(vals)
         ints = np.zeros(vals.size, dtype=np.int64)
         for i in np.flatnonzero(valid):
             v = vals[i]
@@ -657,7 +673,7 @@ class _TsKind(_OffsetCodes):
                 valid, vals.astype("datetime64[us]").astype(np.int64), 0
             )
         else:  # object array of datetimes / None
-            valid = np.array([not _is_null_cell(v) for v in vals], dtype=bool)
+            valid = ~null_cells(vals)
             micros = np.zeros(vals.size, dtype=np.int64)
             for i in np.flatnonzero(valid):
                 micros[i] = _ts_micros(vals[i])
@@ -698,7 +714,7 @@ class _DateKind(_OffsetCodes):
                 valid, vals.astype("datetime64[D]").astype(np.int64), 0
             )
         else:
-            valid = np.array([not _is_null_cell(v) for v in vals], dtype=bool)
+            valid = ~null_cells(vals)
             days = np.zeros(vals.size, dtype=np.int64)
             for i in np.flatnonzero(valid):
                 days[i] = _date_days(vals[i])
@@ -733,7 +749,7 @@ class _BoolKind(ColumnKind):
 
     def encode(self, name, vals, hint):
         if vals.dtype == object:
-            valid = np.array([not _is_null_cell(v) for v in vals], dtype=bool)
+            valid = ~null_cells(vals)
             codes = np.array(
                 [1 if (valid[i] and bool(vals[i])) else 0
                  for i in range(vals.size)],
@@ -778,7 +794,7 @@ class _DecKind(_OffsetCodes):
         stance, hdfs-parquet-table-writer.cc's decimal path)."""
         p, s = int(hint[1]), int(hint[2])
         vals = np.asarray(vals, dtype=object)
-        valid = np.array([not _is_null_cell(v) for v in vals], dtype=bool)
+        valid = ~null_cells(vals)
         unscaled = np.zeros(vals.size, dtype=np.int64)
         for i in np.flatnonzero(valid):
             d = _decm.Decimal(vals[i])
@@ -872,7 +888,7 @@ class _DictKind(ColumnKind):
 
     def encode(self, name, vals, hint):
         vals = np.asarray(vals, dtype=object)
-        valid = np.array([not _is_null_cell(v) for v in vals], dtype=bool)
+        valid = ~null_cells(vals)
         dictionary, codes = [], np.zeros(vals.size, dtype=np.uint64)
         if valid.any():
             work = np.where(valid, vals, vals[valid][0]).astype(str)
@@ -981,7 +997,7 @@ class _PlainKind(_DictKind):
         far below that in practice, and the encoder refuses larger
         rather than letting decode wrap offsets negative."""
         vals = np.asarray(vals, dtype=object)
-        valid = np.array([not _is_null_cell(v) for v in vals], dtype=bool)
+        valid = ~null_cells(vals)
         chunks: list[bytes] = []
         offsets = np.zeros(vals.size + 1, dtype=np.uint32)
         pos = 0
@@ -1113,10 +1129,10 @@ def infer_kind(name: str, vals: np.ndarray, hint) -> ColumnKind:
     if vals.dtype.kind in ("U", "S"):
         return _DICT
     if vals.dtype == object:
-        non_null = [v for v in vals if not _is_null_cell(v)]
-        if not non_null:
+        types = set(map(type, vals[~null_cells(vals)]))
+        if not types:
             return _DICT
-        first_types_all = lambda t: all(isinstance(v, t) for v in non_null)
+        first_types_all = lambda t: all(issubclass(ty, t) for ty in types)
         if first_types_all((bool, np.bool_)):
             return _BOOL
         if first_types_all(_dtm.datetime):

@@ -16,10 +16,14 @@ file schemas against the table schema with missing-column→NULL semantics
 
 from __future__ import annotations
 
+import os
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from impala_avx2_parquet_scanner_spark.assets import input_stamp
 from impala_avx2_parquet_scanner_spark.session import ensure_runtime_confs
 
 #: Writer defaults mirroring the reference sink.
@@ -76,6 +80,39 @@ def write_parquet(
     writer.parquet(path)
 
 
+#: Per-session memo of resolved parquet relations, the catalog cache of
+#: this engine (Impala keeps file and schema metadata in its catalog for
+#: the same reason).  ``spark.read.parquet`` lists the paths and runs a
+#: Spark job to infer the schema from the footers on EVERY call; a
+#: DataFrame is an immutable logical plan, so one resolved frame serves
+#: every later read of unchanged files.  No data is cached: every action
+#: still scans the files.  The session keys are weak, but every frame
+#: holds its session, so an entry lives as long as this dict does.
+_RELATIONS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
+
+#: Session confs Spark reads when it CREATES a parquet relation: the
+#: source version (V1 file scan or V2), and how footer types map to the
+#: inferred schema.  A frame made under other values would replay them,
+#: so they are part of the memo key.
+RELATION_CONFS = (
+    "spark.sql.sources.useV1SourceList",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def _conf(spark: SparkSession, key: str):
+    try:
+        return spark.conf.get(key)
+    except Exception:  # a conf this Spark build does not know
+        return None
+
+
 def read_parquet(
     spark: SparkSession,
     path: str | list[str],
@@ -86,14 +123,47 @@ def read_parquet(
     missing a column yield NULLs for it — the reference's schema-evolution
     contract (missing column → NULL template tuple,
     hdfs-parquet-scanner.cc:1437-1445); extra file columns are ignored
-    (hdfs-parquet-scanner.h:184-186)."""
+    (hdfs-parquet-scanner.h:184-186).
+
+    The frame is memoized per session (:data:`_RELATIONS`), keyed by the
+    paths' realpaths, `schema`, `merge_schema` and
+    :data:`RELATION_CONFS`.  Each hit is checked against the
+    ``assets.input_stamp`` of every path, so a rewritten file or a file
+    added to a directory is read afresh.  A path with no stamp (a glob,
+    a URI, nothing there) is never memoized."""
     ensure_runtime_confs(spark)
+    paths = [path] if isinstance(path, str) else list(path)
+    stamp = tuple(input_stamp(p) for p in paths)
+    if not all(stamp):
+        return _resolve(spark, paths, schema, merge_schema)
+    key = (
+        tuple(os.path.realpath(p) for p in paths),
+        None if schema is None else schema.json(),
+        bool(merge_schema),
+        tuple(_conf(spark, k) for k in RELATION_CONFS),
+    )
+    # two threads that miss together both resolve, and the later frame
+    # stays: either is a correct frame for these files
+    memo = _RELATIONS.setdefault(spark, {})
+    hit = memo.get(key)
+    if hit is None or hit[0] != stamp:
+        hit = memo[key] = (stamp, _resolve(spark, paths, schema, merge_schema))
+    return hit[1]
+
+
+def _resolve(
+    spark: SparkSession,
+    paths: list[str],
+    schema: StructType | None,
+    merge_schema: bool,
+) -> DataFrame:
+    """Create the relation: list `paths` and, without a `schema`, infer
+    one from the footers."""
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
-    paths = [path] if isinstance(path, str) else list(path)
     return reader.parquet(*paths)
 
 

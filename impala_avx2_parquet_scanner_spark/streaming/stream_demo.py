@@ -44,7 +44,7 @@ def events_stream(spark: SparkSession, sf_dir: str, stream_dir: str | None = Non
     if not ts_type.startswith("timestamp"):
         raise NotImplementedError(
             f"events.ts resolved to {ts_type}; streaming path only supports "
-            "timestamp fixtures (see catalog._load_events for the batch guard)"
+            "timestamp fixtures (see catalog._events for the batch guard)"
         )
     stream = (
         spark.readStream.schema(batch.schema)

@@ -1,21 +1,25 @@
-"""Round-10 optimization: catalog table memoization + once-per-session
-runtime confs.
+"""The relation memo (`parquet_io.read_parquet`, which `catalog.table`
+reads through) + once-per-session runtime confs.
 
 The memo must be a pure planning-cost optimization — same logical plan,
 same results, no data caching — and must stay correct across the cases
-the round-10 change touches: per-session scoping, a table rewritten
-mid-session, and the restored (previously overridden) mid-session
-shuffle-partition invariance.
+it touches: per-session scoping, a file rewritten or added mid-session,
+paths it cannot stamp, every input that shapes the resolved relation,
+and the restored (previously overridden) mid-session shuffle-partition
+invariance.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
 import impala_avx2_parquet_scanner_spark as engine
-from impala_avx2_parquet_scanner_spark.catalog import _TABLE_MEMO, table
+from impala_avx2_parquet_scanner_spark.catalog import _DERIVED, table
+from impala_avx2_parquet_scanner_spark.sources import parquet_io
+from impala_avx2_parquet_scanner_spark.sources.parquet_io import read_parquet
 
 engine.load_all()
 
@@ -47,8 +51,8 @@ def test_table_memo_is_per_dir(spark, sf_dir, tmp_path):
 
 def test_table_memo_sees_rewritten_file(spark, sf_dir, tmp_path):
     """A table file rewritten in place mid-session gets a fresh frame
-    with the new rows: the memo entry carries the file's (size, mtime)
-    stamp, and a stamp that no longer matches is a miss."""
+    with the new rows: `read_parquet`'s memo entry carries the file's
+    (size, mtime) stamp, and a stamp that no longer matches is a miss."""
     import shutil
 
     import pyarrow.parquet as pq
@@ -109,39 +113,121 @@ def test_runtime_confs_do_not_clobber_mid_session_changes(spark, sf_dir):
         spark.conf.set(key, prior)
 
 
+def _region_copy(sf_dir, dst) -> str:
+    shutil.copyfile(os.path.join(sf_dir, "region.parquet"), dst)
+    return str(dst)
+
+
+def test_read_parquet_returns_same_frame_for_unchanged_input(spark, sf_dir):
+    """An unchanged file resolves once: the second read is the same
+    DataFrame object, so no listing or schema job runs again."""
+    path = os.path.join(sf_dir, "nation.parquet")
+    assert read_parquet(spark, path) is read_parquet(spark, path)
+    assert read_parquet(spark, [path]) is read_parquet(spark, path)
+
+
+def test_read_parquet_sees_file_added_to_directory(spark, sf_dir, tmp_path):
+    d = tmp_path / "dir"
+    d.mkdir()
+    _region_copy(sf_dir, d / "a.parquet")
+    before = read_parquet(spark, str(d))
+    n = before.count()
+    _region_copy(sf_dir, d / "b.parquet")
+    after = read_parquet(spark, str(d))
+    assert after is not before
+    assert after.count() == 2 * n
+
+
+def test_read_parquet_never_memoizes_a_glob(spark, sf_dir, tmp_path):
+    """A glob does not stat, so it has no stamp to validate a memo hit
+    with: every call resolves it again and sees files added since."""
+    _region_copy(sf_dir, tmp_path / "a.parquet")
+    glob = str(tmp_path / "*.parquet")
+    first = read_parquet(spark, glob)
+    n = first.count()
+    assert read_parquet(spark, glob) is not first
+    _region_copy(sf_dir, tmp_path / "b.parquet")
+    assert read_parquet(spark, glob).count() == 2 * n
+
+
+@pytest.mark.parametrize("conf,value", [
+    ("spark.sql.sources.useV1SourceList", ""),
+    ("spark.sql.legacy.parquet.nanosAsLong", "false"),
+])
+def test_read_parquet_keys_relation_confs(spark, sf_dir, conf, value):
+    """A conf Spark reads when it creates the relation gives a different
+    frame while it is changed, and the first frame back after it is
+    restored."""
+    path = os.path.join(sf_dir, "region.parquet")
+    base = read_parquet(spark, path)
+    prior = spark.conf.get(conf)
+    assert prior != value
+    try:
+        spark.conf.set(conf, value)
+        changed = read_parquet(spark, path)
+        assert changed is not base
+        assert read_parquet(spark, path) is changed
+    finally:
+        spark.conf.set(conf, prior)
+    assert read_parquet(spark, path) is base
+
+
+def test_read_parquet_keys_schema_and_merge_schema(spark, sf_dir):
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    path = os.path.join(sf_dir, "region.parquet")
+    base = read_parquet(spark, path)
+    narrow = StructType([StructField("r_regionkey", LongType())])
+    with_schema = read_parquet(spark, path, schema=narrow)
+    merged = read_parquet(spark, path, merge_schema=True)
+    assert len({id(base), id(with_schema), id(merged)}) == 3
+    assert with_schema.columns == ["r_regionkey"]
+    assert read_parquet(spark, path, schema=narrow) is with_schema
+    assert read_parquet(spark, path, merge_schema=True) is merged
+
+
 class _NoMemo(dict):
-    """A memo that forgets: every `table` call loads through `_load`."""
+    """A memo that forgets: every call resolves the relation again."""
 
     def setdefault(self, key, default=None):
         return {}
 
 
-@pytest.mark.parametrize("name", ["tpch_q6", "dedup_exact"])
+def _lineitem_flags(spark, sf_dir):
+    from pyspark.sql import functions as F
+
+    path = os.path.join(sf_dir, "lineitem.parquet")
+    return (read_parquet(spark, path).filter(F.col("l_quantity") <= 10)
+            .groupBy("l_returnflag").agg(F.sum("l_quantity").alias("q")))
+
+
+@pytest.mark.parametrize("name", ["tpch_q6", "dedup_exact", "read_parquet"])
 def test_memoized_results_match_uncached(spark, sf_dir, name, monkeypatch):
-    """Same rows with the memo as with every table loaded straight
-    through `catalog._load`."""
+    """Same rows with the memo as with every relation resolved afresh
+    through `parquet_io._resolve`."""
     from impala_avx2_parquet_scanner_spark import catalog
     from impala_avx2_parquet_scanner_spark.registry import REGISTRY
 
-    spec = REGISTRY[name]
-    with_memo = sorted(map(tuple, spec.fn(spark, sf_dir).collect()))
-    loads = []
-    real_load = catalog._load
+    fn = _lineitem_flags if name == "read_parquet" else REGISTRY[name].fn
+    with_memo = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    resolves = []
+    real_resolve = parquet_io._resolve
 
-    def load(*args):
-        loads.append(args[2])
-        return real_load(*args)
+    def resolve(*args):
+        resolves.append(args[1])
+        return real_resolve(*args)
 
-    monkeypatch.setattr(catalog, "_TABLE_MEMO", _NoMemo())
-    monkeypatch.setattr(catalog, "_load", load)
-    without = sorted(map(tuple, spec.fn(spark, sf_dir).collect()))
-    assert loads, "the uncached run never reached catalog._load"
+    monkeypatch.setattr(parquet_io, "_RELATIONS", _NoMemo())
+    monkeypatch.setattr(catalog, "_DERIVED", _NoMemo())
+    monkeypatch.setattr(parquet_io, "_resolve", resolve)
+    without = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    assert resolves, "the uncached run never reached parquet_io._resolve"
     assert with_memo == without
 
 
 def test_memo_scoped_weakly():
-    """The memo container is a WeakKeyDictionary so a stopped session's
-    plans are collectable."""
+    """Both memos are keyed weakly by session."""
     import weakref
 
-    assert isinstance(_TABLE_MEMO, weakref.WeakKeyDictionary)
+    assert isinstance(parquet_io._RELATIONS, weakref.WeakKeyDictionary)
+    assert isinstance(_DERIVED, weakref.WeakKeyDictionary)

@@ -1828,3 +1828,52 @@ def test_fle_stream_partitioned_root_e2e(spark, tmp_path):
         q.stop()
     assert len(rows) == 12  # 4 leaves x 3 rows, exactly once
     assert {(r.q, r.flag, r.day) for r in rows} == want
+
+
+def test_reader_resolves_decode_functions_through_module(tmp_path, monkeypatch):
+    """`FleDirReader.read` looks `parse_segment` and
+    `decode_segment_columns` up on the module at call time, and
+    `fle_codec` keeps `fle_pack`, `fle_unpack` and `FleKernels` by those
+    names.  loadbench's reader replay rebinds the two module functions to
+    count segments opened and rows decoded, and times the codec by name;
+    a reader that bound them any other way would report zero decode work
+    without failing."""
+    from collections import namedtuple
+
+    from pyspark.sql.datasource import LessThanOrEqual
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from impala_avx2_parquet_scanner_spark.sources import fle_codec
+    from impala_avx2_parquet_scanner_spark.sources import fle_datasource as ds
+
+    for name in ("fle_pack", "fle_unpack", "FleKernels"):
+        assert callable(getattr(fle_codec, name))
+
+    out = str(tmp_path / "fle")
+    seg = namedtuple("Seg", "seg_id payload")
+    k = np.arange(300, dtype=np.int64)
+    segs = [seg(i, ds.encode_segment_columns([("k", k[lo:lo + 100])]))
+            for i, lo in enumerate(range(0, 300, 100))]
+    writer = ds.FleDirWriter({"path": out}, overwrite=True)
+    writer.commit([writer.write(iter(segs))])
+
+    calls = {"parse": 0, "decode": 0}
+    real_parse, real_decode = ds.parse_segment, ds.decode_segment_columns
+
+    def parse(payload):
+        calls["parse"] += 1
+        return real_parse(payload)
+
+    def decode(*args, **kwargs):
+        calls["decode"] += 1
+        return real_decode(*args, **kwargs)
+
+    reader = ds.FleDataSource({"path": out}).reader(
+        StructType([StructField("k", LongType())]))
+    assert not list(reader.pushFilters([LessThanOrEqual(("k",), 149)]))
+    parts = reader.partitions()
+    monkeypatch.setattr(ds, "parse_segment", parse)
+    monkeypatch.setattr(ds, "decode_segment_columns", decode)
+    rows = sum(b.num_rows for p in parts for b in reader.read(p))
+    assert rows == 150
+    assert calls["parse"] >= 2 and calls["decode"] >= 2
