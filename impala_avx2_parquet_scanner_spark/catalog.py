@@ -15,12 +15,14 @@ oracle comparisons agree either way.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from impala_avx2_parquet_scanner_spark.sources.parquet_io import read_parquet
+from impala_avx2_parquet_scanner_spark.sources.parquet_io import (
+    SessionMemo,
+    read_parquet,
+)
 
 TABLES = (
     "region",
@@ -43,11 +45,9 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: `parquet_io.read_parquet` frames, memoized there and checked against
 #: the files' stamp on every call.  Each entry here holds the base frame
 #: it was derived from, and a base that was resolved again (its file was
-#: rewritten, or a relation conf changed) is derived again.  Keyed
-#: weakly by session, like `parquet_io._RELATIONS`.
-_DERIVED: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+#: rewritten, or a relation conf changed) is derived again.  Kept on
+#: the session, like `parquet_io._RELATIONS`.
+_DERIVED = SessionMemo("_spark_graft_derived")
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -106,11 +106,7 @@ def pin_above_spread(col):
     deterministic parts), and ``rand(seed) > -1`` specifically is
     constant-folded away by Spark 4.1's Rand range analysis.  When
     spread is a no-op (splits ≥ cores — any real scale) there is no
-    exchange and the pin is inert stage-wise; under SPARK_GRAFT_NO_SPREAD
-    the pin returns ``col`` unchanged so the A/B opt-out path reproduces
-    the exact pre-pin plan (ADVICE r10: the wrapper would otherwise still
-    block scan-level pushdown of the wrapped predicate, making opt-out
-    runs an impure baseline).
+    exchange and the pin is inert stage-wise.
 
     Schema note (ADVICE r10): ``when()`` without ``otherwise()`` makes
     the wrapped column nullable in the output schema.  Values are
@@ -118,8 +114,6 @@ def pin_above_spread(col):
     canonicalizer compares column NAMES + values, never nullability —
     but a downstream consumer adding a not-null assumption on a pinned
     column should read this first."""
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        return col
     return F.when(F.spark_partition_id() >= F.lit(0), col)
 
 
@@ -135,22 +129,14 @@ def spread_table(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataF
     expensive projections downstream.  Hash (not round-robin) keyed so no
     sort-before-repartition cost and a deterministic row→partition map.
     Memoized per base frame (`_derived`) so the split probe runs once per
-    session; the SPARK_GRAFT_NO_SPREAD state is part of the memo key, so
-    flipping it mid-session never hands back a frame whose spread
-    disagrees with what `pin_above_spread` builds now."""
-    no_spread = bool(os.environ.get("SPARK_GRAFT_NO_SPREAD"))
+    session."""
     return _derived(
-        spark, ("spread", os.path.realpath(sf_dir), name, key, no_spread),
+        spark, ("spread", os.path.realpath(sf_dir), name, key),
         table(spark, sf_dir, name), lambda base: _spread(spark, base, key),
     )
 
 
 def _spread(spark: SparkSession, df: DataFrame, key: str) -> DataFrame:
-    # SPARK_GRAFT_NO_SPREAD disables the local-parallelism repartition
-    # outright (A/B harness + production opt-out; at real scale the
-    # split-count probe below already makes it a no-op).
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        return df
     n = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= n:
         return df

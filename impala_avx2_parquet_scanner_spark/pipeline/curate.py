@@ -79,10 +79,7 @@ def pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `rand(s) > -1` conjunct does NOT work: Spark 4.1 constant-folds
     # Rand range comparisons, and a separate nondeterministic conjunct
     # leaves the deterministic ones pushable.)  When spread is a no-op
-    # (splits ≥ cores) there is no exchange and the pin is stage-inert;
-    # under SPARK_GRAFT_NO_SPREAD pin_above_spread returns the bare
-    # column, so the opt-out A/B path reproduces the exact pre-pin plan
-    # including scan-level pushdown of this gate (ADVICE r10).
+    # (splits ≥ cores) there is no exchange and the pin is stage-inert.
     gated = (
         spread_table(spark, sf_dir, "documents", "doc_id")
         .filter(F.length(t).between(100, 20000) & (token_count(t) >= 20))

@@ -57,9 +57,11 @@ should do the same.
 
 from __future__ import annotations
 
+import bisect
 import json
 import math
 import os
+import re
 import struct
 from dataclasses import dataclass
 
@@ -555,6 +557,19 @@ _PUSHABLE_OPS = {
     "StringEndsWith": "endswith",
     "StringContains": "contains",
 }
+
+
+def _sorted_literals(values, conv) -> "list | None":
+    """An IN list converted into a stats value domain by `conv`, sorted
+    for bisection; None when some literal does not convert or is NaN (it
+    then cannot refute: NaN orders with nothing)."""
+    try:
+        vs = [conv(v) for v in values]
+        if any(v != v for v in vs):
+            return None
+        return sorted(vs)
+    except (TypeError, ValueError, AttributeError):
+        return None
 
 
 class FleDirReader(DataSourceReader):
@@ -1199,12 +1214,17 @@ class FleDirReader(DataSourceReader):
             return zeros
         return self._chunk_kernel(seg, c, i, b[0], b[1])
 
-    def _stats_refute(self, stats: dict) -> bool:
+    def _stats_refute(self, stats: dict, memo: "dict | None" = None) -> bool:
         """True iff the pushed conjunction PROVABLY matches no row of a
         segment given its manifest stats — the parquet footer min/max
         row-group skip (hdfs-parquet-scanner.cc:1006-1038) at file
-        granularity, decided on the DRIVER before any scan task exists."""
-        for col, op, value in self.pushed:
+        granularity, decided on the DRIVER before any scan task exists.
+        An IN list is converted and sorted once per (kind, scale) for as
+        long as the caller keeps passing the same `memo`, then bisected:
+        a probe of S segments with an n-literal list costs O(S·log n)
+        after the first, not O(S·n) (a merge pushes its whole key set)."""
+        memo = {} if memo is None else memo
+        for i, (col, op, value) in enumerate(self.pushed):
             s = stats.get(col)
             if not isinstance(s, dict):
                 continue  # stat-less column: cannot refute
@@ -1262,8 +1282,14 @@ class FleDirReader(DataSourceReader):
 
             try:
                 if op == "in":
-                    vs = [conv(v) for v in value]
-                    if all(v < mn or v > mx for v in vs):
+                    key = (i, kind, scale)
+                    if key not in memo:
+                        memo[key] = _sorted_literals(value, conv)
+                    vs = memo[key]
+                    if vs is None:
+                        continue  # untranslatable literal: cannot refute
+                    j = bisect.bisect_left(vs, mn)
+                    if j == len(vs) or vs[j] > mx:
                         return True
                     continue
                 v = conv(value)
@@ -1301,10 +1327,11 @@ class FleDirReader(DataSourceReader):
         if entries is None:
             raise ValueError(f"fledir: {dirpath} has no _DONE manifest")
         files: list[tuple[str, int]] = []
+        memo: dict = {}
         for name, stats_json in entries:
             stats = _entry_stats(stats_json)
             rows = int(stats.get("__rows__") or 0) if stats else 0
-            if stats and self.pushed and self._stats_refute(stats):
+            if stats and self.pushed and self._stats_refute(stats, memo):
                 continue  # whole file pruned: never opened
             if gen is not None:
                 # snapshot name → surviving bytes: the live file if the
@@ -1618,18 +1645,22 @@ def _hash64_bytes(values: "list[bytes]") -> np.ndarray:
 _BLOOM_HASH = {"i64": _splitmix64, "str": _hash64_bytes}
 
 
+def _bloom_probes(h: np.ndarray, m: int, k: int = _BF_K) -> list:
+    """The `k` probe bit positions of each hash, one array per probe —
+    the one formula the build and the probe share.  Double hashing:
+    probe i sits at (h1 + i·h2) mod m with h2 forced odd; m is a power
+    of two, so numpy's wrapping arithmetic gives exact positions."""
+    h1 = h & np.uint64(m - 1)
+    h2 = (h >> np.uint64(32)) | np.uint64(1)
+    return [(h1 + np.uint64(i) * h2) & np.uint64(m - 1) for i in range(k)]
+
+
 def _bloom_words(h: np.ndarray, m: int) -> np.ndarray:
-    """Hashes → bloom bitmap (m bits, m a power of two) as u64 words.
-    Double hashing: probe i sits at (h1 + i·h2) mod m with h2 forced
-    odd — build and probe agree because m divides 2^64, so numpy's
-    wrapping add and Python's exact add produce the same low bits."""
+    """Hashes → bloom bitmap (m bits, m a power of two) as u64 words."""
     words = np.zeros(m // 64, dtype=np.uint64)
     if h.size == 0:
         return words
-    h1 = h & np.uint64(m - 1)
-    h2 = (h >> np.uint64(32)) | np.uint64(1)
-    for i in range(_BF_K):
-        pos = (h1 + np.uint64(i) * h2) & np.uint64(m - 1)
+    for pos in _bloom_probes(h, m):
         np.bitwise_or.at(
             words,
             (pos >> np.uint64(6)).astype(np.int64),
@@ -1638,16 +1669,16 @@ def _bloom_words(h: np.ndarray, m: int) -> np.ndarray:
     return words
 
 
-def _bloom_maybe(words: np.ndarray, m: int, h: int,
-                 k: int = _BF_K) -> bool:
-    """True unless some probe bit is clear (definite absence)."""
-    h1 = int(h) & (m - 1)
-    h2 = ((int(h) >> 32) | 1)
-    for i in range(k):
-        pos = (h1 + i * h2) & (m - 1)
-        if not (int(words[pos >> 6]) >> (pos & 63)) & 1:
-            return False
-    return True
+def _bloom_any(words: np.ndarray, m: int, h: np.ndarray, k: int) -> bool:
+    """True unless every hash in `h` has some probe bit clear (each
+    value definitely absent)."""
+    alive = np.ones(h.size, dtype=bool)
+    for pos in _bloom_probes(h, m, k):
+        bits = words[(pos >> np.uint64(6)).astype(np.int64)] >> (
+            pos & np.uint64(63)
+        )
+        alive &= (bits & np.uint64(1)).astype(bool)
+    return bool(alive.any())
 
 
 def build_segment_blooms(seg: ParsedSegment, cols: list[str]) -> bytes:
@@ -1689,17 +1720,20 @@ def build_segment_blooms(seg: ParsedSegment, cols: list[str]) -> bytes:
 
 
 def bloom_sidecar_refutes(
-    bf_path: str, conjuncts: "list[tuple[str, list]]"
+    bf_path: str, conjuncts: "list[tuple[str, object]]"
 ) -> bool:
     """True when the sidecar PROVES some pushed conjunct matches no row
     of the segment (every literal of an eq/in conjunct absent from its
     column's bloom) — the caller then skips the segment without reading
-    its first byte.  Only the probed columns' blocks are read (seek on
-    the header offsets), so the cost is a few KB however wide the
-    sidecar.  Fail-open everywhere: a missing/garbled sidecar, an
-    unknown column, or a literal whose type does not match the hash
-    domain simply declines to skip — the kernels still evaluate the
-    conjunct exactly."""
+    its first byte.  A conjunct is ``(column, literals)``, the literals
+    either a list or already hashed by :func:`bloom_eq_in_conjuncts`
+    (which a caller probing many sidecars with one conjunct list
+    uses, so the literals are hashed once, not once per sidecar).  Only
+    the probed columns' blocks are read (seek on the header offsets),
+    so the cost is a few KB however wide the sidecar.  Fail-open
+    everywhere: a missing/garbled sidecar, an unknown column, or a
+    literal whose type does not match the hash domain simply declines
+    to skip — the kernels still evaluate the conjunct exactly."""
     try:
         with open(bf_path, "rb") as fh:
             if fh.read(4) != _BF_MAGIC:
@@ -1711,24 +1745,10 @@ def bloom_sidecar_refutes(
                 e = hdr.get(col)
                 if e is None:
                     continue
-                hs: list[int] = []
-                typed_ok = True
-                for v in vals:
-                    if (
-                        e["ht"] == "i64"
-                        and isinstance(v, int)
-                        and not isinstance(v, bool)
-                        and -(1 << 63) <= v < (1 << 63)
-                    ):
-                        hs.append(int(_splitmix64(
-                            np.array([v], dtype=np.int64).astype(np.uint64)
-                        )[0]))
-                    elif e["ht"] == "str" and isinstance(v, str):
-                        hs.append(int(_hash64_bytes([v.encode()])[0]))
-                    else:
-                        typed_ok = False
-                        break
-                if not typed_ok or not hs:
+                if not isinstance(vals, dict):
+                    vals = _bloom_hashes(vals)
+                hs = vals.get(e["ht"])
+                if hs is None or not hs.size:
                     continue
                 fh.seek(base + int(e["off"]))
                 words = np.frombuffer(
@@ -1736,10 +1756,7 @@ def bloom_sidecar_refutes(
                 )
                 if int(e["len"]) != int(e["m"]) // 8 or words.size == 0:
                     continue  # truncated block: fail open
-                if not any(
-                    _bloom_maybe(words, int(e["m"]), h, int(e["k"]))
-                    for h in hs
-                ):
+                if not _bloom_any(words, int(e["m"]), hs, int(e["k"])):
                     return True
     except (OSError, ValueError, KeyError, TypeError, struct.error):
         # fail-open covers every malformed-sidecar shape: short files
@@ -1750,11 +1767,30 @@ def bloom_sidecar_refutes(
     return False
 
 
-def bloom_eq_in_conjuncts(pushed) -> "list[tuple[str, list]]":
+def _bloom_hashes(vals: list) -> "dict[str, np.ndarray]":
+    """Literals → their hashes in each bloom hash domain they all fit:
+    'i64' when every literal is a (non-bool) int64, 'str' when every
+    literal is a str.  A domain some literal does not fit is absent, so
+    a bloom of that domain declines to speak to the conjunct."""
+    out = {}
+    if all(
+        isinstance(v, int) and not isinstance(v, bool)
+        and -(1 << 63) <= v < (1 << 63)
+        for v in vals
+    ):
+        out["i64"] = _splitmix64(np.array(vals, dtype=np.int64))
+    if all(isinstance(v, str) for v in vals):
+        out["str"] = _hash64_bytes([v.encode() for v in vals])
+    return out
+
+
+def bloom_eq_in_conjuncts(pushed) -> "list[tuple[str, dict]]":
     """The bloom-probeable subset of a pushed-conjunct list, shared by
-    the scan, merge and delete paths: eq/eqns with a non-NULL literal
-    (a NULL eqns is IS NULL — no bloom can speak to it) and IN with
-    its NULL elements dropped (they can never match)."""
+    the scan, merge and delete paths, each conjunct's literals hashed
+    once per hash domain (:func:`_bloom_hashes`) for
+    :func:`bloom_sidecar_refutes`: eq/eqns with a non-NULL literal (a
+    NULL eqns is IS NULL — no bloom can speak to it) and IN with its
+    NULL elements dropped (they can never match)."""
     out = [
         (col, [v] if op in ("eq", "eqns") else
          [x for x in v if x is not None])
@@ -1762,41 +1798,7 @@ def bloom_eq_in_conjuncts(pushed) -> "list[tuple[str, list]]":
         if (op in ("eq", "eqns") and v is not None)
         or (op == "in" and v)
     ]
-    return [(c, vs) for c, vs in out if vs]
-
-
-def bloom_sidecar_refutes_hashed(
-    bf_path: str, col: str, ht: str, hashes: "list[int]"
-) -> bool:
-    """Pre-hashed probe: True when the sidecar proves EVERY hash
-    absent from `col`'s bloom (the caller hashed the literal set ONCE
-    — merge probes hundreds of sidecars with the same key set, and
-    re-hashing 2M keys per segment would be O(keys × segments) driver
-    work).  Declines (False) when the column has no block or its hash
-    domain differs; fail-open on any malformed sidecar."""
-    if not hashes:
-        return False
-    try:
-        with open(bf_path, "rb") as fh:
-            if fh.read(4) != _BF_MAGIC:
-                return False
-            (hl,) = struct.unpack("<I", fh.read(4))
-            hdr = json.loads(fh.read(hl))["cols"]
-            e = hdr.get(col)
-            if e is None or e["ht"] != ht:
-                return False
-            fh.seek(8 + hl + int(e["off"]))
-            words = np.frombuffer(
-                fh.read(int(e["len"])), dtype=np.uint64
-            )
-            if int(e["len"]) != int(e["m"]) // 8 or words.size == 0:
-                return False
-            return not any(
-                _bloom_maybe(words, int(e["m"]), h, int(e["k"]))
-                for h in hashes
-            )
-    except (OSError, ValueError, KeyError, TypeError, struct.error):
-        return False
+    return [(c, _bloom_hashes(vs)) for c, vs in out if vs]
 
 
 #: compaction lineage sidecar: maps each merged segment name to the
@@ -1892,6 +1894,29 @@ def _manifest_entries(path: str) -> list[tuple[str, str]]:
     return sealed_dir.committed(path) or []
 
 
+_SEG_ID = re.compile(r"seg_(\d+)\.fle$")
+
+
+def segment_id(name: str) -> "int | None":
+    """The id of a ``seg_<id>.fle`` name; None for any other name (the
+    stream sink's ``seg_s<batch>_<i>.fle``, a foreign file)."""
+    m = _SEG_ID.match(name)
+    return int(m.group(1)) if m else None
+
+
+def fresh_seg_base(path: str) -> int:
+    """The first million-aligned segment id above every id committed in
+    `path` (0 for a new or empty directory) — the naming rule of every
+    batch writer in the package.  A commit whose names start here never
+    renames onto a committed name, so a commit killed between its renames
+    and the `_DONE` swap leaves the old table whole, no snapshot or
+    retired file ever names bytes it did not see, and a stream's
+    name-set offset never aliases old rows with new ones."""
+    ids = [segment_id(n) for n, _ in _manifest_entries(path)]
+    top = max((i for i in ids if i is not None), default=-1)
+    return (top // 1_000_000 + 1) * 1_000_000
+
+
 def _entry_stats(stats_json: str) -> "dict | None":
     """A manifest entry's per-column stats; None for a bare name or an
     unparseable entry (legacy manifests)."""
@@ -1942,10 +1967,13 @@ def _record_generation(
     overwrite replaces the table's rows) clears the timeline and starts
     it at generation 1.  Otherwise generation numbers stay MONOTONIC even
     when expiry empties the timeline (a renumbered timeline would let one
-    number mean two tables), and a commit that REUSED a committed segment
-    name replaced its bytes, so every snapshot naming it expires now — a
-    generation read must fail loudly, never return the new rows under the
-    old manifest."""
+    number mean two tables).  The package's batch writers name from
+    :func:`fresh_seg_base` and never reuse a name; the two writers that
+    do — a caller choosing raw `seg_id`s, and the stream sink replaying
+    an epoch's ``seg_s<b>_<i>`` names — replaced a committed name's
+    bytes, so every snapshot naming it expires now: a generation read
+    must fail loudly, never return the new rows under the old
+    manifest."""
     gens = _history_generations(path)
     gen = 1 if restart or not gens else gens[-1] + 1
     reused = names & {n for n, _ in previous}
@@ -1963,17 +1991,19 @@ class FleDirWriter(DataSourceWriter):
     pre-encoded segments (seg_id bigint, payload binary), staged as
     `seg_<id>.fle.tmp-<token>` and sealed by `sealed_dir.commit`, so a
     half-written, aborted or killed attempt is never observed and an
-    overwrite removes no old segment until the new `_DONE` is in place
-    (a REUSED segment name is replaced at its rename).  The fledir parts
-    around that commit: stats entries, bloom sidecars, the `_LINEAGE`
-    map, `retirenames` and the `_history` snapshot."""
+    overwrite removes no old segment until the new `_DONE` is in place.
+    The package's batch writers take ids from :func:`fresh_seg_base`;
+    a caller that picks raw `seg_id`s may reuse a committed name, whose
+    bytes are then replaced at its rename, before the swap.  The fledir
+    parts around that commit: stats entries, bloom sidecars, the
+    `_LINEAGE` map, `retirenames` and the `_history` snapshot."""
 
     def __init__(self, options, overwrite: bool):
         self.dir = options.get("path")
         if not self.dir:
             raise ValueError("fledir requires option 'path'")
         self.overwrite = overwrite
-        #: set by compact_fledir's rewrite ONLY: promote the staged
+        #: set by compaction's rewrite ONLY: promote the staged
         #: `_LINEAGE.pending` at commit (BEFORE the merged names
         #: appear, so a concurrent stream never sees a merged file
         #: without its lineage).  A plain overwrite instead DELETES
@@ -2038,11 +2068,11 @@ class FleDirWriter(DataSourceWriter):
             # every row.
             os.replace(pending, final)
         elif not self.overwrite:
-            # APPEND without a staged lineage: a writer may legally
-            # reuse a segment name that a long-vacuumed compaction once
-            # minted (writer names are pid-scoped, merged names are
-            # million-aligned — but pids recycle and tables outlive
-            # both).  A stale lineage entry under that name would make
+            # APPEND without a staged lineage: a caller picking raw
+            # seg_ids may legally reuse a segment name that a
+            # long-vacuumed compaction once minted (the package's own
+            # writers name above every committed id, and so never do).
+            # A stale lineage entry under that name would make
             # the stream classify the genuinely NEW file as an
             # already-processed merge and silently drop its rows, so
             # evict those keys BEFORE the renames make the new names
@@ -2455,16 +2485,13 @@ def register_fledir(spark) -> None:
         pass
 
 
-def write_fledir(frame, columns, path, mode="overwrite", *, seg_base=0,
-                 **writer_options) -> None:
-    """Encode `frame` into `.fle` segments on the executors (one per
-    Arrow batch, inside `mapInPandas`) and commit them to `path` through
-    the fledir writer.  `columns` lists ``(name, cast, hint)`` per stored
-    column: `cast` is a numpy dtype applied to the batch values (None
-    keeps them), `hint` the :func:`encode_segment_columns` kind hint.
-    Segment ids are ``seg_base + partition·100000 + batch``; an append
-    that must not rewrite earlier segments passes a disjoint
-    `seg_base`.  `writer_options` become fledir options (None dropped)."""
+def _encode_frame(frame, columns, base: int):
+    """`frame` → ``(seg_id, payload)`` rows, the input of the fledir
+    writer: one `.fle` segment per Arrow batch, encoded on the executors
+    inside `mapInPandas`.  `columns` lists ``(name, cast, hint)`` per
+    stored column: `cast` is a numpy dtype applied to the batch values
+    (None keeps them), `hint` the :func:`encode_segment_columns` kind
+    hint.  Segment ids are ``base + partition·100000 + batch``."""
     import pandas as _pd
 
     @trims
@@ -2478,12 +2505,23 @@ def write_fledir(frame, columns, path, mode="overwrite", *, seg_base=0,
                 v = pdf[name].to_numpy()
                 cols.append((name, v if cast is None else v.astype(cast), hint))
             yield _pd.DataFrame({
-                "seg_id": [seg_base + pid * 100_000 + i],
+                "seg_id": [base + pid * 100_000 + i],
                 "payload": [encode_segment_columns(cols)],
             })
 
+    return frame.mapInPandas(encode, schema="seg_id long, payload binary")
+
+
+def write_fledir(
+    frame, columns, path, mode="overwrite", **writer_options
+) -> None:
+    """Encode `frame` into `.fle` segments (:func:`_encode_frame`)
+    and commit them to `path` through the fledir writer.  Segment ids
+    start at :func:`fresh_seg_base` in every mode, so neither an append
+    nor an overwrite renames onto a committed name.  `writer_options`
+    become fledir options (None dropped)."""
     w = (
-        frame.mapInPandas(encode, schema="seg_id long, payload binary")
+        _encode_frame(frame, columns, fresh_seg_base(path))
         .write.format("fledir")
         .mode(mode)
         .option("path", path)
@@ -2962,18 +3000,16 @@ def materialize_fle_history_dir(spark, sf_dir: str) -> str:
             F.col("l_quantity").cast("long").alias("l_quantity"),
             "l_shipdate",
         )
-        # the append phase offsets its segment ids: a reused name would
-        # REWRITE a gen-1 segment instead of extending the table
-        for mode, seg_base, pred in (
-            ("overwrite", 0, F.col("l_shipdate") < "1997-01-01"),
-            ("append", 10_000, F.col("l_shipdate") >= "1997-01-01"),
+        for mode, pred in (
+            ("overwrite", F.col("l_shipdate") < "1997-01-01"),
+            ("append", F.col("l_shipdate") >= "1997-01-01"),
         ):
             frame = (
                 base.filter(pred)
                 .select("l_returnflag", "l_quantity")
                 .repartition(4)
             )
-            write_fledir(frame, _FLAG_QTY, out, mode, seg_base=seg_base)
+            write_fledir(frame, _FLAG_QTY, out, mode)
         compact_fledir(spark, out)
 
     return _fle_asset(spark, sf_dir, "fle_history", build)

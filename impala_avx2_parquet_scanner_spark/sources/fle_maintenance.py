@@ -1,4 +1,4 @@
-"""fledir maintenance: small-segment compaction.
+"""fledir maintenance: compaction, merge, delete, retention and vacuum.
 
 A streaming or micro-batched writer leaves a fledir table as thousands
 of tiny segments — each one a manifest entry, a file open, a header
@@ -40,6 +40,18 @@ block-size file management, SURVEY §2A #17).
   (concatenation in manifest order preserves a sorted layout's global
   order within each bin).
 
+Compaction, MERGE and DELETE are one segment rewrite with different
+transforms: :func:`_rewrite_segments` is the only job that rewrites
+committed segments.  It names the new segments from
+``fresh_seg_base`` (never a committed name), parses each group of
+sources in a Spark task of its own, encodes the caller's transform of them,
+adds any insert segments through ``write_fledir``'s encoder, and
+commits everything as one append with the sources retired.  MERGE and
+DELETE pick their candidate segments with one metadata probe
+(:func:`_dml_candidates`: the scan's own manifest-stats pruning, then
+the bloom sidecars) and drop matched rows with one exact matcher
+(:func:`_conjunct_rows`).
+
 The exact decode→re-encode round trip is :func:`segment_reencode_columns`:
 for every column kind it reconstructs precisely the ``(name, values,
 kind_hint)`` input :func:`encode_segment_columns` expects, including the
@@ -48,6 +60,7 @@ pinned by tests against every kind).
 """
 from __future__ import annotations
 
+import functools
 import json
 import os
 import struct
@@ -59,15 +72,26 @@ from impala_avx2_parquet_scanner_spark.sources import fle_kinds, sealed_dir
 from impala_avx2_parquet_scanner_spark.sources.fle_kinds import null_cells
 from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
     _FLAG_QTY,
+    FleDirReader,
     ParsedSegment,
+    _encode_frame,
     _fle_asset,
     _manifest_entries,
+    _read_lineage,
     _table,
+    _write_lineage_pending,
+    bloom_eq_in_conjuncts,
+    bloom_sidecar_refutes,
     decode_segment_columns,
     discover_fledir_partitions,
     encode_segment_columns,
+    expire_fledir_snapshots,
+    fledir_row_count,
+    fresh_seg_base,
     parse_segment,
+    probe_first_segment,
     register_fledir,
+    segment_id,
     write_fledir,
 )
 
@@ -250,11 +274,9 @@ def plan_compaction_bins(
     ``target_rows`` keeps its own bin.  Metadata-only: reads ``_DONE``
     (and, for legacy stats-less manifests, 14 header bytes per
     file)."""
-    import re
-
     def order_key(item):
-        m = re.match(r"seg_(\d+)\.fle$", item[0])
-        return (0, int(m.group(1))) if m else (1, item[0])
+        sid = segment_id(item[0])
+        return (1, item[0]) if sid is None else (0, sid)
 
     entries = sorted(_manifest_entries(path), key=order_key)
     bins: list[list[str]] = []
@@ -272,103 +294,116 @@ def plan_compaction_bins(
     return bins
 
 
-def _compact_leaf(
-    spark, path: str, target_rows: int, sort_by: "str | None" = None,
-    zorder_by: "tuple[str, str] | None" = None,
-) -> dict:
-    import re
-
+def _rewrite_segments(
+    spark, path: str, groups: "list[list[str]]", transform, *,
+    inserts=None, bloomcols: "str | None" = None, lineage: bool = False,
+) -> None:
+    """The one segment-rewrite job of compaction, merge and delete.
+    Each group of committed segment names becomes ONE new segment: a
+    Spark task parses the group's files and encodes
+    ``transform(parsed_segments)`` (a column list for
+    :func:`encode_segment_columns`).  `inserts`, a ``(frame, columns)``
+    pair in :func:`write_fledir`'s column spec, encodes further new
+    segments into the same frame.  Everything lands in ONE atomic append
+    commit whose new names start at ``fresh_seg_base`` (a new name never
+    reuses a replaced one), with every grouped source RETIRED
+    (``retirenames``) — a crashed rewrite leaves the old table intact,
+    and the replaced generation stays time-travel readable until vacuum.
+    `lineage` stages merged name → source names before the job and has
+    the commit promote it (compaction's stream-safety map); `bloomcols`
+    builds sidecars for the new segments.  No group and no inserts: no
+    commit."""
     import pandas as _pd
 
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        _read_lineage,
-        _write_lineage_pending,
-    )
-
-    bins = plan_compaction_bins(path, target_rows)
-    multi = [b for b in bins if len(b) > 1]
-    n_before = sum(len(b) for b in bins)
-    report = {
-        "path": path,
-        "files_before": n_before,
-        "files_after": n_before,
-        "files_retired": 0,
-        "compacted": False,
-    }
-    if not multi:  # every bin is a single file: no-op
-        return report
-
-    # INCREMENTAL: only multi-file bins are rewritten (review finding —
-    # re-encoding a 10M-row segment that is already at target size made
-    # every maintenance cycle O(table) instead of O(new data)); kept
-    # files stay untouched in the manifest via the append-mode commit,
-    # and the merged-away sources leave it through the writer's
-    # `retirenames` contract (retired, not deleted — stream replay).
-    bins = multi
-
-    # GENERATION-FRESH merged names: new seg ids start above every id
-    # the directory has ever used, so a merged file can never reuse a
-    # replaced file's name (a stream's offset is a name SET — a reused
-    # name would silently alias old and new data)
-    max_id = -1
-    for name, _ in _manifest_entries(path):
-        m = re.match(r"seg_(\d+)\.fle$", name)
-        if m:
-            max_id = max(max_id, int(m.group(1)))
-    base = (max_id // 1_000_000 + 1) * 1_000_000
-    names = [f"seg_{base + i}.fle" for i in range(len(bins))]
-    sources = sorted({n for b in bins for n in b})
-
-    # stage the stream-safety lineage BEFORE the job: each merged name
-    # maps to its immediate source names, and prior generations' entries
-    # are kept so a checkpoint holding any generation's names still
-    # resolves (the stream's covered() recursion).  The writer's commit
-    # promotes `.pending` to `_LINEAGE` atomically BEFORE the merged
-    # names appear; a crashed job leaves it inert.
-    lineage = _read_lineage(path)
-    for nm, b in zip(names, bins):
-        lineage[nm] = sorted(b)
-    _write_lineage_pending(path, lineage)
+    if not groups and inserts is None:
+        return
+    base = fresh_seg_base(path)
+    if lineage:
+        # staged BEFORE the job: each merged name maps to its immediate
+        # source names, and prior generations' entries are kept so a
+        # checkpoint holding any generation's names still resolves (the
+        # stream's covered() recursion).  The commit promotes `.pending`
+        # to `_LINEAGE` atomically BEFORE the merged names appear; a
+        # crashed job leaves it inert.
+        staged = _read_lineage(path)
+        for i, g in enumerate(groups):
+            staged[f"seg_{base + i}.fle"] = sorted(g)
+        _write_lineage_pending(path, staged)
 
     @trims
     def rewrite(batches):
         for pdf in batches:
-            for _, row in pdf.iterrows():
+            for seg_id, paths in zip(pdf["seg_id"], pdf["paths"]):
                 segs = []
-                for p in row["paths"]:
+                for p in paths:
                     with open(p, "rb") as fh:
                         segs.append(parse_segment(fh.read()))
-                merged = merge_segments_columns(segs)
-                if zorder_by is not None:
-                    merged = zorder_merged_columns(merged, *zorder_by)
-                elif sort_by is not None:
-                    merged = sort_merged_columns(merged, sort_by)
-                payload = encode_segment_columns(merged)
-                yield _pd.DataFrame(
-                    {"seg_id": [int(row["seg_id"])], "payload": [payload]}
-                )
+                yield _pd.DataFrame({
+                    "seg_id": [int(seg_id)],
+                    "payload": [encode_segment_columns(transform(segs))],
+                })
 
     register_fledir(spark)
-    (
+    frame = (
         spark.createDataFrame(
             [
-                (base + i, [os.path.join(path, n) for n in b])
-                for i, b in enumerate(bins)
+                (base + i, [os.path.join(path, n) for n in g])
+                for i, g in enumerate(groups)
             ],
             "seg_id long, paths array<string>",
         )
-        .repartition(max(len(bins), 1))
+        .repartition(max(len(groups), 1))
         .mapInPandas(rewrite, schema="seg_id long, payload binary")
-        .write.format("fledir")
+    )
+    if inserts is not None:
+        frame = frame.unionByName(
+            _encode_frame(*inserts, base + len(groups))
+        )
+    retired = sorted({n for g in groups for n in g})
+    w = (
+        frame.write.format("fledir")
         .mode("append")
         .option("path", path)
-        .option("promotelineage", "true")
-        .option("retirenames", json.dumps(sources))
-        .save()
+        .option("retirenames", json.dumps(retired))
     )
-    report["files_after"] = n_before - len(sources) + len(bins)
-    report["files_retired"] = len(sources)
-    report["compacted"] = True
+    if lineage:
+        w = w.option("promotelineage", "true")
+    if bloomcols:
+        w = w.option("bloomcols", bloomcols)
+    w.save()
+
+
+def _compact_leaf(
+    spark, path: str, target_rows: int, sort_by: "str | None" = None,
+    zorder_by: "tuple[str, str] | None" = None,
+) -> dict:
+    bins = plan_compaction_bins(path, target_rows)
+    n_before = sum(len(b) for b in bins)
+    # INCREMENTAL: only multi-file bins are rewritten (review finding —
+    # re-encoding a 10M-row segment that is already at target size made
+    # every maintenance cycle O(table) instead of O(new data)); kept
+    # files stay untouched in the manifest via the append-mode commit
+    bins = [b for b in bins if len(b) > 1]
+    n_sources = sum(len(b) for b in bins)
+    report = {
+        "path": path,
+        "files_before": n_before,
+        "files_after": n_before - n_sources + len(bins),
+        "files_retired": n_sources,
+        "compacted": bool(bins),
+    }
+    if not bins:  # every bin is a single file: no-op
+        return report
+
+    def merged(segs):
+        cols = merge_segments_columns(segs)
+        if zorder_by is not None:
+            return zorder_merged_columns(cols, *zorder_by)
+        if sort_by is not None:
+            return sort_merged_columns(cols, sort_by)
+        return cols
+
+    _rewrite_segments(spark, path, bins, merged, lineage=True)
     return report
 
 
@@ -432,10 +467,6 @@ def _vacuum_one_leaf(leaf: str) -> int:
     snapshots those files were keeping readable (a timeline must never
     advertise a generation a read would fail on); → count removed.
     Module level so the distributed path can ship it to executors."""
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        expire_fledir_snapshots,
-    )
-
     removed = 0
     for f in os.listdir(leaf):
         if f.endswith(".retired"):
@@ -583,10 +614,6 @@ def _expire_one_leaf(leaf: str, root: "str | None" = None) -> int:
     level so the distributed path can ship it to executors; the
     unseal→delete ordering lives INSIDE the per-leaf unit, so the
     fan-out preserves it."""
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        fledir_row_count,
-    )
-
     rows = fledir_row_count(leaf)
     done = os.path.join(leaf, sealed_dir.DONE)
     if os.path.exists(done):
@@ -679,8 +706,6 @@ def expire_fledir_partitions(
             expired.append(leaf)
         else:
             kept += 1
-    import functools
-
     rows_dropped = _per_leaf_job(
         spark, expired, functools.partial(_expire_one_leaf, root=path)
     )
@@ -801,11 +826,12 @@ def merge_fledir(
     refutes overlapping-but-absent ones — the same two tiers the read
     path prunes with, reused to bound WRITE amplification: a merge
     touching k segments rewrites k segments, not the table.  The
-    rewrite and the insert encode both run as distributed Arrow-batch
-    jobs, and the whole merge lands in ONE atomic append commit
-    (rewritten + inserted segments visible together; replaced segments
-    RETIRED, so the pre-merge generation stays time-travel readable
-    until vacuum, and a crashed merge leaves the old table intact).
+    rewrite and the insert encode run as one distributed Arrow-batch
+    job (:func:`_rewrite_segments`), and the whole merge lands in ONE
+    atomic append commit (rewritten + inserted segments visible
+    together; replaced segments RETIRED, so the pre-merge generation
+    stays time-travel readable until vacuum, and a crashed merge leaves
+    the old table intact).
 
     Streaming caveat (Delta parity): a checkpointed stream tailing the
     directory treats rewritten segments as new files and will re-emit
@@ -815,15 +841,6 @@ def merge_fledir(
 
     Returns {segments_rewritten, segments_untouched, rows_matched,
     rows_inserted}."""
-    import bisect
-
-    import pandas as _pd
-
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        fledir_row_count,
-        probe_first_segment,
-    )
-
     part = discover_fledir_partitions(path)
     if part is not None:
         return _merge_partitioned_root(
@@ -860,154 +877,24 @@ def merge_fledir(
             "fledir: duplicate keys in the update set — last-write "
             "order would be nondeterministic"
         )
-    ks = sorted(keys)
 
-    # ---- metadata probe: which committed segments can hold a key ----
-    import json as _json
-
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        _hash64_bytes,
-        _splitmix64,
-        bloom_sidecar_refutes_hashed,
-    )
-
-    # hash the key set ONCE per hash domain (review finding: hashing
-    # it anew inside every segment's probe made the driver-side scan
-    # O(keys × segments)); a key type outside both domains simply
-    # skips the bloom tier — min/max still bounds the rewrite
-    key_hashes: "tuple[str, list[int]] | None" = None
-    if all(
-        isinstance(k, int) and not isinstance(k, bool)
-        and -(1 << 63) <= k < (1 << 63)
-        for k in ks
-    ):
-        key_hashes = ("i64", [
-            int(h) for h in _splitmix64(
-                np.array(ks, dtype=np.int64).astype(np.uint64)
-            )
-        ])
-    elif all(isinstance(k, str) for k in ks):
-        key_hashes = ("str", [
-            int(h) for h in _hash64_bytes([k.encode() for k in ks])
-        ])
-
-    entries = _manifest_entries(path)
-    affected: list[str] = []
-    untouched = 0
-    for name, stats_json in entries:
-        hit = True
-        if stats_json:
-            st = _json.loads(stats_json)
-            e = st.get(key)
-            if e is not None:
-                if e.get("min") is None:
-                    hit = False  # all-NULL keys: eq never matches
-                else:
-                    mn = fle_kinds.stat_to_value(e, e["min"])
-                    mx = fle_kinds.stat_to_value(e, e["max"])
-                    i = bisect.bisect_left(ks, mn)
-                    hit = i < len(ks) and ks[i] <= mx
-        if hit and key_hashes is not None:
-            bf = os.path.join(path, name + ".bf")
-            if os.path.exists(bf) and bloom_sidecar_refutes_hashed(
-                bf, key, key_hashes[0], key_hashes[1]
-            ):
-                hit = False
-        if hit:
-            affected.append(name)
-        else:
-            untouched += 1
-
+    # a stored row is replaced exactly when its key is IN the update
+    # set: delete's probe picks the segments, delete's matcher the rows
+    conjunct = (key, "in", keys)
+    affected, untouched = _dml_candidates(path, [conjunct])
+    matched = _prepared([conjunct])
     rows_before = fledir_row_count(path)
-
-    # ---- generation-fresh ids (same rule as compaction) ----
-    import re as _re
-
-    max_id = -1
-    for name, _ in entries:
-        m = _re.match(r"seg_(\d+)\.fle$", name)
-        if m:
-            max_id = max(max_id, int(m.group(1)))
-    base = (max_id // 1_000_000 + 1) * 1_000_000
-
-    # ---- encode hints for the INSERT segments: pin the kinds that
-    # cannot be inferred from arrow-decoded pandas values ----
-    hints = {c.name: c.spec.insert_hint(c) for c in first.columns}
-
-    key_set = set(keys)
-
-    @trims
-    def rewrite(batches):
-        from impala_avx2_parquet_scanner_spark.sources.fle_maintenance import (
-            segment_reencode_columns,
-        )
-
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                with open(row["path_"], "rb") as fh:
-                    seg = parse_segment(fh.read())
-                cols = segment_reencode_columns(seg)
-                kvals = next(v for n2, v, _h in cols if n2 == key)
-                mask = np.array(
-                    [v not in key_set for v in kvals], dtype=bool
-                )
-                filtered = [
-                    (n2, np.asarray(v)[mask], h) for n2, v, h in cols
-                ]
-                yield _pd.DataFrame(
-                    {
-                        "seg_id": [int(row["seg_id"])],
-                        "payload": [encode_segment_columns(filtered)],
-                    }
-                )
-
-    @trims
-    def encode_inserts(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for i, pdf in enumerate(batches):
-            cols = []
-            for n2 in stored_cols:
-                v = pdf[n2].to_numpy()
-                h = hints[n2]
-                cols.append((n2, v, h) if h is not None else (n2, v))
-            yield _pd.DataFrame(
-                {
-                    "seg_id": [base + 500_000 + pid * 1_000 + i],
-                    "payload": [encode_segment_columns(cols)],
-                }
-            )
-
-    register_fledir(spark)
-    rewritten_df = (
-        spark.createDataFrame(
-            [
-                (base + i, os.path.join(path, n))
-                for i, n in enumerate(affected)
-            ],
-            "seg_id long, path_ string",
-        )
-        .repartition(max(len(affected), 1))
-        .mapInPandas(rewrite, schema="seg_id long, payload binary")
+    _rewrite_segments(
+        spark, path, [[n] for n in affected],
+        lambda segs: _drop_matching(segs[0], matched),
+        inserts=(
+            updates.select(*stored_cols).repartition(
+                max(1, -(-n_up // rows_per_segment))
+            ),
+            [(c.name, None, c.spec.insert_hint(c)) for c in first.columns],
+        ),
+        bloomcols=bloomcols,
     )
-    n_parts = max(1, -(-n_up // rows_per_segment))
-    inserts_df = (
-        updates.select(*stored_cols)
-        .repartition(n_parts)
-        .mapInPandas(encode_inserts, schema="seg_id long, payload binary")
-    )
-    w = (
-        rewritten_df.unionByName(inserts_df)
-        .write.format("fledir")
-        .mode("append")
-        .option("path", path)
-        .option("retirenames", _json.dumps(affected))
-    )
-    if bloomcols:
-        w = w.option("bloomcols", bloomcols)
-    w.save()
-
     rows_after = fledir_row_count(path)
     return {
         "path": path,
@@ -1066,11 +953,50 @@ _DELETE_OPS = {
 }
 
 
+class _InList:
+    """An IN literal list normalized once for every segment it is
+    matched against: NULLs are dropped when it is built (they never
+    match); the set for object lanes, and per column dtype the array of
+    the literals that dtype represents EXACTLY, are built at first use.
+    A literal the dtype cannot represent can never match, so it is
+    dropped; CASTING it is not correct (np.isin with dtype=int64 would
+    truncate 1.5 → 1 and silently over-match; review finding)."""
+
+    def __init__(self, values):
+        self.values = [v for v in values if v is not None]
+        self._typed: dict = {}
+
+    @functools.cached_property
+    def set(self) -> set:
+        return set(self.values)
+
+    def typed(self, arr: np.ndarray) -> np.ndarray:
+        """The literals as an array of `arr`'s dtype."""
+        if arr.dtype not in self._typed:
+            if arr.dtype.kind == "M":
+                vv = [np.datetime64(v) for v in self.values]
+            elif arr.dtype.kind in ("i", "u"):
+                vv = [
+                    int(v) for v in self.values
+                    if not isinstance(v, bool) and (
+                        isinstance(v, (int, np.integer))
+                        or (isinstance(v, float) and v.is_integer())
+                    )
+                ]
+            else:
+                vv = self.values
+            self._typed[arr.dtype] = np.asarray(vv, dtype=arr.dtype)
+        return self._typed[arr.dtype]
+
+
 def _conjunct_rows(vals, op: str, value, n: int) -> np.ndarray:
     """One (column OP literal) conjunct evaluated EXACTLY on decoded
     values → boolean matched-rows vector.  Kleene semantics: a NULL
     lane never matches a comparison (only is_null does) — the same
-    3VL the read kernels implement on validity words."""
+    3VL the read kernels implement on validity words.  An IN literal
+    may come as an :class:`_InList`, normalized once for many calls;
+    membership is then O(rows) per call on object lanes and one
+    `np.isin` on typed ones."""
     arr = np.asarray(vals)
     if arr.dtype == object:
         null = null_cells(arr)
@@ -1084,7 +1010,11 @@ def _conjunct_rows(vals, op: str, value, n: int) -> np.ndarray:
         return null
     if op == "is_not_null":
         return ~null
-    if arr.dtype.kind == "M" and not isinstance(value, np.datetime64):
+    if op == "in" and not isinstance(value, _InList):
+        value = _InList(value)
+    if arr.dtype.kind == "M" and op != "in" and not isinstance(
+        value, np.datetime64
+    ):
         value = np.datetime64(value)
     out = np.zeros(n, dtype=bool)
     if arr.dtype == object:
@@ -1092,50 +1022,22 @@ def _conjunct_rows(vals, op: str, value, n: int) -> np.ndarray:
         # exact Python compares, NULLs skipped
         import operator as _op
 
-        ops = {
-            "eq": _op.eq, "lt": _op.lt, "le": _op.le,
-            "gt": _op.gt, "ge": _op.ge,
-        }
+        live = np.flatnonzero(~null)
         if op == "in":
-            vset = set(v for v in value if v is not None)
-            for i in np.flatnonzero(~null):
-                out[i] = arr[i] in vset
+            out[live] = [arr[i] in value.set for i in live]
         else:
-            f = ops[op]
-            for i in np.flatnonzero(~null):
-                out[i] = bool(f(arr[i], value))
+            f = {
+                "eq": _op.eq, "lt": _op.lt, "le": _op.le,
+                "gt": _op.gt, "ge": _op.ge,
+            }[op]
+            out[live] = [bool(f(arr[i], value)) for i in live]
         return out
     import warnings
 
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")  # NaT comparisons
         if op == "in":
-            # EXACT membership: a literal the column dtype cannot
-            # represent exactly can never match — dropping it is
-            # correct, CASTING it is not (np.isin with dtype=int64
-            # would truncate 1.5 → 1 and silently over-delete;
-            # review finding)
-            vv = []
-            for v in value:
-                if v is None:
-                    continue
-                if arr.dtype.kind == "M":
-                    vv.append(np.datetime64(v))
-                elif arr.dtype.kind in ("i", "u"):
-                    if isinstance(v, bool):
-                        continue
-                    if isinstance(v, (int, np.integer)):
-                        vv.append(int(v))
-                    elif (
-                        isinstance(v, float) and float(v).is_integer()
-                    ):
-                        vv.append(int(v))
-                    # fractional literal: no int lane equals it
-                else:
-                    vv.append(v)
-            if not vv:
-                return out
-            res = np.isin(arr, np.asarray(vv, dtype=arr.dtype))
+            res = np.isin(arr, value.typed(arr))
         else:
             res = {
                 "eq": arr == value, "lt": arr < value,
@@ -1178,16 +1080,6 @@ def delete_fledir(
     replay to checkpointed streams.
 
     Returns {segments_rewritten, segments_untouched, rows_deleted}."""
-    import json as _json
-
-    import pandas as _pd
-
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        FleDirReader,
-        bloom_sidecar_refutes,
-        fledir_row_count,
-    )
-
     if not conjuncts:
         raise ValueError(
             "fledir: delete needs at least one conjunct (a full-table "
@@ -1239,101 +1131,13 @@ def delete_fledir(
             total["rows_deleted"] += rep["rows_deleted"]
         return total
 
-    r = FleDirReader({"path": path})
-    probe = r._column_kinds()
-    for col, _op2, _v in conjuncts:
-        if col not in probe:
-            raise KeyError(
-                f"fledir: delete column {col!r} not stored in {path}"
-            )
-    # stats-tier pruning ONLY when every conjunct passes the reader's
-    # own type-directed pushability vetting (the refutation logic is
-    # shared with the scan; feeding it a literal it would never accept
-    # could refute wrongly) — otherwise rewrite everything
-    if all(r._literal_pushable(c, o, v) for c, o, v in conjuncts):
-        r.pushed = list(conjuncts)
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        bloom_eq_in_conjuncts,
-    )
-
-    all_names = {n for n, _ in _manifest_entries(path)}
-    candidates = [n for n, _ in r._manifest_files(path)]
-    bf_conj = bloom_eq_in_conjuncts(conjuncts)  # built ONCE (review)
-    affected = []
-    for name in candidates:
-        bf = os.path.join(path, name + ".bf")
-        if (
-            bf_conj
-            and os.path.exists(bf)
-            and bloom_sidecar_refutes(bf, bf_conj)
-        ):
-            continue
-        affected.append(name)
-    untouched = len(all_names) - len(affected)
+    affected, untouched = _dml_candidates(path, conjuncts)
+    matched = _prepared(conjuncts)
     rows_before = fledir_row_count(path)
-
-    import re as _re
-
-    max_id = -1
-    for name in all_names:
-        m = _re.match(r"seg_(\d+)\.fle$", name)
-        if m:
-            max_id = max(max_id, int(m.group(1)))
-    base = (max_id // 1_000_000 + 1) * 1_000_000
-
-    conj = list(conjuncts)
-
-    @trims
-    def rewrite(batches):
-        from impala_avx2_parquet_scanner_spark.sources.fle_maintenance import (
-            _conjunct_rows,
-            segment_reencode_columns,
-        )
-
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                with open(row["path_"], "rb") as fh:
-                    seg = parse_segment(fh.read())
-                cols = segment_reencode_columns(seg)
-                matched = np.ones(seg.n, dtype=bool)
-                for c, o, v in conj:
-                    vals = next(
-                        vv for nm, vv, _h in cols if nm == c
-                    )
-                    matched &= _conjunct_rows(vals, o, v, seg.n)
-                keep = ~matched
-                filtered = [
-                    (nm, np.asarray(vv)[keep], h)
-                    for nm, vv, h in cols
-                ]
-                yield _pd.DataFrame(
-                    {
-                        "seg_id": [int(row["seg_id"])],
-                        "payload": [encode_segment_columns(filtered)],
-                    }
-                )
-
-    register_fledir(spark)
-    if affected:
-        w = (
-            spark.createDataFrame(
-                [
-                    (base + i, os.path.join(path, n))
-                    for i, n in enumerate(affected)
-                ],
-                "seg_id long, path_ string",
-            )
-            .repartition(len(affected))
-            .mapInPandas(rewrite, schema="seg_id long, payload binary")
-            .write.format("fledir")
-            .mode("append")
-            .option("path", path)
-            .option("retirenames", _json.dumps(affected))
-        )
-        if bloomcols:
-            w = w.option("bloomcols", bloomcols)
-        w.save()
-
+    _rewrite_segments(
+        spark, path, [[n] for n in affected],
+        lambda segs: _drop_matching(segs[0], matched), bloomcols=bloomcols,
+    )
     rows_after = fledir_row_count(path)
     return {
         "path": path,
@@ -1341,6 +1145,54 @@ def delete_fledir(
         "segments_untouched": untouched,
         "rows_deleted": rows_before - rows_after,
     }
+
+
+def _dml_candidates(path: str, conjuncts: "list[tuple]") -> tuple:
+    """The committed segments of a flat fledir that may hold a row
+    matching ALL `conjuncts`, from metadata alone → (names, count of the
+    others).  The read path's own two tiers: the manifest stats
+    (`FleDirReader._manifest_files` with the conjuncts pushed), then the
+    bloom sidecars for eq/in conjuncts.  Stats pruning only when every
+    conjunct passes the reader's type-directed pushability vetting (the
+    refutation logic is shared with the scan; feeding it a literal it
+    would never accept could refute wrongly) — otherwise every segment
+    is a candidate; correctness never rests on the stats."""
+    r = FleDirReader({"path": path})
+    stored = r._column_kinds()
+    for col, _op, _v in conjuncts:
+        if col not in stored:
+            raise KeyError(f"fledir: column {col!r} not stored in {path}")
+    if all(r._literal_pushable(c, o, v) for c, o, v in conjuncts):
+        r.pushed = list(conjuncts)
+    bf_conj = bloom_eq_in_conjuncts(conjuncts)  # hashed ONCE
+    affected = []
+    for name, _rows in r._manifest_files(path):
+        bf = os.path.join(path, name + ".bf")
+        if not (
+            bf_conj and os.path.exists(bf)
+            and bloom_sidecar_refutes(bf, bf_conj)
+        ):
+            affected.append(name)
+    return affected, len(_manifest_entries(path)) - len(affected)
+
+
+def _prepared(conjuncts: "list[tuple]") -> "list[tuple]":
+    """`conjuncts` with each IN list normalized ONCE (:class:`_InList`),
+    so a job matching many segments does not redo it per segment."""
+    return [
+        (c, o, _InList(v) if o == "in" else v) for c, o, v in conjuncts
+    ]
+
+
+def _drop_matching(seg: ParsedSegment, conjuncts: "list[tuple]") -> list:
+    """`seg`'s re-encode column list without the rows matching ALL
+    `conjuncts` (exact Kleene semantics, :func:`_conjunct_rows`)."""
+    cols = segment_reencode_columns(seg)
+    values = {name: v for name, v, _h in cols}
+    matched = np.ones(seg.n, dtype=bool)
+    for c, o, v in conjuncts:
+        matched &= _conjunct_rows(values[c], o, v, seg.n)
+    return [(name, np.asarray(v)[~matched], h) for name, v, h in cols]
 
 
 def materialize_fle_delete_dir(spark, sf_dir: str) -> str:
@@ -1380,10 +1232,6 @@ def _append_leaf_rows(
     of a (possibly not-yet-existing) leaf, kinds pinned from a sibling
     leaf's first segment so the new leaf's schema matches the table's.
     One atomic append commit; → rows written."""
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        probe_first_segment,
-    )
-
     first = probe_first_segment(template_leaf)
     if first is None:
         raise ValueError(
@@ -1508,9 +1356,7 @@ def _segments_df(spark, path: str, names: "list[str]"):
     decode and the batch reader's Arrow build (distributed, one task
     group over the files)."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        FleDirReader,
         _segment_ddl,
-        probe_first_segment,
     )
 
     first = probe_first_segment(path)
@@ -1584,7 +1430,6 @@ def fledir_changes(
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         _history_generations,
         _lineage_covered,
-        _read_lineage,
     )
 
     if discover_fledir_partitions(path) is not None:

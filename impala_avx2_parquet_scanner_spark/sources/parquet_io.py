@@ -17,7 +17,6 @@ file schemas against the table schema with missing-column→NULL semantics
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -80,17 +79,28 @@ def write_parquet(
     writer.parquet(path)
 
 
+class SessionMemo:
+    """Per-session dicts kept ON the session object, under the attribute
+    `attr`.  Each memoized frame holds its session, so a memo keyed by
+    the session anywhere else (even weakly) would keep every session it
+    saw alive; on the session, memo and session form one cycle the
+    garbage collector frees together once the session is dropped."""
+
+    def __init__(self, attr: str):
+        self.attr = attr
+
+    def setdefault(self, spark: SparkSession, default: dict) -> dict:
+        return spark.__dict__.setdefault(self.attr, default)
+
+
 #: Per-session memo of resolved parquet relations, the catalog cache of
 #: this engine (Impala keeps file and schema metadata in its catalog for
 #: the same reason).  ``spark.read.parquet`` lists the paths and runs a
 #: Spark job to infer the schema from the footers on EVERY call; a
 #: DataFrame is an immutable logical plan, so one resolved frame serves
 #: every later read of unchanged files.  No data is cached: every action
-#: still scans the files.  The session keys are weak, but every frame
-#: holds its session, so an entry lives as long as this dict does.
-_RELATIONS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+#: still scans the files.
+_RELATIONS = SessionMemo("_spark_graft_relations")
 
 #: Session confs Spark reads when it CREATES a parquet relation: the
 #: source version (V1 file scan or V2), and how footer types map to the

@@ -17,7 +17,7 @@ import shutil
 import pytest
 
 import impala_avx2_parquet_scanner_spark as engine
-from impala_avx2_parquet_scanner_spark.catalog import _DERIVED, table
+from impala_avx2_parquet_scanner_spark.catalog import table
 from impala_avx2_parquet_scanner_spark.sources import parquet_io
 from impala_avx2_parquet_scanner_spark.sources.parquet_io import read_parquet
 
@@ -68,26 +68,6 @@ def test_table_memo_sees_rewritten_file(spark, sf_dir, tmp_path):
     assert after is not before
     assert n_before > 2 and after.count() == 2
     assert table(spark, str(alt), "region") is after
-
-
-def test_spread_memo_follows_no_spread_flag(spark, sf_dir, monkeypatch):
-    """Flipping SPARK_GRAFT_NO_SPREAD mid-session takes effect on the
-    next spread_table call: the opt-out returns the bare base table, not
-    the spread frame memoized before the flip, and clearing the flag
-    again reuses that memoized spread frame."""
-    from impala_avx2_parquet_scanner_spark.catalog import spread_table
-
-    monkeypatch.delenv("SPARK_GRAFT_NO_SPREAD", raising=False)
-    base = table(spark, sf_dir, "documents")
-    spread = spread_table(spark, sf_dir, "documents", "doc_id")
-    # the single-file fixture is below test parallelism, so it spreads
-    assert spread is not base
-
-    monkeypatch.setenv("SPARK_GRAFT_NO_SPREAD", "1")
-    assert spread_table(spark, sf_dir, "documents", "doc_id") is base
-
-    monkeypatch.delenv("SPARK_GRAFT_NO_SPREAD")
-    assert spread_table(spark, sf_dir, "documents", "doc_id") is spread
 
 
 def test_memoized_plan_not_data_cached(spark, sf_dir):
@@ -225,9 +205,43 @@ def test_memoized_results_match_uncached(spark, sf_dir, name, monkeypatch):
     assert with_memo == without
 
 
-def test_memo_scoped_weakly():
-    """Both memos are keyed weakly by session."""
-    import weakref
+def test_memo_dies_with_its_session(sf_dir):
+    """A session the caller dropped is freed together with the frames
+    both memos hold for it: after `stop()`, `del` and a collection, a
+    weakref to it is dead.  Runs in a fresh interpreter with its own
+    session, since the suite's session must live on.  pyspark itself
+    keeps the newest session in its `RDD.toDF` patch; the script drops
+    that reference first, so only the engine's references remain."""
+    import subprocess
+    import sys
+    import textwrap
+    from pathlib import Path
 
-    assert isinstance(parquet_io._RELATIONS, weakref.WeakKeyDictionary)
-    assert isinstance(_DERIVED, weakref.WeakKeyDictionary)
+    script = textwrap.dedent(f"""
+        import gc, sys, weakref
+        sys.path.insert(0, {str(Path(__file__).resolve().parent.parent)!r})
+        from pyspark import RDD
+        from pyspark.sql import SparkSession
+        from impala_avx2_parquet_scanner_spark.catalog import table
+        from impala_avx2_parquet_scanner_spark.sources.parquet_io import (
+            read_parquet,
+        )
+        spark = (SparkSession.builder.master("local[1]")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        path = {os.path.join(sf_dir, "region.parquet")!r}
+        assert read_parquet(spark, path) is read_parquet(spark, path)
+        assert table(spark, {sf_dir!r}, "events") is table(
+            spark, {sf_dir!r}, "events")
+        ref = weakref.ref(spark)
+        spark.stop()
+        del spark
+        del RDD.toDF
+        gc.collect()
+        print("alive" if ref() is not None else "freed")
+    """)
+    out = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split()[-1] == "freed"

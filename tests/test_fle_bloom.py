@@ -299,3 +299,31 @@ def test_probe_fails_open_on_truncated_and_null_field_sidecars(
         fh.write(b"FBF1" + _struct.pack("<I", len(hdr)) + hdr
                  + b"\x00" * 8)
     assert not bloom_sidecar_refutes(nullf, [("rid", [1])])
+
+
+def test_vector_probe_matches_scalar_reference():
+    """`_bloom_any` answers every hash set exactly as the per-hash
+    Python-integer probe (double hashing mod m) it replaced."""
+    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
+        _BF_K,
+        _bloom_any,
+        _bloom_words,
+        _splitmix64,
+    )
+
+    def maybe(words, m, h):
+        h1, h2 = h & (m - 1), (h >> 32) | 1
+        return all(
+            (int(words[((h1 + i * h2) & (m - 1)) >> 6])
+             >> (((h1 + i * h2) & (m - 1)) & 63)) & 1
+            for i in range(_BF_K)
+        )
+
+    rng = np.random.default_rng(5)
+    m = 1 << 10
+    words = _bloom_words(_splitmix64(rng.integers(0, 1 << 40, 60)), m)
+    for n in (1, 3, 50):
+        for _ in range(40):
+            hs = _splitmix64(rng.integers(0, 1 << 40, n))
+            want = any(maybe(words, m, int(h)) for h in hs)
+            assert _bloom_any(words, m, hs, _BF_K) == want

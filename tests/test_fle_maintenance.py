@@ -1234,3 +1234,63 @@ def test_stream_partitioned_root_compact_expire_exactly_once(
         for row in df.collect()
     }
     assert got == {t for t in committed if t[3] == 2}
+
+
+def test_one_segment_naming_rule_and_one_rewrite_job():
+    """Tripwire over the package's AST: segment ids are parsed and
+    minted only next to `fresh_seg_base` (no other module has a
+    `seg_(\\d+)` regex or `// 1_000_000` id arithmetic), no call passes
+    `seg_base=`, and only `write_fledir` and `_rewrite_segments` commit
+    through `.write.format("fledir")`."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / (
+        "impala_avx2_parquet_scanner_spark"
+    )
+    home = pkg / "sources" / "fle_datasource.py"
+    writers = {"write_fledir", "_rewrite_segments"}
+    offenders = []
+    for p in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(p.read_text())
+        where = p.relative_to(pkg.parent)
+        owner = {}
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for n in ast.walk(fn):
+                    owner.setdefault(id(n), fn.name)
+        for n in ast.walk(tree):
+            line = getattr(n, "lineno", 0)
+            if p != home and (
+                isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and "seg_(\\d+)" in n.value
+            ):
+                offenders.append(f"{where}:{line} seg_(\\d+) regex")
+            if p != home and (
+                isinstance(n, ast.BinOp)
+                and isinstance(n.op, ast.FloorDiv)
+                and isinstance(n.right, ast.Constant)
+                and n.right.value == 1_000_000
+            ):
+                offenders.append(f"{where}:{line} // 1_000_000")
+            if not isinstance(n, ast.Call):
+                continue
+            if any(k.arg == "seg_base" for k in n.keywords):
+                offenders.append(f"{where}:{line} seg_base=")
+            f = n.func
+            if (
+                isinstance(f, ast.Attribute)
+                and f.attr == "format"
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "write"
+                and n.args
+                and isinstance(n.args[0], ast.Constant)
+                and n.args[0].value == "fledir"
+                and owner.get(id(n)) not in writers
+            ):
+                offenders.append(
+                    f"{where}:{line} .write.format('fledir') in "
+                    f"{owner.get(id(n))}"
+                )
+    assert not offenders, offenders

@@ -284,3 +284,40 @@ def test_partitioned_merge_missing_keys_and_null_partition(
     )
     with pytest.raises(ValueError, match="non-NULL"):
         merge_fledir(spark, root, withnull, key="k")
+
+
+def test_merge_probe_converts_each_key_once(spark, tmp_path, monkeypatch):
+    """The driver probe of a 50k-key merge over 16 segments converts
+    each key into the stats domain once per (kind, scale), not once per
+    segment, and still picks exactly the segments whose key range holds
+    an update key."""
+    import pandas as pd
+
+    from impala_avx2_parquet_scanner_spark.sources import fle_kinds
+
+    path = str(tmp_path / "probe")
+    _write(spark, path, [
+        _seg(list(range(s * 10_000, s * 10_000 + 1000))) for s in range(16)
+    ])
+    keys = np.arange(50_000, dtype=np.int64)  # spans segments 0..4
+    updates = spark.createDataFrame(pd.DataFrame({
+        "k": keys, "tag": ["u"] * keys.size, "val": -1 - keys,
+    }))
+    kind = type(fle_kinds.for_stats({"min": 0, "max": 1}))
+    real = kind.value_of
+    calls = []
+
+    def counting(self, v, scale=0):
+        calls.append(v)
+        return real(self, v, scale)
+
+    monkeypatch.setattr(kind, "value_of", counting)
+    rep = merge_fledir(spark, path, updates, key="k")
+    monkeypatch.undo()
+    assert len(calls) <= keys.size  # one (kind, scale) pair
+    assert rep["segments_rewritten"] == 5
+    assert rep["segments_untouched"] == 11
+    assert rep["rows_matched"] == 5 * 1000
+    df = spark.read.format("fledir").option("path", path).load()
+    assert df.count() == 16 * 1000 + 45_000
+    assert df.filter("k < 50000 AND val >= 0").count() == 0

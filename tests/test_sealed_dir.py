@@ -23,7 +23,10 @@ from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
     FleDirReader,
     FleDirWriter,
     FleStreamReader,
+    _manifest_entries,
     encode_segment_columns,
+    fresh_seg_base,
+    write_fledir,
 )
 from impala_avx2_parquet_scanner_spark.sources.ppm_datasource import (
     PpmDirReader,
@@ -147,6 +150,54 @@ def test_killed_commit_shows_old_or_new_table_whole(
     fresh = stream_cls({"path": path})
     rows, _ = fresh.read(fresh.initialOffset())
     assert _values(rows) == table
+
+
+def test_write_fledir_overwrite_commits_fresh_names(spark, tmp_path):
+    """Two `write_fledir` overwrites of one path commit disjoint segment
+    names: the second never renames onto a name the first committed."""
+    path = str(tmp_path / "fle")
+    spec = [("v", np.int64, None)]
+    names = []
+    for lo in (0, 100):
+        frame = spark.range(lo, lo + 4, numPartitions=2).withColumnRenamed(
+            "id", "v"
+        )
+        write_fledir(frame, spec, path)
+        names.append({n for n, _ in _manifest_entries(path)})
+    assert names[0] and names[1] and not names[0] & names[1]
+    assert _batch(FleDirReader, path) == [100, 101, 102, 103]
+
+
+def test_killed_fresh_name_overwrite_leaves_old_table_whole(
+    tmp_path, monkeypatch
+):
+    """An overwrite whose names come from `fresh_seg_base`, killed
+    between its renames and the `_DONE` swap: no committed file was
+    renamed onto, so the batch reader returns the old table whole."""
+    path = str(tmp_path / "fle")
+
+    def write(values, overwrite):
+        base = fresh_seg_base(path)
+        rows = [_Seg(v) for v in values]
+        for i, r in enumerate(rows):
+            r.seg_id = base + i
+        return _write(FleDirWriter, lambda r: r, path, rows, overwrite)
+
+    w, msg = write([1, 2], overwrite=True)
+    w.commit([msg])
+    w, msg = write([98, 99], overwrite=True)
+    real = os.replace
+
+    def replace(src, dst):
+        if os.path.basename(dst) == sealed_dir.DONE:
+            raise _Killed
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(_Killed):
+        w.commit([msg])
+    monkeypatch.undo()
+    assert _batch(FleDirReader, path) == [1, 2]
 
 
 def test_small_avrodir_plans_one_partition(tmp_path):
