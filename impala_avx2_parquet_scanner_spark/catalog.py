@@ -37,8 +37,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 #: Per-session memo of the frames this module DERIVES from a base table
 #: (the `events` conversion, the spread).  Base tables themselves are

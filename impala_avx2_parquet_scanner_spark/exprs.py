@@ -55,10 +55,7 @@ def avg_dbl(col: Column, alias: str) -> Column:
     return (F.sum(col).cast("double") / F.count(F.lit(1))).alias(alias)
 
 
-# Oracle-side SQL fragments (DuckDB) mirroring the expressions above.
-SQL_DEC_PRICE = "CAST({c} AS DECIMAL(12,2))"
-SQL_ONE_MINUS = "CAST(1 - CAST({c} AS DECIMAL(3,2)) AS DECIMAL(4,2))"
-SQL_ONE_PLUS = "CAST(1 + CAST({c} AS DECIMAL(3,2)) AS DECIMAL(4,2))"
+# The oracle-side (DuckDB) SQL of disc_price above.
 SQL_DISC_PRICE = (
     "CAST(l_extendedprice AS DECIMAL(12,2))"
     " * CAST(1 - CAST(l_discount AS DECIMAL(3,2)) AS DECIMAL(4,2))"

@@ -33,16 +33,6 @@ def discounted_price(price: pd.Series, discount: pd.Series) -> pd.Series:
     return price * (1.0 - discount)
 
 
-@F.pandas_udf(StringType())
-@trims
-def price_band(price: pd.Series) -> pd.Series:
-    return pd.cut(
-        price,
-        bins=[-float("inf"), 1000.0, 3000.0, float("inf")],
-        labels=["low", "mid", "high"],
-    ).astype(str)
-
-
 @F.udf(StringType(), useArrow=False)
 def flag_status_rowwise(flag: str, status: str) -> str:
     """Row-at-a-time Python UDF — the slow path, present for surface

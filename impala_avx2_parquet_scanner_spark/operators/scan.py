@@ -567,11 +567,9 @@ def scan_fle_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle carries one row per returnflag per partition."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_dir,
-        register_fledir,
     )
 
     path = materialize_fle_dir(spark, sf_dir)
-    register_fledir(spark)
     df = spark.read.format("fledir").option("path", path).load()
     return df.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -621,11 +619,9 @@ def scan_fle_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw rows."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_dir,
-        register_fledir,
     )
 
     path = materialize_fle_dir(spark, sf_dir)
-    register_fledir(spark)
     df = (
         spark.read.format("fledir")
         .option("path", path)
@@ -683,11 +679,9 @@ def scan_fle_stat_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-segment InputPartition path."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_sorted_dir,
-        register_fledir,
     )
 
     path = materialize_fle_sorted_dir(spark, sf_dir)
-    register_fledir(spark)
     df = (
         spark.read.format("fledir")
         .option("path", path)
@@ -743,11 +737,9 @@ def scan_fle_chunk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-8 section)."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_chunked_dir,
-        register_fledir,
     )
 
     path = materialize_fle_chunked_dir(spark, sf_dir)
-    register_fledir(spark)
     df = (
         spark.read.format("fledir")
         .option("path", path)
@@ -799,11 +791,9 @@ def scan_fle_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
     one wrong offset anywhere flips sum, extrema, and count."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_signed_dir,
-        register_fledir,
     )
 
     path = materialize_fle_signed_dir(spark, sf_dir)
-    register_fledir(spark)
     df = (
         spark.read.format("fledir")
         .option("path", path)
@@ -855,11 +845,9 @@ def scan_fle_double(spark: SparkSession, sf_dir: str) -> DataFrame:
     max, and count."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_typed_dir,
-        register_fledir,
     )
 
     path = materialize_fle_typed_dir(spark, sf_dir)
-    register_fledir(spark)
     df = (
         # subset read schema: Python DSv2 relations don't receive
         # Catalyst's column pruning, so the query declares the two
@@ -927,12 +915,10 @@ def scan_fle_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle replays everything from raw parquet rows."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_typed_dir,
-        register_fledir,
     )
     from decimal import Decimal
 
     path = materialize_fle_typed_dir(spark, sf_dir)
-    register_fledir(spark)
     df = (
         # subset read schema (see scan_fle_double): only the four
         # consumed columns' plane sections decode
@@ -1001,11 +987,9 @@ def scan_fle_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     from raw parquet rows."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_part_dir,
-        register_fledir,
     )
 
     path = materialize_fle_part_dir(spark, sf_dir)
-    register_fledir(spark)
     df = (
         spark.read.format("fledir")
         .option("path", path)
@@ -1061,11 +1045,9 @@ def scan_fle_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
     conjunction from raw rows."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_dir,
-        register_fledir,
     )
 
     path = materialize_fle_dir(spark, sf_dir)
-    register_fledir(spark)
     df = (
         spark.read.format("fledir")
         .option("path", path)
@@ -1119,11 +1101,9 @@ def scan_fle_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     flips group counts."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_partitioned_dir,
-        register_fledir,
     )
 
     path = materialize_fle_partitioned_dir(spark, sf_dir)
-    register_fledir(spark)
     df = (
         spark.read.format("fledir")
         .option("path", path)
@@ -1215,11 +1195,9 @@ def scan_fle_multicolumn(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries one row per returnflag per partition."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_multi_dir,
-        register_fledir,
     )
 
     path = materialize_fle_multi_dir(spark, sf_dir)
-    register_fledir(spark)
     df = (
         spark.read.format("fledir")
         .option("path", path)
@@ -1276,11 +1254,9 @@ def scan_fle_dict_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end against the DuckDB oracle's raw parquet replay."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_docs_dir,
-        register_fledir,
     )
 
     path = materialize_fle_docs_dir(spark, sf_dir)
-    register_fledir(spark)
     df = (
         spark.read.format("fledir")
         # subset read schema: doc_id's plane sections never decode
@@ -1345,11 +1321,9 @@ def scan_fle_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's explicit CAST(NULL AS DOUBLE)."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_multi_dir,
-        register_fledir,
     )
 
     path = materialize_fle_multi_dir(spark, sf_dir)
-    register_fledir(spark)
     df = (
         spark.read.format("fledir")
         .schema(
@@ -1407,11 +1381,9 @@ def scan_fle_partitioned_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows — a leaf mispruned on either key flips group counts."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_two_key_dir,
-        register_fledir,
     )
 
     path = materialize_fle_two_key_dir(spark, sf_dir)
-    register_fledir(spark)
     df = (
         spark.read.format("fledir")
         .option("path", path)
@@ -1464,15 +1436,11 @@ def scan_fle_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive the rewrite); the DuckDB oracle replays from the original
     parquet rows — any row lost, duplicated, or corrupted by the
     decode→merge→re-encode cycle flips the counts."""
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        register_fledir,
-    )
     from impala_avx2_parquet_scanner_spark.sources.fle_maintenance import (
         materialize_fle_compact_dir,
     )
 
     path = materialize_fle_compact_dir(spark, sf_dir)
-    register_fledir(spark)
     df = (
         spark.read.format("fledir")
         .option("path", path)
@@ -1571,15 +1539,11 @@ def scan_fle_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     names; the DuckDB oracle replays the retention predicate
     (`YEAR(l_shipdate) >= 1997`) over the raw parquet rows — an
     over-expired or under-expired partition flips whole groups."""
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        register_fledir,
-    )
     from impala_avx2_parquet_scanner_spark.sources.fle_maintenance import (
         materialize_fle_retention_dir,
     )
 
     path = materialize_fle_retention_dir(spark, sf_dir)
-    register_fledir(spark)
     df = spark.read.format("fledir").option("path", path).load()
     return df.groupBy("ship_year").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1617,15 +1581,11 @@ def scan_fle_retention_multi(
     from the directory names; the DuckDB oracle replays the retention
     predicate over the raw parquet rows — an over- or under-expired
     leaf flips whole groups."""
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        register_fledir,
-    )
     from impala_avx2_parquet_scanner_spark.sources.fle_maintenance import (
         materialize_fle_retention_multi_dir,
     )
 
     path = materialize_fle_retention_multi_dir(spark, sf_dir)
-    register_fledir(spark)
     df = spark.read.format("fledir").option("path", path).load()
     return df.groupBy("l_linestatus", "ship_year").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1750,7 +1710,6 @@ def scan_fle_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     a vacuumed span fails loudly — an expired feed is not a feed."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_history_dir,
-        register_fledir,
     )
     from impala_avx2_parquet_scanner_spark.sources.fle_maintenance import (
         fledir_changes,
@@ -1759,7 +1718,6 @@ def scan_fle_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path_h = materialize_fle_history_dir(spark, sf_dir)
     path_d = materialize_fle_delete_dir(spark, sf_dir)
-    register_fledir(spark)
 
     def agg(df):
         return df.groupBy("_change_type", "l_returnflag").agg(
@@ -1808,11 +1766,9 @@ def scan_fle_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop flips the group counts."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_stream_sink_dir,
-        register_fledir,
     )
 
     path = materialize_fle_stream_sink_dir(spark, sf_dir)
-    register_fledir(spark)
     df = spark.read.format("fledir").option("path", path).load()
     return df.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1855,15 +1811,11 @@ def scan_fle_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``NOT (qty >= 45 AND flag = 'R')`` over raw parquet: an
     over-deleted or leaked row flips counts, sums, or the surviving
     per-group maximum."""
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        register_fledir,
-    )
     from impala_avx2_parquet_scanner_spark.sources.fle_maintenance import (
         materialize_fle_delete_dir,
     )
 
     path = materialize_fle_delete_dir(spark, sf_dir)
-    register_fledir(spark)
     df = spark.read.format("fledir").option("path", path).load()
     return df.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1919,15 +1871,11 @@ def scan_fle_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet — a lost update, a leaked old row, or an over-eager
     rewrite flips group sums.  The decimal price keeps every sum
     exact; the final cast to DOUBLE is presentation only."""
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        register_fledir,
-    )
     from impala_avx2_parquet_scanner_spark.sources.fle_maintenance import (
         materialize_fle_merge_dir,
     )
 
     path = materialize_fle_merge_dir(spark, sf_dir)
-    register_fledir(spark)
     df = spark.read.format("fledir").option("path", path).load()
     return df.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1978,11 +1926,9 @@ def scan_fle_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     partially."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_history_dir,
-        register_fledir,
     )
 
     path = materialize_fle_history_dir(spark, sf_dir)
-    register_fledir(spark)
     g1 = (
         spark.read.format("fledir")
         .option("path", path)
@@ -2051,11 +1997,9 @@ def scan_fle_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_bloom_dir,
-        register_fledir,
     )
 
     path = materialize_fle_bloom_dir(spark, sf_dir)
-    register_fledir(spark)
     fp13 = _hashlib.md5(b"13").hexdigest()
     df = (
         spark.read.format("fledir")
@@ -2174,11 +2118,9 @@ def scan_fle_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     claim a single-column sort cannot make)."""
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_zorder_dir,
-        register_fledir,
     )
 
     path = materialize_fle_zorder_dir(spark, sf_dir)
-    register_fledir(spark)
     df = (
         spark.read.format("fledir")
         .option("path", path)
@@ -2235,11 +2177,9 @@ def scan_fle_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
         materialize_fle_fact_dir,
-        register_fledir,
     )
 
     path = materialize_fle_fact_dir(spark, sf_dir)
-    register_fledir(spark)
     dim = table(spark, sf_dir, "supplier").filter(F.col("s_nationkey") <= 3)
     keys = runtime_filter_keys(dim, "s_suppkey", max_keys=4096)
     fact = (

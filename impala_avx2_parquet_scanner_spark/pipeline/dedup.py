@@ -28,7 +28,6 @@ MINHASH_K = 12
 MINHASH_BANDS = 4
 MINHASH_ROWS = MINHASH_K // MINHASH_BANDS
 SHINGLE_WORDS = 3
-JACCARD_THRESHOLD = 0.5
 
 
 def h64(col: Column) -> Column:

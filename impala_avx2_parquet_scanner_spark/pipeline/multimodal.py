@@ -1424,8 +1424,6 @@ _register_gif_roundtrip_query()
 # Perceptual-hash near-duplicate detection (image dedup)
 # --------------------------------------------------------------------------
 
-#: aHash geometry: an 8x8 grayscale thumbnail gives a 64-bit hash.
-PHASH_SIDE = 8
 #: LSH banding of the 64-bit hash: 4 bands x 16 bits.  With B bands,
 #: any pair within hamming distance B-1 shares at least one untouched
 #: band (pigeonhole), so the banded candidate join has PERFECT recall

@@ -108,6 +108,12 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: The directory that holds this package.  Python workers start in the
+#: JVM's working directory with the JVM's PYTHONPATH; unless one of the
+#: two holds this directory, they cannot import the engine.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 #: Cores of the pinned benchmark run (`bench.py`'s `BENCH_FULL.json`).
 PINNED_CPUS = 32
 
@@ -138,6 +144,8 @@ def get_spark(app_name: str = "impala-avx2-parquet-scanner-spark",
         # 128 MB parquet splits — matches HDFS-block-sized scan ranges the
         # reference issues per column chunk (hdfs-parquet-scanner.cc:1453-1534).
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # merged by Spark with the JVM's own PYTHONPATH, not replacing it
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)

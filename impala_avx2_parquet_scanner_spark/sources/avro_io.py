@@ -5,8 +5,9 @@ parquet core (descriptors.h:258-259); Spark's own `format("avro")` needs
 the external spark-avro jar, absent from this environment — previously a
 pinned clean error.  This module closes the gap for real: a
 spec-conformant Object Container File reader/writer built on stdlib
-`zlib` + `struct` alone, registered as the `avrodir` custom Python
-DataSource (the same Spark-4 registration mechanism as `ppmdir`), so
+`zlib` + `struct` (and pyarrow's snappy), registered as the `avrodir`
+custom Python DataSource (the same Spark-4 registration mechanism as
+`ppmdir`), so
 `spark.read.format("avrodir")` and `df.write.format("avrodir")` work
 end-to-end with partition-parallel file reads.  The writer's staging and
 commit, the `_DONE` manifest the readers trust and the stream offset are
@@ -36,14 +37,9 @@ concatenated in schema order ↔ Spark struct), ``array`` (count-
 prefixed blocks with 0 terminator, negative-count/byte-size block form
 accepted on read ↔ Spark array), and ``map`` (the same block form over
 key-value pairs, keys written sorted for determinism ↔ Spark
-map<string,T>; ``fixed`` = raw size-checked bytes).  The snappy codec is
-a PURE-PYTHON raw-block implementation (the library is absent from this
-environment, the format is public): the decompressor handles the full
-tag set — extended-length literals, 1/2/4-byte-offset copies including
-overlapping ones — so real snappy-written files read back; the
-compressor emits the legal all-literal form (interop, not ratio); each
-block's big-endian CRC32 of the uncompressed bytes is written and
-verified per the Avro spec.
+map<string,T>; ``fixed`` = raw size-checked bytes).  The snappy codec's
+raw blocks go through pyarrow's snappy; each block's big-endian CRC32
+of the uncompressed bytes is written and verified per the Avro spec.
 
 The wire format is pinned in tests/test_other_formats.py: a golden
 byte-for-byte file hand-assembled from the spec (plus logical-type
@@ -408,90 +404,41 @@ def _check_schema(schema: dict) -> list[tuple[str, object]]:
 
 
 # ---------------------------------------------------------------------------
-# Pure-Python snappy (raw block format) — the library is absent from this
-# environment, but the FORMAT is public (google/snappy format_description.txt)
+# Snappy (raw block format, google/snappy format_description.txt), through
+# pyarrow's codec
 # ---------------------------------------------------------------------------
 
 
 def _snappy_decompress(buf: bytes) -> bytes:
-    """Raw snappy block decompressor — full tag set: literals (with the
-    60..63 extended-length forms) and 1/2/4-byte-offset copies,
-    overlapping copies included.  Interop half: reads blocks produced by
-    any real snappy writer."""
-    pos = 0
-    # preamble: uncompressed length, little-endian base-128 varint
-    shift = n = 0
-    while True:
-        b = buf[pos]
-        pos += 1
+    """Raw snappy block → its bytes.  The block's base-128 varint
+    preamble gives the decompressed size; a corrupt block (a length
+    over the format's cap, a copy offset or length out of range, or a
+    truncated body) raises ValueError."""
+    import pyarrow as pa
+
+    n = shift = 0
+    for b in buf:
         n |= (b & 0x7F) << shift
         if not b & 0x80:
             break
         shift += 7
-    out = bytearray()
-    while pos < len(buf):
-        tag = buf[pos]
-        pos += 1
-        kind = tag & 0x3
-        if kind == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:  # 60..63 → that many extra length bytes
-                extra = ln - 59
-                ln = int.from_bytes(buf[pos:pos + extra], "little")
-                pos += extra
-            ln += 1
-            out += buf[pos:pos + ln]
-            pos += ln
-            continue
-        if kind == 1:  # copy, 1-byte offset, length 4..11
-            ln = ((tag >> 2) & 0x7) + 4
-            off = ((tag >> 5) << 8) | buf[pos]
-            pos += 1
-        elif kind == 2:  # copy, 2-byte little-endian offset
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(buf[pos:pos + 2], "little")
-            pos += 2
-        else:  # copy, 4-byte little-endian offset
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(buf[pos:pos + 4], "little")
-            pos += 4
-        if off == 0 or off > len(out):
-            raise ValueError("snappy: copy offset out of range")
-        start = len(out) - off
-        for i in range(ln):  # overlapping copies repeat the pattern
-            out.append(out[start + i])
-    if len(out) != n:
-        raise ValueError(
-            f"snappy: decompressed {len(out)} bytes, preamble said {n}"
-        )
-    return bytes(out)
+    if n < 1 << 32:  # the format caps the length at 2**32 - 1
+        try:
+            return pa.decompress(
+                buf, decompressed_size=n, codec="snappy", asbytes=True
+            )
+        except OSError:
+            pass
+    raise ValueError(
+        "snappy: corrupt block (bad length, copy offset or copy length)"
+    )
 
 
 def _snappy_compress(data: bytes) -> bytes:
-    """Valid snappy block emitter: preamble + maximal literal runs (the
-    all-literal form is legal snappy any reader accepts; no match search
-    — this half exists for FORMAT interop, not ratio, and the docstring
-    says so honestly)."""
-    out = bytearray()
-    n = len(data)
-    while True:  # preamble varint
-        b = n & 0x7F
-        n >>= 7
-        out.append(b | 0x80 if n else b)
-        if not n:
-            break
-    pos = 0
-    while pos < len(data):
-        chunk = data[pos:pos + 0xFFFF + 1]  # 2-byte extended length form
-        ln = len(chunk) - 1
-        if ln < 60:
-            out.append(ln << 2)
-        else:
-            out.append(61 << 2)  # 61 → 2 little-endian length bytes
-            out += ln.to_bytes(2, "little")
-        out += chunk
-        pos += len(chunk)
-    return bytes(out)
+    """Bytes → one raw snappy block, preamble included."""
+    import pyarrow as pa
+
+    return pa.compress(data, codec="snappy", asbytes=True)
 
 
 def encode_avro(

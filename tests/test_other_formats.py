@@ -690,6 +690,22 @@ def test_snappy_decompressor_golden_and_fuzz():
         assert _snappy_decompress(_snappy_compress(data)) == data
 
 
+def test_snappy_decompressor_rejects_a_wrong_length_preamble():
+    """A preamble over the format's 2**32 - 1 cap, or one the body does
+    not fill, is a corrupt block: ValueError, never an overflow or a
+    padded result."""
+    import pytest as _pytest
+
+    from impala_avx2_parquet_scanner_spark.sources.avro_io import (
+        _snappy_decompress,
+    )
+
+    body = bytes([0x00]) + b"z"  # literal "z"
+    for preamble in (bytes([0xFF] * 9 + [0x01]), bytes([0x80] * 4 + [0x10]), b"\x02"):
+        with _pytest.raises(ValueError):
+            _snappy_decompress(preamble + body)
+
+
 def test_avro_snappy_codec_roundtrip_and_crc():
     """Avro snappy codec: block = snappy data + big-endian CRC32 of the
     UNCOMPRESSED bytes (Avro 1.11 spec).  Round-trips across block

@@ -183,45 +183,51 @@ def _warm_tables(spark, sf_dirs: list[str]) -> None:
             table(spark, sf, t).write.format("noop").mode("overwrite").save()
 
 
-def _synth_documents_10x(spark, base_sf: str) -> str:
-    """Materialize a corpus with 10x the documents of `base_sf` under
-    /tmp (write-once) and return a dir usable as an sf_dir: documents is
-    the replicated table, every other table symlinks to the base.
+def _replicated(spark, base_sf: str, name: str, copies: int, replica) -> str:
+    """Publish, as an asset of `base_sf`, a dir usable as an sf_dir whose
+    table `name` holds `copies` replicas of the base table and whose
+    other tables symlink to the base; return it.  ``replica(base, i, n)``
+    builds replica `i` of the `n`-row base table."""
+    from functools import reduce
 
-    Replicas get disjoint doc_id ranges and a deterministic per-replica
-    text suffix, so they are near-duplicates (realistic corpus growth for
-    dedup: more docs AND more lookalikes) rather than exact copies that
-    would collapse into one hash bucket."""
-    from pyspark.sql import functions as F
-
+    from impala_avx2_parquet_scanner_spark.assets import publish
     from impala_avx2_parquet_scanner_spark.catalog import TABLES, table
 
-    out_dir = "/tmp/spark_graft_scale10"
-    doc_path = os.path.join(out_dir, "documents.parquet")
-    if not os.path.exists(os.path.join(doc_path, "_SUCCESS")):
-        os.makedirs(out_dir, exist_ok=True)
-        base = table(spark, base_sf, "documents")
+    def build(out_dir):
+        base = table(spark, base_sf, name)
         n = base.count()
-        replicas = None
-        for i in range(10):
-            r = base.select(
-                (F.col("doc_id") + F.lit(i * n)).alias("doc_id"),
-                F.concat(
-                    F.col("text"), F.lit(f" replica{i} shard "), F.col("doc_id").cast("string")
-                ).alias("text"),
-                "lang",
-                "source",
-                (F.col("n_chars") + F.lit(10)).alias("n_chars"),
-            )
-            replicas = r if replicas is None else replicas.unionByName(r)
-        replicas.repartition(32).write.mode("overwrite").parquet(doc_path)
-    for t in TABLES:
-        if t == "documents":
-            continue
-        link = os.path.join(out_dir, f"{t}.parquet")
-        if not os.path.exists(link):
-            os.symlink(os.path.join(base_sf, f"{t}.parquet"), link)
-    return out_dir
+        out = reduce(
+            lambda a, b: a.unionByName(b),
+            (replica(base, i, n) for i in range(copies)),
+        )
+        out.repartition(32).write.parquet(os.path.join(out_dir, f"{name}.parquet"))
+        for t in TABLES:
+            if t != name:
+                os.symlink(
+                    os.path.abspath(os.path.join(base_sf, f"{t}.parquet")),
+                    os.path.join(out_dir, f"{t}.parquet"),
+                )
+
+    return publish(base_sf, f"scale_{name}_{copies}x", build)
+
+
+def _document_replica(base, i: int, n: int):
+    """Replica `i` of the documents: a disjoint doc_id range and a
+    deterministic per-replica text suffix, so replicas are
+    near-duplicates (realistic corpus growth for dedup: more docs AND
+    more lookalikes) rather than exact copies that would collapse into
+    one hash bucket."""
+    from pyspark.sql import functions as F
+
+    return base.select(
+        (F.col("doc_id") + F.lit(i * n)).alias("doc_id"),
+        F.concat(
+            F.col("text"), F.lit(f" replica{i} shard "), F.col("doc_id").cast("string")
+        ).alias("text"),
+        "lang",
+        "source",
+        (F.col("n_chars") + F.lit(10)).alias("n_chars"),
+    )
 
 
 #: embeddings-table stress: dedup_semantic's codebook k = N/64 grows WITH
@@ -230,44 +236,21 @@ def _synth_documents_10x(spark, base_sf: str) -> str:
 EMB_STRESS = ["dedup_semantic", "ann_ivf_topk"]
 
 
-def _synth_embeddings_16x(spark, base_sf: str) -> str:
-    """Materialize a corpus with 16x the embeddings of `base_sf` under
-    /tmp (write-once) and return a dir usable as an sf_dir: embeddings is
-    the replicated table, every other table symlinks to the base.
-
-    Replicas get disjoint vec_id ranges and a small deterministic
-    per-replica scale perturbation (cosine-invariant per vector, so
+def _embedding_replica(base, i: int, n: int):
+    """Replica `i` of the embeddings: a disjoint vec_id range and a small
+    deterministic scale perturbation (cosine-invariant per vector, so
     replicas are semantic near-duplicates of the originals — the
     realistic growth mode SemDeDup exists for)."""
     from pyspark.sql import functions as F
 
-    from impala_avx2_parquet_scanner_spark.catalog import TABLES, table
-
-    out_dir = "/tmp/spark_graft_scale_emb16"
-    emb_path = os.path.join(out_dir, "embeddings.parquet")
-    if not os.path.exists(os.path.join(emb_path, "_SUCCESS")):
-        os.makedirs(out_dir, exist_ok=True)
-        base = table(spark, base_sf, "embeddings")
-        n = base.count()
-        replicas = None
-        for i in range(16):
-            scale = F.lit(float(1.0 + 0.001 * i)).cast("float")
-            r = base.select(
-                (F.col("vec_id") + F.lit(i * n)).alias("vec_id"),
-                F.transform(F.col("embedding"), lambda x: (x * scale).cast("float")).alias(
-                    "embedding"
-                ),
-                "label",
-            )
-            replicas = r if replicas is None else replicas.unionByName(r)
-        replicas.repartition(32).write.mode("overwrite").parquet(emb_path)
-    for t in TABLES:
-        if t == "embeddings":
-            continue
-        link = os.path.join(out_dir, f"{t}.parquet")
-        if not os.path.exists(link):
-            os.symlink(os.path.join(base_sf, f"{t}.parquet"), link)
-    return out_dir
+    scale = F.lit(float(1.0 + 0.001 * i)).cast("float")
+    return base.select(
+        (F.col("vec_id") + F.lit(i * n)).alias("vec_id"),
+        F.transform(F.col("embedding"), lambda x: (x * scale).cast("float")).alias(
+            "embedding"
+        ),
+        "label",
+    )
 
 
 def main() -> int:
@@ -340,7 +323,7 @@ def main() -> int:
     print()
     print("| query | sf0.1 s | 10x-docs s | time x (data 10x) |")
     print("|---|---|---|---|")
-    big_dir = _synth_documents_10x(spark, sf_b)
+    big_dir = _replicated(spark, sf_b, "documents", 10, _document_replica)
     _warm_tables(spark, [big_dir])
     tail_flagged: list[str] = []
     for name in TAIL_STRESS:
@@ -375,7 +358,7 @@ def main() -> int:
     print()
     print("| query | sf0.1 s | 16x-emb s | time x (data 16x) |")
     print("|---|---|---|---|")
-    emb_dir = _synth_embeddings_16x(spark, sf_b)
+    emb_dir = _replicated(spark, sf_b, "embeddings", 16, _embedding_replica)
     _warm_tables(spark, [emb_dir])
     emb_flagged: list[str] = []
     for name in EMB_STRESS:
