@@ -278,15 +278,35 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Θ(Σ bucket²) under EITHER plan, but a boilerplate mega-bucket runs
     single-task here where the old sort-merge join could be AQE
     skew-split.  Measured at sf0.1 the buckets are tiny (max 4 docs,
-    avg 1.05, 19k buckets) and production LSH caps buckets upstream;
-    if this operator ever feeds uncapped web-scale data, cap or chunk
-    the lists the way dedup_containment does."""
-    bands = minhash_bands(spark, sf_dir)
+    avg 1.05, 19k buckets), so a bucket above
+    :data:`LSH_MAX_BUCKET_DOCS` fails the query (:func:`lsh_pairs`)
+    instead of exploding its pairs in one task."""
+    return lsh_pairs(minhash_bands(spark, sf_dir))
+
+
+#: the most docs one (band, band_key) bucket may hold: its Θ(docs²)
+#: pairs explode from one list in one task (sf0.1's largest holds 4)
+LSH_MAX_BUCKET_DOCS = 10_000
+
+
+def lsh_pairs(bands: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_shared_bands) of a (doc_id, band, band_key)
+    frame; a bucket above LSH_MAX_BUCKET_DOCS fails before exploding."""
+    docs = F.col("docs")
+    too_big = F.raise_error(F.format_string(
+        "dedup_minhash_lsh: band %d bucket %s holds %d docs, more than "
+        "LSH_MAX_BUCKET_DOCS = %d", "band", "band_key", F.size(docs),
+        F.lit(LSH_MAX_BUCKET_DOCS),
+    ))
     lists = (
         bands.groupBy("band", "band_key")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("docs"))
-        .filter(F.size("docs") >= 2)
-        .select("docs")
+        .filter(F.size(docs) >= 2)
+        .select(
+            F.when(F.size(docs) <= LSH_MAX_BUCKET_DOCS, docs)
+            .otherwise(too_big)
+            .alias("docs")
+        )
     )
     pair = F.explode(
         F.flatten(

@@ -5,12 +5,13 @@ Round 5 re-expressed the reference's FLE codec as verified numpy
 module closes the remaining half of the encoding contract by making it a
 STORAGE round-trip (FleEncoder::Put/Flush → file → FleDecoder::Get,
 fle-encoding.h:8315-9812): executors encode Arrow batches into `.fle`
-segment files through the writer half of a registered Spark DataSource,
-and the reader half parses the raw bytes back through :func:`fle_unpack`
-into vectorized Arrow batches.  The reference ships FLE as a custom
-parquet encoding (parquet.thrift:220,224), which would break every other
-parquet reader; per SURVEY §4 the engine's parquet files stay standard
-RLE_DICTIONARY, and the FLE byte layout lives in its own container —
+segment files inside the encode tasks of a Spark job, and the reader
+half of a registered Spark DataSource parses the raw bytes back through
+:func:`fle_unpack` into vectorized Arrow batches.  The reference ships
+FLE as a custom parquet encoding (parquet.thrift:220,224), which would
+break every other parquet reader; per SURVEY §4 the engine's parquet
+files stay standard RLE_DICTIONARY, and the FLE byte layout lives in its
+own container —
 interop preserved, encode→decode cycle still pinned end-to-end on real
 file bytes (`scan_fle_roundtrip`'s DuckDB oracle replays the aggregate
 from the raw rows, so one wrong bit anywhere in pack, serialize, parse,
@@ -35,15 +36,18 @@ Segment layout ``FLE2`` (little-endian, one segment per Arrow batch):
       u64[n_chunks] code mins, u64[n_chunks] code maxs (0 chunks for a
       section without planes)
 
-Scale: encoding runs inside `mapInPandas` Arrow batches on executors
-(no driver collect); each segment file is an independent
+Scale: encoding and staging run inside `mapInPandas` Arrow batches on
+executors; the driver collects only each segment's staged entry (name,
+temp name, stats) and commits them (:class:`SegmentStager`,
+:func:`commit_fledir`).  Each segment file is an independent
 `InputPartition` on read — the same elasticity as any file source.
-The writer's staging and commit, the `_DONE` manifest the readers trust
+The staging and commit, the `_DONE` manifest the readers trust
 (uncommitted dirs are unreadable) and the stream offset are the
 sealed-directory protocol of `sources/sealed_dir.py`, shared with
 `avrodir` and `ppmdir`; this module adds the fledir parts on top —
-segment stats in the manifest, bloom sidecars, `_LINEAGE`,
-`retirenames` and `_history` snapshots.
+segment stats in the manifest, bloom sidecars, `_LINEAGE`, retired
+names and `_history` snapshots.  `df.write.format("fledir")` and the
+stream sink are thin adapters over the same staging and commit.
 
 Known Spark 4.1 framework caveat (verified against a minimal stock
 DataSource, so it is not specific to this reader): the JVM caches the
@@ -1952,8 +1956,8 @@ def _stage_segment(
     msg.put(name, payload, json.dumps(entry), sidecars)
 
 
-def _bloom_cols(options) -> list[str]:
-    return [c for c in (options.get("bloomcols") or "").split(",") if c]
+def _bloom_cols(spec: "str | None") -> list[str]:
+    return [c for c in (spec or "").split(",") if c]
 
 
 def _record_generation(
@@ -1986,60 +1990,117 @@ def _record_generation(
     sealed_dir.write_manifest(sealed_dir.history_path(path, gen), manifest)
 
 
+def commit_fledir(
+    path: str,
+    entries: list,
+    *,
+    overwrite: bool = False,
+    retire=frozenset(),
+    promote_lineage: bool = False,
+    drop=None,
+) -> None:
+    """The one fledir commit, run in the driver: seal the staged
+    `entries` (:func:`sealed_dir.staged` tuples) into `path` through
+    `sealed_dir.commit`, after the `_LINEAGE` promote or evict and before
+    the `_history` snapshot.  `retire` (append only) takes committed
+    names out of the manifest and renames their files ``<name>.retired``
+    (their sidecars go): a checkpointed stream replaying a batch planned
+    before the commit can still read them until `vacuum_fledir` (the
+    Delta remove-action + VACUUM split).  `promote_lineage` promotes
+    compaction's staged `_LINEAGE.pending` before the merged names
+    appear; `drop` is the stream sink's epoch prefix."""
+    if retire and overwrite:
+        raise ValueError(
+            "fledir: retire is an append-mode contract "
+            "(overwrite already replaces the whole directory)"
+        )
+    names = {e[0] for e in entries}
+    final = os.path.join(path, _LINEAGE_NAME)
+    pending = final + ".pending"
+    if promote_lineage and os.path.exists(pending):
+        # BEFORE any merged name becomes visible: until the renames the
+        # map's new entries name no file (inert); promoted after the
+        # swap, a concurrent stream could see a merged file as new and
+        # re-emit every row
+        os.replace(pending, final)
+    elif not overwrite:
+        # a caller picking raw seg_ids may reuse a name a long-vacuumed
+        # compaction once minted; its stale lineage entry would make the
+        # stream drop the NEW file's rows as an already-processed merge,
+        # so evict it before the renames (ADVICE r9)
+        lineage = _read_lineage(path)
+        if names & set(lineage):
+            _write_lineage(final, {
+                k: v for k, v in lineage.items() if k not in names
+            })
+
+    def after_swap(manifest, previous):
+        if overwrite:
+            # fresh rows must never be mistaken for already-streamed
+            # merges: the lineage and a crashed compaction's pending
+            # map go with the table they described
+            sealed_dir.discard(pending)
+            sealed_dir.discard(final)
+        _record_generation(path, manifest, previous, names, overwrite)
+
+    sealed_dir.commit(
+        path, entries, suffix=".fle", overwrite=overwrite, drop=drop,
+        retire=retire, sidecars=(".bf",), after_swap=after_swap,
+    )
+
+
+class SegmentStager:
+    """Stages one write job's segments in `path` under a token the driver
+    picked: the job's encode tasks call ``stage(seg_id, payload)`` and
+    return only each segment's staged entry, rows of :attr:`SCHEMA`;
+    :meth:`commit` collects them in the driver.  `bloomcols` (``"a,b"``)
+    adds a `.bf` bloom sidecar per segment (the reference's hash
+    bitmap-filter probe, hdfs-parquet-scanner.cc:235-246, at rest)."""
+
+    SCHEMA = "name string, tmp string, meta string, bf string"
+
+    def __init__(self, path: str, bloomcols: "str | None" = None):
+        self.path = path
+        self.bloom_cols = _bloom_cols(bloomcols)
+        self.token = sealed_dir.new_token()
+
+    def __call__(self, seg_id: int, payload: bytes):
+        import pandas as pd
+
+        msg = sealed_dir.Staged(self.path, self.token)
+        _stage_segment(msg, f"seg_{seg_id}.fle", payload, self.bloom_cols)
+        name, tmp, meta, side = msg.entries[0]
+        row = (name, tmp, meta, side.get(".bf"))
+        return pd.DataFrame([row], columns=["name", "tmp", "meta", "bf"])
+
+    def commit(self, frame, **how) -> None:
+        """Run `frame`'s job and :func:`commit_fledir` what it staged;
+        if either raises, every file staged under the token goes."""
+        try:
+            entries = [
+                (name, tmp, meta, {".bf": bf} if bf else {})
+                for name, tmp, meta, bf in frame.collect()
+            ]
+            commit_fledir(self.path, entries, **how)
+        except BaseException:
+            sealed_dir.discard_token(self.path, self.token)
+            raise
+
+
 class FleDirWriter(DataSourceWriter):
-    """Writer half (§2A #17/#18 for this format): input rows are
-    pre-encoded segments (seg_id bigint, payload binary), staged as
-    `seg_<id>.fle.tmp-<token>` and sealed by `sealed_dir.commit`, so a
-    half-written, aborted or killed attempt is never observed and an
-    overwrite removes no old segment until the new `_DONE` is in place.
-    The package's batch writers take ids from :func:`fresh_seg_base`;
-    a caller that picks raw `seg_id`s may reuse a committed name, whose
-    bytes are then replaced at its rename, before the swap.  The fledir
-    parts around that commit: stats entries, bloom sidecars, the
-    `_LINEAGE` map, `retirenames` and the `_history` snapshot."""
+    """``df.write.format("fledir")``: input rows are pre-encoded
+    segments (seg_id bigint, payload binary), staged like the package's
+    own writes (`_stage_segment`) and sealed by :func:`commit_fledir`.
+    Options: `path` and `bloomcols`.  A caller that picks raw `seg_id`s
+    may reuse a committed name, whose bytes are then replaced at its
+    rename, before the swap."""
 
     def __init__(self, options, overwrite: bool):
         self.dir = options.get("path")
         if not self.dir:
             raise ValueError("fledir requires option 'path'")
         self.overwrite = overwrite
-        #: set by compaction's rewrite ONLY: promote the staged
-        #: `_LINEAGE.pending` at commit (BEFORE the merged names
-        #: appear, so a concurrent stream never sees a merged file
-        #: without its lineage).  A plain overwrite instead DELETES
-        #: both the sidecar and any stale pending file — new table
-        #: contents must never inherit a crashed compaction's
-        #: merged→sources map
-        self.promote_lineage = str(
-            options.get("promotelineage", "false")
-        ).lower() in ("true", "1")
-        #: append-mode surgical replacement (compaction's incremental
-        #: commit): these committed names leave the manifest and their
-        #: files are RETIRED (renamed `<name>.retired`, invisible to
-        #: both reader halves) rather than deleted — a checkpointed
-        #: stream replaying a planned-but-uncommitted batch can still
-        #: read them until `vacuum_fledir` reclaims the space (the
-        #: Delta remove-action + VACUUM split).  Their sidecars die
-        #: with the retirement: stream replay reads a retired segment
-        #: by exact name and never consults blooms.
-        raw = options.get("retirenames")
-        self.retire_names: set[str] = set(json.loads(raw)) if raw else set()
-        #: opt-in bloom sidecars (option bloomcols=a,b): each task
-        #: writes `seg_N.fle.bf` next to its segment so point lookups
-        #: on hash-scattered high-cardinality columns can skip whole
-        #: files before the first byte — the reference's hash
-        #: bitmap-filter probe (hdfs-parquet-scanner.cc:235-246) at
-        #: rest.  Sidecars become visible BEFORE their segments, and a
-        #: reused name without a new sidecar loses the old one (a stale
-        #: bloom would refute values present in the NEW bytes).
-        #: Compaction output drops them (its writer does not pass the
-        #: option) — re-request on the compacted table.
-        self.bloom_cols = _bloom_cols(options)
-        if self.retire_names and overwrite:
-            raise ValueError(
-                "fledir: retirenames is an append-mode contract "
-                "(overwrite already replaces the whole directory)"
-            )
+        self.bloom_cols = _bloom_cols(options.get("bloomcols"))
 
     @trims
     def write(self, rows):
@@ -2053,51 +2114,8 @@ class FleDirWriter(DataSourceWriter):
 
     @trims
     def commit(self, messages):
-        entries = sealed_dir.staged(messages)
-        names = {e[0] for e in entries}
-        final = os.path.join(self.dir, _LINEAGE_NAME)
-        pending = final + ".pending"
-        if self.promote_lineage and os.path.exists(pending):
-            # promote the merged→sources map BEFORE any merged name
-            # becomes visible: until the renames, the map's new entries
-            # reference files that do not exist (inert); after them, a
-            # stream listing the directory always finds the lineage that
-            # classifies the merged files.  Review finding: promoting
-            # after the manifest swap left a window where a concurrent
-            # stream saw a merged file as 'genuinely new' and re-emitted
-            # every row.
-            os.replace(pending, final)
-        elif not self.overwrite:
-            # APPEND without a staged lineage: a caller picking raw
-            # seg_ids may legally reuse a segment name that a
-            # long-vacuumed compaction once minted (the package's own
-            # writers name above every committed id, and so never do).
-            # A stale lineage entry under that name would make
-            # the stream classify the genuinely NEW file as an
-            # already-processed merge and silently drop its rows, so
-            # evict those keys BEFORE the renames make the new names
-            # visible (ADVICE r9).
-            lineage = _read_lineage(self.dir)
-            if names & set(lineage):
-                _write_lineage(final, {
-                    k: v for k, v in lineage.items() if k not in names
-                })
-
-        def after_swap(manifest, previous):
-            if self.overwrite:
-                # fresh rows must never be mistaken for already-streamed
-                # merges: the lineage and a crashed compaction's pending
-                # map go with the table they described
-                sealed_dir.discard(pending)
-                sealed_dir.discard(final)
-            _record_generation(
-                self.dir, manifest, previous, names, self.overwrite
-            )
-
-        sealed_dir.commit(
-            self.dir, entries, suffix=".fle", overwrite=self.overwrite,
-            retire=self.retire_names, sidecars=(".bf",),
-            after_swap=after_swap,
+        commit_fledir(
+            self.dir, sealed_dir.staged(messages), overwrite=self.overwrite
         )
 
     @trims
@@ -2416,22 +2434,16 @@ class FleStreamWriter(DataSourceStreamWriter):
     .format("fledir")` lands each micro-batch as committed segments
     with EXACTLY-ONCE epoch semantics.
 
-    Each task stages its partition's rows as one segment; the
-    driver-side `commit(messages, batchId)` assigns DETERMINISTIC
-    per-epoch names (``seg_s{batchId}_{i}.fle``) and, through
-    `sealed_dir.commit`'s `drop`, replaces the manifest's whole
-    ``seg_s{batchId}_`` prefix with this attempt's set.  That prefix
-    replacement is what makes epoch replay idempotent WITHOUT a side
-    ledger: a batch re-run after a crash (even with different
-    parallelism, so a different segment count) overwrites its own
-    names, re-manifests exactly its own rows, and the post-swap sweep
-    removes any leftovers of a wider earlier attempt — the same
-    name-determinism contract Spark's own file sinks get from their
-    per-batch manifest.  Commits append to the table (previous epochs'
-    entries survive) and record a `_history/` generation like every
-    other commit, so the table stays time-travel readable and the BATCH
-    reader, the STREAM reader (offset = file-name set), compaction,
-    retention, merge and delete all compose with sink output
+    Each task stages its partition's rows as one segment; `commit`
+    names them ``seg_s{batchId}_{i}.fle`` and has :func:`commit_fledir`
+    replace the manifest's whole ``seg_s{batchId}_`` prefix (`drop`)
+    with this attempt's set.  So a batch re-run after a crash, even at
+    another parallelism, re-manifests exactly its own rows and the
+    post-swap sweep removes a wider earlier attempt's leftovers — the
+    name-determinism Spark's file sinks get from their per-batch
+    manifest.  Earlier epochs survive, and each commit records a
+    `_history/` generation, so the batch and stream readers,
+    compaction, retention, merge and delete compose with sink output
     unchanged."""
 
     def __init__(self, options, schema):
@@ -2439,7 +2451,7 @@ class FleStreamWriter(DataSourceStreamWriter):
         if not self.dir:
             raise ValueError("fledir requires option 'path'")
         self.schema = schema
-        self.bloom_cols = _bloom_cols(options)
+        self.bloom_cols = _bloom_cols(options.get("bloomcols"))
         for c in self.bloom_cols:
             if c not in {f.name for f in schema.fields}:
                 raise ValueError(
@@ -2465,13 +2477,8 @@ class FleStreamWriter(DataSourceStreamWriter):
             (f"{prefix}{i}.fle", *rest)
             for i, (_, *rest) in enumerate(sealed_dir.staged(messages))
         ]
-        names = {e[0] for e in entries}
-        sealed_dir.commit(
-            self.dir, entries, suffix=".fle",
-            drop=lambda n: n.startswith(prefix), sidecars=(".bf",),
-            after_swap=lambda manifest, previous: _record_generation(
-                self.dir, manifest, previous, names, False
-            ),
+        commit_fledir(
+            self.dir, entries, drop=lambda n: n.startswith(prefix)
         )
 
     def abort(self, messages, batchId: int) -> None:
@@ -2485,14 +2492,13 @@ def register_fledir(spark) -> None:
         pass
 
 
-def _encode_frame(frame, columns, base: int):
-    """`frame` → ``(seg_id, payload)`` rows, the input of the fledir
-    writer: one `.fle` segment per Arrow batch, encoded on the executors
-    inside `mapInPandas`.  `columns` lists ``(name, cast, hint)`` per
-    stored column: `cast` is a numpy dtype applied to the batch values
-    (None keeps them), `hint` the :func:`encode_segment_columns` kind
-    hint.  Segment ids are ``base + partition·100000 + batch``."""
-    import pandas as _pd
+def _encode_frame(frame, columns, base: int, stage: SegmentStager):
+    """Encode `frame` into `.fle` segments staged by `stage`: one segment
+    per Arrow batch, encoded on the executors inside `mapInPandas`.
+    `columns` lists ``(name, cast, hint)`` per stored column: `cast` is a
+    numpy dtype applied to the batch values (None keeps them), `hint` the
+    :func:`encode_segment_columns` kind hint.  Segment ids are
+    ``base + partition·100000 + batch``."""
 
     @trims
     def encode(batches):
@@ -2504,32 +2510,25 @@ def _encode_frame(frame, columns, base: int):
             for name, cast, hint in columns:
                 v = pdf[name].to_numpy()
                 cols.append((name, v if cast is None else v.astype(cast), hint))
-            yield _pd.DataFrame({
-                "seg_id": [base + pid * 100_000 + i],
-                "payload": [encode_segment_columns(cols)],
-            })
+            yield stage(base + pid * 100_000 + i, encode_segment_columns(cols))
 
-    return frame.mapInPandas(encode, schema="seg_id long, payload binary")
+    return frame.mapInPandas(encode, schema=stage.SCHEMA)
 
 
 def write_fledir(
-    frame, columns, path, mode="overwrite", **writer_options
+    frame, columns, path, mode="overwrite", bloomcols: "str | None" = None
 ) -> None:
-    """Encode `frame` into `.fle` segments (:func:`_encode_frame`)
-    and commit them to `path` through the fledir writer.  Segment ids
-    start at :func:`fresh_seg_base` in every mode, so neither an append
-    nor an overwrite renames onto a committed name.  `writer_options`
-    become fledir options (None dropped)."""
-    w = (
-        _encode_frame(frame, columns, fresh_seg_base(path))
-        .write.format("fledir")
-        .mode(mode)
-        .option("path", path)
+    """Encode `frame` into `.fle` segments staged in `path` by the encode
+    tasks (:func:`_encode_frame`) and commit them from the driver; no
+    source registration is needed.  Ids start at :func:`fresh_seg_base`
+    in both modes, so no write renames onto a committed name."""
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"fledir: unsupported write mode {mode!r}")
+    stage = SegmentStager(path, bloomcols)
+    stage.commit(
+        _encode_frame(frame, columns, fresh_seg_base(path), stage),
+        overwrite=mode == "overwrite",
     )
-    for k, v in writer_options.items():
-        if v is not None:
-            w = w.option(k, v)
-    w.save()
 
 
 def _table(spark, sf_dir: str, name: str):
@@ -2560,12 +2559,10 @@ _FLAG_QTY = [("l_returnflag", None, None), ("l_quantity", np.int64, None)]
 
 def materialize_fle_dir(spark, sf_dir: str) -> str:
     """Write-once: encode lineitem (l_returnflag, NULLIF(l_quantity, 10))
-    into `.fle` segments through the fledir WRITER half.  The NULLIF
-    derivation stores a genuinely nullable column, so the validity words
-    (the def-level analog) round-trip through real file bytes, not just
-    in-plan masks.  Encoding happens inside `mapInPandas` Arrow batches
-    on the executors; the writer tasks persist their segments and the
-    commit seals the `_DONE` manifest."""
+    into `.fle` segments (:func:`write_fledir`).  The NULLIF derivation
+    stores a genuinely nullable column, so the validity words (the
+    def-level analog) round-trip through real file bytes, not just
+    in-plan masks."""
     from pyspark.sql import functions as F
 
     def build(out):

@@ -24,10 +24,11 @@ block-size file management, SURVEY §2A #17).
   (a segment already at target size is carried in the manifest
   untouched), so a periodic compaction of a streaming table costs
   O(new data), not O(table);
-- **commit is atomic and surgical** — merged segments ride the
-  ``FleDirWriter`` protocol in append mode with the ``retirenames``
-  contract (temp-name task writes, lineage promoted first, rename at
-  commit, atomic ``_DONE`` swap, then the merged-away sources RETIRED
+- **commit is atomic and surgical** — the rewrite tasks stage the
+  merged segments under temp names and the driver commits them in one
+  append through ``commit_fledir`` with the merged-away sources passed
+  as ``retire`` (lineage promoted first, rename at commit, atomic
+  ``_DONE`` swap, then the merged-away sources RETIRED
   — renamed ``<name>.retired``, invisible to every reader but still
   serving a checkpointed stream's replay until :func:`vacuum_fledir`
   reclaims them), so a reader never observes a half-compacted
@@ -44,9 +45,10 @@ Compaction, MERGE and DELETE are one segment rewrite with different
 transforms: :func:`_rewrite_segments` is the only job that rewrites
 committed segments.  It names the new segments from
 ``fresh_seg_base`` (never a committed name), parses each group of
-sources in a Spark task of its own, encodes the caller's transform of them,
-adds any insert segments through ``write_fledir``'s encoder, and
-commits everything as one append with the sources retired.  MERGE and
+sources in a Spark task of its own, encodes and stages the caller's
+transform of them, stages any insert segments through ``write_fledir``'s
+encoder in the same job, and commits everything from the driver as one
+append with the sources retired.  MERGE and
 DELETE pick their candidate segments with one metadata probe
 (:func:`_dml_candidates`: the scan's own manifest-stats pruning, then
 the bloom sidecars) and drop matched rows with one exact matcher
@@ -60,9 +62,11 @@ pinned by tests against every kind).
 """
 from __future__ import annotations
 
+import contextlib
 import functools
 import json
 import os
+import shutil
 import struct
 
 import numpy as np
@@ -74,6 +78,7 @@ from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
     _FLAG_QTY,
     FleDirReader,
     ParsedSegment,
+    SegmentStager,
     _encode_frame,
     _fle_asset,
     _manifest_entries,
@@ -90,7 +95,6 @@ from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
     fresh_seg_base,
     parse_segment,
     probe_first_segment,
-    register_fledir,
     segment_id,
     write_fledir,
 )
@@ -300,21 +304,20 @@ def _rewrite_segments(
 ) -> None:
     """The one segment-rewrite job of compaction, merge and delete.
     Each group of committed segment names becomes ONE new segment: a
-    Spark task parses the group's files and encodes
+    Spark task parses the group's files, encodes
     ``transform(parsed_segments)`` (a column list for
-    :func:`encode_segment_columns`).  `inserts`, a ``(frame, columns)``
-    pair in :func:`write_fledir`'s column spec, encodes further new
-    segments into the same frame.  Everything lands in ONE atomic append
-    commit whose new names start at ``fresh_seg_base`` (a new name never
-    reuses a replaced one), with every grouped source RETIRED
-    (``retirenames``) — a crashed rewrite leaves the old table intact,
+    :func:`encode_segment_columns`) and stages it
+    (:class:`SegmentStager`).  `inserts`, a ``(frame, columns)`` pair in
+    :func:`write_fledir`'s column spec, stages further new segments in the
+    same job.  The driver commits everything in ONE atomic append
+    (:func:`commit_fledir`) whose new names start at ``fresh_seg_base``
+    (a new name never reuses a replaced one), with every grouped source
+    retired — a failed or crashed rewrite leaves the old table intact,
     and the replaced generation stays time-travel readable until vacuum.
     `lineage` stages merged name → source names before the job and has
     the commit promote it (compaction's stream-safety map); `bloomcols`
-    builds sidecars for the new segments.  No group and no inserts: no
-    commit."""
-    import pandas as _pd
-
+    builds sidecars for the new segments (compaction passes none, so
+    its output drops them).  No group and no inserts: no commit."""
     if not groups and inserts is None:
         return
     base = fresh_seg_base(path)
@@ -329,6 +332,7 @@ def _rewrite_segments(
         for i, g in enumerate(groups):
             staged[f"seg_{base + i}.fle"] = sorted(g)
         _write_lineage_pending(path, staged)
+    stage = SegmentStager(path, bloomcols)
 
     @trims
     def rewrite(batches):
@@ -338,12 +342,10 @@ def _rewrite_segments(
                 for p in paths:
                     with open(p, "rb") as fh:
                         segs.append(parse_segment(fh.read()))
-                yield _pd.DataFrame({
-                    "seg_id": [int(seg_id)],
-                    "payload": [encode_segment_columns(transform(segs))],
-                })
+                yield stage(
+                    int(seg_id), encode_segment_columns(transform(segs))
+                )
 
-    register_fledir(spark)
     frame = (
         spark.createDataFrame(
             [
@@ -353,24 +355,15 @@ def _rewrite_segments(
             "seg_id long, paths array<string>",
         )
         .repartition(max(len(groups), 1))
-        .mapInPandas(rewrite, schema="seg_id long, payload binary")
+        .mapInPandas(rewrite, schema=stage.SCHEMA)
     )
     if inserts is not None:
         frame = frame.unionByName(
-            _encode_frame(*inserts, base + len(groups))
+            _encode_frame(*inserts, base + len(groups), stage)
         )
-    retired = sorted({n for g in groups for n in g})
-    w = (
-        frame.write.format("fledir")
-        .mode("append")
-        .option("path", path)
-        .option("retirenames", json.dumps(retired))
+    stage.commit(
+        frame, retire={n for g in groups for n in g}, promote_lineage=lineage
     )
-    if lineage:
-        w = w.option("promotelineage", "true")
-    if bloomcols:
-        w = w.option("bloomcols", bloomcols)
-    w.save()
 
 
 def _compact_leaf(
@@ -435,7 +428,7 @@ def compact_fledir(
     re-emit every merged row.  Compaction therefore records a lineage
     sidecar (merged name → immediate source names, prior generations
     kept) staged before the job and promoted atomically by the
-    overwrite commit; the stream absorbs a merged file whose sources
+    commit; the stream absorbs a merged file whose sources
     were all processed, emits one whose sources were all unprocessed,
     and refuses loudly on a partial overlap (see FleStreamReader.read
     — the file-format analog of Delta's remove-actions)."""
@@ -470,11 +463,9 @@ def _vacuum_one_leaf(leaf: str) -> int:
     removed = 0
     for f in os.listdir(leaf):
         if f.endswith(".retired"):
-            try:
+            with contextlib.suppress(OSError):
                 os.remove(os.path.join(leaf, f))
                 removed += 1
-            except OSError:
-                pass
     expire_fledir_snapshots(leaf)
     return removed
 
@@ -615,43 +606,21 @@ def _expire_one_leaf(leaf: str, root: "str | None" = None) -> int:
     unseal→delete ordering lives INSIDE the per-leaf unit, so the
     fan-out preserves it."""
     rows = fledir_row_count(leaf)
-    done = os.path.join(leaf, sealed_dir.DONE)
-    if os.path.exists(done):
-        os.remove(done)  # unseal FIRST: planning skips the leaf
-    for f in os.listdir(leaf):
-        sub = os.path.join(leaf, f)
-        if os.path.isdir(sub):
-            # the leaf's snapshot timeline (_history/) dies with it
-            for g in os.listdir(sub):
-                try:
-                    os.remove(os.path.join(sub, g))
-                except OSError:
-                    pass
-            try:
-                os.rmdir(sub)
-            except OSError:
-                pass
-            continue
-        try:
-            os.remove(sub)
-        except OSError:
-            pass
-    try:
-        os.rmdir(leaf)
-        # prune now-empty intermediate key directories up to (never
-        # including) the table root — expiring every day= leaf under a
-        # status must not strand an empty status= directory.  rmdir on
-        # a non-empty parent raises and stops the walk; two tasks
-        # racing on a shared parent resolve the same way (one wins,
-        # the other's ENOENT lands here too).
-        if root is not None:
-            p = os.path.dirname(os.path.abspath(leaf))
-            stop = os.path.abspath(root)
-            while p != stop:
+    sealed_dir.discard(os.path.join(leaf, sealed_dir.DONE))  # unseal FIRST
+    # then the files and the leaf's snapshot timeline (_history/)
+    shutil.rmtree(leaf, ignore_errors=True)
+    # prune now-empty intermediate key directories up to (never
+    # including) the table root — expiring every day= leaf under a
+    # status must not strand an empty status= directory.  rmdir on a
+    # non-empty parent raises and stops the walk; two tasks racing on a
+    # shared parent resolve the same way (one wins, the other's ENOENT
+    # lands here too).
+    if root is not None:
+        p = os.path.dirname(os.path.abspath(leaf))
+        with contextlib.suppress(OSError):
+            while p != os.path.abspath(root):
                 os.rmdir(p)
                 p = os.path.dirname(p)
-    except OSError:
-        pass
     return rows
 
 

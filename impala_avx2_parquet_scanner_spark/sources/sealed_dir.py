@@ -7,7 +7,8 @@ manifest names.  The writer follows the reference table writer's
 stage-then-publish discipline (hdfs-parquet-table-writer.cc:89-1107):
 
 1. each task writes its files under invisible temp names,
-   ``<name>.tmp-<token>`` (:class:`Staged`);
+   ``<name>.tmp-<token>`` (:class:`Staged`); a driver that gave all
+   its tasks one token removes them all with :func:`discard_token`;
 2. the driver's :func:`commit` renames them to their final names, each
    sidecar (``<name><suffix>``) before its file; a reused name that
    brings no new sidecar loses its old one;
@@ -23,7 +24,7 @@ one, whole — unless the commit reuses a committed name, whose old bytes
 its rename replaces in step 2.  A format that must publish something
 before the new names appear (fledir's `_LINEAGE`) does so before calling
 :func:`commit`.
-:func:`abort` removes a failed attempt's temp files.
+:func:`abort` removes the temp files of the tasks that reported back.
 
 Streams read the same manifest: :class:`SealedStreamReader`'s offset is
 the sorted set of file names already emitted.  A directory without
@@ -130,14 +131,26 @@ def discard(path: str) -> None:
         os.remove(path)
 
 
+def new_token() -> str:
+    return uuid.uuid4().hex[:12]
+
+
+def discard_token(dirpath: str, token: str) -> None:
+    """Remove every file staged in `dirpath` under `token`."""
+    with contextlib.suppress(FileNotFoundError):
+        for f in os.listdir(dirpath):
+            if f.endswith(f".tmp-{token}"):
+                discard(os.path.join(dirpath, f))
+
+
 class Staged(WriterCommitMessage):
     """One task's output under invisible temp names, sent to the driver's
     :func:`commit`.  `entries` holds (final name, temp name, manifest
     meta, {sidecar suffix: temp name}) per file."""
 
-    def __init__(self, dirpath: str):
+    def __init__(self, dirpath: str, token: "str | None" = None):
         self.dir = dirpath
-        self.token = uuid.uuid4().hex[:12]
+        self.token = token or new_token()
         self.entries: list[tuple[str, str, str, dict]] = []
 
     @property
@@ -240,9 +253,9 @@ def commit(
 
 def abort(dirpath: str, messages) -> None:
     """Remove the temp files of a failed attempt's tasks."""
-    for _, tmp, _, side in staged(messages):
-        for t in (tmp, *side.values()):
-            discard(os.path.join(dirpath, t))
+    for m in messages:
+        if m is not None:
+            discard_token(dirpath, m.token)
 
 
 class SealedStreamReader(SimpleDataSourceStreamReader):

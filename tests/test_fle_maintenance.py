@@ -800,14 +800,14 @@ def test_merge_all_null_segment_defers_to_typed_sibling():
 
 def test_retirenames_refused_with_overwrite(spark, tmp_path):
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        FleDirWriter,
+        commit_fledir,
     )
 
     with pytest.raises(ValueError, match="append-mode contract"):
-        FleDirWriter(
-            {"path": str(tmp_path), "retirenames": '["seg_0.fle"]'},
-            overwrite=True,
+        commit_fledir(
+            str(tmp_path), [], overwrite=True, retire={"seg_0.fle"}
         )
+    assert os.listdir(tmp_path) == []
 
 
 def test_append_evicts_stale_lineage_key(spark, tmp_path):
@@ -1240,8 +1240,9 @@ def test_one_segment_naming_rule_and_one_rewrite_job():
     """Tripwire over the package's AST: segment ids are parsed and
     minted only next to `fresh_seg_base` (no other module has a
     `seg_(\\d+)` regex or `// 1_000_000` id arithmetic), no call passes
-    `seg_base=`, and only `write_fledir` and `_rewrite_segments` commit
-    through `.write.format("fledir")`."""
+    `seg_base=`, no package function writes through
+    `.write.format("fledir")`, and one function of `fle_datasource.py`
+    calls `sealed_dir.commit`."""
     import ast
     from pathlib import Path
 
@@ -1249,8 +1250,8 @@ def test_one_segment_naming_rule_and_one_rewrite_job():
         "impala_avx2_parquet_scanner_spark"
     )
     home = pkg / "sources" / "fle_datasource.py"
-    writers = {"write_fledir", "_rewrite_segments"}
     offenders = []
+    committers = set()
     for p in sorted(pkg.rglob("*.py")):
         tree = ast.parse(p.read_text())
         where = p.relative_to(pkg.parent)
@@ -1280,6 +1281,14 @@ def test_one_segment_naming_rule_and_one_rewrite_job():
                 offenders.append(f"{where}:{line} seg_base=")
             f = n.func
             if (
+                p == home
+                and isinstance(f, ast.Attribute)
+                and f.attr == "commit"
+                and isinstance(f.value, ast.Name)
+                and f.value.id == "sealed_dir"
+            ):
+                committers.add(owner.get(id(n)))
+            if (
                 isinstance(f, ast.Attribute)
                 and f.attr == "format"
                 and isinstance(f.value, ast.Attribute)
@@ -1287,10 +1296,10 @@ def test_one_segment_naming_rule_and_one_rewrite_job():
                 and n.args
                 and isinstance(n.args[0], ast.Constant)
                 and n.args[0].value == "fledir"
-                and owner.get(id(n)) not in writers
             ):
                 offenders.append(
                     f"{where}:{line} .write.format('fledir') in "
                     f"{owner.get(id(n))}"
                 )
     assert not offenders, offenders
+    assert committers == {"commit_fledir"}, committers

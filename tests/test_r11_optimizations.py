@@ -152,3 +152,23 @@ def test_minhash_list_explosion_matches_self_join(spark, sf_dir):
         ).collect()
     )
     assert got == ref
+
+
+def test_minhash_oversized_bucket_fails_before_exploding(spark, monkeypatch):
+    """A (band, band_key) bucket above LSH_MAX_BUCKET_DOCS fails the
+    query with its size; a bucket at the limit explodes all its pairs."""
+    import pytest
+
+    from impala_avx2_parquet_scanner_spark.pipeline import dedup
+
+    monkeypatch.setattr(dedup, "LSH_MAX_BUCKET_DOCS", 5)
+
+    def bands(n_big):
+        rows = [(d, 0, "big") for d in range(n_big)]
+        rows += [(100, 1, "pair"), (101, 1, "pair"), (102, 2, "alone")]
+        return spark.createDataFrame(rows, "doc_id long, band int, band_key string")
+
+    at_limit = dedup.lsh_pairs(bands(5)).collect()
+    assert len(at_limit) == 5 * 4 // 2 + 1
+    with pytest.raises(Exception, match="holds 6 docs, more than"):
+        dedup.lsh_pairs(bands(6)).collect()

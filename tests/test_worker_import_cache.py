@@ -164,23 +164,14 @@ def test_entry_point_leaves_no_zipimporter(fmt, entry, zipped, tmp_path):
 
 class _Frame:
     """Stands in for the DataFrame `write_fledir` encodes: it keeps the
-    closure handed to `mapInPandas` and ignores the write chain."""
+    closure handed to `mapInPandas`, and its job stages nothing."""
 
     def mapInPandas(self, fn, schema):
         self.encode = fn
         return self
 
-    @property
-    def write(self):
-        return self
-
-    def format(self, *_):
-        return self
-
-    mode = option = format
-
-    def save(self):
-        pass
+    def collect(self):
+        return []
 
 
 def test_write_fledir_encode_leaves_no_zipimporter(zipped, tmp_path,
@@ -202,7 +193,8 @@ def test_write_fledir_encode_leaves_no_zipimporter(zipped, tmp_path,
     out.close()
     assert _zipimporters() == []
     first = next(frame.encode(iter(batches)))
-    assert parse_segment(first["payload"][0]).n == 2
+    staged = tmp_path / "t" / first["tmp"][0]
+    assert parse_segment(staged.read_bytes()).n == 2
 
 
 def test_trimmed_zip_still_imports_and_reads_resources(zipped):
