@@ -717,8 +717,9 @@ class AvroDirReader(DataSourceReader):
 
 class AvroDirWriter(DataSourceWriter):
     """Custom Avro SINK: each task encodes its rows into one container
-    file, staged under a temp name; `commit` and `abort` are the
-    sealed-directory protocol (`sealed_dir.commit` / `abort`)."""
+    file, staged under the job's token drawn here on the driver;
+    `commit` is `sealed_dir.commit`, and `abort` removes every file
+    staged under the token (`sealed_dir.discard_token`)."""
 
     def __init__(self, options, overwrite: bool, avro_schema: dict):
         self.dir = options.get("path")
@@ -727,6 +728,7 @@ class AvroDirWriter(DataSourceWriter):
         self.codec = options.get("codec", "deflate")
         self.avro_schema = avro_schema
         self.overwrite = overwrite
+        self.token = sealed_dir.new_token()
 
     @trims
     def write(self, rows):
@@ -738,7 +740,7 @@ class AvroDirWriter(DataSourceWriter):
             self.avro_schema,
             codec=self.codec,
         )
-        msg = sealed_dir.Staged(self.dir)
+        msg = sealed_dir.Staged(self.dir, self.token)
         msg.put(f"part-{uuid.uuid4().hex}.avro", data)
         return msg
 
@@ -751,7 +753,7 @@ class AvroDirWriter(DataSourceWriter):
 
     @trims
     def abort(self, messages):
-        sealed_dir.abort(self.dir, messages)
+        sealed_dir.discard_token(self.dir, self.token)
 
 
 class AvroDataSource(DataSource):

@@ -47,7 +47,14 @@ sealed-directory protocol of `sources/sealed_dir.py`, shared with
 `avrodir` and `ppmdir`; this module adds the fledir parts on top —
 segment stats in the manifest, bloom sidecars, `_LINEAGE`, retired
 names and `_history` snapshots.  `df.write.format("fledir")` and the
-stream sink are thin adapters over the same staging and commit.
+stream sink are thin adapters over the same staging and commit.  One
+reader half serves every read: `FleDirReader.read` alone turns committed
+segments into rows, for the batch scan, the stream reader's micro-batches
+and `fledir_changes`' change feed, and `_segment_file` alone maps a
+committed name to the file holding its bytes (live, else retired).  A
+scan planned before a retire-based commit (compaction, merge, delete)
+still reads its planned snapshot; one whose segments an overwrite or a
+vacuum removed fails, naming the segment.
 
 Known Spark 4.1 framework caveat (verified against a minimal stock
 DataSource, so it is not specific to this reader): the JVM caches the
@@ -76,6 +83,8 @@ from impala_avx2_parquet_scanner_spark.sources.fle_codec import (
     fle_pack,
     fle_unpack,
     pack_validity,
+    plane_sum,
+    popcount,
 )
 from impala_avx2_parquet_scanner_spark.sources import fle_kinds
 from impala_avx2_parquet_scanner_spark.sources.fle_kinds import (
@@ -406,15 +415,6 @@ def decode_segment_columns(
     return out
 
 
-def decode_segment(payload: bytes, mask: np.ndarray | None = None):
-    """Legacy two-column helper: one segment's bytes → (returnflag
-    ndarray[str], quantity int64, quantity-valid bool ndarray)."""
-    cols = decode_segment_columns(parse_segment(payload), mask=mask)
-    rf, _ = cols["l_returnflag"]
-    qty, qvalid = cols["l_quantity"]
-    return rf, qty, qvalid
-
-
 #: rows one input partition is sized for (`sealed_dir.partition_count`)
 _ROWS_PER_TASK = sealed_dir.ROWS_PER_TASK
 
@@ -422,6 +422,37 @@ _ROWS_PER_TASK = sealed_dir.ROWS_PER_TASK
 #: batch): keeps a big segment's per-batch working set cache-resident
 #: under many concurrent scan tasks (see FleDirReader.read)
 _DECODE_BLOCKS = 256
+
+
+def _segment_file(dirpath: str, name: str) -> "str | None":
+    """A committed segment name → the file holding its bytes: the live
+    file, else its `.retired` twin (a retire-based commit renames its
+    sources, never deletes them, until vacuum), else None."""
+    live = os.path.join(dirpath, name)
+    for path in (live, live + ".retired"):
+        if os.path.exists(path):
+            return path
+    return None
+
+
+def _planned_bytes(path: str) -> bytes:
+    """The bytes of a segment a scan planned: the planned path, else,
+    when a retire-based commit ran after planning, its retired twin.
+    Gone both ways (an overwrite's sweep, a vacuum) is an error: a
+    partial snapshot is not a snapshot."""
+    try:
+        with open(path, "rb") as fh:
+            return fh.read()
+    except FileNotFoundError:
+        found = _segment_file(*os.path.split(path))
+        if found is None:
+            raise ValueError(
+                f"fledir: segment {path} is gone — the table changed "
+                "after the scan was planned (an overwrite or a vacuum "
+                "removed it); re-run the query"
+            ) from None
+        with open(found, "rb") as fh:
+            return fh.read()
 
 
 class _FleFilesPartition(InputPartition):
@@ -1338,19 +1369,15 @@ class FleDirReader(DataSourceReader):
             if stats and self.pushed and self._stats_refute(stats, memo):
                 continue  # whole file pruned: never opened
             if gen is not None:
-                # snapshot name → surviving bytes: the live file if the
-                # name is still current, else its .retired twin
-                # (compaction retires, never deletes, until vacuum).  A
-                # name with neither means vacuum expired this snapshot —
-                # fail loudly, a partial generation is not a generation.
-                live = os.path.join(dirpath, name)
-                if not os.path.exists(live):
-                    if not os.path.exists(live + ".retired"):
-                        raise ValueError(
-                            f"fledir: generation {gen} expired — segment "
-                            f"{name} was vacuumed after its retirement"
-                        )
-                    name += ".retired"
+                # a name with no surviving bytes means vacuum expired
+                # this snapshot: a partial generation is not a generation
+                found = _segment_file(dirpath, name)
+                if found is None:
+                    raise ValueError(
+                        f"fledir: generation {gen} expired — segment "
+                        f"{name} was vacuumed after its retirement"
+                    )
+                name = os.path.basename(found)
             files.append((name, rows))
         return files
 
@@ -1379,11 +1406,6 @@ class FleDirReader(DataSourceReader):
         return self._make_partitions([
             (os.path.join(self.dir, f), None, r) for f, r in files
         ])
-
-    @staticmethod
-    def _column_array(pa, c: ParsedColumn, vals, valid):
-        """One decoded column → its Arrow array (kind-typed)."""
-        return c.spec.to_arrow(pa, c, vals, ~valid if c.nullable else None)
 
     def _pa_evolved_type(self, pa, name: str):
         """Arrow type of an evolved NULL column, from the declared read
@@ -1428,11 +1450,9 @@ class FleDirReader(DataSourceReader):
                     bfp, bloom_conj
                 ):
                     continue  # proven pointless: zero segment bytes
-            with open(path, "rb") as fh:
-                payload = fh.read()
             # parse ONCE: the same parsed sections feed both the kernel
             # mask and the decode (no byte is re-parsed)
-            seg = parse_segment(payload)
+            seg = parse_segment(_planned_bytes(path))
             kernel_mask = self._segment_mask(seg)
             if kernel_mask is not None and not kernel_mask.any():
                 continue  # whole segment kernel-rejected: zero decode
@@ -1510,20 +1530,16 @@ class FleDirReader(DataSourceReader):
                         break
                 if n_out is None:  # only partition-key / evolved cols
                     if kernel_mask is not None:
-                        from impala_avx2_parquet_scanner_spark.sources.fle_codec import (  # noqa: E501
-                            popcount,
-                        )
-
                         n_out = popcount(kernel_mask[b0:b1])
                     else:
                         n_out = min(b1 * 64, seg.n) - b0 * 64
                 arrays = []
                 for n in out_names:
                     if n in stored:
-                        vals, valid = cols[n]
-                        arrays.append(
-                            self._column_array(pa, stored[n], vals, valid)
-                        )
+                        c, (vals, valid) = stored[n], cols[n]
+                        arrays.append(c.spec.to_arrow(
+                            pa, c, vals, ~valid if c.nullable else None
+                        ))
                     elif n in pcols:
                         # constant partition-key column, materialized
                         # from the directory name — the partition-key
@@ -1563,11 +1579,6 @@ def segment_stats(seg: ParsedSegment) -> dict:
     kind's `t`/`s` tags and, where the kind keeps one, an exact `sum`.
     The parquet footer-stats analog the reader's `partitions()` prunes
     files with."""
-    from impala_avx2_parquet_scanner_spark.sources.fle_codec import (
-        plane_sum,
-        popcount,
-    )
-
     out: dict[str, dict] = {}
     for c in seg.columns:
         if c.validity is None:
@@ -2093,7 +2104,9 @@ class FleDirWriter(DataSourceWriter):
     own writes (`_stage_segment`) and sealed by :func:`commit_fledir`.
     Options: `path` and `bloomcols`.  A caller that picks raw `seg_id`s
     may reuse a committed name, whose bytes are then replaced at its
-    rename, before the swap."""
+    rename, before the swap.  The job's one staging token is drawn here,
+    on the driver, and travels with the pickled writer into every task,
+    so `abort` also removes what a failed task staged before it died."""
 
     def __init__(self, options, overwrite: bool):
         self.dir = options.get("path")
@@ -2101,10 +2114,11 @@ class FleDirWriter(DataSourceWriter):
             raise ValueError("fledir requires option 'path'")
         self.overwrite = overwrite
         self.bloom_cols = _bloom_cols(options.get("bloomcols"))
+        self.token = sealed_dir.new_token()
 
     @trims
     def write(self, rows):
-        msg = sealed_dir.Staged(self.dir)
+        msg = sealed_dir.Staged(self.dir, self.token)
         for row in rows:
             _stage_segment(
                 msg, f"seg_{row.seg_id}.fle", bytes(row.payload),
@@ -2120,7 +2134,7 @@ class FleDirWriter(DataSourceWriter):
 
     @trims
     def abort(self, messages):
-        sealed_dir.abort(self.dir, messages)
+        sealed_dir.discard_token(self.dir, self.token)
 
 
 def probe_first_segment(path: str) -> "ParsedSegment | None":
@@ -2235,24 +2249,16 @@ class FleStreamReader(sealed_dir.SealedStreamReader):
 
     def __init__(self, options):
         super().__init__(options)
-        #: a hive-partitioned root streams as a MERGED per-leaf
-        #: feed (round 10; previously refused): offset names are
-        #: leaf-relative POSIX paths and the partition-key values
-        #: materialize as trailing constant columns, matching the
-        #: batch schema's key-columns-last convention.  Leaves are
-        #: re-discovered every micro-batch, so partitions appended
-        #: mid-stream start flowing and partitions RETIRED by
-        #: `expire_fledir_partitions` stop being listed the moment
-        #: their manifest is gone (retention must expire only
-        #: fully-streamed partitions — the same fully-consumed
-        #: contract compaction has: a planned-but-uncommitted
-        #: batch can replay retired COMPACTION sources, but an
-        #: expired leaf's bytes are deleted, not retired).
-        #: Re-probed at every micro-batch, not frozen here: a
-        #: stream started on an EMPTY root must notice col=value
-        #: leaves that appear later (a flat live feed keeps
-        #: probing None — the root holds `.fle` files, never
-        #: key directories).
+        #: a hive-partitioned root streams as one MERGED per-leaf
+        #: feed: offset names are leaf-relative POSIX paths, and the
+        #: key values materialize as trailing constant columns (the
+        #: batch schema's keys-last convention).  Re-probed every
+        #: micro-batch (`_reprobe`), so a stream started on an empty
+        #: root notices leaves that appear later, appended partitions
+        #: start flowing, and partitions `expire_fledir_partitions`
+        #: removed stop being listed (expire only fully-streamed
+        #: partitions: an expired leaf's bytes are deleted, not
+        #: retired like compaction's sources).
         self.partitioned = (
             discover_fledir_partitions(self.dir) is not None
         )
@@ -2306,58 +2312,36 @@ class FleStreamReader(sealed_dir.SealedStreamReader):
         return out
 
     def _rows(self, names):
-        # returns a LIST of plain-python tuples: the stream
-        # framework pickles prefetched rows (numpy scalars do not
-        # survive Spark's type verification)
-        # per-name "/" detection rather than the partitioned flag:
-        # a replay can carry leaf-qualified names even if the root
-        # probed flat at construction
-        leaf_map = (
-            self._leaf_map()
-            if any("/" in n for n in names)
-            else {}
-        )
-        out = []
+        """The batch reader's rows of `names`, as a LIST of plain Python
+        tuples (the stream framework pickles prefetched rows).  A name
+        compacted away after this batch was planned reads from its
+        retired twin (`FleDirReader.read`)."""
+        if not names:
+            return []
+        # per-name "/" detection rather than the partitioned flag: a
+        # replay can carry leaf-qualified names even if the root probed
+        # flat, or no longer lists any leaf
+        leaf_map = self._leaf_map() if any("/" in n for n in names) else {}
+        values = []
         for name in names:
-            p = os.path.join(self.dir, name)
-            if not os.path.exists(p) and os.path.exists(
-                p + ".retired"
-            ):
-                # the segment was compacted away AFTER this batch's
-                # offsets were planned: its bytes live on as
-                # `<name>.retired` (invisible to fresh scans) until
-                # vacuum, precisely so this replay can still serve
-                # the batch — review finding: deleting sources
-                # wedged a restarted stream with FileNotFoundError
-                p = p + ".retired"
             rel = name.rpartition("/")[0]
-            key_cells: tuple = ()
-            if rel:
-                vals = leaf_map.get(rel)
-                if vals is None:
-                    # leaf mid-expiry (manifest gone, file still
-                    # readable): parse the key values from the
-                    # path components with the standard typing
-                    vals = tuple(
-                        _typed_partition_value(
-                            comp.partition("=")[2]
-                        )
-                        for comp in rel.split("/")
-                    )
-                key_cells = tuple(vals)
-            with open(p, "rb") as fh:
-                seg = parse_segment(fh.read())
-            cols = decode_segment_columns(seg)
-            # each column's scalar converter, picked once per segment
-            lanes = [
-                (*cols[c.name], c.spec.scalar, c.scale) for c in seg.columns
-            ]
-            for j in range(seg.n):
-                out.append(tuple(
-                    conv(vals[j], scale) if valid[j] else None
-                    for vals, valid, conv, scale in lanes
-                ) + key_cells)
-        return out
+            comps = [c.partition("=") for c in rel.split("/")] if rel else []
+            # a leaf mid-expiry (manifest gone, file still readable)
+            # types its key values from the path
+            values.append(leaf_map.get(rel) or tuple(
+                _typed_partition_value(v) for _, _, v in comps
+            ))
+        keys = [k for k, _, _ in comps]  # one layout: every name alike
+        reader = FleDirReader({"path": self.dir})
+        reader.partitioned = (keys, []) if keys else None
+        part = _FleFilesPartition(
+            [os.path.join(self.dir, n) for n in names],
+            values if keys else None,
+        )
+        return [
+            row for batch in reader.read(part)
+            for row in zip(*(col.to_pylist() for col in batch.columns))
+        ]
 
     def _sealed(self, name: str) -> bool:
         """True iff the file parses as a complete segment — asked only
@@ -2458,9 +2442,11 @@ class FleStreamWriter(DataSourceStreamWriter):
                     f"fledir stream sink: bloomcols column {c!r} "
                     "not in the stream schema"
                 )
+        self.token = sealed_dir.new_token()
 
+    @trims
     def write(self, iterator):
-        msg = sealed_dir.Staged(self.dir)
+        msg = sealed_dir.Staged(self.dir, self.token)
         rows = list(iterator)
         if rows:
             # staged under a placeholder name: the epoch's final names
@@ -2471,6 +2457,7 @@ class FleStreamWriter(DataSourceStreamWriter):
             _stage_segment(msg, "stream.fle", payload, self.bloom_cols)
         return msg
 
+    @trims
     def commit(self, messages, batchId: int) -> None:
         prefix = f"seg_s{batchId}_"
         entries = [
@@ -2481,15 +2468,23 @@ class FleStreamWriter(DataSourceStreamWriter):
             self.dir, entries, drop=lambda n: n.startswith(prefix)
         )
 
+    @trims
     def abort(self, messages, batchId: int) -> None:
-        sealed_dir.abort(self.dir, messages)
+        sealed_dir.discard_token(self.dir, self.token)
 
 
 def register_fledir(spark) -> None:
+    """Register the `fledir` source on `spark`; a second registration
+    is a no-op, and any other registration error propagates.  Pyspark
+    4.1 limitation: `spark.newSession()` of a registered session reports
+    the source as already registered (so this is a no-op there) yet
+    cannot resolve ``read.format("fledir")`` (`DATA_SOURCE_NOT_FOUND`):
+    read through the session that registered it."""
     try:
         spark.dataSource.register(FleDataSource)
-    except Exception:  # already registered on this session
-        pass
+    except Exception as e:
+        if "DATA_SOURCE_ALREADY_EXISTS" not in str(e):
+            raise
 
 
 def _encode_frame(frame, columns, base: int, stage: SegmentStager):
@@ -2719,25 +2714,32 @@ def _committed_entries(path: str):
             yield root, name, stats_json
 
 
+def segment_row_count(dirpath: str, name: str, stats_json: str) -> int:
+    """Row count of one committed manifest entry: its `__rows__` stat
+    (zero segment bytes read), else — for an entry written before the
+    count key — the segment's 14-byte header (n sits right after the
+    magic, which is checked)."""
+    n = (_entry_stats(stats_json) or {}).get("__rows__")
+    if n is None:
+        with open(os.path.join(dirpath, name), "rb") as fh:
+            head = fh.read(14)
+        if head[:4] != _MAGIC:
+            raise ValueError(f"fledir: bad segment magic in {name}")
+        (n,) = struct.unpack_from("<I", head, 4)
+    return int(n)
+
+
 def fledir_row_count(path: str) -> int:
     """Metadata-only COUNT(*) over a committed fledir (flat or
     partitioned): each manifest entry carries its segment's row count
     (`__rows__`), so the total is a driver-side manifest read with
     ZERO segment bytes touched — the footer num_rows shortcut the
     reference takes for count(*) (hdfs-parquet-scanner.cc:1377-1396).
-    Entries written before the count key fall back to reading the
-    segment's 14-byte header (n sits right after the magic)."""
-    total = 0
-    for root, name, stats_json in _committed_entries(path):
-        n = (_entry_stats(stats_json) or {}).get("__rows__")
-        if n is None:
-            with open(os.path.join(root, name), "rb") as fh:
-                head = fh.read(14)
-            if head[:4] != _MAGIC:
-                raise ValueError(f"fledir: bad segment magic in {name}")
-            (n,) = struct.unpack_from("<I", head, 4)
-        total += int(n)
-    return total
+    Entries without the count key read :func:`segment_row_count`'s
+    header fallback."""
+    return sum(
+        segment_row_count(*entry) for entry in _committed_entries(path)
+    )
 
 
 def fledir_partition_row_counts(path: str) -> "tuple[list, list]":
@@ -2881,10 +2883,7 @@ def fledir_history(path: str) -> list[tuple]:
         for name, stats_json in snap or ():
             stats = _entry_stats(stats_json) or {}
             n_rows += int(stats.get("__rows__") or 0)
-            live = os.path.join(path, name)
-            if not (
-                os.path.exists(live) or os.path.exists(live + ".retired")
-            ):
+            if _segment_file(path, name) is None:
                 readable = False
         out.append((gen, len(snap or ()), n_rows, readable))
     return out

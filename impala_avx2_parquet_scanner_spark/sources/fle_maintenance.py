@@ -54,6 +54,12 @@ DELETE pick their candidate segments with one metadata probe
 the bloom sidecars) and drop matched rows with one exact matcher
 (:func:`_conjunct_rows`).
 
+Maintenance reads committed rows the way every reader does: the change
+feed (:func:`fledir_changes`) runs the batch scan's `FleDirReader.read`,
+and the rewrite input, :func:`segment_reencode_columns`, is the only
+other caller of the segment decoder.  Row counts come from
+``segment_row_count``, the one manifest-entry count.
+
 The exact decode→re-encode round trip is :func:`segment_reencode_columns`:
 for every column kind it reconstructs precisely the ``(name, values,
 kind_hint)`` input :func:`encode_segment_columns` expects, including the
@@ -64,10 +70,8 @@ from __future__ import annotations
 
 import contextlib
 import functools
-import json
 import os
 import shutil
-import struct
 
 import numpy as np
 
@@ -79,10 +83,13 @@ from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
     FleDirReader,
     ParsedSegment,
     SegmentStager,
+    _FleFilesPartition,
     _encode_frame,
     _fle_asset,
     _manifest_entries,
     _read_lineage,
+    _segment_ddl,
+    _segment_file,
     _table,
     _write_lineage_pending,
     bloom_eq_in_conjuncts,
@@ -96,6 +103,7 @@ from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
     parse_segment,
     probe_first_segment,
     segment_id,
+    segment_row_count,
     write_fledir,
 )
 
@@ -252,19 +260,6 @@ def sort_merged_columns(cols: list[tuple], sort_by: str) -> list[tuple]:
     ]
 
 
-def _segment_rows(path: str, name: str, stats_json: str) -> int:
-    """Row count of one committed segment — from the manifest stats
-    when present (zero bytes read), else the 14-byte header."""
-    if stats_json:
-        try:
-            return int(json.loads(stats_json)["__rows__"])
-        except (ValueError, KeyError):
-            pass
-    with open(os.path.join(path, name), "rb") as fh:
-        head = fh.read(14)
-    return struct.unpack_from("<I", head, 4)[0]
-
-
 def plan_compaction_bins(
     path: str, target_rows: int
 ) -> list[list[str]]:
@@ -287,7 +282,7 @@ def plan_compaction_bins(
     cur: list[str] = []
     cur_rows = 0
     for name, s in entries:
-        rows = _segment_rows(path, name, s)
+        rows = segment_row_count(path, name, s)
         if cur and cur_rows + rows > target_rows:
             bins.append(cur)
             cur, cur_rows = [], 0
@@ -1306,63 +1301,40 @@ def _merge_partitioned_root(
     return total
 
 
-def _resolve_segment_path(path: str, name: str) -> str:
-    """Snapshot name → surviving bytes (live file or `.retired` twin),
-    loudly when vacuum already reclaimed it."""
-    live = os.path.join(path, name)
-    if os.path.exists(live):
-        return live
-    if os.path.exists(live + ".retired"):
-        return live + ".retired"
-    raise ValueError(
-        f"fledir: segment {name} of the requested generation was "
-        "vacuumed — the change feed for that span has expired"
-    )
-
-
 def _segments_df(spark, path: str, names: "list[str]"):
-    """Explicit segment set → DataFrame through the container's own
-    decode and the batch reader's Arrow build (distributed, one task
-    group over the files)."""
-    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-        _segment_ddl,
-    )
-
+    """Explicit segment set → DataFrame of its rows, read by
+    `FleDirReader.read` inside one `mapInArrow` job over input
+    partitions planned here on the resolved paths.  Columns follow the
+    first committed segment's order (Spark maps Arrow columns by
+    position); a segment missing one fails loudly."""
     first = probe_first_segment(path)
     if first is None:
         raise ValueError(f"fledir: {path} has no committed segments")
     ddl = _segment_ddl(first)
     if not names:
         return spark.createDataFrame([], ddl)
-    paths = [_resolve_segment_path(path, n) for n in sorted(names)]
-    ordered = [c.name for c in first.columns]
+    paths = []
+    for name in sorted(names):
+        found = _segment_file(path, name)
+        if found is None:
+            raise ValueError(
+                f"fledir: segment {name} of the requested generation was "
+                "vacuumed — the change feed for that span has expired"
+            )
+        paths.append(found)
+    parts = [_FleFilesPartition(b) for b in sealed_dir.deal(paths, 32)]
+    reader = FleDirReader(
+        {"path": path}, wanted=[c.name for c in first.columns]
+    )
 
     @trims
     def decode(batches):
-        import pyarrow as pa
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                yield from reader.read(parts[i])
 
-        for pdf in batches:
-            for p in pdf["p"]:
-                with open(p, "rb") as fh:
-                    seg = parse_segment(fh.read())
-                cols = decode_segment_columns(seg)
-                # emit in the PROBE's column order: Spark maps Arrow
-                # batch columns positionally, so a segment whose own
-                # order differs would silently transpose; a missing
-                # column fails loudly (heterogeneous segments are
-                # outside the contract)
-                arrays = [
-                    FleDirReader._column_array(pa, seg.column(nm), *cols[nm])
-                    for nm in ordered
-                ]
-                yield pa.RecordBatch.from_arrays(
-                    arrays, names=ordered
-                ).to_pandas(integer_object_nulls=True)
-
-    return (
-        spark.createDataFrame([(p,) for p in paths], "p string")
-        .repartition(min(len(paths), 32))
-        .mapInPandas(decode, schema=ddl)
+    return spark.range(0, len(parts), numPartitions=len(parts)).mapInArrow(
+        decode, ddl
     )
 
 
@@ -1391,9 +1363,11 @@ def fledir_changes(
        Rows a rewrite carried over unchanged cancel; at 100 TB the
        shuffle is sized by the CHANGED files, not the table.
 
-    Snapshot segments resolve through `.retired` files like generation
-    reads; a vacuumed span fails loudly — an expired feed is not a
-    feed."""
+    Snapshot segments resolve to their live or `.retired` file through
+    the same resolver as generation reads, and the changed segments' rows
+    come from the batch scan's own `FleDirReader.read` (one `mapInArrow`
+    job per side, :func:`_segments_df`); a vacuumed span fails loudly —
+    an expired feed is not a feed."""
     from pyspark.sql import functions as F
 
     from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (

@@ -173,10 +173,11 @@ class PpmDirWriter(DataSourceWriter):
     """Custom SINK (the writer half of the scanner registration —
     §2A #17's role for this format) under the sealed-directory protocol
     (`sealed_dir`): each task stages its rows' payloads as
-    `doc_<id>.ppm.tmp-<token>`, invisible to both reader halves, and
-    `commit` renames them, swaps the `_DONE` manifest (an append keeps
-    the previous entries) and only then, for mode('overwrite'), removes
-    the stale `.ppm` files; `abort` deletes this attempt's temps.  Input
+    `doc_<id>.ppm.tmp-<token>-<attempt>` under the job's one token,
+    invisible to both reader halves, and `commit` renames them, swaps
+    the `_DONE` manifest (an append keeps the previous entries) and only
+    then, for mode('overwrite'), removes the stale `.ppm` files; `abort`
+    deletes every temp of the job, a failed task's included.  Input
     schema: (doc_id bigint, payload binary) where payload is a complete
     P6 file."""
 
@@ -185,10 +186,11 @@ class PpmDirWriter(DataSourceWriter):
         if not self.dir:
             raise ValueError("ppmdir requires option 'path'")
         self.overwrite = overwrite
+        self.token = sealed_dir.new_token()
 
     @trims
     def write(self, rows):
-        msg = sealed_dir.Staged(self.dir)
+        msg = sealed_dir.Staged(self.dir, self.token)
         for row in rows:
             msg.put(f"doc_{row.doc_id}.ppm", bytes(row.payload))
         return msg
@@ -202,7 +204,7 @@ class PpmDirWriter(DataSourceWriter):
 
     @trims
     def abort(self, messages):
-        sealed_dir.abort(self.dir, messages)
+        sealed_dir.discard_token(self.dir, self.token)
 
 
 class PpmDataSource(DataSource):

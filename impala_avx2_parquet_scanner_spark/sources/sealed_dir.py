@@ -7,8 +7,10 @@ manifest names.  The writer follows the reference table writer's
 stage-then-publish discipline (hdfs-parquet-table-writer.cc:89-1107):
 
 1. each task writes its files under invisible temp names,
-   ``<name>.tmp-<token>`` (:class:`Staged`); a driver that gave all
-   its tasks one token removes them all with :func:`discard_token`;
+   ``<name>.tmp-<token>-<attempt>`` (:class:`Staged`), where `token` is
+   the write job's, drawn once on the driver, and `attempt` tells two
+   attempts of one task apart; a failed job's driver removes every file
+   of the job, its failed tasks' included, with :func:`discard_token`;
 2. the driver's :func:`commit` renames them to their final names, each
    sidecar (``<name><suffix>``) before its file; a reused name that
    brings no new sidecar loses its old one;
@@ -24,7 +26,6 @@ one, whole — unless the commit reuses a committed name, whose old bytes
 its rename replaces in step 2.  A format that must publish something
 before the new names appear (fledir's `_LINEAGE`) does so before calling
 :func:`commit`.
-:func:`abort` removes the temp files of the tasks that reported back.
 
 Streams read the same manifest: :class:`SealedStreamReader`'s offset is
 the sorted set of file names already emitted.  A directory without
@@ -44,6 +45,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
+
+from impala_avx2_parquet_scanner_spark.pyworker import trims
 
 DONE = "_DONE"
 HISTORY_DIR = "_history"
@@ -136,21 +139,24 @@ def new_token() -> str:
 
 
 def discard_token(dirpath: str, token: str) -> None:
-    """Remove every file staged in `dirpath` under `token`."""
+    """Remove every file staged in `dirpath` under the job token
+    `token`, by any task attempt."""
     with contextlib.suppress(FileNotFoundError):
         for f in os.listdir(dirpath):
-            if f.endswith(f".tmp-{token}"):
+            if f".tmp-{token}-" in f:
                 discard(os.path.join(dirpath, f))
 
 
 class Staged(WriterCommitMessage):
-    """One task's output under invisible temp names, sent to the driver's
-    :func:`commit`.  `entries` holds (final name, temp name, manifest
+    """One task attempt's output under invisible temp names, sent to the
+    driver's :func:`commit`.  `token` is the write job's; each instance
+    adds its own attempt tag, so attempts staging the same name never
+    share a temp file.  `entries` holds (final name, temp name, manifest
     meta, {sidecar suffix: temp name}) per file."""
 
-    def __init__(self, dirpath: str, token: "str | None" = None):
+    def __init__(self, dirpath: str, token: str):
         self.dir = dirpath
-        self.token = token or new_token()
+        self.tag = f"{token}-{new_token()}"
         self.entries: list[tuple[str, str, str, dict]] = []
 
     @property
@@ -159,7 +165,7 @@ class Staged(WriterCommitMessage):
 
     def _write(self, name: str, data: bytes) -> str:
         os.makedirs(self.dir, exist_ok=True)
-        tmp = f"{name}.tmp-{self.token}"
+        tmp = f"{name}.tmp-{self.tag}"
         with open(os.path.join(self.dir, tmp), "wb") as fh:
             fh.write(data)
         return tmp
@@ -251,13 +257,6 @@ def commit(
             discard(path + s)
 
 
-def abort(dirpath: str, messages) -> None:
-    """Remove the temp files of a failed attempt's tasks."""
-    for m in messages:
-        if m is not None:
-            discard_token(dirpath, m.token)
-
-
 class SealedStreamReader(SimpleDataSourceStreamReader):
     """A sealed directory read as a stream of files.  The offset is the
     sorted set of names already emitted, so `readBetweenOffsets` replays
@@ -287,6 +286,7 @@ class SealedStreamReader(SimpleDataSourceStreamReader):
         """(names to emit, names to take into the offset without rows)."""
         return names, []
 
+    @trims
     def read(self, start: dict):
         seen = set(start.get("names", []))
         names, manifested = self._listing()
@@ -300,6 +300,7 @@ class SealedStreamReader(SimpleDataSourceStreamReader):
         offset = {"names": sorted(seen.union(emit, absorbed))}
         return iter(self._rows(emit)), offset
 
+    @trims
     def readBetweenOffsets(self, start: dict, end: dict):
         seen = set(start.get("names", []))
         emit, _ = self._split(sorted(set(end.get("names", [])) - seen), seen)

@@ -42,6 +42,7 @@ from pyspark.sql.types import (
 )
 
 from impala_avx2_parquet_scanner_spark.operators.windows import EWMA_DEPTH
+from impala_avx2_parquet_scanner_spark.pyworker import trims
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -57,6 +58,7 @@ OUTPUT_SCHEMA = StructType(
 STATE_SCHEMA = StructType([StructField("tail", ArrayType(LongType()))])
 
 
+@trims
 def _fold_ewma(
     key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
 ) -> Iterable[pd.DataFrame]:

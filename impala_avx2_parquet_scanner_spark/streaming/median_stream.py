@@ -35,6 +35,7 @@ from pyspark.sql.types import (
 )
 
 from impala_avx2_parquet_scanner_spark.operators.windows import MEDIAN_WINDOW
+from impala_avx2_parquet_scanner_spark.pyworker import trims
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -49,6 +50,7 @@ OUTPUT_SCHEMA = StructType(
 STATE_SCHEMA = StructType([StructField("tail", ArrayType(LongType()))])
 
 
+@trims
 def _fold_median(
     key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
 ) -> Iterable[pd.DataFrame]:

@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from impala_avx2_parquet_scanner_spark.pyworker import trims
+
 SESSION_GAP_SECONDS = 1800
 
 OUTPUT_SCHEMA = StructType(
@@ -55,6 +57,7 @@ def _us(ts: pd.Timestamp) -> int:
     return int(ts.value // 1000)
 
 
+@trims
 def track_sessions(
     key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
 ) -> Iterable[pd.DataFrame]:

@@ -11,9 +11,18 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
-    decode_segment,
+    decode_segment_columns,
     encode_segment,
+    parse_segment,
 )
+
+
+def decode_segment(payload: bytes, mask=None):
+    """A two-column (l_returnflag, l_quantity) segment's bytes →
+    (returnflag values, quantity values, quantity validity)."""
+    cols = decode_segment_columns(parse_segment(payload), mask=mask)
+    qty, qvalid = cols["l_quantity"]
+    return cols["l_returnflag"][0], qty, qvalid
 
 
 def test_segment_roundtrip_basic():

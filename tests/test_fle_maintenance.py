@@ -253,6 +253,20 @@ def test_compact_bins_metadata_only(spark, tmp_path):
     # manifest order inside each bin (sorted segment names)
     flat = [n for b in bins for n in b]
     assert flat == sorted(flat)
+    # stats-less (legacy) entries count their rows from the segment
+    # header, whose magic is checked
+    from impala_avx2_parquet_scanner_spark.sources import sealed_dir
+
+    done = os.path.join(path, "_DONE")
+    entries = _manifest_entries(path)
+    sealed_dir.write_manifest(
+        done, [(n, "" if i % 2 else s) for i, (n, s) in enumerate(entries)]
+    )
+    assert plan_compaction_bins(path, target_rows=200) == bins
+    with open(os.path.join(path, entries[1][0]), "r+b") as fh:
+        fh.write(b"JUNK")
+    with pytest.raises(ValueError, match="bad segment magic"):
+        plan_compaction_bins(path, target_rows=200)
 
 
 def test_compact_partitioned_root_per_leaf(spark, tmp_path):
@@ -710,10 +724,10 @@ def test_replay_skips_absorbed_and_reads_retired(spark, tmp_path):
     assert len(list(r.readBetweenOffsets(r.initialOffset(), off1))) \
         == 300
 
-    # vacuum reclaims; replay of historic offsets is then impossible
+    # vacuum reclaims; replay of historic offsets then fails loudly
     assert vacuum_fledir(path)["files_removed"] == 6
     assert not [f for f in os.listdir(path) if f.endswith(".retired")]
-    with pytest.raises(FileNotFoundError):
+    with pytest.raises(ValueError, match="changed after the scan was planned"):
         list(r.readBetweenOffsets(r.initialOffset(), off1))
 
 

@@ -221,7 +221,10 @@ def test_trimmed_pyspark_error_renders_its_message(zipped):
 
 # --- tripwire: every closure handed to a Python worker is trimmed ----------
 
-_WORKER_CALLS = {"mapInPandas", "mapInArrow", "applyInPandas", "pandas_udf"}
+_WORKER_CALLS = {
+    "mapInPandas", "mapInArrow", "applyInPandas", "applyInPandasWithState",
+    "pandas_udf",
+}
 
 
 def _name(node) -> str | None:
