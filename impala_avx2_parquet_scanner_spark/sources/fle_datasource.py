@@ -607,9 +607,13 @@ def _sorted_literals(values, conv) -> "list | None":
         return None
 
 
+_DISCOVER = object()
+
+
 class FleDirReader(DataSourceReader):
     def __init__(self, options, wanted: "list[str] | None" = None,
-                 field_types: "dict | None" = None):
+                 field_types: "dict | None" = None,
+                 partitioned=_DISCOVER):
         self.dir = options.get("path")
         if not self.dir:
             raise ValueError("fledir requires option 'path'")
@@ -646,8 +650,10 @@ class FleDirReader(DataSourceReader):
         #: ENTIRELY on the driver (partition pruning,
         #: descriptors.h:178-262's partition-key literal exprs;
         #: num_clustering_cols plural per descriptors.h:154-162) and
-        #: never reach the segment kernels.
-        self.partitioned = discover_fledir_partitions(self.dir)
+        #: never reach the segment kernels.  A caller that already
+        #: walked the root passes its layout as `partitioned`.
+        self.partitioned = (discover_fledir_partitions(self.dir)
+                            if partitioned is _DISCOVER else partitioned)
         self._coerce_partition_types()
         #: TIME TRAVEL (option generation=N): read the table AS OF a
         #: committed generation from its `_history/N.manifest`
@@ -2252,33 +2258,39 @@ class FleStreamReader(sealed_dir.SealedStreamReader):
         #: a hive-partitioned root streams as one MERGED per-leaf
         #: feed: offset names are leaf-relative POSIX paths, and the
         #: key values materialize as trailing constant columns (the
-        #: batch schema's keys-last convention).  Re-probed every
-        #: micro-batch (`_reprobe`), so a stream started on an empty
+        #: batch schema's keys-last convention).  Walked once per
+        #: micro-batch (`_walk`), so a stream started on an empty
         #: root notices leaves that appear later, appended partitions
         #: start flowing, and partitions `expire_fledir_partitions`
         #: removed stop being listed (expire only fully-streamed
         #: partitions: an expired leaf's bytes are deleted, not
         #: retired like compaction's sources).
-        self.partitioned = (
-            discover_fledir_partitions(self.dir) is not None
-        )
+        self.partitioned = False
+        self._layout = None
 
-    def _reprobe(self) -> None:
-        if not self.partitioned:
-            self.partitioned = (
-                discover_fledir_partitions(self.dir) is not None
-            )
+    def _walk(self) -> None:
+        """The micro-batch's one partition discovery: listing, lineage
+        and decode all read the leaves it found."""
+        self._layout = discover_fledir_partitions(self.dir)
+        self.partitioned = self.partitioned or self._layout is not None
+
+    def read(self, start: dict):
+        self._walk()
+        return super().read(start)
+
+    def readBetweenOffsets(self, start: dict, end: dict):
+        self._walk()
+        return super().readBetweenOffsets(start, end)
 
     def _leaf_map(self) -> "dict[str, tuple]":
-        """{leaf-relative POSIX path: typed partition values} for
-        the currently committed leaves (re-discovered per call)."""
-        part = discover_fledir_partitions(self.dir)
-        if part is None:
+        """{leaf-relative POSIX path: typed partition values} for the
+        leaves this micro-batch's walk found committed."""
+        if self._layout is None:
             return {}
         return {
             os.path.relpath(leaf, self.dir).replace(os.sep, "/"):
                 vals
-            for vals, leaf in part[1]
+            for vals, leaf in self._layout[1]
         }
 
     def _listing(self) -> "tuple[list[str], bool]":
@@ -2286,7 +2298,6 @@ class FleStreamReader(sealed_dir.SealedStreamReader):
         (every `.fle` file of a root without `_DONE`), leaf-qualified
         relative paths of each committed leaf's `_DONE` names on a
         partitioned one."""
-        self._reprobe()
         if not self.partitioned:
             return super()._listing()
         names = [
@@ -2332,8 +2343,9 @@ class FleStreamReader(sealed_dir.SealedStreamReader):
                 _typed_partition_value(v) for _, _, v in comps
             ))
         keys = [k for k, _, _ in comps]  # one layout: every name alike
-        reader = FleDirReader({"path": self.dir})
-        reader.partitioned = (keys, []) if keys else None
+        reader = FleDirReader(
+            {"path": self.dir}, partitioned=(keys, []) if keys else None
+        )
         part = _FleFilesPartition(
             [os.path.join(self.dir, n) for n in names],
             values if keys else None,
@@ -2368,7 +2380,6 @@ class FleStreamReader(sealed_dir.SealedStreamReader):
         processed some, since emitting duplicates and skipping loses
         rows.  A replay applies the same rule against its START offset,
         so an absorbed name contributes no rows there either."""
-        self._reprobe()
         lineage = self._lineage_all()
         memo: dict[str, bool] = {}
         emit, absorbed = [], []

@@ -16,12 +16,9 @@ import shutil
 
 import pytest
 
-import impala_avx2_parquet_scanner_spark as engine
 from impala_avx2_parquet_scanner_spark.catalog import table
 from impala_avx2_parquet_scanner_spark.sources import parquet_io
 from impala_avx2_parquet_scanner_spark.sources.parquet_io import read_parquet
-
-engine.load_all()
 
 
 def test_table_returns_same_plan_object(spark, sf_dir):

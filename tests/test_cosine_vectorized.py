@@ -17,7 +17,6 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-import impala_avx2_parquet_scanner_spark as engine
 from impala_avx2_parquet_scanner_spark.catalog import table
 from impala_avx2_parquet_scanner_spark.pipeline.similarity import (
     _cosine_seq,
@@ -27,8 +26,6 @@ from impala_avx2_parquet_scanner_spark.pipeline.similarity import (
     dot,
     dot_expr,
 )
-
-engine.load_all()
 
 
 def _bits(x):

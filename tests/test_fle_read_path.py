@@ -5,8 +5,9 @@ query rows (the stream reader and the change feed adapt its batches),
 and `_segment_file` is the only code that maps a committed name to its
 live or `.retired` file.  A scan planned before a retire-based commit
 (compaction, delete) reads its planned snapshot; one whose segments an
-overwrite swept fails loudly.  Also here: a failed `df.write` job leaves
-no staged file, and `register_fledir` swallows only a repeat
+overwrite swept fails loudly.  A stream micro-batch on a partitioned
+root walks the root once.  Also here: a failed `df.write` job leaves no
+staged file, and `register_fledir` swallows only a repeat
 registration."""
 
 from __future__ import annotations
@@ -19,10 +20,14 @@ import numpy as np
 import pytest
 from pyspark.sql.datasource import GreaterThanOrEqual
 
-from impala_avx2_parquet_scanner_spark.sources import sealed_dir
+from impala_avx2_parquet_scanner_spark.sources import (
+    fle_datasource,
+    sealed_dir,
+)
 from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
     FleDirReader,
     FleDirWriter,
+    FleStreamReader,
     encode_segment_columns,
     register_fledir,
     write_fledir,
@@ -159,6 +164,28 @@ def test_planned_scan_fails_when_an_overwrite_swept_its_segments(
     )
     with pytest.raises(ValueError, match="changed after the scan was planned"):
         _rows(reader, parts)
+
+
+def test_stream_batch_walks_a_partitioned_root_once(tmp_path, monkeypatch):
+    root = tmp_path / "p"
+    for k in (1, 2):
+        _table(str(root / f"k={k}"))
+    walks = []
+    discover = fle_datasource.discover_fledir_partitions
+
+    def counted(path):
+        walks.append(path)
+        return discover(path)
+
+    monkeypatch.setattr(fle_datasource, "discover_fledir_partitions", counted)
+    r = FleStreamReader({"path": str(root)})
+    walks.clear()
+    rows, end = r.read(r.initialOffset())
+    assert len(list(rows)) == 2 * 240 and len(end["names"]) == 12
+    assert len(walks) == 1
+    walks.clear()
+    assert len(list(r.readBetweenOffsets(r.initialOffset(), end))) == 480
+    assert len(walks) == 1
 
 
 # --- the DataSource writer's one staging token ----------------------------

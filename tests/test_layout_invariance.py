@@ -13,10 +13,8 @@ import os
 
 import pytest
 
-import impala_avx2_parquet_scanner_spark as engine
 from impala_avx2_parquet_scanner_spark.registry import REGISTRY
 
-engine.load_all()
 
 _SPLIT_TABLES = {"lineitem": 16, "documents": 8, "orders": 16, "events": 8,
                  "embeddings": 8}

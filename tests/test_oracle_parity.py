@@ -12,12 +12,10 @@ import pytest
 
 sys.path.insert(0, ".")
 
-import impala_avx2_parquet_scanner_spark as engine
 from impala_avx2_parquet_scanner_spark.registry import REGISTRY
 
 from tools.parity import compare_frames
 
-engine.load_all()
 
 SAMPLE = [
     "tpch_q1",

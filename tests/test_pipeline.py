@@ -10,7 +10,6 @@ import pytest
 
 from pyspark.sql import functions as F
 
-import impala_avx2_parquet_scanner_spark as engine
 from impala_avx2_parquet_scanner_spark.pipeline.dedup import (
     MINHASH_K,
     h64,
@@ -29,8 +28,6 @@ from impala_avx2_parquet_scanner_spark.pipeline.similarity import (
     lsh_signature,
 )
 from impala_avx2_parquet_scanner_spark.registry import REGISTRY
-
-engine.load_all()
 
 
 def test_h64_matches_python_md5(spark):

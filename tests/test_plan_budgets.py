@@ -12,9 +12,6 @@ import pytest
 from impala_avx2_parquet_scanner_spark.plans import exchange_count
 from impala_avx2_parquet_scanner_spark.registry import REGISTRY
 
-import impala_avx2_parquet_scanner_spark as engine
-
-engine.load_all()
 
 #: query -> max shuffle exchanges (from PLANS.md at round 4)
 BUDGETS = {

@@ -20,10 +20,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-import impala_avx2_parquet_scanner_spark as engine
 from impala_avx2_parquet_scanner_spark.registry import REGISTRY
-
-engine.load_all()
 
 
 def test_semantic_fused_kernel_matches_numpy_replay(spark, sf_dir):

@@ -5,12 +5,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-import impala_avx2_parquet_scanner_spark as engine
 from impala_avx2_parquet_scanner_spark.catalog import table
 from impala_avx2_parquet_scanner_spark.operators.asof import asof_join
 from impala_avx2_parquet_scanner_spark.registry import REGISTRY
-
-engine.load_all()
 
 
 def test_approx_count_distinct_error_bound(spark, sf_dir):

@@ -5,7 +5,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-import impala_avx2_parquet_scanner_spark as engine
 from impala_avx2_parquet_scanner_spark.catalog import table
 from impala_avx2_parquet_scanner_spark.exprs import dec_price
 from impala_avx2_parquet_scanner_spark.operators.skew import (
@@ -15,8 +14,6 @@ from impala_avx2_parquet_scanner_spark.operators.skew import (
 )
 from impala_avx2_parquet_scanner_spark.pipeline.cluster import connected_components
 from impala_avx2_parquet_scanner_spark.registry import REGISTRY
-
-engine.load_all()
 
 
 def test_salted_sum_equals_plain_sum(spark, sf_dir):

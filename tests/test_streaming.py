@@ -20,8 +20,6 @@ from impala_avx2_parquet_scanner_spark.streaming.stream_demo import (
 )
 import impala_avx2_parquet_scanner_spark as engine
 
-engine.load_all()
-
 
 def test_streaming_tumbling_matches_batch(spark, sf_dir):
     stream = events_stream(spark, sf_dir)

@@ -17,7 +17,6 @@ import pytest
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-import impala_avx2_parquet_scanner_spark as engine
 from impala_avx2_parquet_scanner_spark.catalog import table
 from impala_avx2_parquet_scanner_spark.pipeline.dedup import (
     WINNOW_K,
@@ -26,8 +25,6 @@ from impala_avx2_parquet_scanner_spark.pipeline.dedup import (
     _winnow_fingerprints,
     normalize_text,
 )
-
-engine.load_all()
 
 
 def _legacy_fingerprints(spark, sf_dir):

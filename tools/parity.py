@@ -42,7 +42,6 @@ sys.path.insert(0, ".")
 from impala_avx2_parquet_scanner_spark import registry  # noqa: E402
 from impala_avx2_parquet_scanner_spark.catalog import TABLES  # noqa: E402
 from impala_avx2_parquet_scanner_spark.session import get_spark  # noqa: E402
-import impala_avx2_parquet_scanner_spark as engine  # noqa: E402
 
 
 class CanonError(Exception):
@@ -125,7 +124,6 @@ def compare_frames(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    engine.load_all()
 
     con = duckdb.connect()
     for t in TABLES:

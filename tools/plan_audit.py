@@ -24,7 +24,6 @@ from impala_avx2_parquet_scanner_spark.plans import (  # noqa: E402
     read_schema_columns,
 )
 from impala_avx2_parquet_scanner_spark.session import get_spark  # noqa: E402
-import impala_avx2_parquet_scanner_spark as engine  # noqa: E402
 
 #: Queries whose plans carry the scale argument: the reference's own bench
 #: set, the join-heavy TPC-H adaptations, and the pipeline scale paths.
@@ -97,7 +96,6 @@ AUDITED = [
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    engine.load_all()
     spark = get_spark("plan-audit", cpus=8)
 
     print("# PLANS — physical-plan audit (generated by tools/plan_audit.py)")

@@ -20,7 +20,6 @@ import sys
 
 sys.path.insert(0, ".")
 
-import impala_avx2_parquet_scanner_spark as engine  # noqa: E402
 from impala_avx2_parquet_scanner_spark.registry import (  # noqa: E402
     CORE_WINDOW,
     REGISTRY,
@@ -41,7 +40,6 @@ def driver_hashed_names() -> set[str]:
 
 
 def main() -> None:
-    engine.load_all()
     all_names = set(REGISTRY)
     unknown = [n for n in CORE_WINDOW if n not in all_names]
     if unknown:

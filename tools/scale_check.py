@@ -35,7 +35,6 @@ import time
 
 sys.path.insert(0, ".")
 
-import impala_avx2_parquet_scanner_spark as engine  # noqa: E402
 from impala_avx2_parquet_scanner_spark.registry import REGISTRY  # noqa: E402
 from impala_avx2_parquet_scanner_spark.session import get_spark  # noqa: E402
 
@@ -258,7 +257,6 @@ def main() -> int:
         sf_a, sf_b = sys.argv[1], sys.argv[2]
     else:
         sf_a, sf_b = SF_A, SF_B
-    engine.load_all()
     spark = get_spark(
         "scale-check", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
     )
