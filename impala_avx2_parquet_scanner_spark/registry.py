@@ -254,7 +254,3 @@ def all_oracles() -> dict[str, str]:
             if spec.oracle
         )
     )
-
-
-def bench_queries() -> dict[str, QueryFn]:
-    return {name: spec.fn for name, spec in sorted(REGISTRY.items()) if spec.bench}

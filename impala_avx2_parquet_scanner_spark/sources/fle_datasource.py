@@ -46,8 +46,12 @@ The staging and commit, the `_DONE` manifest the readers trust
 sealed-directory protocol of `sources/sealed_dir.py`, shared with
 `avrodir` and `ppmdir`; this module adds the fledir parts on top —
 segment stats in the manifest, bloom sidecars, `_LINEAGE`, retired
-names and `_history` snapshots.  `df.write.format("fledir")` and the
-stream sink are thin adapters over the same staging and commit.  One
+names and `_history` snapshots.  A table is a layout of key columns
+and leaf directories (:func:`fledir_layout`); a flat fledir is the
+layout with no keys and one leaf, the root itself, so every reader and
+maintenance operation walks leaves through one path.
+`df.write.format("fledir")` and the stream sink are thin adapters over
+the same staging and commit.  One
 reader half serves every read: `FleDirReader.read` alone turns committed
 segments into rows, for the batch scan, the stream reader's micro-batches
 and `fledir_changes`' change feed, and `_segment_file` alone maps a
@@ -72,6 +76,7 @@ import bisect
 import json
 import math
 import os
+import posixpath
 import re
 import struct
 from dataclasses import dataclass
@@ -112,8 +117,6 @@ _STATS_MAGIC = b"BSTA"
 #: refutes most of a segment, coarse enough that the footer stays ~0.2%
 #: of the plane bytes
 _CHUNK_BLOCKS = 16
-#: fallback read schema when a directory cannot be probed (legacy demo)
-_SCHEMA = "l_returnflag string, l_quantity bigint"
 
 
 def _chunk_min_max(
@@ -199,9 +202,8 @@ def encode_segment_columns(columns: list[tuple]) -> bytes:
 
 
 def encode_segment(returnflag: np.ndarray, quantity: np.ndarray) -> bytes:
-    """Legacy two-column demo layout (round-6 surface, kept for the
-    `scan_fle_roundtrip`/`scan_fle_pushdown` contract): one Arrow batch
-    of (l_returnflag, l_quantity) → one segment."""
+    """The two-column (l_returnflag, l_quantity) segment of the tests'
+    hand-written fixtures: one batch of both columns → one segment."""
     return encode_segment_columns(
         [("l_returnflag", returnflag), ("l_quantity", quantity)]
     )
@@ -459,8 +461,8 @@ class _FleFilesPartition(InputPartition):
     def __init__(self, paths: list[str], part_values: "list | None" = None,
                  spans: "list | None" = None):
         self.paths = paths
-        #: per-path partition-key value for a partitioned layout
-        #: (None → flat directory)
+        #: per-path key-value tuple of the path's leaf (`()` on a flat
+        #: directory); None when the caller reads no key columns
         self.part_values = part_values
         #: per-path (block_lo, block_hi) scan range, or None for the
         #: whole file — a surviving file larger than one task's worth
@@ -573,6 +575,59 @@ def discover_fledir_partitions(
     )
 
 
+def fledir_layout(path: str) -> "tuple[list[str], list[tuple[tuple, str]]]":
+    """The layout of a fledir root: ([key_col, ...], [((value, ...),
+    leaf_dir), ...]).  A flat fledir is the layout with no key columns
+    and one leaf, the root itself — ``([], [((), path)])`` — the way the
+    reference's table descriptor has zero clustering columns and one
+    partition (descriptors.h:149-175).  Every reader and maintenance
+    operation walks leaves through this one function."""
+    return discover_fledir_partitions(path) or ([], [((), path)])
+
+
+def _key_holds(value, op: str, lit) -> bool:
+    """Exact driver-side evaluation of one conjunct against one
+    (non-NULL, typed) partition-key value — partition pruning with the
+    same SQL semantics the kernels implement."""
+    neg = op.startswith("not_")
+    base = op[4:] if neg else op
+    if base == "is_null":
+        r = False  # directory partition keys are never NULL
+    elif base == "is_not_null":
+        r = True
+    elif base == "eqns":
+        r = lit is not None and value == lit
+    elif base == "in":
+        r = value in set(lit)
+    elif base in ("startswith", "endswith", "contains"):
+        r = {
+            "startswith": str.startswith,
+            "endswith": str.endswith,
+            "contains": str.__contains__,
+        }[base](value, lit)
+    else:
+        import operator as _o
+
+        r = {
+            "eq": _o.eq, "lt": _o.lt, "le": _o.le,
+            "gt": _o.gt, "ge": _o.ge,
+        }[base](value, lit)
+    return (not r) if neg else r
+
+
+def kept_leaves(layout, conjuncts) -> "list[tuple[tuple, str]]":
+    """The leaves of `layout` on which every key conjunct of
+    `conjuncts` ((column, op, literal) triples) holds — partition
+    pruning on the driver, before any manifest is read.  Conjuncts on
+    other columns keep every leaf, so a flat layout keeps its one."""
+    keys, leaves = layout
+    on_keys = [(keys.index(c), op, v) for c, op, v in conjuncts if c in keys]
+    return [
+        (values, leaf) for values, leaf in leaves
+        if all(_key_holds(values[ki], op, v) for ki, op, v in on_keys)
+    ]
+
+
 _PUSHABLE_OPS = {
     "EqualTo": "eq",
     "EqualNullSafe": "eqns",
@@ -607,13 +662,9 @@ def _sorted_literals(values, conv) -> "list | None":
         return None
 
 
-_DISCOVER = object()
-
-
 class FleDirReader(DataSourceReader):
     def __init__(self, options, wanted: "list[str] | None" = None,
-                 field_types: "dict | None" = None,
-                 partitioned=_DISCOVER):
+                 field_types: "dict | None" = None, layout=None):
         self.dir = options.get("path")
         if not self.dir:
             raise ValueError("fledir requires option 'path'")
@@ -644,16 +695,15 @@ class FleDirReader(DataSourceReader):
         #: read command, and a cached ParsedSegment would ship its
         #: planes and dictionary along with it.
         self._kinds_cache: "dict[str, int] | None" = None
-        #: hive-style partitioned layout: ([key_col, ...],
-        #: [((value, ...), leaf_dir), ...]) — None for a flat
-        #: directory.  Conjuncts on any partition column are consumed
+        #: the root's layout (`fledir_layout`): ([key_col, ...],
+        #: [((value, ...), leaf_dir), ...]), `([], [((), dir)])` for a
+        #: flat directory.  Conjuncts on any key column are consumed
         #: ENTIRELY on the driver (partition pruning,
         #: descriptors.h:178-262's partition-key literal exprs;
         #: num_clustering_cols plural per descriptors.h:154-162) and
         #: never reach the segment kernels.  A caller that already
-        #: walked the root passes its layout as `partitioned`.
-        self.partitioned = (discover_fledir_partitions(self.dir)
-                            if partitioned is _DISCOVER else partitioned)
+        #: walked the root passes its `layout`.
+        self.partitioned = layout or fledir_layout(self.dir)
         self._coerce_partition_types()
         #: TIME TRAVEL (option generation=N): read the table AS OF a
         #: committed generation from its `_history/N.manifest`
@@ -667,7 +717,7 @@ class FleDirReader(DataSourceReader):
         self.generation: "int | None" = (
             int(gen_opt) if gen_opt is not None else None
         )
-        if self.generation is not None and self.partitioned is not None:
+        if self.generation is not None and self.partitioned[0]:
             raise ValueError(
                 "fledir: generation reads address ONE directory's "
                 "timeline — point the path at a leaf, not a "
@@ -697,7 +747,7 @@ class FleDirReader(DataSourceReader):
         return sealed_dir.partition_count(n_files, total_rows, self.n_parts)
 
     def _make_partitions(self, items: "list[tuple]") -> list:
-        """[(path, part_values_or_None, rows)] → balanced input
+        """[(path, key values, rows)] → balanced input
         partitions.  When the surviving file count is below the
         parallelism target (a compacted layout, or manifest pruning
         that kept 2 files of 64), files larger than one decode window
@@ -735,25 +785,19 @@ class FleDirReader(DataSourceReader):
         else:
             expanded = [(p, v, None) for p, v, _ in items]
         buckets = sealed_dir.deal(expanded, target)
-        has_values = any(v is not None for _, v, _ in expanded)
         parts = [
             _FleFilesPartition(
-                [p for p, _, _ in b],
-                [v for _, v, _ in b] if has_values else None,
+                [p for p, _, _ in b], [v for _, v, _ in b],
                 [s for _, _, s in b],
             )
             for b in buckets
         ]
-        return parts or [
-            _FleFilesPartition([], [] if has_values else None, [])
-        ]
+        return parts or [_FleFilesPartition([], [], [])]
 
     def _coerce_partition_types(self) -> None:
         """Honor a user read schema's declared partition-key type: a
         digit-spelled string key declared `string` must not surface as
         bigint (and vice versa where the spelling allows it)."""
-        if self.partitioned is None or not self.field_types:
-            return
         cols, pairs = self.partitioned
         casts = []
         for ki, col in enumerate(cols):
@@ -791,16 +835,11 @@ class FleDirReader(DataSourceReader):
         segments raises.  Manifest entries without stats fall back to
         the first-segment probe (strict: only its columns count as
         stored)."""
-        roots = (
-            [leaf for _, leaf in self.partitioned[1]]
-            if self.partitioned is not None
-            else [self.dir]
-        )
-        pcols = set(self.partitioned[0]) if self.partitioned else set()
+        pcols, leaves = self.partitioned
         union: set[str] = set()
         inter: "set[str] | None" = None
         complete = True
-        for root in roots:
+        for _, root in leaves:
             for _, stats_json in _manifest_entries(root):
                 stats = _entry_stats(stats_json)
                 if stats is None:
@@ -835,45 +874,12 @@ class FleDirReader(DataSourceReader):
         an int column (the kernels would answer a different
         predicate)."""
         if self._kinds_cache is None:
-            root = self.dir
-            if self.partitioned is not None:
-                root = self.partitioned[1][0][1]  # first subdir
-            seg = probe_first_segment(root)
+            seg = probe_first_segment(self.partitioned[1][0][1])
             self._kinds_cache = (
                 {c.name: c.kind for c in seg.columns}
                 if seg is not None else {}
             )
         return self._kinds_cache
-
-    @staticmethod
-    def _part_filter_keep(value, op: str, lit) -> bool:
-        """Exact driver-side evaluation of one pushed conjunct against
-        one (non-NULL, typed) partition-key value — partition pruning
-        with the same SQL semantics the kernels implement."""
-        neg = op.startswith("not_")
-        base = op[4:] if neg else op
-        if base == "is_null":
-            r = False  # directory partition keys are never NULL
-        elif base == "is_not_null":
-            r = True
-        elif base == "eqns":
-            r = lit is not None and value == lit
-        elif base == "in":
-            r = value in set(lit)
-        elif base in ("startswith", "endswith", "contains"):
-            r = {
-                "startswith": str.startswith,
-                "endswith": str.endswith,
-                "contains": str.__contains__,
-            }[base](value, lit)
-        else:
-            import operator as _o
-
-            r = {
-                "eq": _o.eq, "lt": _o.lt, "le": _o.le,
-                "gt": _o.gt, "ge": _o.ge,
-            }[base](value, lit)
-        return (not r) if neg else r
 
     def _literal_pushable(self, col: str, op: str, value) -> bool:
         """Type-directed pushability.  The rule per kind mirrors what
@@ -888,7 +894,7 @@ class FleDirReader(DataSourceReader):
             # predicate stays residual (Spark evaluates it against the
             # NULL constant)
             return False
-        if self.partitioned is not None and col in self.partitioned[0]:
+        if col in self.partitioned[0]:
             # partition-key conjuncts are evaluated EXACTLY on the
             # driver (typed Python values), so anything evaluable
             # pushes: numerics (fractional included — int-vs-float
@@ -1082,9 +1088,8 @@ class FleDirReader(DataSourceReader):
 
         cols = {c.name: c for c in seg.columns}
         col_idx = {c.name: i for i, c in enumerate(seg.columns)}
-        part_cols = set(self.partitioned[0]) if self.partitioned else set()
         for col_name, op, value in self.pushed:
-            if col_name in part_cols:
+            if col_name in self.partitioned[0]:
                 continue  # consumed on the driver (partition pruning)
             c = cols.get(col_name)
             if c is None:
@@ -1389,28 +1394,13 @@ class FleDirReader(DataSourceReader):
 
     @trims
     def partitions(self):
-        if self.partitioned is not None:
-            pcols, pairs = self.partitioned
-            pconjs = [
-                (pcols.index(c2), op, v)
-                for c2, op, v in self.pushed
-                if c2 in pcols
-            ]
-            tagged: list[tuple[str, object]] = []
-            for values, sub in pairs:
-                if not all(
-                    self._part_filter_keep(values[ki], op, v)
-                    for ki, op, v in pconjs
-                ):
-                    continue  # whole PARTITION pruned: no manifest read
-                for name, rows in self._manifest_files(sub):
-                    tagged.append((os.path.join(sub, name), values, rows))
-            return self._make_partitions(tagged)
-        files = self._manifest_files(self.dir)
-        # every file stat-pruned → one empty partition (a zero-partition
-        # scan is not representable); _make_partitions handles []
+        # a pruned leaf's manifest is never read; every file pruned →
+        # one empty partition (a zero-partition scan is not
+        # representable), which _make_partitions handles
         return self._make_partitions([
-            (os.path.join(self.dir, f), None, r) for f, r in files
+            (os.path.join(leaf, name), values, rows)
+            for values, leaf in kept_leaves(self.partitioned, self.pushed)
+            for name, rows in self._manifest_files(leaf)
         ])
 
     def _pa_evolved_type(self, pa, name: str):
@@ -1440,7 +1430,7 @@ class FleDirReader(DataSourceReader):
     def read(self, partition):
         import pyarrow as pa
 
-        pcols = self.partitioned[0] if self.partitioned else []
+        pcols = self.partitioned[0]
         pvals = getattr(partition, "part_values", None) or []
         pspans = getattr(partition, "spans", None) or []
         # pushed eq/in conjuncts eligible for the bloom-sidecar probe
@@ -2150,10 +2140,9 @@ def probe_first_segment(path: str) -> "ParsedSegment | None":
     has no readable committed segment."""
     try:
         first = sealed_dir.committed(path)[0][0]
-        with open(os.path.join(path, first), "rb") as fh:
-            return parse_segment(fh.read())
     except Exception:
         return None
+    return _parse_or_none(os.path.join(path, first))
 
 
 def _segment_ddl(seg: ParsedSegment) -> str:
@@ -2165,38 +2154,38 @@ def _segment_ddl(seg: ParsedSegment) -> str:
 def infer_fledir_schema(path: str) -> str | None:
     """Probe the first committed segment's header for the stored column
     names/kinds → Spark DDL (the footer-schema read the parquet path
-    gets for free; here the segment header is the footer)."""
+    gets for free; here the segment header is the footer): the data
+    columns of the first leaf, then the layout's key columns LAST in
+    nesting order (the Spark partition-column convention).  None when
+    there is no segment to probe; a root breaking the layout rule
+    raises it."""
+    keys, leaves = fledir_layout(path)
+    values, leaf = leaves[0]
     try:
-        if os.path.exists(os.path.join(path, sealed_dir.DONE)):
-            seg = probe_first_segment(path)
-            return _segment_ddl(seg) if seg is not None else None
-        part = discover_fledir_partitions(path)
-        if part is not None:
-            # hive-style layout: data columns from the first committed
-            # partition's first segment + the partition keys LAST in
-            # nesting order (the Spark partition-column convention)
-            pcols, pairs = part
-            base = infer_fledir_schema(pairs[0][1])
-            if base is None:
-                return None
-            keys = ", ".join(
-                f"{c} " + (
-                    "bigint" if isinstance(pairs[0][0][ki], int)
-                    else "string"
-                )
-                for ki, c in enumerate(pcols)
-            )
-            return f"{base}, {keys}"
-        # no manifest: a live STREAM feed — probe any sealed segment
-        # (skip files a foreign producer is mid-writing)
-        for name in sorted(os.listdir(path)):
-            if name.endswith(".fle"):
-                try:
-                    with open(os.path.join(path, name), "rb") as fh:
-                        return _segment_ddl(parse_segment(fh.read()))
-                except Exception:
-                    continue
+        seg = probe_first_segment(leaf)
+        if seg is None and sealed_dir.committed(leaf) is None:
+            # no manifest: a live STREAM feed — probe any sealed
+            # segment (skip files a foreign producer is mid-writing)
+            names = sorted(os.listdir(leaf))
+            seg = next(filter(None, (
+                _parse_or_none(os.path.join(leaf, n))
+                for n in names if n.endswith(".fle")
+            )), None)
+        if seg is None:
+            return None
+        return ", ".join([_segment_ddl(seg), *(
+            f"{c} {'bigint' if isinstance(v, int) else 'string'}"
+            for c, v in zip(keys, values)
+        )])
+    except Exception:
         return None
+
+
+def _parse_or_none(path: str) -> "ParsedSegment | None":
+    """The parsed segment file at `path`; None if it does not parse."""
+    try:
+        with open(path, "rb") as fh:
+            return parse_segment(fh.read())
     except Exception:
         return None
 
@@ -2208,9 +2197,17 @@ class FleDataSource(DataSource):
 
     @trims
     def schema(self):
+        """The stored schema; Spark asks only when the read gave none.
+        A path with no segment to infer from fails here, at `load()`,
+        rather than answering columns the table does not have."""
         path = self.options.get("path")
         inferred = infer_fledir_schema(path) if path else None
-        return inferred or _SCHEMA
+        if inferred is None:
+            raise ValueError(
+                f"fledir: no committed segment to infer a schema from at "
+                f"{path!r} — pass the schema with .schema(...)"
+            )
+        return inferred
 
     def reader(self, schema):
         # `schema` is what the query will consume: either the inferred
@@ -2255,24 +2252,23 @@ class FleStreamReader(sealed_dir.SealedStreamReader):
 
     def __init__(self, options):
         super().__init__(options)
-        #: a hive-partitioned root streams as one MERGED per-leaf
-        #: feed: offset names are leaf-relative POSIX paths, and the
-        #: key values materialize as trailing constant columns (the
-        #: batch schema's keys-last convention).  Walked once per
-        #: micro-batch (`_walk`), so a stream started on an empty
-        #: root notices leaves that appear later, appended partitions
-        #: start flowing, and partitions `expire_fledir_partitions`
-        #: removed stop being listed (expire only fully-streamed
-        #: partitions: an expired leaf's bytes are deleted, not
-        #: retired like compaction's sources).
-        self.partitioned = False
-        self._layout = None
+        #: the root's layout, walked once per micro-batch (`_walk`).  A
+        #: leaf's offset names are joined under its POSIX key path
+        #: (`k1=v1/k2=v2/seg.fle`), so a flat root's names stay bare
+        #: and a partitioned root streams as one merged per-leaf feed,
+        #: its key values materialized as trailing constant columns
+        #: (the batch schema's keys-last convention).  Walking per
+        #: micro-batch lets a stream started on an empty root notice
+        #: leaves that appear later, and partitions
+        #: `expire_fledir_partitions` removed stop being listed (expire
+        #: only fully-streamed partitions: an expired leaf's bytes are
+        #: deleted, not retired like compaction's sources).
+        self._layout: tuple = ([], [])
 
     def _walk(self) -> None:
-        """The micro-batch's one partition discovery: listing, lineage
-        and decode all read the leaves it found."""
-        self._layout = discover_fledir_partitions(self.dir)
-        self.partitioned = self.partitioned or self._layout is not None
+        """The micro-batch's one layout walk: listing, lineage and
+        decode all read the leaves it found."""
+        self._layout = fledir_layout(self.dir)
 
     def read(self, start: dict):
         self._walk()
@@ -2282,44 +2278,36 @@ class FleStreamReader(sealed_dir.SealedStreamReader):
         self._walk()
         return super().readBetweenOffsets(start, end)
 
-    def _leaf_map(self) -> "dict[str, tuple]":
-        """{leaf-relative POSIX path: typed partition values} for the
-        leaves this micro-batch's walk found committed."""
-        if self._layout is None:
-            return {}
-        return {
-            os.path.relpath(leaf, self.dir).replace(os.sep, "/"):
-                vals
-            for vals, leaf in self._layout[1]
-        }
+    def _leaves(self) -> "list[tuple[str, tuple, str]]":
+        """(POSIX key path, key values, leaf dir) per leaf of this
+        micro-batch's walk; the key path of a flat root's leaf is ""."""
+        keys, leaves = self._layout
+        return [
+            ("/".join(f"{k}={v}" for k, v in zip(keys, values)), values, leaf)
+            for values, leaf in leaves
+        ]
 
     def _listing(self) -> "tuple[list[str], bool]":
-        """Sorted feed listing: the committed names on a flat root
-        (every `.fle` file of a root without `_DONE`), leaf-qualified
-        relative paths of each committed leaf's `_DONE` names on a
-        partitioned one."""
-        if not self.partitioned:
-            return super()._listing()
-        names = [
-            f"{rel}/{n}"
-            for rel in self._leaf_map()
-            for n, _ in sealed_dir.committed(os.path.join(self.dir, rel))
-            or ()
-        ]
-        return sorted(names), True
+        """Sorted feed listing: every leaf's `sealed_dir.listing` under
+        its key path — the `_DONE` names of a committed leaf, every
+        `.fle` file of a root without `_DONE`."""
+        names, manifested = [], True
+        for rel, _, leaf in self._leaves():
+            found, done = sealed_dir.listing(leaf, self.suffix)
+            names += [posixpath.join(rel, n) for n in found]
+            manifested = manifested and done
+        return sorted(names), manifested
 
     def _lineage_all(self) -> "dict[str, list[str]]":
-        """The feed's merged lineage map: per-leaf `_LINEAGE`
-        sidecars with keys AND sources qualified by the leaf path
-        (compaction of a partitioned root runs per leaf, so every
-        merged↔source relation stays inside one leaf)."""
-        if not self.partitioned:
-            return _read_lineage(self.dir)
+        """The feed's lineage map: each leaf's `_LINEAGE` sidecar with
+        keys AND sources under the leaf's key path (compaction runs per
+        leaf, so every merged↔source relation stays inside one leaf)."""
         out: dict[str, list[str]] = {}
-        for rel in self._leaf_map():
-            sub = _read_lineage(os.path.join(self.dir, rel))
-            for k, srcs in sub.items():
-                out[f"{rel}/{k}"] = [f"{rel}/{s}" for s in srcs]
+        for rel, _, leaf in self._leaves():
+            for k, srcs in _read_lineage(leaf).items():
+                out[posixpath.join(rel, k)] = [
+                    posixpath.join(rel, src) for src in srcs
+                ]
         return out
 
     def _rows(self, names):
@@ -2329,26 +2317,22 @@ class FleStreamReader(sealed_dir.SealedStreamReader):
         retired twin (`FleDirReader.read`)."""
         if not names:
             return []
-        # per-name "/" detection rather than the partitioned flag: a
-        # replay can carry leaf-qualified names even if the root probed
-        # flat, or no longer lists any leaf
-        leaf_map = self._leaf_map() if any("/" in n for n in names) else {}
+        # key values come from each name's own key path: a replay can
+        # carry names of a leaf this walk no longer lists
+        leaf_values = {rel: values for rel, values, _ in self._leaves()}
         values = []
         for name in names:
-            rel = name.rpartition("/")[0]
+            rel = posixpath.dirname(name)
             comps = [c.partition("=") for c in rel.split("/")] if rel else []
             # a leaf mid-expiry (manifest gone, file still readable)
             # types its key values from the path
-            values.append(leaf_map.get(rel) or tuple(
+            values.append(leaf_values.get(rel) or tuple(
                 _typed_partition_value(v) for _, _, v in comps
             ))
         keys = [k for k, _, _ in comps]  # one layout: every name alike
-        reader = FleDirReader(
-            {"path": self.dir}, partitioned=(keys, []) if keys else None
-        )
+        reader = FleDirReader({"path": self.dir}, layout=(keys, []))
         part = _FleFilesPartition(
-            [os.path.join(self.dir, n) for n in names],
-            values if keys else None,
+            [os.path.join(self.dir, n) for n in names], values
         )
         return [
             row for batch in reader.read(part)
@@ -2361,12 +2345,7 @@ class FleStreamReader(sealed_dir.SealedStreamReader):
         `.fle` names in place can be caught mid-write: such a file is
         left out of the batch AND the offset, so it is retried complete
         on a later micro-batch instead of poisoning the feed."""
-        try:
-            with open(os.path.join(self.dir, name), "rb") as fh:
-                parse_segment(fh.read())
-            return True
-        except Exception:
-            return False
+        return _parse_or_none(os.path.join(self.dir, name)) is not None
 
     def _split(
         self, names: list[str], seen: set
@@ -2716,8 +2695,7 @@ def _committed_entries(path: str):
     of a flat or hive-partitioned fledir — the manifest walk the
     metadata-only aggregates fold over; a leaf without its `_DONE`
     manifest raises."""
-    part = discover_fledir_partitions(path)
-    for root in [leaf for _, leaf in part[1]] if part else [path]:
+    for _, root in fledir_layout(path)[1]:
         entries = sealed_dir.committed(root)
         if entries is None:
             raise ValueError(f"fledir: {root} has no _DONE manifest")
@@ -2765,13 +2743,12 @@ def fledir_partition_row_counts(path: str) -> "tuple[list, list]":
     carry per-partition row counts via their file metadata,
     descriptors.h:178-262).  Raises on a flat (unpartitioned) root:
     there is no key to group by."""
-    part = discover_fledir_partitions(path)
-    if part is None:
+    keys, leaves = fledir_layout(path)
+    if not keys:
         raise ValueError(
             f"fledir: {path} is not hive-partitioned — grouped "
             "metadata counts need a col=value directory layout"
         )
-    keys, leaves = part
     rows = [
         tuple(vals) + (fledir_row_count(leaf),) for vals, leaf in leaves
     ]

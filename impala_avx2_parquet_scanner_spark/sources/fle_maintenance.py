@@ -54,6 +54,11 @@ DELETE pick their candidate segments with one metadata probe
 the bloom sidecars) and drop matched rows with one exact matcher
 (:func:`_conjunct_rows`).
 
+Every operation here walks a table's leaves through one function,
+``fledir_layout``: a flat fledir is the layout with no key columns and
+one leaf, so compaction, vacuum, merge and delete run one loop over
+(kept) leaves whatever the layout.
+
 Maintenance reads committed rows the way every reader does: the change
 feed (:func:`fledir_changes`) runs the batch scan's `FleDirReader.read`,
 and the rewrite input, :func:`segment_reencode_columns`, is the only
@@ -95,11 +100,12 @@ from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
     bloom_eq_in_conjuncts,
     bloom_sidecar_refutes,
     decode_segment_columns,
-    discover_fledir_partitions,
     encode_segment_columns,
     expire_fledir_snapshots,
+    fledir_layout,
     fledir_row_count,
     fresh_seg_base,
+    kept_leaves,
     parse_segment,
     probe_first_segment,
     segment_id,
@@ -434,15 +440,13 @@ def compact_fledir(
             "fledir compaction: sort_by and zorder_by are mutually "
             "exclusive"
         )
-    part = discover_fledir_partitions(path)
-    leaves = [leaf for _, leaf in part[1]] if part is not None else [path]
     reports = [
         _compact_leaf(spark, leaf, target_rows, sort_by, zorder_by)
-        for leaf in leaves
+        for _, leaf in fledir_layout(path)[1]
     ]
     return {
         "path": path,
-        "leaves": len(leaves),
+        "leaves": len(reports),
         "files_before": sum(r["files_before"] for r in reports),
         "files_after": sum(r["files_after"] for r in reports),
         "files_retired": sum(r["files_retired"] for r in reports),
@@ -494,8 +498,7 @@ def vacuum_fledir(path: str, spark=None) -> dict:
     names, never bytes.  Pass `spark` to run the per-leaf deletion as
     a distributed job (one task per group of leaves) instead of a
     driver-side loop."""
-    part = discover_fledir_partitions(path)
-    leaves = [leaf for _, leaf in part[1]] if part is not None else [path]
+    leaves = [leaf for _, leaf in fledir_layout(path)[1]]
     removed = _per_leaf_job(spark, leaves, _vacuum_one_leaf)
     return {"path": path, "files_removed": removed}
 
@@ -642,13 +645,12 @@ def expire_fledir_partitions(
     inside each leaf).  Returns {partitions_dropped, partitions_kept,
     rows_dropped} (rows from the manifests — zero segment bytes
     read)."""
-    part = discover_fledir_partitions(path)
-    if part is None:
+    keys, leaves = fledir_layout(path)
+    if not keys:
         raise ValueError(
             f"fledir: {path} is not hive-partitioned — retention "
             "expiry drops whole col=value partitions"
         )
-    keys, leaves = part
     ki = 0
     if key is not None:
         if key not in keys:
@@ -804,35 +806,85 @@ def merge_fledir(
     ``ignoreChanges`` contract).
 
     Returns {segments_rewritten, segments_untouched, rows_matched,
-    rows_inserted}."""
-    part = discover_fledir_partitions(path)
-    if part is not None:
-        return _merge_partitioned_root(
-            spark, path, part, updates, key,
-            max_update_rows=max_update_rows,
-            rows_per_segment=rows_per_segment,
-            bloomcols=bloomcols,
-        )
-    first = probe_first_segment(path)
-    if first is None:
-        raise ValueError(f"fledir: {path} has no committed segments")
-    stored_cols = [c.name for c in first.columns]
-    if key not in stored_cols:
-        raise KeyError(f"fledir: key column {key!r} not stored in {path}")
-    up_cols = list(updates.columns)
-    if sorted(up_cols) != sorted(stored_cols):
+    rows_inserted}, plus {leaves_created, leaves_untouched} on a
+    partitioned root."""
+    from pyspark.sql import functions as F
+
+    keys, leaves = fledir_layout(path)
+    missing = [c for c in keys if c not in updates.columns]
+    if missing:
         raise ValueError(
-            f"fledir: merge updates must carry exactly the stored "
-            f"columns {sorted(stored_cols)} (full replacement rows); "
-            f"got {sorted(up_cols)}"
+            f"fledir: partitioned merge needs the partition key "
+            f"columns {keys} in the updates frame (missing "
+            f"{missing}) — rows route to their leaf by them"
         )
-    n_up = updates.count()
+    # one job counts the update rows per leaf they route to (a flat
+    # table is one group)
+    groups = sorted(
+        ((tuple(r)[:-1], r[-1])
+         for r in updates.groupBy(*keys).count().collect()),
+        key=lambda g: str(g[0]),
+    )
+    n_up = sum(n for _, n in groups)
     if n_up > max_update_rows:
         raise ValueError(
             f"fledir: {n_up} update rows exceed the merge budget "
             f"({max_update_rows}) — at that scale rewrite the table "
             "(overwrite) instead of merging segment-by-segment"
         )
+    if any(v is None for values, _ in groups for v in values):
+        raise ValueError(
+            "fledir: partition-key values in a merge must be non-NULL"
+        )
+    # leaves match by DIRECTORY-NAME form, so an int-typed layout and an
+    # int update value land in the same leaf
+    by_dir = {tuple(map(str, values)): leaf for values, leaf in leaves}
+    report = {
+        "path": path, "segments_rewritten": 0, "segments_untouched": 0,
+        "rows_matched": 0, "rows_inserted": 0,
+    }
+    created = 0
+    for values, n in groups:
+        rows = updates
+        for c, v in zip(keys, values):
+            rows = rows.filter(F.col(c) == F.lit(v))
+        rows = rows.drop(*keys)
+        leaf = by_dir.get(tuple(map(str, values)))
+        if leaf is None:
+            # a partition value no leaf has: dynamic-partition insert
+            leaf = os.path.join(
+                path, *[f"{c}={v}" for c, v in zip(keys, values)]
+            )
+            _append_leaf_rows(
+                leaf, rows, n, leaves[0][1], rows_per_segment, bloomcols
+            )
+            report["rows_inserted"] += n
+            created += 1
+            continue
+        counts = _merge_leaf(
+            spark, leaf, rows, n, key, rows_per_segment, bloomcols
+        )
+        for k, v in counts.items():
+            report[k] += v
+    if keys:
+        report["leaves_created"] = created
+        report["leaves_untouched"] = len(leaves) - len(groups) + created
+    return report
+
+
+def _merge_leaf(
+    spark, leaf: str, updates, n_up: int, key: str,
+    rows_per_segment: int, bloomcols: "str | None",
+) -> dict:
+    """Merge `n_up` full rows into one existing leaf: segments holding
+    a matched key rewrite without it, the update rows insert, all in
+    one atomic append commit → the leaf's segment and row counts."""
+    first = probe_first_segment(leaf)
+    if first is None:
+        raise ValueError(f"fledir: {leaf} has no committed segments")
+    if key not in [c.name for c in first.columns]:
+        raise KeyError(f"fledir: key column {key!r} not stored in {leaf}")
+    inserts = _full_rows(first, updates, n_up, rows_per_segment)
     keys = [r[0] for r in updates.select(key).collect()]
     if any(k is None for k in keys):
         raise ValueError("fledir: merge keys must be non-NULL")
@@ -845,28 +897,39 @@ def merge_fledir(
     # a stored row is replaced exactly when its key is IN the update
     # set: delete's probe picks the segments, delete's matcher the rows
     conjunct = (key, "in", keys)
-    affected, untouched = _dml_candidates(path, [conjunct])
+    affected, untouched = _dml_candidates(leaf, [conjunct])
     matched = _prepared([conjunct])
-    rows_before = fledir_row_count(path)
+    rows_before = fledir_row_count(leaf)
     _rewrite_segments(
-        spark, path, [[n] for n in affected],
+        spark, leaf, [[n] for n in affected],
         lambda segs: _drop_matching(segs[0], matched),
-        inserts=(
-            updates.select(*stored_cols).repartition(
-                max(1, -(-n_up // rows_per_segment))
-            ),
-            [(c.name, None, c.spec.insert_hint(c)) for c in first.columns],
-        ),
-        bloomcols=bloomcols,
+        inserts=inserts, bloomcols=bloomcols,
     )
-    rows_after = fledir_row_count(path)
+    rows_after = fledir_row_count(leaf)
     return {
-        "path": path,
         "segments_rewritten": len(affected),
         "segments_untouched": untouched,
         "rows_matched": rows_before + n_up - rows_after,
         "rows_inserted": n_up,
     }
+
+
+def _full_rows(first: ParsedSegment, rows, n: int, rows_per_segment: int):
+    """`rows`, checked to be full rows (exactly the stored columns), as
+    the ``(frame, columns)`` insert of :func:`write_fledir`: `n` rows in
+    segments of at most `rows_per_segment`, encoded with the kinds of
+    `first`, a segment of the table."""
+    stored = [c.name for c in first.columns]
+    if sorted(rows.columns) != sorted(stored):
+        raise ValueError(
+            f"fledir: merge updates must carry exactly the stored "
+            f"columns {sorted(stored)} (full replacement rows); "
+            f"got {sorted(rows.columns)}"
+        )
+    return (
+        rows.select(*stored).repartition(max(1, -(-n // rows_per_segment))),
+        [(c.name, None, c.spec.insert_hint(c)) for c in first.columns],
+    )
 
 
 def materialize_fle_merge_dir(spark, sf_dir: str) -> str:
@@ -1043,7 +1106,8 @@ def delete_fledir(
     on the stats.  Streaming caveat as for merge: rewritten segments
     replay to checkpointed streams.
 
-    Returns {segments_rewritten, segments_untouched, rows_deleted}."""
+    Returns {segments_rewritten, segments_untouched, rows_deleted},
+    plus leaves_pruned on a partitioned root."""
     if not conjuncts:
         raise ValueError(
             "fledir: delete needs at least one conjunct (a full-table "
@@ -1055,64 +1119,45 @@ def delete_fledir(
                 f"fledir: bad delete conjunct {c3!r} — expected "
                 f"(column, op, literal) with op in {sorted(_DELETE_OPS)}"
             )
-    part = discover_fledir_partitions(path)
-    if part is not None:
-        # hive-partitioned root: partition-key conjuncts prune WHOLE
-        # leaves on the driver (exact typed evaluation, the same
-        # semantics the scan's partition pruning uses), and — since a
-        # key conjunct holds uniformly for every row of a kept leaf —
-        # drop out of the per-leaf conjunction; the data conjuncts run
-        # per leaf.  Atomicity is per leaf (each leaf commits its own
-        # generation), the same contract as retention expiry.
-        pcols, pairs = part
-        pconj = [c3 for c3 in conjuncts if c3[0] in pcols]
-        dconj = [c3 for c3 in conjuncts if c3[0] not in pcols]
-        if not dconj:
-            raise ValueError(
-                "fledir: every delete conjunct targets a partition "
-                "key — that is a partition drop, use "
-                "expire_fledir_partitions (metadata-only, no rewrite)"
-            )
-        total = {
-            "path": path, "segments_rewritten": 0,
-            "segments_untouched": 0, "rows_deleted": 0,
-            "leaves_pruned": 0,
-        }
-        for values, leaf in pairs:
-            if not all(
-                FleDirReader._part_filter_keep(
-                    values[pcols.index(c)], o, v
-                )
-                for c, o, v in pconj
-            ):
-                total["leaves_pruned"] += 1
-                continue  # no row of this leaf can match
-            rep = delete_fledir(
-                spark, leaf, dconj, bloomcols=bloomcols
-            )
-            total["segments_rewritten"] += rep["segments_rewritten"]
-            total["segments_untouched"] += rep["segments_untouched"]
-            total["rows_deleted"] += rep["rows_deleted"]
-        return total
-
-    affected, untouched = _dml_candidates(path, conjuncts)
-    matched = _prepared(conjuncts)
-    rows_before = fledir_row_count(path)
-    _rewrite_segments(
-        spark, path, [[n] for n in affected],
-        lambda segs: _drop_matching(segs[0], matched), bloomcols=bloomcols,
-    )
-    rows_after = fledir_row_count(path)
-    return {
-        "path": path,
-        "segments_rewritten": len(affected),
-        "segments_untouched": untouched,
-        "rows_deleted": rows_before - rows_after,
+    # key conjuncts prune WHOLE leaves on the driver (exact typed
+    # evaluation, the scan's partition pruning) and — since a key
+    # conjunct holds for every row of a kept leaf — drop out of the
+    # per-leaf conjunction; the data conjuncts run per leaf.  Atomicity
+    # is per leaf (each leaf commits its own generation), the same
+    # contract as retention expiry.
+    layout = fledir_layout(path)
+    keys = layout[0]
+    data_conj = [c3 for c3 in conjuncts if c3[0] not in keys]
+    if not data_conj:
+        raise ValueError(
+            "fledir: every delete conjunct targets a partition "
+            "key — that is a partition drop, use "
+            "expire_fledir_partitions (metadata-only, no rewrite)"
+        )
+    kept = kept_leaves(layout, conjuncts)
+    matched = _prepared(data_conj)
+    report = {
+        "path": path, "segments_rewritten": 0,
+        "segments_untouched": 0, "rows_deleted": 0,
     }
+    for _, leaf in kept:
+        affected, untouched = _dml_candidates(leaf, data_conj)
+        rows_before = fledir_row_count(leaf)
+        _rewrite_segments(
+            spark, leaf, [[n] for n in affected],
+            lambda segs: _drop_matching(segs[0], matched),
+            bloomcols=bloomcols,
+        )
+        report["segments_rewritten"] += len(affected)
+        report["segments_untouched"] += untouched
+        report["rows_deleted"] += rows_before - fledir_row_count(leaf)
+    if keys:
+        report["leaves_pruned"] = len(layout[1]) - len(kept)
+    return report
 
 
 def _dml_candidates(path: str, conjuncts: "list[tuple]") -> tuple:
-    """The committed segments of a flat fledir that may hold a row
+    """The committed segments of one leaf that may hold a row
     matching ALL `conjuncts`, from metadata alone → (names, count of the
     others).  The read path's own two tiers: the manifest stats
     (`FleDirReader._manifest_files` with the conjuncts pushed), then the
@@ -1189,116 +1234,23 @@ def materialize_fle_delete_dir(spark, sf_dir: str) -> str:
 
 
 def _append_leaf_rows(
-    spark, leaf: str, df, template_leaf: str,
+    leaf: str, df, n: int, template_leaf: str,
     rows_per_segment: int, bloomcols: "str | None",
-) -> int:
-    """Dynamic-partition insert: encode `df`'s rows as fresh segments
-    of a (possibly not-yet-existing) leaf, kinds pinned from a sibling
+) -> None:
+    """Dynamic-partition insert: encode `df`'s `n` rows as fresh
+    segments of a not-yet-existing leaf, kinds pinned from a sibling
     leaf's first segment so the new leaf's schema matches the table's.
-    One atomic append commit; → rows written."""
+    One atomic append commit."""
     first = probe_first_segment(template_leaf)
     if first is None:
         raise ValueError(
             f"fledir: template leaf {template_leaf} has no committed "
             "segment to pin the new partition's schema from"
         )
-    stored_cols = [c.name for c in first.columns]
-    if sorted(df.columns) != sorted(stored_cols):
-        raise ValueError(
-            f"fledir: new-partition rows must carry exactly the "
-            f"stored columns {sorted(stored_cols)}; got "
-            f"{sorted(df.columns)}"
-        )
-    n = df.count()
-    if n == 0:
-        return 0
     write_fledir(
-        df.select(*stored_cols).repartition(max(1, -(-n // rows_per_segment))),
-        [(c.name, None, c.spec.insert_hint(c)) for c in first.columns],
+        *_full_rows(first, df, n, rows_per_segment),
         leaf, "append", bloomcols=bloomcols or None,
     )
-    return n
-
-
-def _merge_partitioned_root(
-    spark, root: str, part, updates, key: str, *,
-    max_update_rows: int, rows_per_segment: int,
-    bloomcols: "str | None",
-) -> dict:
-    """Route a partitioned-root merge: per-leaf atomic merges for
-    existing partitions, dynamic leaf creation for new partition
-    values (matched by DIRECTORY-NAME form, so an int-typed layout and
-    an int update value land in the same leaf).  Rows never move
-    across partition directories — a key matched in another partition
-    is, by partition-table semantics, a different row."""
-    from pyspark.sql import functions as F
-
-    pcols, pairs = part
-    missing = [c for c in pcols if c not in updates.columns]
-    if missing:
-        raise ValueError(
-            f"fledir: partitioned merge needs the partition key "
-            f"columns {pcols} in the updates frame (missing "
-            f"{missing}) — rows route to their leaf by them"
-        )
-    n_up = updates.count()
-    if n_up > max_update_rows:
-        raise ValueError(
-            f"fledir: {n_up} update rows exceed the merge budget "
-            f"({max_update_rows})"
-        )
-    tuples = [
-        tuple(r) for r in updates.select(*pcols).distinct().collect()
-    ]
-    if any(v is None for t in tuples for v in t):
-        raise ValueError(
-            "fledir: partition-key values in a merge must be non-NULL"
-        )
-    by_dir = {
-        tuple(str(v) for v in vals): leaf for vals, leaf in pairs
-    }
-    total = {
-        "path": root, "segments_rewritten": 0,
-        "segments_untouched": 0, "rows_matched": 0,
-        "rows_inserted": 0, "leaves_created": 0,
-    }
-    touched: set = set()
-    template = pairs[0][1]
-    for tup in sorted(tuples, key=str):
-        skey = tuple(str(v) for v in tup)
-        cond = None
-        for c, v in zip(pcols, tup):
-            e = F.col(c) == F.lit(v)
-            cond = e if cond is None else (cond & e)
-        leaf_updates = updates.filter(cond).drop(*pcols)
-        leaf = by_dir.get(skey)
-        if leaf is None:
-            leaf = os.path.join(
-                root, *[f"{c}={s}" for c, s in zip(pcols, skey)]
-            )
-            n_new = _append_leaf_rows(
-                spark, leaf, leaf_updates, template,
-                rows_per_segment, bloomcols,
-            )
-            total["rows_inserted"] += n_new
-            total["leaves_created"] += 1
-        else:
-            rep = merge_fledir(
-                spark, leaf, leaf_updates, key,
-                max_update_rows=max_update_rows,
-                rows_per_segment=rows_per_segment,
-                bloomcols=bloomcols,
-            )
-            for k2 in (
-                "segments_rewritten", "segments_untouched",
-                "rows_matched", "rows_inserted",
-            ):
-                total[k2] += rep[k2]
-        touched.add(skey)
-    total["leaves_untouched"] = len(by_dir) - len(
-        touched & set(by_dir)
-    )
-    return total
 
 
 def _segments_df(spark, path: str, names: "list[str]"):
@@ -1375,7 +1327,7 @@ def fledir_changes(
         _lineage_covered,
     )
 
-    if discover_fledir_partitions(path) is not None:
+    if fledir_layout(path)[0]:
         raise ValueError(
             "fledir: fledir_changes addresses ONE directory's "
             "timeline — point the path at a leaf"

@@ -22,13 +22,22 @@ from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
 )
 
 
-def _write_partition(root, leaf: str, cols) -> None:
-    sub = root / leaf
+def _write_leaf(root, leaf: str, segs) -> None:
+    """One committed leaf (`root` itself when `leaf` is empty) holding
+    each column list of `segs` as its own segment."""
+    sub = root / leaf if leaf else root
     sub.mkdir(parents=True)
-    payload = encode_segment_columns(cols)
-    (sub / "seg_0.fle").write_bytes(payload)
-    st = json.dumps(segment_stats(parse_segment(payload)))
-    (sub / "_DONE").write_text(f"seg_0.fle\t{st}")
+    lines = []
+    for i, cols in enumerate(segs):
+        payload = encode_segment_columns(cols)
+        (sub / f"seg_{i}.fle").write_bytes(payload)
+        st = json.dumps(segment_stats(parse_segment(payload)))
+        lines.append(f"seg_{i}.fle\t{st}")
+    (sub / "_DONE").write_text("\n".join(lines))
+
+
+def _write_partition(root, leaf: str, cols) -> None:
+    _write_leaf(root, leaf, [cols])
 
 
 def _mk_string_partitioned(tmp_path):
@@ -515,3 +524,92 @@ def test_stream_empty_root_notices_partition_layout(tmp_path):
     assert sorted(
         map(tuple, r.readBetweenOffsets(off0, off1))
     ) == got
+
+
+def test_flat_table_is_a_layout_without_keys(spark, tmp_path):
+    """The same rows written flat, as a one-key root with one leaf and
+    as a one-key root with two leaves answer every read, metadata
+    aggregate, stream and DML alike (the key column aside): a flat
+    fledir is the layout with no keys and one leaf."""
+    from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
+
+    from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
+        FleStreamReader,
+        fledir_min_max,
+        fledir_row_count,
+        fledir_sum,
+    )
+    from impala_avx2_parquet_scanner_spark.sources.fle_maintenance import (
+        compact_fledir,
+        delete_fledir,
+        merge_fledir,
+    )
+
+    segs = [
+        [
+            ("q", np.arange(15 * i, 15 * (i + 1), dtype=np.int64)),
+            ("tag", np.array(["x", "y", "z"] * 5, dtype=object)),
+        ]
+        for i in range(4)
+    ]
+    flat, one, two = (tmp_path / n for n in ("flat", "one", "two"))
+    _write_leaf(flat, "", segs)
+    _write_leaf(one, "k=a", segs)
+    _write_leaf(two, "k=a", segs[:2])
+    _write_leaf(two, "k=b", segs[2:])
+    tables = [os.fspath(t) for t in (flat, one, two)]
+
+    def scan(path, filters=()):
+        r = FleDirReader({"path": path}, wanted=["q", "tag"])
+        assert list(r.pushFilters(list(filters))) == []  # all pushed
+        return sorted(
+            row for part in r.partitions() for b in r.read(part)
+            for row in zip(*(c.to_pylist() for c in b.columns))
+        )
+
+    def same(answer):
+        got = [answer(path) for path in tables]
+        assert got[0] == got[1] == got[2], got
+        return got[0]
+
+    window = same(lambda p: scan(
+        p, [GreaterThanOrEqual(("q",), 20), LessThan(("q",), 45)]
+    ))
+    assert [q for q, _ in window] == list(range(20, 45))
+    assert same(fledir_row_count) == 60
+    assert same(lambda p: fledir_min_max(p, ["q"])) == {"q": (0, 59)}
+    assert same(lambda p: fledir_sum(p, ["q"])) == {"q": (1770, 60)}
+
+    def streamed(path):
+        r = FleStreamReader({"path": path})
+        rows, _ = r.read(r.initialOffset())
+        # a keyed layout's key value trails each row
+        return sorted(t[:2] for t in rows)
+
+    assert same(streamed) == scan(tables[0])
+
+    for path in tables:
+        compact_fledir(spark, path, target_rows=1000)
+    assert same(scan) == [(q, "xyz"[q % 3]) for q in range(60)]
+
+    deleted = same(lambda p: delete_fledir(
+        spark, p, [("q", "ge", 50), ("tag", "eq", "x")]
+    )["rows_deleted"])
+    assert deleted == 3  # q = 51, 54, 57
+    after_delete = same(scan)
+    assert len(after_delete) == 57
+
+    def merged(path):
+        keyed = path != tables[0]
+        rows = [(3, "u", "a"), (100, "n", "b" if path == tables[2] else "a")]
+        frame = spark.createDataFrame(
+            [r if keyed else r[:2] for r in rows],
+            "q long, tag string" + (", k string" if keyed else ""),
+        )
+        rep = merge_fledir(spark, path, frame, key="q")
+        return rep["rows_matched"], rep["rows_inserted"]
+
+    assert same(merged) == (1, 2)
+    assert same(scan) == sorted(
+        [t for t in after_delete if t[0] != 3] + [(3, "u"), (100, "n")]
+    )

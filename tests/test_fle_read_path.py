@@ -6,9 +6,11 @@ and `_segment_file` is the only code that maps a committed name to its
 live or `.retired` file.  A scan planned before a retire-based commit
 (compaction, delete) reads its planned snapshot; one whose segments an
 overwrite swept fails loudly.  A stream micro-batch on a partitioned
-root walks the root once.  Also here: a failed `df.write` job leaves no
-staged file, and `register_fledir` swallows only a repeat
-registration."""
+root walks the root once, and only `fledir_layout` walks a root: a flat
+fledir is the layout with no keys and one leaf.  A path with no segment
+to infer a schema from fails at `schema()`.  Also here: a failed
+`df.write` job leaves no staged file, and `register_fledir` swallows
+only a repeat registration."""
 
 from __future__ import annotations
 
@@ -98,6 +100,74 @@ def test_one_decoder_caller_and_one_resolver():
         lambda n: isinstance(n, ast.FunctionDef)
         and n.name == "_resolve_segment_path"
     )
+
+
+_LAYOUT_NAMES = {
+    "part", "partitioned", "layout", "_layout",
+    "discover_fledir_partitions", "fledir_layout",
+}
+
+
+def _names_layout(n) -> bool:
+    """True iff `n` is a layout: a name or attribute a layout is kept
+    under, or a call of a layout function."""
+    if isinstance(n, ast.Call):
+        n = n.func
+    name = n.attr if isinstance(n, ast.Attribute) else getattr(n, "id", None)
+    return name in _LAYOUT_NAMES
+
+
+def _tests_layout_for_none(n) -> bool:
+    """A comparison of a layout with None, or a branch on a layout's
+    truth (`if part:`): the flat/partitioned fork."""
+    if isinstance(n, ast.Compare):
+        operands = [n.left, *n.comparators]
+        return any(
+            isinstance(o, ast.Constant) and o.value is None for o in operands
+        ) and any(_names_layout(o) for o in operands)
+    if isinstance(n, (ast.If, ast.IfExp, ast.While)):
+        return _names_layout(n.test)
+    return False
+
+
+def test_one_layout_function():
+    """Tripwire over the package's AST: a flat fledir is the layout with
+    no keys and one leaf, so only `fledir_layout` walks a root, no
+    source module forks on a layout being None, and the second merge
+    path is gone."""
+    walkers = _sites(
+        lambda n: isinstance(n, ast.Call)
+        and getattr(n.func, "id", getattr(n.func, "attr", None))
+        == "discover_fledir_partitions"
+    )
+    assert walkers == {("sources/fle_datasource.py", "fledir_layout")}
+    assert not {
+        site for site in _sites(_tests_layout_for_none)
+        if site[0].startswith("sources/")
+    }
+    assert not _sites(
+        lambda n: isinstance(n, ast.FunctionDef)
+        and n.name == "_merge_partitioned_root"
+    )
+
+
+@pytest.mark.parametrize("kind", ["missing", "empty", "mixed keys"])
+def test_schema_fails_loudly_with_nothing_to_infer(tmp_path, kind):
+    """A missing or empty path has no segment to infer a schema from:
+    `schema()` (Spark's `load()` without `.schema(...)`) raises, naming
+    the path, instead of answering columns the table does not have.  A
+    root mixing key names raises its layout rule."""
+    path = tmp_path / "t"
+    match = r"\.schema\(\.\.\.\)"
+    if kind != "missing":
+        path.mkdir()
+    if kind == "mixed keys":
+        for leaf in ("a=1", "b=2"):
+            _table(str(path / leaf))
+        match = "mixes partition keys"
+    with pytest.raises(ValueError, match=match) as err:
+        fle_datasource.FleDataSource({"path": str(path)}).schema()
+    assert str(path) in str(err.value)
 
 
 # --- a scan that races a commit -------------------------------------------
