@@ -10,7 +10,16 @@ Two layers of configuration:
 
 * builder-time confs — memory / parallelism tuning used by our own tests
   and bench harness.  On a real cluster these come from spark-submit; the
-  values here are sized for ``local[N]``.
+  values here are sized for ``local[N]``.  Two of them are *static* confs
+  that only a new session can take: the generated-class cache size
+  (``spark.sql.codegen.cache.maxEntries``, :data:`CODEGEN_CACHE_ENTRIES`)
+  and PySpark's per-Column call-site capture
+  (``spark.python.sql.dataFrameDebugging.enabled``).  They reach only
+  sessions that :func:`get_spark` builds.  A session handed in by the
+  verification driver (``__spark_entry__.entry``) keeps Spark's
+  100-entry class cache and its call-site capture: Spark refuses a
+  static conf on a live session, so :func:`ensure_runtime_confs` cannot
+  apply them (it would swallow the error).
 
 Reference parity notes (SURVEY.md §2A): the reference scanner's pushed-down
 predicate evaluation (simple-predicates.h:30-205) and metadata-only count(*)
@@ -88,6 +97,13 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     coalescing (enabled above) sizing partitions downward at runtime.
     Sessions that already chose a value (our own get_spark, the test
     session's 8, a cluster deploy's 2-3x cores) are left alone.
+
+    Only dynamic confs reach a live session.  The static confs of
+    :func:`get_spark` (class cache size, call-site capture) are not in
+    RUNTIME_CONFS: Spark refuses a static conf on a live session (this
+    function would swallow that error like any other), so a session
+    built elsewhere, such as the verification driver's, keeps Spark's
+    defaults.
     """
     if spark in _CONF_APPLIED:
         return spark
@@ -116,6 +132,15 @@ _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: Cores of the pinned benchmark run (`bench.py`'s `BENCH_FULL.json`).
 PINNED_CPUS = 32
+
+#: Entries of Spark's JVM-wide generated-class cache
+#: (``spark.sql.codegen.cache.maxEntries``, default 100, static).  One
+#: pass over the whole registry at sf0.001 compiles 2,580 classes; with
+#: the default, a second pass compiled 3,284 again, and one client
+#: cycling the 7 ``tpch_mix`` queries recompiled 63 of their 100 classes
+#: per cycle, inside ``collect()``.  Retained classes cost ~7 KB of
+#: metaspace each, so a full cache is bounded at ~30 MB.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def default_parallelism() -> int:
@@ -146,6 +171,14 @@ def get_spark(app_name: str = "impala-avx2-parquet-scanner-spark",
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # merged by Spark with the JVM's own PYTHONPATH, not replacing it
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        # Keep every compiled class of the engine's query set, so a query
+        # that comes back does not pay its Janino compile again.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # PySpark otherwise captures the Python call site of every Column
+        # function: 5 py4j round trips and a stack walk per call, ~3/4 of
+        # a TPC-H builder's round trips.  Errors lose their
+        # "was called from <file>:<line>" line.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
