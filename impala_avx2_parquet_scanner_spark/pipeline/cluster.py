@@ -2,16 +2,25 @@
 pairs — the step between candidate-pair generation (MinHash-LSH) and
 "keep one representative per cluster" in a corpus dedup pipeline.
 
-Algorithm: iterative label propagation with pointer jumping.  Each round
-every node adopts the minimum label among (a) itself, (b) its neighbors,
-and (c) its current label's own label — step (c) is the pointer-jumping
-hop (component ids ARE node ids, so one extra join chases the chain one
-level), which turns O(cluster diameter) convergence into O(log diameter):
-a 50-node path graph converges in ~7 rounds instead of 49.  Each round is
-two joins + one aggregate — all DataFrame ops, executor-side only;
-`localCheckpoint` truncates the growing lineage so round N doesn't replay
-rounds 1..N-1.  If the fixpoint is not reached within ``max_iter`` rounds
-the function raises rather than returning silently-wrong labels.
+Algorithm: min-label hooking with pointer jumping, in numpy inside one
+task.  Labels are node indices, and each node starts as its own label.
+Each round, for every edge (s, d), the node that s's label points at
+takes d's label if that is smaller, and the same with s and d swapped
+(``np.minimum.at`` in both directions); then every node jumps one
+level (``lab = lab[lab]``).  Hooking labels rather than nodes merges
+whole trees per edge, so a shuffled 1M-node chain settles in ~20
+rounds instead of ~n.  Labels only decrease, so the loop ends at
+the first round that changes none; then every edge joins equal labels
+and every label is its own label, so each node holds the minimum node
+id of its component.
+
+Scale contract: the whole pair list is labelled by ONE task.  That pair
+list is the near-duplicate edge set: it grows with the duplicates, not
+with the corpus, and 2M random edges label in ~1 s on one core.  It is
+bounded per LSH bucket: a bucket above ``LSH_MAX_BUCKET_DOCS``
+(`pipeline/dedup.py`) fails the query before its pairs explode, so no
+bucket feeds more than LSH_MAX_BUCKET_DOCS² / 2 pairs into the task.
+Building the plan starts no Spark job.
 
 The registry entry carries a full DuckDB oracle (recursive-CTE transitive
 closure); tests additionally verify against a Python union-find on the
@@ -20,109 +29,61 @@ same pair set.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from impala_avx2_parquet_scanner_spark.cache import tie_unpersist
+from impala_avx2_parquet_scanner_spark.pyworker import trims
 from impala_avx2_parquet_scanner_spark.registry import query
 
-MAX_ITERATIONS = 10
 
+@trims
+def _label(batches):
+    """mapInPandas kernel: every (src, dst) batch of the one partition →
+    one (node, component) frame, component = min node id reachable."""
+    import numpy as np
+    import pandas as pd
 
-def connected_components(
-    edges: DataFrame, max_iter: int = MAX_ITERATIONS, strict: bool = True
-) -> DataFrame:
-    """(node, component) for the undirected graph given by edges
-    (src, dst).  component = min node id reachable.
-
-    With pointer jumping, ``max_iter`` rounds resolve components of
-    diameter up to ~2^max_iter — the default 10 covers diameter ~1000,
-    far past any near-dup cluster.  ``strict=True`` raises RuntimeError
-    if labels still changed in the final round (non-convergence), so a
-    pathological graph surfaces loudly instead of returning partial
-    labels."""
-    # materialize the (possibly expensive) edge pipeline ONCE — without
-    # this, every derived frame and every iteration replays the full
-    # upstream plan (e.g. the MinHash-LSH candidate generation)
-    edges = edges.localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
+    pdfs = list(batches)
+    if not pdfs:
+        return
+    pdf = pd.concat(pdfs, ignore_index=True)
+    ends = np.concatenate(
+        [pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64)]
     )
-    labels = nodes.withColumn("component", F.col("node")).localCheckpoint(eager=True)
-    # sym is a narrow, zero-shuffle union over the checkpointed edges —
-    # re-deriving it per round costs two cached-block scans, while
-    # eagerly checkpointing it cost a third serial pre-loop job AND a
-    # second materialized copy at 2x the edge bytes (round-11 paired
-    # A/B: dropping the checkpoint wins 3/4 pairs, min 3.10 -> 2.96 s;
-    # dropping the LABELS checkpoint as well loses — the nodes distinct
-    # re-runs per consumer — so that one stays).
-    sym = edges.select("src", "dst").union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-
-    converged = False
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym.src == labels.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("component").alias("n_min"))
-        )
-        # `prev` (the pre-round label) rides along the whole round
-        # (round-11): the convergence probe used to JOIN the new and old
-        # checkpointed label tables — a per-iteration shuffle join whose
-        # only output was "did anything change"; with `prev` in the same
-        # frame, the probe is a filter over the frame the loop
-        # materializes anyway.
-        cand = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("n_min"), F.col("component"))
-                ).alias("component"),
-                F.col("component").alias("prev"),
-            )
-        )
-        # pointer jump: a component id is itself a node id — chase one
-        # extra level (label-of-label) so long chains halve every round
-        lookup = cand.select(
-            F.col("node").alias("p_node"), F.col("component").alias("p_comp")
-        )
-        new_labels = (
-            cand.join(lookup, cand.component == lookup.p_node, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("p_comp"), F.col("component"))
-                ).alias("component"),
-                "prev",
-            )
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.filter(F.col("component") != F.col("prev"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels.select("node", "component")
-        if changed == 0:
-            converged = True
+    # nodes is sorted, so the minimum index of a component is its
+    # minimum node id
+    nodes, idx = np.unique(ends, return_inverse=True)
+    src, dst = idx[: len(pdf)], idx[len(pdf):]
+    lab = np.arange(nodes.size)
+    while True:
+        new = lab.copy()
+        ls, ld = lab[src], lab[dst]
+        np.minimum.at(new, ls, ld)
+        np.minimum.at(new, ld, ls)
+        new = new[new]
+        if np.array_equal(new, lab):
             break
-    if strict and not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} rounds; "
-            "raise max_iter (each extra round doubles the resolvable diameter)"
-        )
-    return labels
+        lab = new
+    yield pd.DataFrame({"node": nodes, "component": nodes[lab]})
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(node, component) for the undirected graph given by edges
+    (src, dst).  component = min node id reachable.  One task labels
+    every edge (module docstring: scale contract)."""
+    return (
+        edges.select("src", "dst")
+        .repartition(1)
+        .mapInPandas(_label, "node long, component long")
+    )
 
 
 def _clusters_oracle() -> str:
     """DuckDB replay: MinHash-LSH pairs (same CTEs as dedup_minhash_lsh)
     + WITH RECURSIVE transitive closure → min reachable id = component.
     The recursive UNION's dedup is the fixpoint check, mirroring the
-    label-propagation loop's 'no label changed' exit."""
+    labelling loop's 'no label changed' exit."""
     from impala_avx2_parquet_scanner_spark.pipeline.dedup import _minhash_parts
 
     ctes, pairs_select = _minhash_parts()
@@ -158,7 +119,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle replays the full pipeline in DuckDB, closing the
     components with a recursive CTE (min reachable id per node) — so the
-    iterative Spark fixpoint is value-verified, not just row-counted;
+    one-task numpy labelling is value-verified, not just row-counted;
     a Python union-find cross-check also runs in tests."""
     from impala_avx2_parquet_scanner_spark.pipeline.dedup import dedup_minhash_lsh
 
@@ -240,12 +201,13 @@ def dedup_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict covering the WHOLE corpus (singletons keep themselves).
 
     Plan shape: the per-cluster argmax is `max(struct(n_chars, -doc_id))`
-    — associative, map-side combined, one keyed shuffle on component.
-    The membership and keeper tables scale with the DUPLICATE count (a
-    heavily-redundant corpus makes them corpus-sized), so neither
-    carries a pinned broadcast hint — AQE broadcasts them while they fit
-    the threshold (same probe-side plan at fixture scale) and falls back
-    to keyed shuffle joins beyond it."""
+    as a window over the component, so the labelled documents have one
+    consumer and the one labelling task runs once (a groupBy joined
+    back to the members would run it once per branch).  The keeper table
+    scales with the DUPLICATE count (a heavily-redundant corpus makes it
+    corpus-sized), so it carries no pinned broadcast hint — AQE
+    broadcasts it while it fits the threshold and falls back to a keyed
+    shuffle join beyond it."""
     from impala_avx2_parquet_scanner_spark.catalog import table
     from impala_avx2_parquet_scanner_spark.pipeline.dedup import dedup_minhash_lsh
 
@@ -254,22 +216,15 @@ def dedup_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     comps = connected_components(pairs)  # (node, component)
     docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    labeled = comps.join(docs, comps.node == docs.doc_id).select(
-        "doc_id", "component", "n_chars"
-    )
-    keeper = (
-        labeled.groupBy("component")
-        .agg(
-            F.max(
-                F.struct(F.col("n_chars"), (-F.col("doc_id")).alias("neg_id"))
-            ).alias("m")
-        )
-        .select("component", (-F.col("m.neg_id")).alias("keeper_id"))
+    best = F.max(
+        F.struct(F.col("n_chars"), (-F.col("doc_id")).alias("neg_id"))
+    ).over(Window.partitionBy("component"))
+    keeper = comps.join(docs, comps.node == docs.doc_id).select(
+        "doc_id", (-best["neg_id"]).alias("keeper_id")
     )
     return (
         docs.select("doc_id")
-        .join(labeled.select("doc_id", "component"), "doc_id", "left")
-        .join(keeper, "component", "left")
+        .join(keeper, "doc_id", "left")
         .select(
             "doc_id",
             F.coalesce("keeper_id", "doc_id").alias("keeper_id"),
@@ -347,9 +302,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: each iteration is one keyed join (edges ⋈ ranks on the
     3-regular src) + one groupBy(nbr) — the standard distributed
     PageRank shuffle pair; the node count broadcasts.  At 100 TB the
-    loop adds `localCheckpoint` per round exactly like
-    `connected_components` above (3 bounded rounds here keep lineage
-    shallow enough without it)."""
+    loop would add a `localCheckpoint` per round to cut the lineage
+    each round replays (3 bounded rounds here keep it shallow enough
+    without one)."""
     from impala_avx2_parquet_scanner_spark.pipeline.similarity import ann_knn_graph
 
     edges = ann_knn_graph(spark, sf_dir).select("src_id", "nbr_id")

@@ -201,14 +201,6 @@ def encode_segment_columns(columns: list[tuple]) -> bytes:
     return header + b"".join(parts) + footer
 
 
-def encode_segment(returnflag: np.ndarray, quantity: np.ndarray) -> bytes:
-    """The two-column (l_returnflag, l_quantity) segment of the tests'
-    hand-written fixtures: one batch of both columns → one segment."""
-    return encode_segment_columns(
-        [("l_returnflag", returnflag), ("l_quantity", quantity)]
-    )
-
-
 @dataclass
 class ParsedColumn:
     """One column section, its fields per `sources/fle_kinds.py`."""

@@ -97,17 +97,15 @@ FROM tree GROUP BY root, depth
 
 @query("sql_recursive", oracle=_SQL_PORTABLE_RECURSIVE, tags=("sql", "recursive"))
 def sql_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recursive CTE (Spark 4 WITH RECURSIVE) — hierarchical traversal,
-    the one relational shape the engine previously expressed only as a
-    hand-rolled iterative join loop (pipeline/cluster.py).  The part keys
-    form an implicit binary tree (children 2k, 2k+1), and the query walks
+    """Recursive CTE (Spark 4 WITH RECURSIVE) — hierarchical traversal
+    written as one SQL statement.  The part keys form an implicit binary
+    tree (children 2k, 2k+1), and the query walks
     two subtrees to depth 9, rolling up per-level counts and exact-decimal
     price sums; identical text runs on DuckDB.
 
     Scale: each recursion step is an ordinary equi-ish join + union —
     Spark materializes the frontier per step, so depth (not data size)
-    bounds the iteration count, same contract as connected_components'
-    MAX_ITERATIONS."""
+    bounds the iteration count."""
     register_views(spark, sf_dir)
     return spark.sql(_SQL_PORTABLE_RECURSIVE)
 

@@ -12,9 +12,17 @@ from hypothesis import strategies as st
 
 from impala_avx2_parquet_scanner_spark.sources.fle_datasource import (
     decode_segment_columns,
-    encode_segment,
+    encode_segment_columns,
     parse_segment,
 )
+
+
+def encode_segment(returnflag: np.ndarray, quantity: np.ndarray) -> bytes:
+    """The two-column (l_returnflag, l_quantity) segment of this file's
+    hand-written fixtures: one batch of both columns → one segment."""
+    return encode_segment_columns(
+        [("l_returnflag", returnflag), ("l_quantity", quantity)]
+    )
 
 
 def decode_segment(payload: bytes, mask=None):

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-import pytest
+import numpy as np
 from pyspark.sql import functions as F
 
 from impala_avx2_parquet_scanner_spark.catalog import table
@@ -99,22 +99,64 @@ def test_connected_components_matches_union_find(spark):
 
 def test_connected_components_50_node_chain_converges(spark):
     # Pathological diameter: a 50-node path graph.  Plain min-label
-    # propagation needs 49 rounds; the pointer-jumping step must converge
-    # it within the default MAX_ITERATIONS=10 (each round doubles the
-    # resolvable diameter), with every node labeled 0.
+    # propagation needs 49 rounds; pointer jumping halves the chains
+    # each round, and every node must come out labeled 0.
     edges = [(i, i + 1) for i in range(49)]
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {r.node: r.component for r in connected_components(df).collect()}
     assert got == {i: 0 for i in range(50)}
 
 
-def test_connected_components_nonconvergence_raises(spark):
-    # With max_iter too small for the diameter, strict mode must raise
-    # rather than return partial labels.
-    edges = [(i, i + 1) for i in range(49)]
+def test_connected_components_long_chain(spark):
+    # A 5,000-node path: a diameter far past what a fixed number of
+    # pointer-jumping rounds (2^10 for 10) resolves.  The labelling runs
+    # until no label changes, so every node still comes out labeled 0.
+    edges = [(i, i + 1) for i in range(4999)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=2)
+    got = {r.node: r.component for r in connected_components(df).collect()}
+    assert got == {i: 0 for i in range(5000)}
+
+
+def test_connected_components_random_graphs_match_union_find(spark):
+    # Seeded random graphs over sparse, signed ids, with duplicate
+    # edges, reversed edges and self-loops mixed in; union-find links the
+    # larger root under the smaller, so its roots are component minima.
+    rng = np.random.default_rng(20261022)
+    for _ in range(4):
+        ids = rng.integers(-10**12, 10**12, 300)
+        n_edges = int(rng.integers(50, 400))
+        edges = [tuple(map(int, rng.choice(ids, 2))) for _ in range(n_edges)]
+        edges += [edges[int(i)] for i in rng.integers(0, n_edges, 40)]
+        edges += [(b, a) for a, b in edges[:40]]
+        edges += [(int(x), int(x)) for x in rng.choice(ids, 20)]
+        rng.shuffle(edges)
+        df = spark.createDataFrame(edges, "src long, dst long")
+        got = {r.node: r.component for r in connected_components(df).collect()}
+        assert got == _union_find(edges)
+
+
+def test_connected_components_empty_edges(spark):
+    df = spark.createDataFrame([], "src long, dst long")
+    out = connected_components(df)
+    assert out.schema.simpleString() == "struct<node:bigint,component:bigint>"
+    assert out.collect() == []
+
+
+def test_cluster_queries_rebuild_without_spark_jobs(spark, sf_dir):
+    # Building a plan must not run the pipeline: a second build of either
+    # clustering query, once its write-once inputs exist, starts no job.
+    names = ("dedup_clusters", "dedup_canonical_keep")
+    for name in names:
+        REGISTRY[name].fn(spark, sf_dir)
+    sc = spark.sparkContext
+    group = "test_cluster_queries_rebuild"
+    sc.setJobGroup(group, "second build of the clustering queries")
+    try:
+        for name in names:
+            REGISTRY[name].fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_dedup_clusters_query_runs(spark, sf_dir):
